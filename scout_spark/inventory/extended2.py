@@ -13,6 +13,7 @@ from pyspark.sql import functions as F
 
 from scout_spark.inventory import register
 from scout_spark.inventory.core import _t
+from scout_spark.sources.tables import shared_frame
 
 
 @register(
@@ -205,25 +206,26 @@ def geocode_reverse_fixture(spark: SparkSession, sf_dir: str) -> DataFrame:
     return engine.reverse(3.139, 101.6869, limit=5)
 
 
-_GEO_ENGINE_CACHE: dict[int, object] = {}
-
-
 def _fixture_engine(spark: SparkSession):
     from scout_spark.etl.fixtures import raw_osm_fixture
     from scout_spark.etl.gazetteer import build_admin, build_pois
     from scout_spark.plans.geocode import GeocodeSettings, ScoutEngine
 
-    engine = _GEO_ENGINE_CACHE.get(id(spark))
-    if engine is None:
-        raw = raw_osm_fixture(spark, n_pois=300)
-        engine = ScoutEngine(
-            spark,
-            build_pois(raw).cache(),
-            build_admin(raw),
-            GeocodeSettings(use_pandas_udf=False),
-        )
-        _GEO_ENGINE_CACHE[id(spark)] = engine
-    return engine
+    key = (spark.sparkContext.applicationId,)
+    return ScoutEngine(
+        spark,
+        shared_frame(
+            "fixture_pois",
+            key,
+            lambda: build_pois(raw_osm_fixture(spark, n_pois=300)),
+        ),
+        shared_frame(
+            "fixture_admin",
+            key,
+            lambda: build_admin(raw_osm_fixture(spark, n_pois=300)),
+        ),
+        GeocodeSettings(use_pandas_udf=False),
+    )
 
 
 @register(

@@ -27,6 +27,7 @@ from pyspark.sql import functions as F
 
 from scout_spark.inventory import register
 from scout_spark.inventory.core import _t
+from scout_spark.sources.tables import shared_frame, source_key
 
 # Shared edge-builder SQL (DuckDB): distinct undirected part pairs that
 # co-occur in an order, canonicalized src < dst.
@@ -35,61 +36,6 @@ _EDGES_SQL = """
   FROM lineitem a JOIN lineitem b
     ON a.l_orderkey = b.l_orderkey AND a.l_partkey < b.l_partkey
 """
-
-
-# Session-keyed shared graph frames (VERDICT r05 #2-4): a dozen graph
-# entries (triangles, PageRank, SSSP, HITS, MST, LPA, assortativity,
-# k-core, butterflies, link prediction) each re-paid the 2-shuffle edge
-# build (groupBy orderkey + pair-HOF explode + DISTINCT) per query.
-# Exactly the quality_ops.doc_tokens pattern: one persisted frame per
-# (applicationId, sf_dir, lineitem mtime); stale entries unpersisted on
-# miss. The degree frame (|V| = |parts| rows, dimension-bounded at any
-# sf but GROWING with scale) is cached alongside — consumers join it
-# WITHOUT a broadcast hint so AQE picks broadcast at bench scale and
-# flips to a shuffle join when |V| outgrows the driver.
-_EDGE_CACHE: dict[tuple[str, str, float], DataFrame] = {}
-_DEG_CACHE: dict[tuple[str, str, float], DataFrame] = {}
-
-
-def _graph_cache_key(
-    spark: SparkSession, sf_dir: str
-) -> tuple[str, str, float]:
-    import os
-
-    path = os.path.join(sf_dir, "lineitem.parquet")
-    try:
-        mtime = os.path.getmtime(path)
-    except OSError:
-        # lineitem isn't at the flat layout load_table reads — key on
-        # the newest entry under sf_dir so a regenerated/different
-        # layout still invalidates the cache (ADVICE r06: a silent 0.0
-        # sentinel served stale frames forever). An unreadable sf_dir
-        # raises here rather than caching against a constant key —
-        # load_table would fail on it anyway.
-        # Walk ONE level into directory entries too (ADVICE r07): a
-        # regeneration that rewrites files INSIDE a nested table dir
-        # without changing top-level names must still move the key.
-        # Entries vanishing mid-scan (concurrent regeneration) are
-        # skipped rather than crashing the key computation.
-        entries = os.listdir(sf_dir)  # raises OSError if unreadable
-        mtimes: list[float] = []
-        for p in entries:
-            full = os.path.join(sf_dir, p)
-            try:
-                mtimes.append(os.path.getmtime(full))
-                if os.path.isdir(full):
-                    mtimes.extend(
-                        os.path.getmtime(os.path.join(full, c))
-                        for c in os.listdir(full)
-                    )
-            except OSError:
-                continue
-        if not mtimes:
-            raise FileNotFoundError(
-                f"graph cache: empty sf_dir {sf_dir!r}"
-            )
-        mtime = max(mtimes)
-    return (spark.sparkContext.applicationId, sf_dir, mtime)
 
 
 def _edges(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -103,37 +49,29 @@ def _edges(spark: SparkSession, sf_dir: str) -> DataFrame:
     per-element cost is bounded by the basket, never the corpus.  The
     oracle keeps the naive self-join formulation — independently
     derived."""
-    key = _graph_cache_key(spark, sf_dir)
-    hit = _EDGE_CACHE.get(key)
-    if hit is not None:
-        return hit
-    for cache in (_EDGE_CACHE, _DEG_CACHE):
-        for stale in cache.values():
-            try:
-                stale.unpersist()
-            except Exception:
-                pass  # session already stopped — blocks died with it
-        cache.clear()
-    li = _t(spark, sf_dir, "lineitem").select("l_orderkey", "l_partkey")
-    sets = li.groupBy("l_orderkey").agg(
-        F.array_sort(F.collect_set("l_partkey")).alias("ps")
-    )
-    e = (
-        sets.select(
-            F.explode(
-                F.expr(
-                    "flatten(transform(ps, (x, i) -> "
-                    "transform(slice(ps, i + 2, size(ps)), "
-                    "y -> struct(x AS src, y AS dst))))"
-                )
-            ).alias("p")
+
+    def build() -> DataFrame:
+        li = _t(spark, sf_dir, "lineitem").select("l_orderkey", "l_partkey")
+        sets = li.groupBy("l_orderkey").agg(
+            F.array_sort(F.collect_set("l_partkey")).alias("ps")
         )
-        .select("p.src", "p.dst")
-        .distinct()
-        .persist()
+        return (
+            sets.select(
+                F.explode(
+                    F.expr(
+                        "flatten(transform(ps, (x, i) -> "
+                        "transform(slice(ps, i + 2, size(ps)), "
+                        "y -> struct(x AS src, y AS dst))))"
+                    )
+                ).alias("p")
+            )
+            .select("p.src", "p.dst")
+            .distinct()
+        )
+
+    return shared_frame(
+        "graph_edges", source_key(spark, sf_dir, "lineitem"), build
     )
-    _EDGE_CACHE[key] = e
-    return e
 
 
 def _sym_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -150,18 +88,13 @@ def _degrees(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Persisted per-node degree frame (v, d) of the co-purchase graph.
     |V| = |parts|: small enough to cache at any sf, but it GROWS with
     scale — consumers must NOT broadcast-hint it (AQE decides)."""
-    key = _graph_cache_key(spark, sf_dir)
-    hit = _DEG_CACHE.get(key)
-    if hit is not None:
-        return hit
-    deg = (
-        _sym_edges(spark, sf_dir)
+    return shared_frame(
+        "graph_degrees",
+        source_key(spark, sf_dir, "lineitem"),
+        lambda: _sym_edges(spark, sf_dir)
         .groupBy(F.col("src").alias("v"))
-        .agg(F.count(F.lit(1)).alias("d"))
-        .persist()
+        .agg(F.count(F.lit(1)).alias("d")),
     )
-    _DEG_CACHE[key] = deg
-    return deg
 
 
 @register(

@@ -17,6 +17,7 @@ from pyspark.sql import functions as F
 from scout_spark.inventory import register
 from scout_spark.inventory.core import _t, _th
 from scout_spark.inventory.hash_parity import _md5_32
+from scout_spark.sources.tables import shared_frame, source_key
 
 _TOK = "[a-z0-9]+"
 
@@ -29,13 +30,11 @@ _PII_IP = r"([0-9]{1,3}\.){3}[0-9]{1,3}"
 
 _PACK_CAPACITY = 2048  # tokens per training sequence
 _PACK_SHARDS = 16
-# Curate barrier gate (env-overridable): apply the tokenize
-# repartition barrier only above this many documents (r12 A/B: the
-# crossover sits between 5k docs — no-barrier 1.34 s vs barrier
-# 1.67 s — and 50k docs — barrier 3.51 s vs no-barrier 4.89 s).
-_CURATE_BARRIER_ROWS = int(
-    __import__("os").environ.get("SPARK_GRAFT_CURATE_BARRIER_ROWS", "20000")
-)
+# Curate barrier gate: apply the tokenize repartition barrier only
+# above this many documents (r12 A/B: the crossover sits between 5k
+# docs — no-barrier 1.34 s vs barrier 1.67 s — and 50k docs — barrier
+# 3.51 s vs no-barrier 4.89 s).
+_CURATE_BARRIER_ROWS = 20_000
 
 _IMP_TARGET = ("spark", "stream", "query", "vector", "join")
 
@@ -561,48 +560,21 @@ def sample_mixture_rebalance(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# one persisted exploded-token frame per (session, sf_dir) — the
-# perplexity, perplexity-decile, and OOV entries each read it from 2+
-# jobs of one query (model/vocab broadcast build + probe scan share no
-# exchange), and rotation invokes several of them back to back; the
-# BM25 _PER_DOC_CACHE pattern (retrieval.py) keeps exactly one live
-# materialization instead of re-running the corpus regex per job.
-_DOC_TOKENS_CACHE: dict[tuple[str, str, float], DataFrame] = {}
-
-
-def _cache_key(spark: SparkSession, sf_dir: str) -> tuple[str, str, float]:
-    # applicationId is stable per live session and never reused the way
-    # id(spark) can be after GC (ADVICE r03); the parquet mtime folds in
-    # so a driver-regenerated testdata dir invalidates the entry.
-    import os
-
-    path = os.path.join(sf_dir, "documents.parquet")
-    try:
-        mtime = os.path.getmtime(path)
-    except OSError:
-        mtime = 0.0
-    return (spark.sparkContext.applicationId, sf_dir, mtime)
-
-
 def doc_tokens(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Persisted (doc_id, lang, source, tok) exploded token frame."""
-    key = _cache_key(spark, sf_dir)
-    hit = _DOC_TOKENS_CACHE.get(key)
-    if hit is not None:
-        return hit
-    for stale in _DOC_TOKENS_CACHE.values():
-        try:
-            stale.unpersist()
-        except Exception:
-            pass  # session already stopped — blocks died with it
-    _DOC_TOKENS_CACHE.clear()
-    d = _th(spark, sf_dir, "documents")
-    toks = F.regexp_extract_all(F.lower(F.col("text")), F.lit(_TOK), 0)
-    tok = d.select(
-        "doc_id", "lang", "source", F.explode(toks).alias("tok")
-    ).persist()
-    _DOC_TOKENS_CACHE[key] = tok
-    return tok
+    """Persisted (doc_id, lang, source, tok) exploded token frame,
+    shared by every corpus-token entry of the session: the perplexity,
+    perplexity-decile and OOV entries each read it from 2+ jobs of one
+    query (model/vocab broadcast build + probe scan share no exchange),
+    so the corpus regex runs once instead of once per job."""
+
+    def build() -> DataFrame:
+        d = _th(spark, sf_dir, "documents")
+        toks = F.regexp_extract_all(F.lower(F.col("text")), F.lit(_TOK), 0)
+        return d.select("doc_id", "lang", "source", F.explode(toks).alias("tok"))
+
+    return shared_frame(
+        "doc_tokens", source_key(spark, sf_dir, "documents"), build
+    )
 
 
 def unigram_model(tok: DataFrame) -> DataFrame:

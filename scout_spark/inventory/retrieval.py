@@ -18,6 +18,7 @@ from pyspark.sql import functions as F
 from scout_spark.inventory import register
 from scout_spark.inventory.core import _t, _th
 from scout_spark.inventory.text_ops import _tokens_col, _tokens_sql
+from scout_spark.sources.tables import shared_frame, source_key
 
 _BM25_TERMS = ("spark", "table", "merge", "fast")
 _BM25_K1 = 1.2
@@ -87,41 +88,24 @@ def bm25_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# one persisted posting frame per (session, sf_dir) — repeated rotation
-# invocations (topk + rerank both call _bm25_all_scored) reuse ONE
-# materialization instead of stacking a new persist per call until
-# storage eviction. Keyed on applicationId (stable per live session,
-# never GC-reused like id(spark)) + source parquet mtime so a
-# regenerated testdata dir invalidates the entry (ADVICE r03).
-_PER_DOC_CACHE: dict[tuple[str, str, float], DataFrame] = {}
-
-
 def _bm25_per_doc(spark: SparkSession, sf_dir: str) -> DataFrame:
     from scout_spark.functions.normalize import canon_ascii
-    from scout_spark.inventory.quality_ops import _cache_key
 
-    key = _cache_key(spark, sf_dir)
-    hit = _PER_DOC_CACHE.get(key)
-    if hit is not None:
-        return hit
-    for stale in _PER_DOC_CACHE.values():  # at most one live materialization
-        try:
-            stale.unpersist()
-        except Exception:
-            pass  # session already stopped — blocks died with it
-    _PER_DOC_CACHE.clear()
-    d = _t(spark, sf_dir, "documents")
-    canon = canon_ascii(F.col("text"))
-    dl = F.when(canon == "", F.lit(0)).otherwise(F.size(F.split(canon, " ")))
-    cols = [F.col("doc_id"), dl.alias("dl")]
-    for q in _BM25_TERMS:
-        # canon is strictly [a-z0-9 ]-separated, so \b<term>\b counts
-        # exactly the whole-token occurrences the oracle's unnest path
-        # counts ("sparkle" and "spark2" do not match \bspark\b)
-        cols.append(F.regexp_count(canon, F.lit(rf"\b{q}\b")).alias(f"tf_{q}"))
-    per_doc = d.select(*cols).persist()
-    _PER_DOC_CACHE[key] = per_doc
-    return per_doc
+    def build() -> DataFrame:
+        d = _t(spark, sf_dir, "documents")
+        canon = canon_ascii(F.col("text"))
+        dl = F.when(canon == "", F.lit(0)).otherwise(F.size(F.split(canon, " ")))
+        cols = [F.col("doc_id"), dl.alias("dl")]
+        for q in _BM25_TERMS:
+            # canon is strictly [a-z0-9 ]-separated, so \b<term>\b counts
+            # exactly the whole-token occurrences the oracle's unnest path
+            # counts ("sparkle" and "spark2" do not match \bspark\b)
+            cols.append(F.regexp_count(canon, F.lit(rf"\b{q}\b")).alias(f"tf_{q}"))
+        return d.select(*cols)
+
+    return shared_frame(
+        "bm25_per_doc", source_key(spark, sf_dir, "documents"), build
+    )
 
 
 def _bm25_all_scored(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -21,6 +21,7 @@ from dataclasses import dataclass, field
 from functools import reduce
 from operator import and_, or_
 
+from pyspark import StorageLevel
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -80,7 +81,8 @@ class ScoutEngine:
         self.spark = spark
         self.settings = settings or GeocodeSettings()
         self.pois = pois
-        self.admin = admin.cache()
+        # caching an already-persisted frame (shared_frame) only logs a warning
+        self.admin = admin.cache() if admin.storageLevel == StorageLevel.NONE else admin
         self.token_index = None
         if self.settings.use_token_index:
             from scout_spark.operators.inverted_index import build_token_index

@@ -10,7 +10,10 @@ PushedFilters / ReadSchema).
 from __future__ import annotations
 
 import os
+import threading
+from collections.abc import Callable
 
+from pyspark import StorageLevel
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -28,22 +31,29 @@ TABLES = (
 )
 
 
-# DataFrame handles are immutable and reusable: cache per (app, dir,
-# table, file-mtime) so repeated queries don't re-list files and re-read
-# parquet footers on every call (driver-side latency, ~50ms per load).
-# applicationId (not id(spark)) keys the session — a recycled object id
-# would serve plans bound to a shut-down SparkContext; the mtime
-# invalidates after a rewrite/compaction of the file.
+def source_key(
+    spark: SparkSession, sf_dir: str, table: str
+) -> tuple[str, str, str, float]:
+    """(applicationId, sf_dir, table, mtime of ``{table}.parquet``) —
+    the cache key of anything derived from one source table.
+    applicationId (not id(spark)) keys the session: a recycled object
+    id would serve plans bound to a shut-down SparkContext. The mtime
+    invalidates after a rewrite/compaction of the file."""
+    try:
+        mtime = os.path.getmtime(os.path.join(sf_dir, f"{table}.parquet"))
+    except OSError:
+        mtime = -1.0
+    return (spark.sparkContext.applicationId, sf_dir, table, mtime)
+
+
+# DataFrame handles are immutable and reusable: cache per source_key so
+# repeated queries don't re-list files and re-read parquet footers on
+# every call (driver-side latency, ~50ms per load).
 _df_cache: dict[tuple[str, str, str, float], DataFrame] = {}
 
 
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    path = os.path.join(sf_dir, f"{name}.parquet")
-    try:
-        mtime = os.path.getmtime(path)
-    except OSError:
-        mtime = -1.0
-    key = (spark.sparkContext.applicationId, sf_dir, name, mtime)
+    key = source_key(spark, sf_dir, name)
     cached = _df_cache.get(key)
     if cached is not None:
         return cached
@@ -67,6 +77,37 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
             df = df.withColumn(field.name, F.col(field.name).cast("timestamp"))
     _df_cache[key] = df
     return df
+
+
+_shared: dict[str, tuple[tuple, DataFrame]] = {}
+# reentrant: a builder may itself call shared_frame (_degrees -> _edges)
+_shared_lock = threading.RLock()
+
+
+def shared_frame(
+    name: str, key: tuple, build: Callable[[], DataFrame]
+) -> DataFrame:
+    """The session-shared persisted frame ``name``: ``build()`` persisted
+    once per ``key`` (which starts with the applicationId), reused by
+    every later query of the session. One live frame per name — a new
+    key unpersists the old frame first. A hit whose blocks were dropped
+    (``spark.catalog.clearCache()``) is re-persisted before it is
+    returned, so clearCache() is the only reset a harness needs."""
+    with _shared_lock:
+        hit = _shared.get(name)
+        if hit is not None and hit[0] == key:
+            df = hit[1]
+            if df.storageLevel == StorageLevel.NONE:
+                df.persist()
+            return df
+        if hit is not None:
+            try:
+                hit[1].unpersist()
+            except Exception:
+                pass  # session already stopped — blocks died with it
+        df = build().persist()
+        _shared[name] = (key, df)
+        return df
 
 
 def widen_if_narrow(df: DataFrame, target: int | None = None) -> DataFrame:

@@ -1581,25 +1581,6 @@ def _noop(df) -> None:
     df.write.format("noop").mode("overwrite").save()
 
 
-def _reset_session_caches(spark) -> None:
-    """Between-entries cache hygiene (r11): a 77-entry capture session
-    accumulates every bare .persist() the measured entries create
-    (fresh builds each pass — nothing unpersists them), and the
-    resulting cache pressure inflated late rows up to 7x (ewma 0.7 →
-    5.0 s in the r11 first sweep's re-measure loop). Clear everything
-    between entries and drop the doc_tokens session cache so the next
-    consumer re-persists fresh — its rebuild lands in the entry's
-    UNTIMED warm pass, so timed walls still measure the shared-cache
-    steady state."""
-    spark.catalog.clearCache()
-    try:
-        from scout_spark.inventory.quality_ops import _DOC_TOKENS_CACHE
-
-        _DOC_TOKENS_CACHE.clear()
-    except Exception:
-        pass
-
-
 def _median_fresh(fn, spark, sf_dir, passes, warm: int = 1) -> float:
     for _ in range(warm):  # warm (codegen, footers; C2 JIT needs >1
         _noop(fn(spark, sf_dir))  # on a fresh session — r07 trap)
@@ -1669,7 +1650,11 @@ def main() -> None:
             print("calibration", k, v, flush=True)
     entries: dict[str, dict] = {}
     for name in names:
-        _reset_session_caches(spark)
+        # between-entries cache hygiene (r11): a long capture session
+        # accumulates every bare .persist() the measured entries create,
+        # and the cache pressure inflated late rows up to 7x. Shared
+        # frames re-persist on next use, in the untimed warm pass.
+        spark.catalog.clearCache()
         rec: dict = {"load_1m": round(os.getloadavg()[0], 2)}
         fn = q[name]
         # (i) bench-methodology wall: AQE on (session default, matches
@@ -1744,7 +1729,7 @@ def main() -> None:
             time.sleep(10)
             waited += 10
         rec["remeasure_load_1m"] = round(os.getloadavg()[0], 2)
-        _reset_session_caches(spark)
+        spark.catalog.clearCache()
         fn = q[name]
         spark.conf.set("spark.sql.adaptive.enabled", "true")
         spark.conf.set("spark.sql.shuffle.partitions", "8")

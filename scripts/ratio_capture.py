@@ -145,20 +145,11 @@ def main() -> None:
 
     for name in names:
         fn = q[name]
-        # between-entries cache hygiene (r11, see floor_capture.py::
-        # _reset_session_caches): a 342-entry sequential capture
-        # otherwise accumulates every bare .persist() the entries
-        # create; the doc_tokens session cache is dropped too and
-        # rebuilds in the entry's untimed warm pass
+        # between-entries cache hygiene (r11): a 342-entry sequential
+        # capture otherwise accumulates every bare .persist() the
+        # entries create; session-shared frames re-persist on their
+        # next use, in the entry's untimed warm pass
         spark.catalog.clearCache()
-        try:
-            from scout_spark.inventory.quality_ops import (
-                _DOC_TOKENS_CACHE,
-            )
-
-            _DOC_TOKENS_CACHE.clear()
-        except Exception:
-            pass
         # pacing: let self-load decay before the next measurement —
         # bounded per entry AND by a global budget so pacing can never
         # dominate the sweep (past the budget, rows self-label hot)

@@ -254,3 +254,24 @@ def test_compression_ratio_nan_input():
 
     assert compression_ratio(float("nan")) == 1.0
     assert compression_ratio(None) == 1.0
+
+
+def test_malformed_env_value_does_not_break_registry_load(monkeypatch):
+    """The curate barrier gate is a constant: a malformed value of the
+    retired SPARK_GRAFT_CURATE_BARRIER_ROWS variable must not crash the
+    module import and with it the whole registry load."""
+    import importlib
+
+    from scout_spark.inventory import REGISTRY, load_all, quality_ops
+
+    monkeypatch.setenv("SPARK_GRAFT_CURATE_BARRIER_ROWS", "abc")
+    saved = dict(REGISTRY)
+    try:
+        for name in [n for n, it in REGISTRY.items()
+                     if it.spark.__module__ == quality_ops.__name__]:
+            del REGISTRY[name]
+        importlib.reload(quality_ops)
+        assert load_all().keys() == saved.keys()
+    finally:
+        REGISTRY.clear()
+        REGISTRY.update(saved)
