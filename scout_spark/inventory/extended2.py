@@ -234,8 +234,9 @@ def _fixture_engine(spark: SparkSession):
     "deterministic fixture gazetteer (ETL: schema-adaptive binding → "
     "pois/admin build) → ScoutEngine.forward(candidates=['Monograph "
     "Dining'], country='malaysia', limit=5) — tokenize, bbox resolve "
-    "(top-1 by area on cached admin), token-contains + bbox candidate "
-    "scan, fuzzy score, top-k. Rows-only: gazetteer fixture tables are "
+    "(top-1 by area, a driver-side lookup over the admin rows), "
+    "token-contains + bbox candidate scan, fuzzy score, top-k. "
+    "Rows-only: gazetteer fixture tables are "
     "not registered in the driver's oracle; golden-hit assertions live "
     "in tests/test_geocode_e2e.py.",
     tags=("rows-only",),

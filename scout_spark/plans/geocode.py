@@ -3,25 +3,28 @@
 restated as one lazy DataFrame per request.
 
 Pipeline (all semantics preserved, SURVEY.md §2.12):
-  tokenize+dedup (driver) → area bbox resolve (cached admin, top-1 by
-  area) → candidate scan (token-contains ∧ bbox BETWEEN, capped) →
-  score (fuzzy best-sim + type boost + importance [+ proximity iff bbox])
-  → top-k.
+  tokenize+dedup (driver) → area bbox resolve (driver-side lookup over
+  the admin rows collected once, top-1 by area) → candidate scan
+  (token-contains ∧ bbox BETWEEN, capped) → score (fuzzy best-sim + type
+  boost + importance [+ proximity iff bbox]) → top-k.
 
 Scale shape: the scan is filter→project over partition-pruned parquet
-(embarrassingly parallel, no shuffle); scoring is one pandas-UDF stage
-(or pure-Column proxy); top-k is TakeOrderedAndProject. The admin table
-is tiny and cached (reference opens it per-request, app.py:44-56 —
-SURVEY.md §4 O10 replaces that with a long-lived cache).
+(embarrassingly parallel, no shuffle); the ``limit_scan`` cap is one
+TakeOrderedAndProject; scoring is one pandas-UDF stage over the capped
+rows (or pure-Column proxy); top-k is a second TakeOrderedAndProject. A
+request with tokens runs one Spark job, and with the pandas UDF one
+Python task. Area resolution runs no job: the admin table is tiny, so
+the engine collects the columns the lookup needs once at construction
+(the reference opens it per request, app.py:44-56 — SURVEY.md §4 O10
+replaces that with a long-lived in-memory copy).
 """
 
 from __future__ import annotations
 
 from dataclasses import dataclass, field
 from functools import reduce
-from operator import and_, or_
+from operator import and_
 
-from pyspark import StorageLevel
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -47,6 +50,9 @@ def _norm_text(s: str | None) -> str:
 
 def _tokens(s: str | None) -> list[str]:
     return [t for t in _norm_text(s).split(" ") if t]
+
+
+_BBOX_COLS = ("minx", "miny", "maxx", "maxy", "center_lat", "center_lon")
 
 
 @dataclass(frozen=True)
@@ -81,8 +87,22 @@ class ScoutEngine:
         self.spark = spark
         self.settings = settings or GeocodeSettings()
         self.pois = pois
-        # caching an already-persisted frame (shared_frame) only logs a warning
-        self.admin = admin.cache() if admin.storageLevel == StorageLevel.NONE else admin
+        # the whole area lookup's input, collected once in lookup order
+        # (bbox area DESC NULLS LAST, osm_id ASC NULLS FIRST); a row
+        # missing a corner or centre has no usable bbox and is left out
+        area = (F.col("maxx") - F.col("minx")) * (F.col("maxy") - F.col("miny"))
+        self._areas = [
+            (
+                r["admin_level"],
+                r["name_local_norm"] or "",
+                r["name_en_norm"] or "",
+                tuple(float(r[c]) for c in _BBOX_COLS),
+            )
+            for r in admin.dropna(subset=list(_BBOX_COLS))
+            .orderBy(area.desc(), F.col("osm_id"))
+            .select("admin_level", "name_local_norm", "name_en_norm", *_BBOX_COLS)
+            .collect()
+        ]
         self.token_index = None
         if self.settings.use_token_index:
             from scout_spark.operators.inverted_index import build_token_index
@@ -93,42 +113,28 @@ class ScoutEngine:
     def resolve_area_bbox(
         self, city_hint: str | None, country: str | None
     ) -> tuple[float, float, float, float, float, float] | None:
-        """Top-1 admin row by bbox area; city (admin_level ≥ 6) tried
-        before country (= 2); token-contains match on normalized names.
-        Collected to driver literals — the procedural shape the reference
-        uses (its output becomes bind params of the next query)."""
-        for hint, level_pred in (
-            (city_hint, F.col("admin_level") >= 6),
-            (country, F.col("admin_level") == 2),
+        """Top-1 admin row by bbox area (ties on osm_id); city
+        (admin_level ≥ 6) tried before country (= 2); every hint token
+        must be contained in the normalized local or English name. A
+        driver-side scan of the admin rows collected at construction —
+        no Spark job; the result becomes literals of the candidate scan,
+        the procedural shape the reference uses (bind params of its next
+        query). Admin rows with a NULL bbox corner or centre never
+        match."""
+        for hint, level_ok in (
+            (city_hint, lambda level: level >= 6),
+            (country, lambda level: level == 2),
         ):
             toks = _tokens(hint)
             if not toks:
                 continue
-            pred = reduce(
-                and_,
-                [
-                    (
-                        F.coalesce(F.col("name_local_norm"), F.lit("")).contains(t)
-                        | F.coalesce(F.col("name_en_norm"), F.lit("")).contains(t)
-                    )
-                    for t in toks
-                ],
-            )
-            row = (
-                self.admin.where(pred & level_pred)
-                .orderBy(
-                    (
-                        (F.col("maxx") - F.col("minx"))
-                        * (F.col("maxy") - F.col("miny"))
-                    ).desc(),
-                    F.col("osm_id"),
-                )
-                .select("minx", "miny", "maxx", "maxy", "center_lat", "center_lon")
-                .limit(1)
-                .collect()
-            )
-            if row:
-                return tuple(float(v) for v in row[0])
+            for level, local, en, bbox in self._areas:
+                if (
+                    level is not None
+                    and level_ok(level)
+                    and all(t in local or t in en for t in toks)
+                ):
+                    return bbox
         return None
 
     # -- candidate scan (reference repo.py:48-71) -------------------------
@@ -180,7 +186,13 @@ class ScoutEngine:
         target_local = F.coalesce(F.col("name_local_norm"), canon(F.col("name_local")))
         target_en = F.coalesce(F.col("name_en_norm"), canon(F.col("name_en")))
         if s.use_pandas_udf:
-            sim_fn = best_sim_udf(query_norms)
+            # nondeterministic keeps the score projection above the
+            # limit_scan cap: a deterministic one is pushed below it, and
+            # the Python eval between the cap's limit and sort turns the
+            # cap into a range-partitioned global sort (extra jobs, a
+            # UDF task per shuffle partition) instead of one
+            # TakeOrderedAndProject feeding a single Python task
+            sim_fn = best_sim_udf(query_norms).asNondeterministic()
             best_sim = F.greatest(sim_fn(target_local), sim_fn(target_en))
         else:
             sims = [

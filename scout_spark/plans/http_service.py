@@ -11,7 +11,9 @@ response ``{"hits": [...]}``, schema-validated 422s with FastAPI's
 (plans/openapi.py::validate_forward), a generated OpenAPI 3.1 document
 at GET /openapi.json (mirroring the reference's pydantic-derived
 schema + openapi_examples, app.py:14-38,74-85), and timing headers on
-every response. Requests share the one long-lived SparkSession/engine
+every response. A request the engine fails on gets a 500 with
+``{"detail": "Internal Server Error"}`` (traceback on stderr) and the
+service keeps serving. Requests share the one long-lived SparkSession/engine
 (SURVEY.md §2.1 S3: singleton session replaces per-request
 connections); http.server's threading model mirrors FastAPI running
 sync endpoints on a threadpool.
@@ -21,6 +23,7 @@ from __future__ import annotations
 
 import json
 import time
+import traceback
 from http.server import BaseHTTPRequestHandler, ThreadingHTTPServer
 
 from scout_spark.plans.api import forward_geocode
@@ -85,7 +88,15 @@ def make_handler(engine: ScoutEngine):
             if errors:
                 self._respond(422, {"detail": errors}, t0)
                 return
-            resp = forward_geocode(engine, req)
+            try:
+                resp = forward_geocode(engine, req)
+            except Exception:
+                # a failed request (e.g. a failed Spark job) is this
+                # request's 500, not a dropped connection; the shared
+                # engine keeps serving
+                traceback.print_exc()
+                self._respond(500, {"detail": "Internal Server Error"}, t0)
+                return
             self._respond(200, {"hits": resp.hits}, t0)
 
     return Handler

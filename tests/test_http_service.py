@@ -18,11 +18,15 @@ from scout_spark.plans.http_service import serve
 
 
 @pytest.fixture(scope="module")
-def server(spark):
+def engine(spark):
     raw = raw_osm_fixture(spark, n_pois=300)
-    engine = ScoutEngine(
+    return ScoutEngine(
         spark, build_pois(raw).cache(), build_admin(raw), GeocodeSettings()
     )
+
+
+@pytest.fixture(scope="module")
+def server(engine):
     srv = serve(engine)
     yield srv
     srv.shutdown()
@@ -211,3 +215,30 @@ def test_limit_coerces_integral_float_and_reports_all_errors(server):
     detail = json.loads(ei.value.read())["detail"]
     types = {e["type"] for e in detail}
     assert {"model_type", "less_than_equal"} <= types, detail
+
+
+def test_failed_request_is_500_and_service_keeps_serving(server, engine, monkeypatch, capsys):
+    """An exception inside the engine answers that request with a 500
+    (traceback on stderr) instead of dropping the connection; the next
+    request on the same engine is served normally."""
+    forward = engine.forward
+    calls = []
+
+    def fail_once(*args, **kwargs):
+        calls.append(args)
+        if len(calls) == 1:
+            raise RuntimeError("simulated engine failure")
+        return forward(*args, **kwargs)
+
+    monkeypatch.setattr(engine, "forward", fail_once)
+    payload = {"candidates": [{"text": "Monograph Dining"}], "limit": 3}
+    with pytest.raises(urllib.error.HTTPError) as ei:
+        _post(server, "/v1/geocode/forward", payload)
+    assert ei.value.code == 500
+    assert json.loads(ei.value.read()) == {"detail": "Internal Server Error"}
+    assert "simulated engine failure" in capsys.readouterr().err
+    with _post(server, "/v1/geocode/forward", payload) as r:
+        assert r.status == 200
+        hits = json.loads(r.read())["hits"]
+    assert hits and hits[0]["name"] == "Monograph Dining"
+    assert len(calls) == 2

@@ -1,0 +1,211 @@
+"""The serving plan of ``ScoutEngine.forward``: area resolution is a
+driver-side lookup that matches the Spark query it replaced, and a
+hinted request with tokens runs one Spark job whose pandas-UDF scorer
+reads the ``limit_scan`` cap straight from a TakeOrderedAndProject."""
+
+from __future__ import annotations
+
+import json
+from functools import reduce
+from operator import and_
+
+import pytest
+from pyspark.sql import functions as F
+
+from scout_spark.etl.fixtures import raw_osm_fixture
+from scout_spark.etl.gazetteer import build_admin, build_pois
+from scout_spark.plans.api import ForwardRequest, forward_geocode
+from scout_spark.plans.geocode import GeocodeSettings, ScoutEngine, _tokens
+
+ADMIN_SCHEMA = (
+    "osm_id bigint, name_local_norm string, name_en_norm string,"
+    " admin_level int, minx double, miny double, maxx double, maxy double,"
+    " center_lat double, center_lon double"
+)
+
+
+def _row(osm_id, local, en, level, half, center_lat=None):
+    """An admin row whose square bbox around the origin has half-width
+    ``half`` (equal widths give bit-equal areas); the centre latitude
+    defaults to the osm_id so a result names its row."""
+    lat = float(osm_id) if center_lat is None else center_lat
+    return (osm_id, local, en, level, -half, -half, half, half, lat, 0.0)
+
+
+# rows are listed so that input order never agrees with the lookup order
+ADMIN_ROWS = [
+    # equal areas at a city level: the smaller osm_id wins
+    _row(20, "alpha", None, 8, 0.5),
+    _row(10, "alpha", None, 6, 0.5),
+    # a larger row with a NULL level never matches a level test
+    _row(31, "beta", "beta", None, 2.0),
+    _row(30, "beta", None, 8, 0.25),
+    _row(32, "beta", None, 2, 0.75),
+    # a NULL local name still matches through the English name
+    _row(40, None, "gamma city", 6, 0.4),
+    # tokens of one hint split across the local and English names
+    _row(50, "delta", "east side", 7, 0.3),
+    _row(51, "delta", None, 9, 0.6),
+    # a country
+    _row(60, "epsilonia", "republic of epsilonia", 2, 3.0),
+    _row(61, "epsilonia", None, 6, 0.1),
+    # a NULL osm_id sorts first among equal areas
+    _row(71, "zeta", None, 6, 0.2),
+    _row(None, "zeta", None, 6, 0.2, center_lat=70.0),
+]
+
+HINTS = [
+    ("alpha", None),  # tie on area → osm_id 10
+    ("beta", None),  # NULL level skipped → 30
+    (None, "beta"),  # NULL level skipped for the country test too → 32
+    ("gamma", None),  # English name only → 40
+    ("delta east", None),  # tokens across both names → 50
+    ("east delta", None),  # token order does not matter → 50
+    ("delta", None),  # larger row wins → 51
+    ("atlantis", "epsilonia"),  # unknown city falls back to country → 60
+    ("epsilonia", "epsilonia"),  # city tried before country → 61
+    ("!!! ...", None),  # punctuation-only hint → None
+    ("!!!", "republic"),  # punctuation-only city, country by English name → 60
+    ("zeta", None),  # NULL osm_id first on an area tie → the None row
+    ("Alpha-", None),  # hint normalized like a request → 10
+    ("atlantis", None),  # unknown city, no country → None
+    (None, None),
+]
+EXPECTED_CENTRE = [10, 30, 32, 40, 50, 50, 51, 60, 61, None, 60, 70, 10, None, None]
+
+
+def spark_area_bbox(admin, city_hint, country):
+    """The area lookup as one Spark query per hint level: the query the
+    serving path ran per request before the lookup moved to the driver."""
+    for hint, level_pred in (
+        (city_hint, F.col("admin_level") >= 6),
+        (country, F.col("admin_level") == 2),
+    ):
+        toks = _tokens(hint)
+        if not toks:
+            continue
+        pred = reduce(
+            and_,
+            [
+                (
+                    F.coalesce(F.col("name_local_norm"), F.lit("")).contains(t)
+                    | F.coalesce(F.col("name_en_norm"), F.lit("")).contains(t)
+                )
+                for t in toks
+            ],
+        )
+        row = (
+            admin.where(pred & level_pred)
+            .orderBy(
+                (
+                    (F.col("maxx") - F.col("minx")) * (F.col("maxy") - F.col("miny"))
+                ).desc(),
+                F.col("osm_id"),
+            )
+            .select("minx", "miny", "maxx", "maxy", "center_lat", "center_lon")
+            .limit(1)
+            .collect()
+        )
+        if row:
+            return tuple(float(v) for v in row[0])
+    return None
+
+
+def _engine(spark, admin):
+    pois = spark.createDataFrame([], "osm_id bigint")
+    return ScoutEngine(spark, pois, admin, GeocodeSettings(use_pandas_udf=False))
+
+
+@pytest.fixture(scope="module")
+def admin(spark):
+    return spark.createDataFrame(ADMIN_ROWS, ADMIN_SCHEMA)
+
+
+def test_area_lookup_matches_spark_query(spark, admin):
+    engine = _engine(spark, admin)
+    for (city_hint, country), centre in zip(HINTS, EXPECTED_CENTRE):
+        got = engine.resolve_area_bbox(city_hint, country)
+        assert got == spark_area_bbox(admin, city_hint, country), (city_hint, country)
+        assert (got and got[4]) == centre, (city_hint, country, got)
+
+
+def test_area_lookup_skips_rows_without_a_full_bbox(spark, admin):
+    """A matching row with a NULL centre would win on area, and one with
+    a NULL corner is the only match of its hint; neither has a usable
+    bbox, so the lookup passes over them instead of failing the request
+    on float(None)."""
+    broken = spark.createDataFrame(
+        [
+            # larger than row 10: wins the sort, but has no centre
+            (80, "alpha", None, 6, -5.0, -5.0, 5.0, 5.0, None, 0.0),
+            # the only 'omega' city, missing a corner (NULL area)
+            (81, "omega", None, 6, None, 1.0, 2.0, 3.0, 2.0, 0.0),
+            (82, "omegaland", None, 2, -1.0, 81.0, 1.0, 83.0, 82.0, 0.0),
+        ],
+        ADMIN_SCHEMA,
+    )
+    engine = _engine(spark, admin.unionByName(broken))
+    assert engine.resolve_area_bbox("alpha", None)[4] == 10.0
+    assert engine.resolve_area_bbox("omega", None) is None
+    assert engine.resolve_area_bbox("omega", "omegaland")[4] == 82.0
+    # the rows left out are exactly the ones the Spark query breaks on
+    with pytest.raises(TypeError):
+        spark_area_bbox(admin.unionByName(broken), "alpha", None)
+
+
+def _jobs(sc, group, fn):
+    sc.setJobGroup(group, group)
+    try:
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def _plan_tree(df):
+    """(node class, children) tree of the executed physical plan, rebuilt
+    from its pre-order JSON form."""
+    nodes = iter(json.loads(df._jdf.queryExecution().executedPlan().toJSON()))
+
+    def build():
+        n = next(nodes)
+        cls = n["class"].rsplit(".", 1)[-1]
+        return cls, [build() for _ in range(n["num-children"])]
+
+    return build()
+
+
+def _walk(tree):
+    yield tree
+    for child in tree[1]:
+        yield from _walk(child)
+
+
+def test_hinted_request_runs_one_job(spark):
+    raw = raw_osm_fixture(spark, n_pois=300)
+    engine = ScoutEngine(spark, build_pois(raw).cache(), build_admin(raw))
+    sc = spark.sparkContext
+    req = ForwardRequest(["Monograph Dining"], country="malaysia", city_hint="kuala lumpur")
+    warm = forward_geocode(engine, req)  # materializes the cached pois
+
+    bbox, area_jobs = _jobs(
+        sc, "serve-plan/area", lambda: engine.resolve_area_bbox("kuala lumpur", "malaysia")
+    )
+    assert bbox is not None
+    assert area_jobs == 0
+
+    resp, jobs = _jobs(sc, "serve-plan/request", lambda: forward_geocode(engine, req))
+    assert resp.hits and resp.hits == warm.hits
+    assert resp.hits[0]["name"] == "Monograph Dining"
+    assert jobs == 1
+
+    df = engine.forward(req.candidates, req.country, req.city_hint, req.limit)
+    df.collect()
+    nodes = list(_walk(_plan_tree(df)))
+    classes = [cls for cls, _ in nodes]
+    # an adaptive root would hide the plan below it from toJSON
+    assert "AdaptiveSparkPlanExec" not in classes
+    assert "ShuffleExchangeExec" not in classes
+    udf = [kids for cls, kids in nodes if cls == "ArrowEvalPythonExec"]
+    assert len(udf) == 1
+    assert [cls for cls, _ in udf[0]] == ["TakeOrderedAndProjectExec"]
