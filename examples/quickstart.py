@@ -4,7 +4,8 @@
     python examples/quickstart.py
 
 1. Build a gazetteer from a raw OSM-like source (here: the deterministic
-   fixture; point --raw at QuackOSM-exported parquet for real data).
+   fixture; for real data run scripts/build_gazetteer.py on a .osm.pbf
+   or QuackOSM-exported parquet).
 2. Forward geocode (the reference's POST /v1/geocode/forward).
 3. Reverse geocode (extension).
 4. Batch geocode a request battery in one job.
@@ -25,7 +26,8 @@ from pyspark.sql import functions as F
 from scout_spark.session import get_spark
 from scout_spark.etl.fixtures import raw_osm_fixture
 from scout_spark.etl.gazetteer import build_gazetteer, build_admin, build_pois
-from scout_spark.plans.api import ForwardRequest, engine_from_settings, forward_geocode
+from scout_spark.plans.api import ForwardRequest, forward_geocode
+from scout_spark.plans.geocode import ScoutEngine
 from scout_spark.plans.batch_geocode import forward_geocode_batch
 from scout_spark.settings import load_settings
 
@@ -42,7 +44,7 @@ def main() -> None:
     print(f"gazetteer built: {pois.count()} POIs, {admin.count()} admin areas")
 
     # 2. forward geocode ----------------------------------------------
-    engine = engine_from_settings(spark, pois, admin, load_settings(None))
+    engine = ScoutEngine(spark, pois, admin, load_settings(None).geocode)
     resp = forward_geocode(
         engine,
         ForwardRequest(candidates=["Monograph Dining"], country="malaysia", limit=3),

@@ -14,20 +14,7 @@ from operator import add
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
-# reference config.toml:12-23 / settings.py:46-53
-DEFAULT_WEIGHTS = {
-    "similarity": 0.60,
-    "type": 0.25,
-    "importance": 0.15,
-    "proximity": 0.15,
-}
-DEFAULT_PROXIMITY_KM = 25.0
-DEFAULT_TYPE_BOOST = {
-    "tourism:": 0.80,
-    "amenity:": 0.70,
-    "shop:": 0.60,
-    "default": 0.40,
-}
+from scout_spark.settings import DEFAULT_TYPE_BOOST, DEFAULT_WEIGHTS
 
 POI_KIND_CLASSES = ("amenity", "shop", "tourism", "leisure", "office")
 

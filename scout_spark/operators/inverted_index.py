@@ -6,15 +6,13 @@ The reference builds ART indexes on normalized-name columns
 wildcard ``LIKE '%tok%'`` scan can never use — DuckDB full-scans anyway
 (SURVEY.md §4 O8). The Spark-native acceleration is a NEW structure,
 not a port: explode normalized names into a (token, id) posting table;
-a query semi-joins its tokens and keeps ids matching ALL of them.
+a query joins its tokens and keeps ids matching ALL of them.
 
-SEMANTIC DIFFERENCE (documented, deliberate): the index matches whole
-tokens; the reference's LIKE matches substrings inside words ("mono"
-matches "monograph"). Exact-token queries — the overwhelmingly common
-case — return identical candidates (pinned by tests); substring prefix
-queries fall back to the scan path. At 100 TB the posting table is
-written bucketed by token so a query touches |query tokens| buckets
-instead of the full gazetteer.
+Only the batch plan (plans/batch_geocode.py) reads it. The index matches
+whole tokens, while the reference's LIKE matches substrings inside words
+("mono" matches "monograph"), so per-request serving keeps the substring
+scan. At 100 TB the posting table is written bucketed by token so a
+query touches |query tokens| buckets instead of the full gazetteer.
 """
 
 from __future__ import annotations
@@ -45,42 +43,3 @@ def build_token_index(
     for p in parts[1:]:
         out = out.unionAll(p)
     return out.distinct()
-
-
-def candidate_ids(index: DataFrame, tokens: list[str]) -> DataFrame:
-    """ids whose posting set covers ALL query tokens (AND semantics,
-    reference repo.py:5-13's conjunction over tokens).
-
-    Plan: one filtered scan of the posting table (token IN (...) —
-    prunable), groupBy id counting distinct matched tokens, keep ids
-    matching all. Shuffles only (token, id) pairs for matching tokens.
-    """
-    distinct_tokens = sorted(set(tokens))
-    # count DISTINCT tokens below, so the target must be the distinct
-    # count too — duplicates in the query list must not make the
-    # covering equality unsatisfiable
-    n = len(distinct_tokens)
-    if n == 0:
-        return index.select(F.col("id")).distinct()
-    return (
-        index.where(F.col("token").isin(distinct_tokens))
-        .groupBy("id")
-        .agg(F.countDistinct("token").alias("_n"))
-        .where(F.col("_n") == n)
-        .select("id")
-    )
-
-
-def indexed_candidate_scan(
-    pois: DataFrame,
-    index: DataFrame,
-    tokens: list[str],
-    id_col: str = "osm_id",
-) -> DataFrame:
-    """Candidate fetch via the inverted index: semi-join pois against the
-    covering-id set. Replaces the full-scan contains-filter for whole-
-    token queries."""
-    ids = candidate_ids(index, tokens)
-    return pois.join(
-        ids.withColumnRenamed("id", id_col), id_col, "left_semi"
-    )

@@ -11,10 +11,7 @@ from __future__ import annotations
 import time
 from dataclasses import dataclass, field
 
-from pyspark.sql import SparkSession
-
-from scout_spark.plans.geocode import GeocodeSettings, ScoutEngine
-from scout_spark.settings import Settings
+from scout_spark.plans.geocode import ScoutEngine
 
 
 @dataclass(frozen=True)
@@ -39,22 +36,6 @@ class ForwardResponse:
 
     hits: list[dict]
     took_ms: float = field(default=0.0)
-
-
-def engine_from_settings(
-    spark: SparkSession, pois, admin, settings: Settings
-) -> ScoutEngine:
-    return ScoutEngine(
-        spark,
-        pois,
-        admin,
-        GeocodeSettings(
-            weights=settings.weights,
-            type_boost=settings.type_boost,
-            proximity_km=settings.proximity_km,
-            limit_scan=settings.limit_scan,
-        ),
-    )
 
 
 def forward_geocode(engine: ScoutEngine, req: ForwardRequest) -> ForwardResponse:

@@ -23,13 +23,10 @@ from pyspark.sql.window import Window
 
 from scout_spark.functions.geo import haversine_km, proximity_decay
 from scout_spark.functions.normalize import canon, tokens
-from scout_spark.functions.scoring import (
-    DEFAULT_TYPE_BOOST,
-    DEFAULT_WEIGHTS,
-    score_expr,
-)
+from scout_spark.functions.scoring import score_expr
 from scout_spark.operators.fuzzy import proxy_similarity_col
 from scout_spark.operators.inverted_index import build_token_index
+from scout_spark.settings import DEFAULT_PROXIMITY_KM, DEFAULT_WEIGHTS
 
 
 def forward_geocode_batch(
@@ -37,10 +34,6 @@ def forward_geocode_batch(
     pois: DataFrame,
     admin: DataFrame,
     limit: int = 5,
-    weights: dict | None = None,
-    type_boost: dict | None = None,
-    proximity_km: float = 25.0,
-    token_index: DataFrame | None = None,
 ) -> DataFrame:
     """requests(req_id long, query string, country string nullable) →
     top-``limit`` hits per request with scores.
@@ -50,10 +43,9 @@ def forward_geocode_batch(
     repo.py:39-44); candidates come from the token inverted index
     (covering-AND); scoring is the pure-Column proxy similarity (the
     codegen'd scale path — swap in the pandas-UDF scorer per partition
-    if bit-parity with rapidfuzz is needed).
+    if bit-parity with rapidfuzz is needed). Ranking uses the default
+    weights, type boosts and proximity radius (scout_spark.settings).
     """
-    weights = weights or DEFAULT_WEIGHTS
-    type_boost = type_boost or DEFAULT_TYPE_BOOST
 
     # distinct tokens: the covering check below counts DISTINCT matched
     # tokens, so n_toks must count distinct too or a repeated token in the
@@ -94,7 +86,7 @@ def forward_geocode_batch(
 
     # candidate generation: explode query tokens → posting join →
     # covering-AND (ids matching ALL tokens of their request)
-    index = token_index if token_index is not None else build_token_index(pois)
+    index = build_token_index(pois)
     req_tokens = req.select("req_id", F.explode("qtoks").alias("token"))
     pairs = (
         req_tokens.join(index, "token")
@@ -137,16 +129,14 @@ def forward_geocode_batch(
     # proximity term only for resolved hints — per-request score scale
     # matches the reference (SURVEY.md §2.9 X5)
     proximity = F.when(
-        F.col("center_lat").isNotNull(), proximity_decay(d, proximity_km)
+        F.col("center_lat").isNotNull(), proximity_decay(d, DEFAULT_PROXIMITY_KM)
     )
-    base = score_expr(
-        best_sim, F.col("kind"), F.col("importance"), None, weights, type_boost
-    )
+    base = score_expr(best_sim, F.col("kind"), F.col("importance"))
     scored = cand.withColumn(
         "score",
         base
         + F.coalesce(
-            F.lit(float(weights["proximity"])) * proximity, F.lit(0.0)
+            F.lit(float(DEFAULT_WEIGHTS["proximity"])) * proximity, F.lit(0.0)
         ),
     )
 

@@ -17,11 +17,16 @@ Python task. Area resolution runs no job: the admin table is tiny, so
 the engine collects the columns the lookup needs once at construction
 (the reference opens it per request, app.py:44-56 — SURVEY.md §4 O10
 replaces that with a long-lived in-memory copy).
+
+The substring scan is the only candidate path. The whole-token index in
+operators/inverted_index.py is not a superset of substring matches
+("mono" misses "monograph"), so it cannot serve the reference's rule;
+only the batch plan uses it. The engine's config is
+``scout_spark.settings.GeocodeSettings``, importable from here too.
 """
 
 from __future__ import annotations
 
-from dataclasses import dataclass, field
 from functools import reduce
 from operator import and_
 
@@ -30,12 +35,9 @@ from pyspark.sql import functions as F
 
 from scout_spark.functions.geo import haversine_km, proximity_decay
 from scout_spark.functions.normalize import canon
-from scout_spark.functions.scoring import (
-    DEFAULT_TYPE_BOOST,
-    DEFAULT_WEIGHTS,
-    score_expr,
-)
+from scout_spark.functions.scoring import score_expr
 from scout_spark.operators.fuzzy import best_sim_udf, proxy_similarity
+from scout_spark.settings import GeocodeSettings
 
 
 def _norm_text(s: str | None) -> str:
@@ -53,23 +55,6 @@ def _tokens(s: str | None) -> list[str]:
 
 
 _BBOX_COLS = ("minx", "miny", "maxx", "maxy", "center_lat", "center_lon")
-
-
-@dataclass(frozen=True)
-class GeocodeSettings:
-    """reference config.toml:12-23 / settings.py:46-53 defaults."""
-
-    weights: dict[str, float] = field(default_factory=lambda: dict(DEFAULT_WEIGHTS))
-    type_boost: dict[str, float] = field(
-        default_factory=lambda: dict(DEFAULT_TYPE_BOOST)
-    )
-    proximity_km: float = 25.0
-    limit_scan: int = 10_000
-    use_pandas_udf: bool = True  # False → pure-Column proxy scorer
-    # opt-in token inverted index (SURVEY.md §4 O8): whole-token match
-    # semantics instead of the reference's substring LIKE — see
-    # operators/inverted_index.py for the documented difference
-    use_token_index: bool = False
 
 
 class ScoutEngine:
@@ -103,11 +88,6 @@ class ScoutEngine:
             .select("admin_level", "name_local_norm", "name_en_norm", *_BBOX_COLS)
             .collect()
         ]
-        self.token_index = None
-        if self.settings.use_token_index:
-            from scout_spark.operators.inverted_index import build_token_index
-
-            self.token_index = build_token_index(pois).cache()
 
     # -- area resolution (reference repo.py:16-45) -----------------------
     def resolve_area_bbox(
@@ -138,30 +118,22 @@ class ScoutEngine:
         return None
 
     # -- candidate scan (reference repo.py:48-71) -------------------------
-    def fetch_candidates(
-        self,
-        name_tokens: list[str],
-        bbox: tuple | None,
-        limit_scan: int | None = None,
-    ) -> DataFrame:
-        if name_tokens and self.token_index is not None:
-            from scout_spark.operators.inverted_index import indexed_candidate_scan
-
-            df = indexed_candidate_scan(self.pois, self.token_index, name_tokens)
-        else:
-            pred = F.lit(True)
-            if name_tokens:
-                pred = reduce(
-                    and_,
-                    [
-                        (
-                            F.coalesce(F.col("name_local_norm"), F.lit("")).contains(t)
-                            | F.coalesce(F.col("name_en_norm"), F.lit("")).contains(t)
-                        )
-                        for t in name_tokens
-                    ],
-                )
-            df = self.pois.where(pred)
+    def fetch_candidates(self, name_tokens: list[str], bbox: tuple | None) -> DataFrame:
+        """Every token is a substring of the local or English name (the
+        reference's ``LIKE '%tok%'``), inside the hint bbox, capped."""
+        pred = F.lit(True)
+        if name_tokens:
+            pred = reduce(
+                and_,
+                [
+                    (
+                        F.coalesce(F.col("name_local_norm"), F.lit("")).contains(t)
+                        | F.coalesce(F.col("name_en_norm"), F.lit("")).contains(t)
+                    )
+                    for t in name_tokens
+                ],
+            )
+        df = self.pois.where(pred)
         if bbox:
             minx, miny, maxx, maxy, _, _ = bbox
             df = df.where(
@@ -173,7 +145,7 @@ class ScoutEngine:
         # osm_id) — a distributed top-k heap, so the cap keeps the most
         # important candidates and identical requests see identical sets.
         return df.orderBy(F.col("importance").desc(), F.col("osm_id")).limit(
-            limit_scan or self.settings.limit_scan
+            self.settings.limit_scan
         )
 
     # -- scoring (reference ranking.py:31-114) ----------------------------

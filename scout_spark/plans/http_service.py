@@ -2,8 +2,7 @@
 user-facing boundary (reference app.py:41-120: POST /v1/geocode/forward,
 GET /healthz, Server-Timing/X-Process-Time middleware).
 
-Uses FastAPI+uvicorn when importable (the reference's stack); otherwise
-falls back to a stdlib ThreadingHTTPServer speaking the SAME wire
+Runs a stdlib ThreadingHTTPServer speaking the reference's FastAPI wire
 contract — request body ``{"candidates": [{"text": ...}], "country",
 "city_hint", "limit"}`` (plain-string candidates also accepted),
 response ``{"hits": [...]}``, schema-validated 422s with FastAPI's
@@ -29,13 +28,6 @@ from http.server import BaseHTTPRequestHandler, ThreadingHTTPServer
 from scout_spark.plans.api import forward_geocode
 from scout_spark.plans.geocode import ScoutEngine
 from scout_spark.plans.openapi import openapi_spec, validate_forward
-
-try:  # the reference's stack, when available
-    import fastapi  # noqa: F401
-
-    HAVE_FASTAPI = True
-except ImportError:
-    HAVE_FASTAPI = False
 
 
 def make_handler(engine: ScoutEngine):
@@ -105,9 +97,9 @@ def make_handler(engine: ScoutEngine):
 def serve(engine: ScoutEngine, host: str = "127.0.0.1", port: int = 0):
     """Start the HTTP service; returns the (running, threaded) server —
     call ``.server_address`` for the bound port, ``.shutdown()`` to
-    stop. Runs the stdlib fallback path; a FastAPI deployment would
-    mount the same three routes over ``forward_geocode`` (and generate
-    the /openapi.json document that plans/openapi.py hand-maintains)."""
+    stop. A FastAPI deployment would mount the same three routes over
+    ``forward_geocode`` (and generate the /openapi.json document that
+    plans/openapi.py hand-maintains)."""
     server = ThreadingHTTPServer((host, port), make_handler(engine))
     import threading
 

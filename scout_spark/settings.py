@@ -1,5 +1,7 @@
-"""Configuration loading (reference settings.py:24-54 + config.toml).
+"""Configuration (reference settings.py:24-54 + config.toml).
 
+One default table and one ranking config: ``GeocodeSettings`` is what the
+serving engine reads, and ``Settings`` wraps it with the build options.
 Same keys, same defaults, same precedence: env > TOML > code defaults
 (reference settings.py:36-41). Env overrides use the SCOUT_SPARK_
 prefix (reference uses SCOUT_); weights are read from the
@@ -27,18 +29,33 @@ DEFAULT_TYPE_BOOST = {
     "shop:": 0.60,
     "default": 0.40,
 }
+DEFAULT_LIMIT_SCAN = 10_000
+
+
+@dataclass(frozen=True)
+class GeocodeSettings:
+    """Ranking and serving config (reference settings.py:46-53)."""
+
+    weights: dict[str, float] = field(default_factory=lambda: dict(DEFAULT_WEIGHTS))
+    type_boost: dict[str, float] = field(
+        default_factory=lambda: dict(DEFAULT_TYPE_BOOST)
+    )
+    proximity_km: float = DEFAULT_PROXIMITY_KM
+    limit_scan: int = DEFAULT_LIMIT_SCAN
+    use_pandas_udf: bool = True  # False → pure-Column proxy scorer
+
+    def __post_init__(self):
+        # 0 would cap every scan to no candidates, and a negative cap
+        # fails every request inside Spark's LIMIT
+        if self.limit_scan < 1:
+            raise ValueError(f"limit_scan must be positive, got {self.limit_scan!r}")
 
 
 @dataclass(frozen=True)
 class Settings:
     data_dir: str = "data/gazetteer"
     overwrite: bool = True
-    weights: dict[str, float] = field(default_factory=lambda: dict(DEFAULT_WEIGHTS))
-    proximity_km: float = DEFAULT_PROXIMITY_KM
-    type_boost: dict[str, float] = field(
-        default_factory=lambda: dict(DEFAULT_TYPE_BOOST)
-    )
-    limit_scan: int = 10_000
+    geocode: GeocodeSettings = field(default_factory=GeocodeSettings)
 
 
 def load_settings(path: str | None = None) -> Settings:
@@ -77,8 +94,10 @@ def load_settings(path: str | None = None) -> Settings:
     return Settings(
         data_dir=data_dir,
         overwrite=overwrite,
-        weights={k: float(v) for k, v in weights_tbl.items()},
-        proximity_km=proximity_km,
-        type_boost=type_boost,
-        limit_scan=int(raw.get("serve", {}).get("limit_scan", 10_000)),
+        geocode=GeocodeSettings(
+            weights={k: float(v) for k, v in weights_tbl.items()},
+            type_boost=type_boost,
+            proximity_km=proximity_km,
+            limit_scan=int(raw.get("serve", {}).get("limit_scan", DEFAULT_LIMIT_SCAN)),
+        ),
     )

@@ -49,25 +49,28 @@ def test_batch_shapes_and_ranks(spark, gaz, battery):
 
 
 def test_batch_agrees_with_per_request_engine(spark, gaz, battery):
-    """Top hit per request must match the per-request engine run with the
-    same scorer (proxy) and the token-index candidate path."""
+    """Each request's full top-k — (osm_id, score) in rank order — must
+    equal the default per-request engine's (substring scan) run with the
+    same scorer (proxy). The battery's tokens are whole words, where the
+    substring and whole-token candidate rules agree."""
     pois, admin = gaz
-    batch = {
-        r["req_id"]: r["name"]
-        for r in forward_geocode_batch(battery, pois, admin, limit=1).collect()
-    }
-    eng = ScoutEngine(
-        spark,
-        pois,
-        admin,
-        GeocodeSettings(use_pandas_udf=False, use_token_index=True),
-    )
-    for req in battery.collect():
-        hits = eng.forward([req["query"]], country=req["country"], limit=1).collect()
-        if req["req_id"] in batch:
-            assert hits and batch[req["req_id"]] == hits[0]["name"], req["query"]
-        else:
-            assert not hits
+    eng = ScoutEngine(spark, pois, admin, GeocodeSettings(use_pandas_udf=False))
+    requests = battery.collect()
+    for limit in (1, 5):
+        batch = {}
+        for r in forward_geocode_batch(battery, pois, admin, limit=limit).collect():
+            batch.setdefault(r["req_id"], []).append(r)
+        for req in requests:
+            got = sorted(batch.get(req["req_id"], []), key=lambda r: r["rank"])
+            want = eng.forward(
+                [req["query"]], country=req["country"], limit=limit
+            ).collect()
+            assert [h["osm_id"] for h in got] == [h["osm_id"] for h in want], (
+                req["query"], limit,
+            )
+            assert [h["score"] for h in got] == pytest.approx(
+                [h["score"] for h in want], abs=1e-6
+            ), (req["query"], limit)
 
 
 def test_batch_deterministic(spark, gaz, battery):

@@ -1,86 +1,39 @@
-"""Token inverted index tests (SURVEY.md §4 O8): covering-AND candidate
-semantics, equivalence with the contains-scan for whole-token queries,
-and the documented substring divergence."""
+"""Token inverted index tests (SURVEY.md §4 O8): the posting table the
+batch plan reads, and the whole-token vs substring gap between batch and
+per-request serving."""
 
 from __future__ import annotations
 
 import pytest
-from pyspark.sql import functions as F
 
 from scout_spark.etl.fixtures import raw_osm_fixture
 from scout_spark.etl.gazetteer import build_admin, build_pois
-from scout_spark.operators.inverted_index import (
-    build_token_index,
-    candidate_ids,
-    indexed_candidate_scan,
-)
+from scout_spark.operators.inverted_index import build_token_index
+from scout_spark.plans.batch_geocode import forward_geocode_batch
 from scout_spark.plans.geocode import GeocodeSettings, ScoutEngine
 
 
 @pytest.fixture(scope="module")
-def pois(spark):
-    return build_pois(raw_osm_fixture(spark, n_pois=200)).cache()
+def gaz(spark):
+    raw = raw_osm_fixture(spark, n_pois=200)
+    return build_pois(raw).cache(), build_admin(raw).cache()
 
 
-@pytest.fixture(scope="module")
-def index(pois):
-    return build_token_index(pois).cache()
-
-
-def test_posting_table_shape(index):
+def test_posting_table_shape(gaz):
+    index = build_token_index(gaz[0])
     assert index.columns == ["token", "id"]
     assert index.count() == index.distinct().count()
 
 
-def test_covering_and_semantics(pois, index):
-    # ids matching BOTH tokens = intersection of single-token id sets
-    both = {r["id"] for r in candidate_ids(index, ["monograph", "dining"]).collect()}
-    a = {r["id"] for r in candidate_ids(index, ["monograph"]).collect()}
-    b = {r["id"] for r in candidate_ids(index, ["dining"]).collect()}
-    assert both == a & b and both
-
-
-def test_whole_token_query_matches_contains_scan(pois, index):
-    """For whole-token queries the index path returns exactly the rows the
-    reference's contains-filter returns (every token of the query appears
-    as a full token in a normalized name)."""
-    for tokens in (["monograph", "dining"], ["kopitiam"], ["taman", "botani"]):
-        via_index = {
-            r["osm_id"] for r in indexed_candidate_scan(pois, index, tokens).collect()
-        }
-        from functools import reduce
-        from operator import and_
-
-        pred = reduce(
-            and_,
-            [
-                (
-                    F.coalesce(F.col("name_local_norm"), F.lit("")).contains(t)
-                    | F.coalesce(F.col("name_en_norm"), F.lit("")).contains(t)
-                )
-                for t in tokens
-            ],
-        )
-        via_scan_full = {r["osm_id"] for r in pois.where(pred).collect()}
-        # whole-token hits are always a subset of substring hits; for these
-        # fixture names the substring scan finds no extra partial-word rows
-        assert via_index == via_scan_full, tokens
-
-
-def test_substring_divergence_documented(pois, index):
-    """'mono' as a substring matches 'monograph' rows in the scan path but
-    not in the token index — the documented semantic difference."""
-    scan = pois.where(
-        F.coalesce(F.col("name_local_norm"), F.lit("")).contains("mono")
-    ).count()
-    idx = indexed_candidate_scan(pois, index, ["mono"]).count()
-    assert scan > 0 and idx == 0
-
-
-def test_engine_with_index_end_to_end(spark, pois):
-    admin = build_admin(raw_osm_fixture(spark, n_pois=200))
-    eng = ScoutEngine(
-        spark, pois, admin, GeocodeSettings(use_pandas_udf=False, use_token_index=True)
+def test_substring_divergence_documented(spark, gaz):
+    """'mono' is a substring of 'monograph': per-request serving (the
+    reference's LIKE) finds the Monograph rows, while the batch plan's
+    whole-token index finds none — the gap between the two paths."""
+    pois, admin = gaz
+    eng = ScoutEngine(spark, pois, admin, GeocodeSettings(use_pandas_udf=False))
+    served = eng.forward(["mono"], limit=5).collect()
+    assert served and all("monograph" in h["name"].lower() for h in served)
+    battery = spark.createDataFrame(
+        [(0, "mono", None)], "req_id long, query string, country string"
     )
-    hits = eng.forward(["Monograph Dining"], country="malaysia", limit=3).collect()
-    assert hits and hits[0]["name"] == "Monograph Dining"
+    assert forward_geocode_batch(battery, pois, admin, limit=5).count() == 0
