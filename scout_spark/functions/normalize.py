@@ -34,6 +34,15 @@ def canon(col: Column | str) -> Column:
     return F.trim(F.regexp_replace(stripped, r"\s+", " "))
 
 
+CANON_SQL = (
+    "trim(regexp_replace(regexp_replace(lower(coalesce({col}, '')),"
+    r" r'[^\p{{L}}\p{{N}}\s]', ' '), r'\s+', ' '))"
+)
+"""Spark SQL rendering of ``canon``, a ``str.format`` template over
+``{col}`` like ``CANON_ASCII_SQL`` (raw literals keep the patterns
+independent of the parser's escape setting)."""
+
+
 def canon_ascii(col: Column | str) -> Column:
     """ASCII-exact canonical form matching DuckDB RE2 ``[[:alnum:]]``
     semantics: identical results in Spark and the DuckDB oracle.

@@ -242,6 +242,11 @@ def _fixture_engine(spark: SparkSession):
     tags=("rows-only",),
 )
 def geocode_forward_fixture(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return _fixture_engine(spark).forward(
+    hits = _fixture_engine(spark).forward(
         ["Monograph Dining"], country="malaysia", limit=5
+    )
+    return spark.createDataFrame(
+        hits,
+        "name string, lat double, lon double, country string, state string,"
+        " city string, osm_id bigint, kind string, score double",
     )

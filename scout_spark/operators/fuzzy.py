@@ -35,7 +35,9 @@ except ImportError:
 
 
 def _score_series(queries: list[str], targets: pd.Series) -> pd.Series:
-    """max over query texts of WRatio(q, target)/100 for each target."""
+    """max over query texts of WRatio(q, target)/100 for each target —
+    the one kernel behind ``best_sim_udf`` and the serving engine's
+    driver-side scoring (plans/geocode.py)."""
     if HAVE_RAPIDFUZZ:
         scorer = _rf_fuzz.WRatio
     else:

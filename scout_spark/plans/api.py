@@ -40,24 +40,7 @@ class ForwardResponse:
 
 def forward_geocode(engine: ScoutEngine, req: ForwardRequest) -> ForwardResponse:
     """The full serve path with request timing (reference app.py:58-65
-    middleware analogue). collect() is the service boundary — by
-    construction at most ``limit`` rows cross it."""
+    middleware analogue)."""
     t0 = time.perf_counter()
-    rows = engine.forward(
-        req.candidates, req.country, req.city_hint, req.limit
-    ).collect()
-    hits = [
-        {
-            "name": r["name"],
-            "lat": float(r["lat"]),
-            "lon": float(r["lon"]),
-            "country": r["country"],
-            "state": r["state"],
-            "city": r["city"],
-            "osm_id": int(r["osm_id"]),
-            "kind": r["kind"],
-            "score": float(r["score"]),
-        }
-        for r in rows
-    ]
+    hits = engine.forward(req.candidates, req.country, req.city_hint, req.limit)
     return ForwardResponse(hits=hits, took_ms=round((time.perf_counter() - t0) * 1e3, 1))

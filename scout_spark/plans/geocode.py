@@ -1,22 +1,29 @@
 """Forward-geocode serving plan — the reference's flagship query path
 (reference app.py:67-114 → repo.py → ranking.py; SURVEY.md §3.1)
-restated as one lazy DataFrame per request.
+restated as one parameterized Spark SQL scan per request, scored on the
+driver.
 
 Pipeline (all semantics preserved, SURVEY.md §2.12):
   tokenize+dedup (driver) → area bbox resolve (driver-side lookup over
   the admin rows collected once, top-1 by area) → candidate scan
-  (token-contains ∧ bbox BETWEEN, capped) → score (fuzzy best-sim + type
-  boost + importance [+ proximity iff bbox]) → top-k.
+  (token-contains ∧ bbox BETWEEN, capped; Spark) → one Arrow collect →
+  score (fuzzy best-sim + type boost + importance [+ proximity iff
+  bbox]; driver) → top-k (driver).
 
 Scale shape: the scan is filter→project over partition-pruned parquet
-(embarrassingly parallel, no shuffle); the ``limit_scan`` cap is one
-TakeOrderedAndProject; scoring is one pandas-UDF stage over the capped
-rows (or pure-Column proxy); top-k is a second TakeOrderedAndProject. A
-request with tokens runs one Spark job, and with the pandas UDF one
-Python task. Area resolution runs no job: the admin table is tiny, so
-the engine collects the columns the lookup needs once at construction
-(the reference opens it per request, app.py:44-56 — SURVEY.md §4 O10
-replaces that with a long-lived in-memory copy).
+(embarrassingly parallel, no shuffle) and the ``limit_scan`` cap is one
+TakeOrderedAndProject, planned from one ``spark.sql`` text with the
+request's tokens and bbox bound as parameters. At most ``limit_scan``
+rows cross to the driver, whatever the gazetteer's size, and are scored
+there with numpy and the WRatio kernel — the reference's own shape
+(repo.py:48-71 → ranking.py:31-114). With the proxy scorer the
+similarity is a Column projected on the capped rows instead. A request
+with tokens runs one Spark job and no Python task; its plan costs a few
+dozen py4j calls instead of a Column tree of over a thousand. Area
+resolution runs no job: the admin table is tiny, so the engine collects
+the columns the lookup needs once at construction (the reference opens
+it per request, app.py:44-56 — SURVEY.md §4 O10 replaces that with a
+long-lived in-memory copy).
 
 The substring scan is the only candidate path. The whole-token index in
 operators/inverted_index.py is not a superset of substring matches
@@ -27,17 +34,17 @@ only the batch plan uses it. The engine's config is
 
 from __future__ import annotations
 
-from functools import reduce
-from operator import and_
+import uuid
 
+import numpy as np
+import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from scout_spark.functions.geo import haversine_km, proximity_decay
-from scout_spark.functions.normalize import canon
-from scout_spark.functions.scoring import score_expr
-from scout_spark.operators.fuzzy import best_sim_udf, proxy_similarity
-from scout_spark.settings import GeocodeSettings
+from scout_spark.functions.geo import EARTH_RADIUS_KM, haversine_km
+from scout_spark.functions.normalize import CANON_SQL
+from scout_spark.operators.fuzzy import _score_series, proxy_similarity
+from scout_spark.settings import DEFAULT_TYPE_BOOST, DEFAULT_WEIGHTS, GeocodeSettings
 
 
 def _norm_text(s: str | None) -> str:
@@ -56,6 +63,13 @@ def _tokens(s: str | None) -> list[str]:
 
 _BBOX_COLS = ("minx", "miny", "maxx", "maxy", "center_lat", "center_lon")
 
+# the scoring targets: the precomputed norm, else canon of the raw name
+# (reference ranking.py:71-72 fallback)
+_TARGETS_SQL = ", ".join(
+    f"coalesce(name_{n}_norm, {CANON_SQL.format(col=f'name_{n}')}) AS target_{n}"
+    for n in ("local", "en")
+)
+
 
 class ScoutEngine:
     """Long-lived serving engine over pois/admin DataFrames
@@ -72,6 +86,10 @@ class ScoutEngine:
         self.spark = spark
         self.settings = settings or GeocodeSettings()
         self.pois = pois
+        # the candidate scan's table; unique per engine, so engines over
+        # different frames can share one session
+        self._view = f"scout_pois_{uuid.uuid4().hex}"
+        pois.createOrReplaceTempView(self._view)
         # the whole area lookup's input, collected once in lookup order
         # (bbox area DESC NULLS LAST, osm_id ASC NULLS FIRST); a row
         # missing a corner or centre has no usable bbox and is left out
@@ -120,79 +138,76 @@ class ScoutEngine:
     # -- candidate scan (reference repo.py:48-71) -------------------------
     def fetch_candidates(self, name_tokens: list[str], bbox: tuple | None) -> DataFrame:
         """Every token is a substring of the local or English name (the
-        reference's ``LIKE '%tok%'``), inside the hint bbox, capped."""
-        pred = F.lit(True)
-        if name_tokens:
-            pred = reduce(
-                and_,
-                [
-                    (
-                        F.coalesce(F.col("name_local_norm"), F.lit("")).contains(t)
-                        | F.coalesce(F.col("name_en_norm"), F.lit("")).contains(t)
-                    )
-                    for t in name_tokens
-                ],
+        reference's ``LIKE '%tok%'``), inside the hint bbox, capped. Each
+        row also carries its two scoring targets. One parameterized query,
+        as the reference runs it: the tokens and bbox corners are bound
+        in ``args``, never formatted into the text."""
+        preds, args = [], {}
+        for i, t in enumerate(name_tokens):
+            args[f"t{i}"] = t
+            preds.append(
+                f"(contains(coalesce(name_local_norm, ''), :t{i})"
+                f" OR contains(coalesce(name_en_norm, ''), :t{i}))"
             )
-        df = self.pois.where(pred)
         if bbox:
-            minx, miny, maxx, maxy, _, _ = bbox
-            df = df.where(
-                F.col("lat").between(miny, maxy) & F.col("lon").between(minx, maxx)
-            )
+            args.update(zip(("minx", "miny", "maxx", "maxy"), bbox[:4]))
+            preds.append("lat BETWEEN :miny AND :maxy AND lon BETWEEN :minx AND :maxx")
         # deliberate improvement over the reference (flagged, SURVEY.md §4
         # O6): its LIMIT without ORDER BY truncates candidates
         # nondeterministically (repo.py:52); we cap on (importance desc,
         # osm_id) — a distributed top-k heap, so the cap keeps the most
         # important candidates and identical requests see identical sets.
-        return df.orderBy(F.col("importance").desc(), F.col("osm_id")).limit(
-            self.settings.limit_scan
+        return self.spark.sql(
+            f"SELECT *, {_TARGETS_SQL} FROM {self._view}"
+            f" WHERE {' AND '.join(preds) or 'true'}"
+            f" ORDER BY importance DESC, osm_id LIMIT {self.settings.limit_scan}",
+            args=args,
         )
 
     # -- scoring (reference ranking.py:31-114) ----------------------------
-    def _scored(
-        self, candidates: DataFrame, query_norms: list[str], bbox: tuple | None
-    ) -> DataFrame:
+    def _score(
+        self, cands: pd.DataFrame, best_sim: np.ndarray, bbox: tuple | None
+    ) -> np.ndarray:
+        """``functions.scoring.score_expr`` over the collected candidates,
+        in its order of float operations (and ``haversine_km`` /
+        ``proximity_decay`` in theirs): type boost by first matching
+        prefix, NULL importance as 0, proximity only when a bbox
+        resolved."""
         s = self.settings
-        # target = precomputed norm, else canon of the raw name
-        # (reference ranking.py:71-72 fallback)
-        target_local = F.coalesce(F.col("name_local_norm"), canon(F.col("name_local")))
-        target_en = F.coalesce(F.col("name_en_norm"), canon(F.col("name_en")))
-        if s.use_pandas_udf:
-            # nondeterministic keeps the score projection above the
-            # limit_scan cap: a deterministic one is pushed below it, and
-            # the Python eval between the cap's limit and sort turns the
-            # cap into a range-partitioned global sort (extra jobs, a
-            # UDF task per shuffle partition) instead of one
-            # TakeOrderedAndProject feeding a single Python task
-            sim_fn = best_sim_udf(query_norms).asNondeterministic()
-            best_sim = F.greatest(sim_fn(target_local), sim_fn(target_en))
-        else:
-            sims = [
-                F.greatest(
-                    proxy_similarity(target_local, q),
-                    proxy_similarity(target_en, q),
+        w = s.weights or DEFAULT_WEIGHTS
+        boost_map = s.type_boost or DEFAULT_TYPE_BOOST
+        default = float(boost_map.get("default", 0.4))
+        prefixes = [(p, float(v)) for p, v in boost_map.items() if p != "default"]
+        boost = np.array(
+            [
+                next(
+                    (v for p, v in prefixes if isinstance(k, str) and k.startswith(p)),
+                    default,
                 )
-                for q in query_norms
-            ]
-            best_sim = sims[0] if len(sims) == 1 else F.greatest(*sims)
-        proximity = None
+                for k in cands["kind"]
+            ],
+            dtype="float64",
+        )
+        importance = cands["importance"].astype("float64").fillna(0.0).to_numpy()
+        score = (
+            float(w["similarity"]) * best_sim
+            + float(w["type"]) * boost
+            + float(w["importance"]) * importance
+        )
         if bbox:
             _, _, _, _, ctr_lat, ctr_lon = bbox
-            d = haversine_km(
-                F.col("lat"), F.col("lon"), F.lit(ctr_lat), F.lit(ctr_lon)
+            lat = cands["lat"].to_numpy(dtype="float64")
+            lon = cands["lon"].to_numpy(dtype="float64")
+            phi1, phi2 = np.radians(lat), np.radians(ctr_lat)
+            dl = np.radians(ctr_lon - lon)
+            a = (
+                np.sin((phi2 - phi1) / 2) ** 2
+                + np.cos(phi1) * np.cos(phi2) * np.sin(dl / 2) ** 2
             )
-            proximity = proximity_decay(d, s.proximity_km)
-        return candidates.withColumn(
-            "score",
-            score_expr(
-                best_sim,
-                F.col("kind"),
-                F.col("importance"),
-                proximity,
-                s.weights,
-                s.type_boost,
-            ),
-        )
+            d = 2 * EARTH_RADIUS_KM * np.arcsin(np.sqrt(a))
+            proximity = np.maximum(0.0, 1.0 - np.minimum(d / s.proximity_km, 1.0))
+            score = score + float(w["proximity"]) * proximity
+        return score
 
     # -- full request (reference app.py:67-114) ---------------------------
     def forward(
@@ -201,10 +216,12 @@ class ScoutEngine:
         country: str | None = None,
         city_hint: str | None = None,
         limit: int = 5,
-    ) -> DataFrame:
-        """Returns the hit DataFrame (name, lat, lon, country, state,
-        city, osm_id, kind, score) — collect() at the service boundary.
-        Empty token list → empty result without a scan (app.py:96-97)."""
+    ) -> list[dict]:
+        """The top-``limit`` hits (name, lat, lon, country, state, city,
+        osm_id, kind, score), ordered by (score desc, osm_id). The capped
+        candidate set crosses to the driver in one Arrow collect and is
+        scored there, as the reference scores its scan in-process.
+        Empty token list → no hits, without a scan (app.py:96-97)."""
         # order-preserving token dedup across candidate texts (app.py:89-95)
         seen: dict[str, None] = {}
         for text in candidates:
@@ -213,23 +230,44 @@ class ScoutEngine:
         toks = list(seen)
         query_norms = [q for q in (_norm_text(t) for t in candidates) if q]
         if not toks:
-            return self._empty_hits()
+            return []
         bbox = self.resolve_area_bbox(city_hint, country)
         cand = self.fetch_candidates(toks, bbox)
-        scored = self._scored(cand, query_norms, bbox)
-        return scored.select(
-            F.coalesce(F.col("name_local"), F.col("name_en"), F.lit("")).alias(
-                "name"
-            ),
-            "lat",
-            "lon",
-            "country",
-            "state",
-            "city",
-            "osm_id",
-            "kind",
-            "score",
-        ).orderBy(F.col("score").desc(), F.col("osm_id")).limit(limit)
+        if self.settings.use_pandas_udf:
+            rows = cand.toPandas()
+            best_sim = np.maximum(
+                _score_series(query_norms, rows["target_local"].fillna("")).to_numpy(),
+                _score_series(query_norms, rows["target_en"].fillna("")).to_numpy(),
+            )
+        else:
+            sims = [
+                F.greatest(
+                    proxy_similarity(F.col("target_local"), q),
+                    proxy_similarity(F.col("target_en"), q),
+                )
+                for q in query_norms
+            ]
+            best = sims[0] if len(sims) == 1 else F.greatest(*sims)
+            rows = cand.select("*", best.alias("best_sim")).toPandas()
+            best_sim = rows["best_sim"].to_numpy(dtype="float64")
+        score = self._score(rows, best_sim, bbox)
+        top = np.lexsort((rows["osm_id"].to_numpy(), -score))[:limit]
+        return [
+            {
+                "name": next(
+                    (n for n in (r.name_local, r.name_en) if n is not None), ""
+                ),
+                "lat": float(r.lat),
+                "lon": float(r.lon),
+                "country": r.country,
+                "state": r.state,
+                "city": r.city,
+                "osm_id": int(r.osm_id),
+                "kind": r.kind,
+                "score": float(score[i]),
+            }
+            for i, r in zip(top, rows.iloc[top].itertuples(index=False))
+        ]
 
     def reverse(self, lat: float, lon: float, limit: int = 5) -> DataFrame:
         """Reverse geocoding — nearest POIs to a coordinate (extension;
@@ -255,11 +293,4 @@ class ScoutEngine:
             )
             .orderBy(F.col("distance_km"), F.col("osm_id"))
             .limit(limit)
-        )
-
-    def _empty_hits(self) -> DataFrame:
-        return self.spark.createDataFrame(
-            [],
-            "name string, lat double, lon double, country string, state string,"
-            " city string, osm_id bigint, kind string, score double",
         )

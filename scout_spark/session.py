@@ -10,8 +10,28 @@ UDF paths batch efficiently.
 from __future__ import annotations
 
 import os
+import warnings
 
 from pyspark.sql import SparkSession
+
+
+def _env_count(name: str) -> int:
+    """$name as a positive integer, or 0 (use the default) when it is
+    unset or empty; any other value warns and also falls back."""
+    raw = os.environ.get(name, "").strip()
+    if not raw:
+        return 0
+    try:
+        value = int(raw)
+    except ValueError:
+        value = 0
+    if value < 1:
+        warnings.warn(
+            f"{name}={raw!r} is not a positive integer; using the default",
+            stacklevel=3,
+        )
+        return 0
+    return value
 
 
 def get_spark(
@@ -25,10 +45,12 @@ def get_spark(
     default to the parallelism level locally; on a real cluster leave the
     default and let AQE coalesce (spark.sql.adaptive.coalescePartitions).
     """
-    cpus = cpus or int(os.environ.get("SPARK_GRAFT_CPUS", "0")) or os.cpu_count() or 4
-    shuffle = shuffle_partitions or int(
-        os.environ.get("SPARK_GRAFT_SHUFFLE_PARTITIONS", "0")
-    ) or max(cpus, 8)
+    cpus = cpus or _env_count("SPARK_GRAFT_CPUS") or os.cpu_count() or 4
+    shuffle = (
+        shuffle_partitions
+        or _env_count("SPARK_GRAFT_SHUFFLE_PARTITIONS")
+        or max(cpus, 8)
+    )
     builder = (
         SparkSession.builder.appName(app_name)
         .config("spark.sql.session.timeZone", "UTC")

@@ -64,7 +64,7 @@ def test_batch_agrees_with_per_request_engine(spark, gaz, battery):
             got = sorted(batch.get(req["req_id"], []), key=lambda r: r["rank"])
             want = eng.forward(
                 [req["query"]], country=req["country"], limit=limit
-            ).collect()
+            )
             assert [h["osm_id"] for h in got] == [h["osm_id"] for h in want], (
                 req["query"], limit,
             )

@@ -23,7 +23,7 @@ def engine(request, spark):
 
 
 def test_exact_match_ranks_first(engine):
-    hits = engine.forward(["Monograph Dining"], country="malaysia", limit=3).collect()
+    hits = engine.forward(["Monograph Dining"], country="malaysia", limit=3)
     assert len(hits) == 3
     assert hits[0]["name"] == "Monograph Dining"
     assert hits[0]["score"] >= hits[1]["score"] >= hits[2]["score"]
@@ -33,19 +33,19 @@ def test_fuzzy_near_match_found(engine):
     # 1-edit typo still retrieves the cluster (verify phase does the work;
     # note the token filter requires substring containment, so the typo'd
     # token must still be contained — use the real name's tokens)
-    hits = engine.forward(["monograph"], limit=5).collect()
+    hits = engine.forward(["monograph"], limit=5)
     names = [h["name"] for h in hits]
     assert any("Monograph" in n for n in names)
 
 
 def test_multilingual_name(engine):
-    hits = engine.forward(["美食中心"], limit=3).collect()
+    hits = engine.forward(["美食中心"], limit=3)
     assert hits and hits[0]["name"] == "美食中心"
 
 
 def test_empty_tokens_early_return(engine):
     # reference app.py:96-97 — punctuation-only text → no scan, no hits
-    assert engine.forward(["!!! ...  "], limit=5).collect() == []
+    assert engine.forward(["!!! ...  "], limit=5) == []
 
 
 def test_unknown_hint_unrestricted(engine):
@@ -53,14 +53,14 @@ def test_unknown_hint_unrestricted(engine):
     # no proximity term in score
     hits = engine.forward(
         ["Monograph Dining"], city_hint="atlantis zzz", limit=3
-    ).collect()
+    )
     assert hits and hits[0]["name"] == "Monograph Dining"
 
 
 def test_city_hint_restricts_bbox(engine):
     # with a KL hint, all hits fall inside the KL bbox (reference
     # repo.py:57-61 bbox predicate)
-    hits = engine.forward(["Monograph Dining"], city_hint="kuala lumpur", limit=5).collect()
+    hits = engine.forward(["Monograph Dining"], city_hint="kuala lumpur", limit=5)
     assert hits
     for h in hits:
         assert 3.139 - 0.25 <= h["lat"] <= 3.139 + 0.25
@@ -89,19 +89,19 @@ def test_score_exceeds_one_with_bbox(engine):
     # weights sum to 1.15 when bbox present (SURVEY.md §2.12) — an exact
     # match with max type boost can exceed 1.0; at minimum scores differ
     # between hinted and unhinted runs on the same query
-    hinted = engine.forward(["Monograph Dining"], city_hint="kuala lumpur", limit=1).collect()
-    unhinted = engine.forward(["Monograph Dining"], limit=1).collect()
+    hinted = engine.forward(["Monograph Dining"], city_hint="kuala lumpur", limit=1)
+    unhinted = engine.forward(["Monograph Dining"], limit=1)
     assert hinted and unhinted
     assert hinted[0]["score"] > unhinted[0]["score"] - 1e-9
 
 
 def test_limit_respected(engine):
-    assert len(engine.forward(["kedai"], limit=2).collect()) <= 2
+    assert len(engine.forward(["kedai"], limit=2)) <= 2
 
 
 def test_deterministic_across_runs(engine):
-    a = engine.forward(["Monograph Dining"], country="malaysia", limit=5).collect()
-    b = engine.forward(["Monograph Dining"], country="malaysia", limit=5).collect()
+    a = engine.forward(["Monograph Dining"], country="malaysia", limit=5)
+    b = engine.forward(["Monograph Dining"], country="malaysia", limit=5)
     assert a == b
 
 

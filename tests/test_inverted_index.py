@@ -31,7 +31,7 @@ def test_substring_divergence_documented(spark, gaz):
     whole-token index finds none — the gap between the two paths."""
     pois, admin = gaz
     eng = ScoutEngine(spark, pois, admin, GeocodeSettings(use_pandas_udf=False))
-    served = eng.forward(["mono"], limit=5).collect()
+    served = eng.forward(["mono"], limit=5)
     assert served and all("monograph" in h["name"].lower() for h in served)
     battery = spark.createDataFrame(
         [(0, "mono", None)], "req_id long, query string, country string"

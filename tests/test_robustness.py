@@ -275,3 +275,20 @@ def test_malformed_env_value_does_not_break_registry_load(monkeypatch):
     finally:
         REGISTRY.clear()
         REGISTRY.update(saved)
+
+
+@pytest.mark.parametrize("bad", ["abc", "-2", "0", "1.5"])
+@pytest.mark.parametrize("var", ["SPARK_GRAFT_CPUS", "SPARK_GRAFT_SHUFFLE_PARTITIONS"])
+def test_bad_env_count_falls_back_with_a_warning(spark, monkeypatch, var, bad):
+    """A malformed or non-positive core or partition count warns and
+    takes the default instead of crashing get_spark() (or asking for
+    local[-2]); the running session is returned unchanged."""
+    from scout_spark.session import get_spark
+
+    partitions = spark.conf.get("spark.sql.shuffle.partitions")
+    monkeypatch.setenv(var, bad)
+    try:
+        with pytest.warns(UserWarning, match=var):
+            assert get_spark("scout-spark-tests") is spark
+    finally:
+        spark.conf.set("spark.sql.shuffle.partitions", partitions)

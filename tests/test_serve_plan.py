@@ -1,16 +1,19 @@
 """The serving plan of ``ScoutEngine.forward``: area resolution is a
 driver-side lookup that matches the Spark query it replaced, and a
-hinted request with tokens runs one Spark job whose pandas-UDF scorer
-reads the ``limit_scan`` cap straight from a TakeOrderedAndProject."""
+hinted request with tokens runs one Spark job, a TakeOrderedAndProject
+cap with no Python task, collected once and scored on the driver."""
 
 from __future__ import annotations
 
 import json
+import threading
 from functools import reduce
 from operator import and_
 
 import pytest
+from py4j.clientserver import ClientServerConnection
 from pyspark.sql import functions as F
+from pyspark.sql.classic.dataframe import DataFrame
 
 from scout_spark.etl.fixtures import raw_osm_fixture
 from scout_spark.etl.gazetteer import build_admin, build_pois
@@ -181,7 +184,7 @@ def _walk(tree):
         yield from _walk(child)
 
 
-def test_hinted_request_runs_one_job(spark):
+def test_hinted_request_runs_one_job(spark, monkeypatch):
     raw = raw_osm_fixture(spark, n_pois=300)
     engine = ScoutEngine(spark, build_pois(raw).cache(), build_admin(raw))
     sc = spark.sparkContext
@@ -194,18 +197,40 @@ def test_hinted_request_runs_one_job(spark):
     assert bbox is not None
     assert area_jobs == 0
 
-    resp, jobs = _jobs(sc, "serve-plan/request", lambda: forward_geocode(engine, req))
+    # the frames a request collects, and the py4j calls its thread makes
+    # (py4j's finalizer thread releases dead objects on its own schedule)
+    collected, calls = [], []
+    caller = threading.get_ident()
+    to_pandas, send = DataFrame.toPandas, ClientServerConnection.send_command
+
+    def recording(self):
+        collected.append(self)
+        return to_pandas(self)
+
+    def counting(self, *args, **kwargs):
+        if threading.get_ident() == caller:
+            calls.append(None)
+        return send(self, *args, **kwargs)
+
+    def request():
+        monkeypatch.setattr(DataFrame, "toPandas", recording)
+        monkeypatch.setattr(ClientServerConnection, "send_command", counting)
+        try:
+            return forward_geocode(engine, req)
+        finally:
+            monkeypatch.undo()
+
+    resp, jobs = _jobs(sc, "serve-plan/request", request)
     assert resp.hits and resp.hits == warm.hits
     assert resp.hits[0]["name"] == "Monograph Dining"
     assert jobs == 1
+    assert len(calls) <= 64
 
-    df = engine.forward(req.candidates, req.country, req.city_hint, req.limit)
-    df.collect()
-    nodes = list(_walk(_plan_tree(df)))
-    classes = [cls for cls, _ in nodes]
+    assert len(collected) == 1
+    tree = _plan_tree(collected[0])
+    classes = [cls for cls, _ in _walk(tree)]
     # an adaptive root would hide the plan below it from toJSON
-    assert "AdaptiveSparkPlanExec" not in classes
+    assert tree[0] == "TakeOrderedAndProjectExec"
     assert "ShuffleExchangeExec" not in classes
-    udf = [kids for cls, kids in nodes if cls == "ArrowEvalPythonExec"]
-    assert len(udf) == 1
-    assert [cls for cls, _ in udf[0]] == ["TakeOrderedAndProjectExec"]
+    assert "ArrowEvalPythonExec" not in classes
+    assert "BatchEvalPythonExec" not in classes

@@ -155,7 +155,7 @@ def test_concurrent_queries_one_session(spark):
     queries = ["Monograph Dining", "kopitiam 88", "taman botani", "美食中心"] * 3
 
     def run(q):
-        return (q, engine.forward([q], limit=1).collect())
+        return (q, engine.forward([q], limit=1))
 
     with ThreadPoolExecutor(max_workers=6) as ex:
         results = dict(ex.map(run, queries))
