@@ -8,6 +8,8 @@ tests/test_geocode_e2e.py instead).
 
 from __future__ import annotations
 
+import threading
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -206,26 +208,35 @@ def geocode_reverse_fixture(spark: SparkSession, sf_dir: str) -> DataFrame:
     return engine.reverse(3.139, 101.6869, limit=5)
 
 
+# (pois, admin, engine): one engine for as long as shared_frame hands out
+# the same fixture frames, so repeated calls neither collect the admin
+# rows again nor register another temp view
+_fixture: tuple | None = None
+_fixture_lock = threading.Lock()
+
+
 def _fixture_engine(spark: SparkSession):
     from scout_spark.etl.fixtures import raw_osm_fixture
     from scout_spark.etl.gazetteer import build_admin, build_pois
     from scout_spark.plans.geocode import GeocodeSettings, ScoutEngine
 
+    global _fixture
     key = (spark.sparkContext.applicationId,)
-    return ScoutEngine(
-        spark,
-        shared_frame(
-            "fixture_pois",
-            key,
-            lambda: build_pois(raw_osm_fixture(spark, n_pois=300)),
-        ),
-        shared_frame(
-            "fixture_admin",
-            key,
-            lambda: build_admin(raw_osm_fixture(spark, n_pois=300)),
-        ),
-        GeocodeSettings(use_pandas_udf=False),
+    pois = shared_frame(
+        "fixture_pois",
+        key,
+        lambda: build_pois(raw_osm_fixture(spark, n_pois=300)),
     )
+    admin = shared_frame(
+        "fixture_admin",
+        key,
+        lambda: build_admin(raw_osm_fixture(spark, n_pois=300)),
+    )
+    with _fixture_lock:
+        if _fixture is None or _fixture[0] is not pois or _fixture[1] is not admin:
+            engine = ScoutEngine(spark, pois, admin, GeocodeSettings(use_pandas_udf=False))
+            _fixture = (pois, admin, engine)
+        return _fixture[2]
 
 
 @register(

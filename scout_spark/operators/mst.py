@@ -85,10 +85,11 @@ def boruvka_mst(
         # over the session-persisted _edges cache, so storageLevel on
         # `edges` itself is useless (projections report NONE); check
         # the optimized plan for a materialized ancestor instead
-        # (InMemoryRelation = persisted, LogicalRDD/ExistingRDD =
-        # checkpointed). Pure driver-side plan text, no job.
-        plan = edges._jdf.queryExecution().optimizedPlan().toString()
-        if "InMemoryRelation" not in plan and "LogicalRDD" not in plan:
+        # (InMemoryRelation = persisted, LogicalRDD = checkpointed).
+        # Reads the plan's leaf node classes on the driver, no job.
+        leaves = edges._jdf.queryExecution().optimizedPlan().collectLeaves()
+        names = {leaves.apply(i).nodeName() for i in range(leaves.size())}
+        if not names & {"InMemoryRelation", "LogicalRDD"}:
             import warnings
 
             warnings.warn(

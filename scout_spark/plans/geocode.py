@@ -6,16 +6,20 @@ driver.
 Pipeline (all semantics preserved, SURVEY.md §2.12):
   tokenize+dedup (driver) → area bbox resolve (driver-side lookup over
   the admin rows collected once, top-1 by area) → candidate scan
-  (token-contains ∧ bbox BETWEEN, capped; Spark) → one Arrow collect →
+  (token-contains ∧ inside bbox, capped; Spark) → one Arrow collect →
   score (fuzzy best-sim + type boost + importance [+ proximity iff
   bbox]; driver) → top-k (driver).
 
 Scale shape: the scan is filter→project over partition-pruned parquet
 (embarrassingly parallel, no shuffle) and the ``limit_scan`` cap is one
 TakeOrderedAndProject, planned from one ``spark.sql`` text with the
-request's tokens and bbox bound as parameters. At most ``limit_scan``
-rows cross to the driver, whatever the gazetteer's size, and are scored
-there with numpy and the WRatio kernel — the reference's own shape
+request's tokens and bbox bound as parameters. No value of the scan
+becomes a primitive literal of its generated code, so the compiled
+classes depend on the query shape only (token count, bbox or none) and
+every request after the first of its shape hits Spark's codegen cache.
+At most ``limit_scan`` rows cross to the driver, whatever the
+gazetteer's size, and are scored there with numpy and the WRatio
+kernel — the reference's own shape
 (repo.py:48-71 → ranking.py:31-114). With the proxy scorer the
 similarity is a Column projected on the capped rows instead. A request
 with tokens runs one Spark job and no Python task; its plan costs a few
@@ -115,10 +119,10 @@ class ScoutEngine:
         (admin_level ≥ 6) tried before country (= 2); every hint token
         must be contained in the normalized local or English name. A
         driver-side scan of the admin rows collected at construction —
-        no Spark job; the result becomes literals of the candidate scan,
-        the procedural shape the reference uses (bind params of its next
-        query). Admin rows with a NULL bbox corner or centre never
-        match."""
+        no Spark job; its corners are bound as parameters of the
+        candidate scan, the procedural shape the reference uses (bind
+        params of its next query). Admin rows with a NULL bbox corner or
+        centre never match."""
         for hint, level_ok in (
             (city_hint, lambda level: level >= 6),
             (country, lambda level: level == 2),
@@ -141,7 +145,11 @@ class ScoutEngine:
         reference's ``LIKE '%tok%'``), inside the hint bbox, capped. Each
         row also carries its two scoring targets. One parameterized query,
         as the reference runs it: the tokens and bbox corners are bound
-        in ``args``, never formatted into the text."""
+        in ``args``, never formatted into the text. The bbox test keeps
+        the rows of ``lat BETWEEN miny AND maxy AND lon BETWEEN minx AND
+        maxx`` (edges inclusive, NULL coordinates out), but its corners
+        stay out of the generated code, so a new bbox compiles nothing
+        once a request of the same shape has run."""
         preds, args = [], {}
         for i, t in enumerate(name_tokens):
             args[f"t{i}"] = t
@@ -151,7 +159,17 @@ class ScoutEngine:
             )
         if bbox:
             args.update(zip(("minx", "miny", "maxx", "maxy"), bbox[:4]))
-            preds.append("lat BETWEEN :miny AND :maxy AND lon BETWEEN :minx AND :maxx")
+            # bound doubles compared to a column become primitive literals
+            # in the generated Java, so each new bbox would compile the
+            # stage again; a one-element struct array folds to one literal
+            # held by reference, and the lambda over it reads lat/lon, so
+            # it never folds: the generated code depends on the query
+            # shape only
+            preds.append(
+                "exists(array(named_struct('minx', :minx, 'miny', :miny,"
+                " 'maxx', :maxx, 'maxy', :maxy)),"
+                " b -> lat BETWEEN b.miny AND b.maxy AND lon BETWEEN b.minx AND b.maxx)"
+            )
         # deliberate improvement over the reference (flagged, SURVEY.md §4
         # O6): its LIMIT without ORDER BY truncates candidates
         # nondeterministically (repo.py:52); we cap on (importance desc,

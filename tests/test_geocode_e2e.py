@@ -133,3 +133,22 @@ def test_reverse_geocode_brute_force_agreement(engine, spark):
 
     best = min(rows, key=lambda r: (hav(r["lat"], r["lon"], 5.4141, 100.3288), r["osm_id"]))
     assert hits[0]["osm_id"] == best["osm_id"]
+
+
+def test_fixture_entry_reuses_one_engine(spark):
+    """The registry's fixture geocode entry builds its engine once per
+    pair of shared fixture frames: three calls register one temp view,
+    not three."""
+    from scout_spark.inventory import extended2
+
+    def views():
+        return {
+            t.name for t in spark.catalog.listTables() if t.name.startswith("scout_pois_")
+        }
+
+    before = views()
+    hits = [extended2.geocode_forward_fixture(spark, "").collect() for _ in range(3)]
+    view = extended2._fixture_engine(spark)._view
+    assert view in views()
+    assert views() - before <= {view}
+    assert hits[0] and hits[0] == hits[1] == hits[2]

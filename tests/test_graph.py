@@ -668,3 +668,23 @@ def test_boruvka_unmaterialized_input_warns(spark):
         out = boruvka_mst(proj, checkpoint_input=False).collect()
     assert not any("re-run the input" in str(w.message) for w in caught)
     assert {(r["src"], r["dst"]) for r in out} == {(1, 2), (2, 3)}
+
+
+def test_boruvka_guard_reads_plan_nodes_not_plan_text(spark):
+    """The recompute guard looks at the plan's node classes: a column
+    named after a materialized node is no persisted ancestor, so the
+    unmaterialized input still warns."""
+    import warnings
+
+    from scout_spark.operators.mst import boruvka_mst
+
+    raw = spark.range(1, 4).select(
+        F.col("id").alias("src"),
+        (F.col("id") % 3 + 1).alias("dst"),
+        (F.col("id") + 3).alias("w"),
+    ).where(F.col("src") < F.col("dst"))
+    for edges in (raw, raw.withColumn("InMemoryRelation", F.lit(1))):
+        with warnings.catch_warnings(record=True) as caught:
+            warnings.simplefilter("always")
+            boruvka_mst(edges, checkpoint_input=False).collect()
+        assert any("re-run the input" in str(w.message) for w in caught), edges.columns

@@ -1,11 +1,14 @@
 """The serving plan of ``ScoutEngine.forward``: area resolution is a
 driver-side lookup that matches the Spark query it replaced, and a
 hinted request with tokens runs one Spark job, a TakeOrderedAndProject
-cap with no Python task, collected once and scored on the driver."""
+cap with no Python task, collected once and scored on the driver. The
+bbox filter keeps the rows of a literal ``BETWEEN`` while a new bbox
+compiles no code once its query shape is warm."""
 
 from __future__ import annotations
 
 import json
+import math
 import threading
 from functools import reduce
 from operator import and_
@@ -234,3 +237,99 @@ def test_hinted_request_runs_one_job(spark, monkeypatch):
     assert "ShuffleExchangeExec" not in classes
     assert "ArrowEvalPythonExec" not in classes
     assert "BatchEvalPythonExec" not in classes
+
+
+def _compiles(spark):
+    """Janino compiles so far in this JVM; a codegen cache hit adds none."""
+    metrics = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics
+    return metrics.METRIC_COMPILATION_TIME().getCount()
+
+
+def test_fresh_bbox_compiles_nothing(spark):
+    """The generated code depends on the query shape only: after one
+    warm hinted request, requests with the same token count and bboxes
+    this session has not seen hit the codegen cache."""
+    raw = raw_osm_fixture(spark, n_pois=300)
+    # city bboxes around the fixture's Kuala Lumpur cluster, with corners
+    # no other query of the session uses
+    admin = spark.createDataFrame(
+        [
+            (900 + i, name, None, 8, 100.5 + i / 7, 2.5 + i / 11, 102.5 + i / 13,
+             4.0 + i / 17, 3.2 + i / 19, 101.5 + i / 23)
+            for i, name in enumerate(("pinone", "pintwo", "pinthree"), start=1)
+        ],
+        ADMIN_SCHEMA,
+    )
+    engine = ScoutEngine(spark, build_pois(raw).cache(), admin)
+    warm = forward_geocode(engine, ForwardRequest(["Monograph Dining"], city_hint="pinone"))
+    assert warm.hits
+    for city in ("pintwo", "pinthree"):
+        req = ForwardRequest(["Monograph Dining"], city_hint=city)
+        assert engine.resolve_area_bbox(city, None) is not None
+        before = _compiles(spark)
+        resp = forward_geocode(engine, req)
+        assert _compiles(spark) - before == 0, city
+        assert resp.hits
+
+
+POI_SCHEMA = (
+    "osm_id bigint, name_local string, name_en string, name_local_norm string,"
+    " name_en_norm string, lat double, lon double, importance double, kind string"
+)
+# (minx, miny, maxx, maxy): one spans 0 on both axes, one is all negative
+BBOXES = [(-2.5, -1.25, 0.75, 3.5), (-80.125, -45.5, -79.0, -44.0625)]
+
+
+def _probe_points(minx, miny, maxx, maxy):
+    """(lat, lon) on each edge and two corners, one ``nextafter`` step
+    outside and inside each edge, the centre and NULL coordinates."""
+    down, up = (lambda v: math.nextafter(v, -math.inf)), (lambda v: math.nextafter(v, math.inf))
+    cy, cx = (miny + maxy) / 2, (minx + maxx) / 2
+    return [
+        (miny, cx), (maxy, cx), (cy, minx), (cy, maxx),
+        (miny, minx), (maxy, maxx),
+        (down(miny), cx), (up(maxy), cx), (cy, down(minx)), (cy, up(maxx)),
+        (up(miny), cx), (down(maxy), cx), (cy, up(minx)), (cy, down(maxx)),
+        (cy, cx), (None, cx), (cy, None), (None, None),
+    ]
+
+
+def test_bbox_filter_keeps_literal_between_rows(spark):
+    """``fetch_candidates`` keeps exactly the rows of the literal
+    ``BETWEEN`` query: both edges inclusive, nothing a step outside, and
+    a NULL coordinate never inside."""
+    points = [p for bbox in BBOXES for p in _probe_points(*bbox)]
+    points += [(0.0, 0.0), (-0.0, -0.0)]
+    rows = [
+        (i, f"cafe {i}", None, f"cafe {i}", None, lat, lon, 0.5, "amenity=cafe")
+        for i, (lat, lon) in enumerate(points)
+    ]
+    # the same points under a name the token does not match
+    rows += [
+        (1000 + i, f"shop {i}", None, f"shop {i}", None, lat, lon, 0.5, "shop=books")
+        for i, (lat, lon) in enumerate(points)
+    ]
+    pois = spark.createDataFrame(rows, POI_SCHEMA)
+    engine = ScoutEngine(spark, pois, spark.createDataFrame([], ADMIN_SCHEMA))
+    for minx, miny, maxx, maxy in BBOXES:
+        bbox = (minx, miny, maxx, maxy, (miny + maxy) / 2, (minx + maxx) / 2)
+        got = {r.osm_id for r in engine.fetch_candidates(["cafe"], bbox).collect()}
+        oracle = {
+            r.osm_id
+            for r in spark.sql(
+                f"SELECT osm_id FROM {engine._view}"
+                " WHERE (contains(coalesce(name_local_norm, ''), :t0)"
+                " OR contains(coalesce(name_en_norm, ''), :t0))"
+                " AND lat BETWEEN :miny AND :maxy AND lon BETWEEN :minx AND :maxx",
+                args={"t0": "cafe", "minx": minx, "miny": miny, "maxx": maxx, "maxy": maxy},
+            ).collect()
+        }
+        inside = {
+            i
+            for i, (lat, lon) in enumerate(points)
+            if lat is not None and lon is not None
+            and miny <= lat <= maxy and minx <= lon <= maxx
+        }
+        assert got == oracle == inside, (minx, miny, maxx, maxy)
+        # 4 edges + 2 corners + 4 steps inside + the centre (+ the origin twice)
+        assert len(inside) == 11 + 2 * (minx <= 0 <= maxx and miny <= 0 <= maxy)
