@@ -218,7 +218,7 @@ _fixture_lock = threading.Lock()
 def _fixture_engine(spark: SparkSession):
     from scout_spark.etl.fixtures import raw_osm_fixture
     from scout_spark.etl.gazetteer import build_admin, build_pois
-    from scout_spark.plans.geocode import GeocodeSettings, ScoutEngine
+    from scout_spark.plans.geocode import ScoutEngine
 
     global _fixture
     key = (spark.sparkContext.applicationId,)
@@ -234,7 +234,7 @@ def _fixture_engine(spark: SparkSession):
     )
     with _fixture_lock:
         if _fixture is None or _fixture[0] is not pois or _fixture[1] is not admin:
-            engine = ScoutEngine(spark, pois, admin, GeocodeSettings(use_pandas_udf=False))
+            engine = ScoutEngine(spark, pois, admin)
             _fixture = (pois, admin, engine)
         return _fixture[2]
 

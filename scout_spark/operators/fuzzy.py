@@ -2,18 +2,23 @@
 non-SQL kernel in the reference (rapidfuzz ``fuzz.WRatio``,
 reference ranking.py:73-76).
 
-Two paths:
-  - ``best_sim_udf``: Arrow-batched pandas UDF. Uses rapidfuzz when
-    importable (C++, releases the GIL, Arrow batches amortize the
-    crossing). When rapidfuzz is absent it falls back to
-    ``functions/wratio.py`` — a pure-Python implementation of the SAME
-    published WRatio algorithm (Indel-ratio composite with token sort/
-    set and length-ratio-scaled partial variants, bit-parallel LCS
-    kernel), not an approximation: algorithm-parity with the
-    reference's ranking.py:73-76 scores on the same [0,1] scale.
-  - ``proxy_similarity``: pure Column expression (levenshtein + distinct-
-    token Jaccard blend) — codegen-able, oracle-expressible, and the
-    scale path when Python crossing is unwanted.
+One WRatio kernel, ``_score_series``: rapidfuzz when importable (C++),
+else ``functions/wratio.py`` — a pure-Python implementation of the SAME
+published WRatio algorithm (Indel-ratio composite with token sort/set
+and length-ratio-scaled partial variants, bit-parallel LCS kernel), not
+an approximation: algorithm-parity with the reference's
+ranking.py:73-76 scores on the same [0,1] scale. Its users:
+  - ``ScoutEngine.forward`` (plans/geocode.py) calls it on the driver
+    over each request's capped candidates — the serving scorer;
+  - ``best_sim_udf`` wraps it as an Arrow-batched pandas UDF, behind the
+    ``fuzzy_wratio_pandas_udf`` inventory entry.
+
+``proxy_similarity`` / ``proxy_similarity_col`` are a pure Column
+expression (levenshtein + distinct-token Jaccard blend) — codegen-able
+and oracle-expressible. They score the batch plan
+(plans/batch_geocode.py) and the ``rerank_bm25_then_proxy`` entry;
+``flagship_fuzzy_search`` states the same blend inline beside its
+DuckDB oracle.
 """
 
 from __future__ import annotations

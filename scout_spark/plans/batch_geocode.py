@@ -41,10 +41,11 @@ def forward_geocode_batch(
     Country hints resolve to bbox+center via a broadcast join against
     admin level-2 rows (largest-area-wins per name, reference
     repo.py:39-44); candidates come from the token inverted index
-    (covering-AND); scoring is the pure-Column proxy similarity (the
-    codegen'd scale path — swap in the pandas-UDF scorer per partition
-    if bit-parity with rapidfuzz is needed). Ranking uses the default
-    weights, type boosts and proximity radius (scout_spark.settings).
+    (covering-AND); scoring is the pure-Column proxy similarity, the
+    batch plan's only scorer (serving scores with WRatio on the driver;
+    ROADMAP item 2 plans one semantics for both). Ranking uses the
+    default weights, type boosts and proximity radius
+    (scout_spark.settings).
     """
 
     # distinct tokens: the covering check below counts DISTINCT matched

@@ -19,15 +19,15 @@ classes depend on the query shape only (token count, bbox or none) and
 every request after the first of its shape hits Spark's codegen cache.
 At most ``limit_scan`` rows cross to the driver, whatever the
 gazetteer's size, and are scored there with numpy and the WRatio
-kernel — the reference's own shape
-(repo.py:48-71 → ranking.py:31-114). With the proxy scorer the
-similarity is a Column projected on the capped rows instead. A request
-with tokens runs one Spark job and no Python task; its plan costs a few
-dozen py4j calls instead of a Column tree of over a thousand. Area
-resolution runs no job: the admin table is tiny, so the engine collects
-the columns the lookup needs once at construction (the reference opens
-it per request, app.py:44-56 — SURVEY.md §4 O10 replaces that with a
-long-lived in-memory copy).
+kernel (``operators/fuzzy._score_series``) — the reference's own shape
+(repo.py:48-71 → ranking.py:31-114) and the engine's only scorer; the
+Column proxy of operators/fuzzy.py scores the batch plan, not requests.
+A request with tokens runs one Spark job and no Python task; its plan
+costs a few dozen py4j calls instead of a Column tree of over a
+thousand. Area resolution runs no job: the admin table is tiny, so the
+engine collects the columns the lookup needs once at construction (the
+reference opens it per request, app.py:44-56 — SURVEY.md §4 O10
+replaces that with a long-lived in-memory copy).
 
 The substring scan is the only candidate path. The whole-token index in
 operators/inverted_index.py is not a superset of substring matches
@@ -47,7 +47,7 @@ from pyspark.sql import functions as F
 
 from scout_spark.functions.geo import EARTH_RADIUS_KM, haversine_km
 from scout_spark.functions.normalize import CANON_SQL
-from scout_spark.operators.fuzzy import _score_series, proxy_similarity
+from scout_spark.operators.fuzzy import _score_series
 from scout_spark.settings import DEFAULT_TYPE_BOOST, DEFAULT_WEIGHTS, GeocodeSettings
 
 
@@ -250,24 +250,11 @@ class ScoutEngine:
         if not toks:
             return []
         bbox = self.resolve_area_bbox(city_hint, country)
-        cand = self.fetch_candidates(toks, bbox)
-        if self.settings.use_pandas_udf:
-            rows = cand.toPandas()
-            best_sim = np.maximum(
-                _score_series(query_norms, rows["target_local"].fillna("")).to_numpy(),
-                _score_series(query_norms, rows["target_en"].fillna("")).to_numpy(),
-            )
-        else:
-            sims = [
-                F.greatest(
-                    proxy_similarity(F.col("target_local"), q),
-                    proxy_similarity(F.col("target_en"), q),
-                )
-                for q in query_norms
-            ]
-            best = sims[0] if len(sims) == 1 else F.greatest(*sims)
-            rows = cand.select("*", best.alias("best_sim")).toPandas()
-            best_sim = rows["best_sim"].to_numpy(dtype="float64")
+        rows = self.fetch_candidates(toks, bbox).toPandas()
+        best_sim = np.maximum(
+            _score_series(query_norms, rows["target_local"].fillna("")).to_numpy(),
+            _score_series(query_norms, rows["target_en"].fillna("")).to_numpy(),
+        )
         score = self._score(rows, best_sim, bbox)
         top = np.lexsort((rows["osm_id"].to_numpy(), -score))[:limit]
         return [

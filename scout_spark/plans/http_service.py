@@ -21,6 +21,7 @@ sync endpoints on a threadpool.
 from __future__ import annotations
 
 import json
+import sys
 import time
 import traceback
 from http.server import BaseHTTPRequestHandler, ThreadingHTTPServer
@@ -62,10 +63,16 @@ def make_handler(engine: ScoutEngine):
             if self.path != "/v1/geocode/forward":
                 self._respond(404, {"detail": "Not Found"}, t0)
                 return
+            length = self.headers.get("Content-Length", "0")
             try:
-                length = int(self.headers.get("Content-Length", "0"))
-                body = json.loads(self.rfile.read(length) or b"{}")
-            except (ValueError, json.JSONDecodeError) as e:
+                # Content-Length is 1*DIGIT: read(-1) would wait for EOF
+                # and a length past sys.maxsize overflows read(), so
+                # neither reaches the socket
+                n = int(length) if length.isascii() and length.isdigit() else -1
+                if not 0 <= n <= sys.maxsize:
+                    raise ValueError(f"invalid Content-Length {length!r}")
+                body = json.loads(self.rfile.read(n) or b"{}")
+            except ValueError as e:
                 # FastAPI wraps malformed JSON as a body-level 422 too
                 self._respond(
                     422,

@@ -42,9 +42,6 @@ class GeocodeSettings:
     )
     proximity_km: float = DEFAULT_PROXIMITY_KM
     limit_scan: int = DEFAULT_LIMIT_SCAN
-    # True → WRatio (rapidfuzz, else functions/wratio.py) on the driver
-    # over the capped candidates; False → the pure-Column proxy scorer
-    use_pandas_udf: bool = True
 
     def __post_init__(self):
         # 0 would cap every scan to no candidates, and a negative cap

@@ -9,7 +9,8 @@ from pyspark.sql import functions as F
 from scout_spark.etl.fixtures import raw_osm_fixture
 from scout_spark.etl.gazetteer import build_admin, build_pois
 from scout_spark.plans.batch_geocode import forward_geocode_batch
-from scout_spark.plans.geocode import GeocodeSettings, ScoutEngine
+from scout_spark.plans.geocode import ScoutEngine
+from serve_oracle import column_hits
 
 
 @pytest.fixture(scope="module")
@@ -50,11 +51,12 @@ def test_batch_shapes_and_ranks(spark, gaz, battery):
 
 def test_batch_agrees_with_per_request_engine(spark, gaz, battery):
     """Each request's full top-k — (osm_id, score) in rank order — must
-    equal the default per-request engine's (substring scan) run with the
-    same scorer (proxy). The battery's tokens are whole words, where the
-    substring and whole-token candidate rules agree."""
+    equal the per-request engine's scan rule (substring ``contains``,
+    capped) scored with the batch plan's Column proxy. The battery's
+    tokens are whole words, where the substring and whole-token
+    candidate rules agree."""
     pois, admin = gaz
-    eng = ScoutEngine(spark, pois, admin, GeocodeSettings(use_pandas_udf=False))
+    eng = ScoutEngine(spark, pois, admin)
     requests = battery.collect()
     for limit in (1, 5):
         batch = {}
@@ -62,8 +64,8 @@ def test_batch_agrees_with_per_request_engine(spark, gaz, battery):
             batch.setdefault(r["req_id"], []).append(r)
         for req in requests:
             got = sorted(batch.get(req["req_id"], []), key=lambda r: r["rank"])
-            want = eng.forward(
-                [req["query"]], country=req["country"], limit=limit
+            want = column_hits(
+                eng, [req["query"]], req["country"], None, limit, proxy=True
             )
             assert [h["osm_id"] for h in got] == [h["osm_id"] for h in want], (
                 req["query"], limit,

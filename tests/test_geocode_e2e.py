@@ -10,16 +10,14 @@ from pyspark.sql import functions as F
 
 from scout_spark.etl.fixtures import raw_osm_fixture
 from scout_spark.etl.gazetteer import build_admin, build_pois
-from scout_spark.plans.geocode import GeocodeSettings, ScoutEngine
+from scout_spark.plans.geocode import ScoutEngine
+from serve_oracle import compiles
 
 
-@pytest.fixture(scope="module", params=["pandas_udf", "proxy"])
-def engine(request, spark):
+@pytest.fixture(scope="module")
+def engine(spark):
     raw = raw_osm_fixture(spark, n_pois=300)
-    settings = GeocodeSettings(use_pandas_udf=request.param == "pandas_udf")
-    return ScoutEngine(
-        spark, build_pois(raw).cache(), build_admin(raw), settings
-    )
+    return ScoutEngine(spark, build_pois(raw).cache(), build_admin(raw))
 
 
 def test_exact_match_ranks_first(engine):
@@ -152,3 +150,18 @@ def test_fixture_entry_reuses_one_engine(spark):
     assert view in views()
     assert views() - before <= {view}
     assert hits[0] and hits[0] == hits[1] == hits[2]
+
+
+def test_fixture_entry_compiles_once_per_query_shape(spark):
+    """The registry's fixture engine scores on the driver, so a query
+    text never reaches generated code: after one warm request, new
+    two-token texts with the same hint hit the codegen cache."""
+    from scout_spark.inventory import extended2
+
+    engine = extended2._fixture_engine(spark)
+    assert engine.forward(["Monograph Dining"], country="malaysia")
+    # distinct lengths: a literal query length would compile per text
+    for text in ("nasi kandar", "taman botani", "shopping centre", "orient restaurant"):
+        before = compiles(spark)
+        assert engine.forward([text], country="malaysia"), text
+        assert compiles(spark) - before == 0, text

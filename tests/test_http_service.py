@@ -6,6 +6,7 @@ served from one shared SparkSession-backed engine."""
 from __future__ import annotations
 
 import json
+import socket
 import urllib.error
 import urllib.request
 
@@ -173,6 +174,31 @@ def test_malformed_json_is_422(server):
     assert ei.value.code == 422
     detail = json.loads(ei.value.read())["detail"]
     assert detail[0]["type"] == "json_invalid"
+
+
+@pytest.mark.parametrize("length", ["-1", "99999999999999999999", "abc"])
+def test_bad_content_length_is_422(server, length):
+    """A Content-Length that is not a non-negative integer gets the
+    malformed-JSON envelope without a body read ("-1" would wait for EOF,
+    a length past sys.maxsize overflows the read), and the service keeps
+    serving."""
+    host, port = server.server_address
+    with socket.create_connection((host, port), timeout=5) as sock:
+        sock.sendall(
+            b"POST /v1/geocode/forward HTTP/1.1\r\n"
+            b"Host: x\r\nContent-Type: application/json\r\n"
+            b"Content-Length: " + length.encode() + b"\r\n\r\n"
+        )
+        raw = b""
+        while chunk := sock.recv(65536):
+            raw += chunk
+    head, _, body = raw.partition(b"\r\n\r\n")
+    assert head.split(b" ")[1] == b"422", raw
+    detail = json.loads(body)["detail"]
+    assert detail[0]["type"] == "json_invalid"
+    assert detail[0]["loc"] == ["body"]
+    with urllib.request.urlopen(_url(server, "/healthz")) as r:
+        assert r.status == 200
 
 
 def test_unknown_path_404(server):

@@ -10,7 +10,7 @@ from scout_spark.etl.fixtures import raw_osm_fixture
 from scout_spark.etl.gazetteer import build_admin, build_pois
 from scout_spark.operators.inverted_index import build_token_index
 from scout_spark.plans.batch_geocode import forward_geocode_batch
-from scout_spark.plans.geocode import GeocodeSettings, ScoutEngine
+from scout_spark.plans.geocode import ScoutEngine
 
 
 @pytest.fixture(scope="module")
@@ -30,7 +30,7 @@ def test_substring_divergence_documented(spark, gaz):
     reference's LIKE) finds the Monograph rows, while the batch plan's
     whole-token index finds none — the gap between the two paths."""
     pois, admin = gaz
-    eng = ScoutEngine(spark, pois, admin, GeocodeSettings(use_pandas_udf=False))
+    eng = ScoutEngine(spark, pois, admin)
     served = eng.forward(["mono"], limit=5)
     assert served and all("monograph" in h["name"].lower() for h in served)
     battery = spark.createDataFrame(

@@ -153,31 +153,6 @@ def test_build_gazetteer_cli(spark, pbf_path, tmp_path):
     assert names == ["London"]  # Sydney outside bbox; bakery lacks amenity
 
 
-def test_spark_datasource_format(spark, pbf_path):
-    """spark.read.format('osmpbf'): the DataSource V2 Python API wrap —
-    one InputPartition per blob, results identical to the functional
-    readers."""
-    from scout_spark.sources.osmpbf_datasource import OsmPbfDataSource
-
-    spark.dataSource.register(OsmPbfDataSource)
-    nodes = spark.read.format("osmpbf").load(pbf_path)
-    got = {r["id"]: r for r in nodes.collect()}
-    assert set(got) == {n[0] for n in NODES}
-    assert dict(got[1]["tags"]) == NODES[0][3]
-    ways = (
-        spark.read.format("osmpbf").option("entity", "ways").load(pbf_path)
-    )
-    assert {tuple(r["refs"]) for r in ways.collect()} == {
-        (2, 3, 4), (2, 3, 4, 2)
-    }
-    rels = (
-        spark.read.format("osmpbf").option("entity", "relations").load(pbf_path)
-    )
-    assert rels.count() == len(RELS)
-    # partition count == OSMData blob count (nodes blob + ways + rels)
-    assert nodes.rdd.getNumPartitions() == 3
-
-
 # ------------------------------------------------ property-based wire fuzz
 from hypothesis import given, settings
 from hypothesis import strategies as st

@@ -21,7 +21,8 @@ from pyspark.sql.classic.dataframe import DataFrame
 from scout_spark.etl.fixtures import raw_osm_fixture
 from scout_spark.etl.gazetteer import build_admin, build_pois
 from scout_spark.plans.api import ForwardRequest, forward_geocode
-from scout_spark.plans.geocode import GeocodeSettings, ScoutEngine, _tokens
+from scout_spark.plans.geocode import ScoutEngine, _tokens
+from serve_oracle import compiles
 
 ADMIN_SCHEMA = (
     "osm_id bigint, name_local_norm string, name_en_norm string,"
@@ -119,7 +120,7 @@ def spark_area_bbox(admin, city_hint, country):
 
 def _engine(spark, admin):
     pois = spark.createDataFrame([], "osm_id bigint")
-    return ScoutEngine(spark, pois, admin, GeocodeSettings(use_pandas_udf=False))
+    return ScoutEngine(spark, pois, admin)
 
 
 @pytest.fixture(scope="module")
@@ -239,12 +240,6 @@ def test_hinted_request_runs_one_job(spark, monkeypatch):
     assert "BatchEvalPythonExec" not in classes
 
 
-def _compiles(spark):
-    """Janino compiles so far in this JVM; a codegen cache hit adds none."""
-    metrics = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics
-    return metrics.METRIC_COMPILATION_TIME().getCount()
-
-
 def test_fresh_bbox_compiles_nothing(spark):
     """The generated code depends on the query shape only: after one
     warm hinted request, requests with the same token count and bboxes
@@ -266,9 +261,9 @@ def test_fresh_bbox_compiles_nothing(spark):
     for city in ("pintwo", "pinthree"):
         req = ForwardRequest(["Monograph Dining"], city_hint=city)
         assert engine.resolve_area_bbox(city, None) is not None
-        before = _compiles(spark)
+        before = compiles(spark)
         resp = forward_geocode(engine, req)
-        assert _compiles(spark) - before == 0, city
+        assert compiles(spark) - before == 0, city
         assert resp.hits
 
 

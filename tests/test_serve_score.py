@@ -1,25 +1,18 @@
 """Driver-side scoring of ``ScoutEngine.forward`` against the Column
-assembly it replaced: the WRatio UDF or the proxy Column, ``score_expr``
+assembly it replaced (tests/serve_oracle.py): the WRatio UDF, ``score_expr``
 and ``haversine_km``/``proximity_decay`` over the token-``contains`` +
 bbox scan capped on (importance desc, osm_id), ordered by (score desc,
 osm_id). Hits must agree field for field, scores to 1e-12."""
 
 from __future__ import annotations
 
-from functools import reduce
-from operator import and_
-
 import pytest
-from pyspark.sql import functions as F
 from pyspark.sql.types import StructField, StructType
 
 from scout_spark.etl.fixtures import raw_osm_fixture
 from scout_spark.etl.gazetteer import build_admin, build_pois
-from scout_spark.functions.geo import haversine_km, proximity_decay
-from scout_spark.functions.normalize import canon
-from scout_spark.functions.scoring import score_expr
-from scout_spark.operators.fuzzy import best_sim_udf, proxy_similarity
-from scout_spark.plans.geocode import GeocodeSettings, ScoutEngine, _norm_text, _tokens
+from scout_spark.plans.geocode import ScoutEngine
+from serve_oracle import column_hits
 
 KL = (3.15, 101.70)  # inside the fixture's Kuala Lumpur bbox
 
@@ -71,51 +64,6 @@ REQUESTS = [
 ]
 
 
-def column_hits(engine, candidates, country, city_hint, limit):
-    """The Column assembly over the same scan rule, collected."""
-    s = engine.settings
-    toks = list(dict.fromkeys(t for text in candidates for t in _tokens(text)))
-    norms = [q for q in (_norm_text(t) for t in candidates) if q]
-    bbox = engine.resolve_area_bbox(city_hint, country)
-    df = engine.pois.where(reduce(and_, [
-        F.coalesce(F.col("name_local_norm"), F.lit("")).contains(t)
-        | F.coalesce(F.col("name_en_norm"), F.lit("")).contains(t)
-        for t in toks
-    ]))
-    if bbox:
-        minx, miny, maxx, maxy, _, _ = bbox
-        df = df.where(F.col("lat").between(miny, maxy) & F.col("lon").between(minx, maxx))
-    df = df.orderBy(F.col("importance").desc(), F.col("osm_id")).limit(s.limit_scan)
-    target_local = F.coalesce(F.col("name_local_norm"), canon(F.col("name_local")))
-    target_en = F.coalesce(F.col("name_en_norm"), canon(F.col("name_en")))
-    if s.use_pandas_udf:
-        sim = best_sim_udf(norms)
-        best_sim = F.greatest(sim(target_local), sim(target_en))
-    else:
-        best_sim = F.greatest(*[
-            F.greatest(proxy_similarity(target_local, q), proxy_similarity(target_en, q))
-            for q in norms
-        ] * 2)  # greatest needs two arguments; a repeat changes nothing
-    proximity = None
-    if bbox:
-        d = haversine_km(F.col("lat"), F.col("lon"), F.lit(bbox[4]), F.lit(bbox[5]))
-        proximity = proximity_decay(d, s.proximity_km)
-    score = score_expr(
-        best_sim, F.col("kind"), F.col("importance"), proximity, s.weights, s.type_boost
-    )
-    rows = (
-        df.withColumn("score", score)
-        .select(
-            F.coalesce(F.col("name_local"), F.col("name_en"), F.lit("")).alias("name"),
-            "lat", "lon", "country", "state", "city", "osm_id", "kind", "score",
-        )
-        .orderBy(F.col("score").desc(), F.col("osm_id"))
-        .limit(limit)
-        .collect()
-    )
-    return [r.asDict() for r in rows]
-
-
 @pytest.fixture(scope="module")
 def gaz(spark):
     raw = raw_osm_fixture(spark, n_pois=300)
@@ -125,9 +73,8 @@ def gaz(spark):
     return pois, build_admin(raw)
 
 
-@pytest.mark.parametrize("use_pandas_udf", [True, False], ids=["wratio", "proxy"])
-def test_driver_score_equals_column_oracle(spark, gaz, use_pandas_udf):
-    engine = ScoutEngine(spark, *gaz, GeocodeSettings(use_pandas_udf=use_pandas_udf))
+def test_driver_score_equals_column_oracle(spark, gaz):
+    engine = ScoutEngine(spark, *gaz)
     kinds = set()
     for candidates, country, city_hint in REQUESTS:
         got = engine.forward(candidates, country, city_hint, limit=50)

@@ -33,7 +33,6 @@ def test_settings_defaults():
     assert g.type_boost["tourism:"] == 0.80
     assert g.type_boost["default"] == 0.40
     assert g.limit_scan == 10_000
-    assert g.use_pandas_udf is True
 
 
 def test_settings_toml_and_env(tmp_path, monkeypatch):
@@ -145,13 +144,10 @@ def test_concurrent_queries_one_session(spark):
 
     from scout_spark.etl.fixtures import raw_osm_fixture
     from scout_spark.etl.gazetteer import build_admin, build_pois
-    from scout_spark.plans.geocode import GeocodeSettings, ScoutEngine
+    from scout_spark.plans.geocode import ScoutEngine
 
     raw = raw_osm_fixture(spark, n_pois=100)
-    engine = ScoutEngine(
-        spark, build_pois(raw).cache(), build_admin(raw),
-        GeocodeSettings(use_pandas_udf=False),
-    )
+    engine = ScoutEngine(spark, build_pois(raw).cache(), build_admin(raw))
     queries = ["Monograph Dining", "kopitiam 88", "taman botani", "美食中心"] * 3
 
     def run(q):
