@@ -164,7 +164,7 @@ HEADLINE = [
     "interval_peak_concurrency",
     "estimate_selfjoin_cardinality_cms",
     # round-6: regression guard for the session-cached shared graph
-    # frames (graph_ops _edges/_sym_edges/_degrees + the AQE-over-
+    # frames (graph.py _edges/_sym_edges/_degrees + the AQE-over-
     # cached-plans conf) — assortativity reads all three caches, so a
     # cache regression shows here AND in the triangle/pagerank walls
     "graph_degree_assortativity",

@@ -9,6 +9,8 @@ that check locally so the gate is known-green before every commit.
 
 from __future__ import annotations
 
+import importlib
+import pkgutil
 from collections.abc import Callable
 from dataclasses import dataclass, field
 
@@ -40,95 +42,7 @@ def register(
 
 
 def load_all() -> dict[str, Item]:
-    """Import all inventory modules (side-effect: fills REGISTRY)."""
-    from scout_spark.inventory import (  # noqa: F401
-        core,
-        pipeline_ops,
-        sampling_ops,
-        extended,
-        extended2,
-        extended3,
-        extended4,
-        extended5,
-        temporal,
-        tpch_classics,
-        tpch_classics2,
-        tpch_classics3,
-        text_ops,
-        vector_ops,
-        hash_parity,
-        trainprep,
-        quality_ops,
-        ingest_ops,
-        # round-2 additions import LAST: rotation orders unchecked
-        # entries by registration index, so new operators queue behind
-        # the round-1 backlog instead of displacing it from the
-        # driver's ~50-query correctness window
-        retrieval,
-        scale_ops,
-        # round-3 additions (same queue-behind-the-backlog rule; the
-        # rotation now also guarantees red re-checks lead the window)
-        curation_ops,
-        # round-4 additions — registration order IS the rotation order
-        # within the never-checked tier, so these queue behind every
-        # entry still awaiting its first driver check
-        graph_ops,
-        series_ops,
-        embed_ops,
-        curation_ops2,
-        mining_ops,
-        audit_ops,
-        linkage_ops,
-        modern_sql_ops,
-        # round-4 second wave (sketch twins, corpus stats, FK audit)
-        analytics_ops,
-        # round-4 third wave (event-flow analytics, PMI/RAKE corpus
-        # insight, link prediction, ANN range search, grouped OLS,
-        # weighted percentiles, FD audit)
-        insight_ops,
-        # round-5 additions (queue behind every entry still awaiting
-        # its first driver check, per the rotation rule)
-        insight_ops2,
-        insight_ops3,
-        insight_ops4,
-        insight_ops5,
-        insight_ops6,
-        insight_ops7,
-        insight_ops8,
-        insight_ops9,
-        insight_ops10,
-        insight_ops11,
-        insight_ops12,
-        insight_ops13,
-        insight_ops14,
-        insight_ops15,
-        insight_ops16,
-        insight_ops17,
-        insight_ops18,
-        insight_ops19,
-        insight_ops20,
-        insight_ops21,
-        insight_ops22,
-        insight_ops23,
-        insight_ops24,
-        # round-6 additions (oracle twins for rows-only families; the
-        # registration-order queue keeps them behind the r05 backlog)
-        r6_twins,
-        # round-7 additions — import LAST so they queue behind the 20
-        # entries still awaiting their first driver check
-        r7_twins,
-        r8_ops,
-        r8_ops2,
-        r8_ops3,
-        r8_ops4,
-        r8_ops5,
-        # round-9 additions (cross-modal compositions; import LAST so
-        # the staleness rotation keeps its order)
-        r9_ops,
-        # round-10 additions (held-out KN scoring, keyframe KPI)
-        r10_ops,
-        # round-11 additions (dup-group keeper-policy audit)
-        r11_ops,
-    )
-
+    """Import every inventory module (side-effect: fills REGISTRY)."""
+    for mod in pkgutil.iter_modules(__path__):
+        importlib.import_module(f"{__name__}.{mod.name}")
     return REGISTRY

@@ -1,0 +1,2301 @@
+"""Near-duplicate detection and entity resolution: exact, shingle, MinHash,
+SimHash, suffix-style and connected-component dedup, decontamination
+and record linkage.
+"""
+
+from __future__ import annotations
+
+from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import functions as F
+from pyspark.sql.window import Window
+
+from scout_spark.functions.text import word_shingles_arrow
+from scout_spark.inventory import register
+from scout_spark.inventory.common import (
+    CC_REACH_CTES,
+    GRAM_SQL,
+    TOK,
+    cc_components,
+    gram_frame,
+    lower_tokens,
+    md5_32,
+    table,
+    tokens_col,
+    tokens_sql,
+    wide_table,
+)
+
+
+# Training-data pipeline operators beyond dedup/ANN: benchmark
+# decontamination, dataset profiling, and vocabulary statistics — the
+# curation steps that run between raw ingest and training-set export.
+#
+# Scale notes: decontamination broadcasts the (small) eval-set shingle
+# dictionary against the exploded corpus — the corpus side never
+# self-joins, and the explode happens after per-doc `array_distinct`, so
+# shuffle volume is bounded by distinct shingles, not text length.
+# Profiling is one pass per column family with map-side partial aggs;
+# vocabulary is explode → two-level agg (partial counts map-side).
+
+# Word-shingle width for contamination detection (5-grams are the
+# common n for benchmark-overlap checks).
+_K = 5
+
+# DuckDB twin of functions.text.word_shingles(canon, k=5): same
+# empty/short-doc semantics (0 tokens → no shingles; <k tokens → one
+# whole-text shingle).
+_SHINGLES_SQL = f"""
+  CASE WHEN len(t) = 0 THEN []
+       WHEN len(t) < {_K} THEN [array_to_string(t, ' ')]
+       ELSE [array_to_string(t[i:i+{_K - 1}], ' ')
+             FOR i IN range(1, len(t) - {_K - 2})]
+  END
+"""
+
+
+@register(
+    "decontaminate_shingle_overlap",
+    "Benchmark decontamination: corpus documents sharing ≥1 distinct "
+    "5-word shingle with a held-out eval set (source='src0' stands in "
+    "for the benchmark). Emits per-document shared-shingle count and "
+    "contamination ratio. The eval shingle dictionary is broadcast; the "
+    "corpus explodes distinct shingles only (no self-join).",
+    oracle=f"""
+      WITH sh AS (
+        SELECT doc_id, source, list_distinct({_SHINGLES_SQL}) AS sh
+        FROM (SELECT doc_id, source,
+                     {tokens_sql("text")} AS t
+              FROM documents)
+      ), es AS (
+        SELECT DISTINCT unnest(sh) AS g FROM sh WHERE source = 'src0'
+      ), cs AS (
+        SELECT doc_id, unnest(sh) AS g, len(sh) AS total
+        FROM sh WHERE source <> 'src0'
+      )
+      SELECT cs.doc_id, count(*) AS shared_shingles,
+             round(count(*)::DOUBLE / any_value(cs.total), 6) AS contamination
+      FROM cs JOIN es USING (g)
+      GROUP BY cs.doc_id
+    """,
+)
+def decontaminate(spark: SparkSession, sf_dir: str) -> DataFrame:
+    d = wide_table(spark, sf_dir, "documents")
+    # fresh per-entry UDF instance, fenced nondeterministic: the sh
+    # column is referenced by BOTH F.size and F.explode on the corpus
+    # branch, and a deterministic UDF gets inlined into each reference
+    # — 2x the shingle kernel per branch, 4x total (r7 plan audit).
+    # Source filters sit BELOW the kernel select, so no pushdown is
+    # lost to the fence; each branch shingles only its own rows, once.
+    shu = word_shingles_arrow(_K).asNondeterministic()
+    ev = (
+        d.where(F.col("source") == "src0")
+        .select(F.explode(shu(F.col("text"))).alias("g"))
+        .distinct()
+    )
+    cs = (
+        d.where(F.col("source") != "src0")
+        .select("doc_id", shu(F.col("text")).alias("sh"))
+        .select(
+            "doc_id",
+            F.size("sh").alias("total"),
+            F.explode("sh").alias("g"),
+        )
+    )
+    return (
+        # ev = distinct shingles of the EVAL set — eval-set-sized by
+        # decontamination design (benchmarks are tiny vs the corpus),
+        # so the broadcast is the 100 TB plan; only if the eval corpus
+        # itself outgrew the budget would this flip to a shuffle join.
+        cs.join(F.broadcast(ev), "g")
+        .groupBy("doc_id")
+        .agg(
+            F.count(F.lit(1)).alias("shared_shingles"),
+            F.round(
+                F.count(F.lit(1)).cast("double") / F.first("total"), 6
+            ).alias("contamination"),
+        )
+    )
+
+
+@register(
+    "dedup_transitive_groups",
+    "Transitive dedup groups: MinHash-LSH near-dup pairs closed under "
+    "connectivity (iterative min-label propagation with per-round "
+    "lineage checkpoints) → (id, component, keeper, is_duplicate). "
+    "Rows-only: iterative algorithm, not SQL-expressible; group "
+    "structure pinned on planted chains in tests/test_operators.py.",
+    tags=("rows-only",),
+)
+def dedup_transitive(spark: SparkSession, sf_dir: str) -> DataFrame:
+    from scout_spark.operators.dedup import dedup_groups, minhash_lsh_pairs
+
+    d = table(spark, sf_dir, "documents")
+    pairs = minhash_lsh_pairs(d, "doc_id", "text", 16, 4, 0.8)
+    return dedup_groups(pairs)
+
+
+# ---------------------------------------------------------------- fingerprint + exact dedup
+@register(
+    "dedup_exact_fingerprint",
+    "Exact deduplication by canonical fingerprint (training-data pipeline "
+    "extension; hash-groupBy with map-side partial agg): md5 of the first "
+    "two canonical tokens as the collision key, keep the min doc_id per "
+    "group, report group sizes. At 100 TB this is the standard "
+    "shuffle-on-hash dedup — the key is computed in the scan stage.",
+    oracle=f"""
+      WITH k AS (
+        SELECT doc_id,
+               md5(array_to_string(list_slice({tokens_sql("text")}, 1, 2), ' ')) AS fp
+        FROM documents
+      )
+      SELECT fp, min(doc_id) AS keeper_doc_id, count(*) AS group_size
+      FROM k GROUP BY fp HAVING count(*) > 1
+    """,
+)
+def dedup_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
+    d = table(spark, sf_dir, "documents")
+    fp = F.md5(F.array_join(F.slice(tokens_col(F.col("text")), 1, 2), " ")).alias(
+        "fp"
+    )
+    return (
+        d.select("doc_id", fp)
+        .groupBy("fp")
+        .agg(
+            F.min("doc_id").alias("keeper_doc_id"),
+            F.count(F.lit(1)).alias("group_size"),
+        )
+        .where(F.col("group_size") > 1)
+    )
+
+
+# ---------------------------------------------------------------- n-gram Jaccard near-dup
+@register(
+    "dedup_ngram_jaccard_pairs",
+    "Near-duplicate pair detection by distinct-token Jaccard ≥ 0.8 with "
+    "blocking on (lang, length bucket) — the filter-then-verify core "
+    "(SURVEY.md §4 O7) at n×m scale: the block equi-join is the cheap "
+    "prune (shuffle on block key), the Jaccard verify runs only within "
+    "blocks. The MinHash-LSH variant (rows-only row) replaces the length "
+    "bucket with band buckets at 100 TB.",
+    oracle=f"""
+      WITH d AS (
+        SELECT doc_id, lang, n_chars // 50 AS bkt,
+               list_distinct({tokens_sql("text")}) AS toks
+        FROM documents
+      )
+      SELECT a.doc_id AS doc_a, b.doc_id AS doc_b,
+             round(len(list_intersect(a.toks, b.toks))::DOUBLE
+                   / (len(a.toks) + len(b.toks) - len(list_intersect(a.toks, b.toks))), 6)
+               AS jaccard
+      FROM d a JOIN d b
+        ON a.lang = b.lang AND a.bkt = b.bkt AND a.doc_id < b.doc_id
+      WHERE len(list_intersect(a.toks, b.toks))::DOUBLE
+            / (len(a.toks) + len(b.toks) - len(list_intersect(a.toks, b.toks))) >= 0.8
+    """,
+)
+def dedup_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
+    d = wide_table(spark, sf_dir, "documents").select(
+        "doc_id",
+        "lang",
+        (F.col("n_chars") / 50).cast("long").alias("bkt"),
+        F.array_distinct(tokens_col(F.col("text"))).alias("toks"),
+    )
+    a = d.alias("a")
+    b = d.alias("b")
+    isect = F.size(F.array_intersect(F.col("a.toks"), F.col("b.toks")))
+    union = F.size(F.col("a.toks")) + F.size(F.col("b.toks")) - isect
+    # try_divide: two empty-token docs in one block give union 0 — ANSI
+    # aborts on 0/0 while the oracle's NULL simply fails the >= filter
+    jac = F.try_divide(isect.cast("double"), union)
+    return (
+        a.join(
+            b,
+            (F.col("a.lang") == F.col("b.lang"))
+            & (F.col("a.bkt") == F.col("b.bkt"))
+            & (F.col("a.doc_id") < F.col("b.doc_id")),
+        )
+        .where(jac >= 0.8)
+        .select(
+            F.col("a.doc_id").alias("doc_a"),
+            F.col("b.doc_id").alias("doc_b"),
+            F.round(jac, 6).alias("jaccard"),
+        )
+    )
+
+
+@register(
+    "dedup_minhash_lsh",
+    "MinHash + LSH banding near-dup candidates over word shingles "
+    "(training-data dedup at 100 TB: shingle → k minhashes via seeded "
+    "murmur3 → band buckets → bucket equi-join → exact-Jaccard verify). "
+    "Rows-only: the fast SipHash/crc32 kernels aren't reproducible in "
+    "the oracle; candidate completeness vs exact Jaccard is pinned in "
+    "tests, and the full kernel itself is oracle-checked cross-engine "
+    "by the md5 twin dedup_minhash_md5_signatures (hash_parity.py).",
+    tags=("rows-only",),
+)
+def dedup_minhash(spark: SparkSession, sf_dir: str) -> DataFrame:
+    from scout_spark.operators.dedup import minhash_lsh_pairs
+
+    d = wide_table(spark, sf_dir, "documents")
+    return minhash_lsh_pairs(
+        d, id_col="doc_id", text_col="text", num_hashes=16, bands=4, threshold=0.8
+    )
+
+
+@register(
+    "dedup_simhash",
+    "SimHash near-dup fingerprints over tokens: 32-bit signature via "
+    "per-token murmur3 bit-voting, grouped by signature band for "
+    "candidate generation. Arrow-batched pandas UDF computes the bit "
+    "votes (numpy-vectorized); everything else stays DataFrame ops. "
+    "Rows-only (engine-specific hashing); the md5 twin "
+    "dedup_simhash_hamming_pairs (hash_parity.py) oracle-checks the "
+    "simhash+banding pipeline end-to-end cross-engine.",
+    tags=("rows-only",),
+)
+def dedup_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
+    from scout_spark.operators.dedup import simhash_signatures
+
+    d = wide_table(spark, sf_dir, "documents")
+    return simhash_signatures(d, id_col="doc_id", text_col="text")
+
+
+# Oracle-expressible companions for the hashing dedup family
+# (round-1 verdict item 8: dedup_simhash / dedup_minhash_lsh are
+# rows-only because murmur3/crc32 aren't reproducible in DuckDB — md5
+# IS available in both engines, so these twins pin the full kernels
+# cross-engine with the hard rows+schema+hash signal).
+#
+# Shared construction: tokens = regexp_extract_all(lower(text),
+# '[a-z0-9]+') — ASCII-class extraction behaves identically in Java and
+# DuckDB regex dialects (no empty-string or unicode-case edge cases);
+# token/shingle hash = first 8 hex chars of md5 parsed as an int
+# (Spark conv(...,16,10) ≡ DuckDB ('0x'||substr)::BIGINT).
+#
+# The simhash pair query's band blocking is EXACT, not approximate: with
+# 8 bands of 4 bits, any pair within hamming d ≤ 7 differs in at most d
+# bands (pigeonhole), so it shares at least one identical band; the
+# threshold here is 2. The DuckDB oracle does the all-pairs O(n²) check;
+# band blocking must therefore return exactly the same rows — the
+# correctness check proves the scale path lossless, not just plausible.
+
+_SIMHASH_BITS = 32
+_BANDS = 8  # 4-bit bands; exact for hamming <= _BANDS - 2
+_HAMMING_MAX = 2
+_MIN_TOKENS = 8  # tiny token sets make 32-bit simhash collide by chance
+_MINHASH_K = 16
+_MINHASH_P = 2147483647  # 2^31 - 1
+
+
+def _simhash_from_tokens(tk: Column) -> Column:
+    """SimHash from an already-derived distinct-token array column —
+    callers that also filter on token count should pass the SAME
+    column so the tokenizer isn't re-evaluated per reference."""
+    th = F.transform(tk, md5_32)
+
+    def _vote_vector(h: Column) -> Column:
+        return F.array(
+            *[
+                (h.bitwiseAND(F.lit(1 << b)) != 0).cast("int") * 2 - 1
+                for b in range(_SIMHASH_BITS)
+            ]
+        )
+
+    votes = F.aggregate(
+        th,
+        F.array(*[F.lit(0)] * _SIMHASH_BITS),
+        lambda acc, h: F.zip_with(acc, _vote_vector(h), lambda a, v: a + v),
+    )
+    # sign bits collapse through ONE fold referencing `votes` once — a
+    # per-bit element_at chain references the whole vote fold 32 times,
+    # and projection collapse then re-evaluates the token fold per
+    # reference (32x per row; part of the measured 21 s -> 1 s fix)
+    return F.aggregate(
+        F.zip_with(
+            votes,
+            F.sequence(F.lit(0), F.lit(_SIMHASH_BITS - 1)),
+            # 2^b via pow is exact in double for b < 32
+            lambda v, b: F.when(v > 0, F.pow(F.lit(2.0), b).cast("long"))
+            .otherwise(F.lit(0).cast("long")),
+        ),
+        F.lit(0).cast("long"),
+        lambda a, x: a + x,
+    )
+
+
+@register(
+    "dedup_simhash_hamming_pairs",
+    "SimHash near-dup pairs with a CROSS-ENGINE signature (md5 token "
+    "hashes) and exact band blocking: 8×4-bit bands guarantee every "
+    "pair within the hamming threshold shares a band (pigeonhole), so "
+    "the banded "
+    "plan — the 100 TB path, shuffling only (id, band, bucket) — "
+    "returns exactly what the oracle's all-pairs scan returns. The "
+    "oracle check therefore proves the blocking lossless, not just "
+    "plausible.",
+    oracle=f"""
+      WITH s AS (
+        SELECT doc_id,
+               list_sum(list_transform(range(0, {_SIMHASH_BITS}), b ->
+                 CASE WHEN list_sum(list_transform(th, h ->
+                        CASE WHEN (h // power(2, b)::BIGINT) % 2 = 1
+                             THEN 1 ELSE -1 END)) > 0
+                      THEN power(2, b)::BIGINT ELSE 0 END))::BIGINT AS simhash
+        FROM (
+          SELECT doc_id,
+                 list_transform(
+                   list_distinct(regexp_extract_all(lower(text), '[a-z0-9]+')),
+                   tok -> ('0x' || substr(md5(tok), 1, 8))::BIGINT) AS th
+          FROM documents) t
+        WHERE len(th) >= {_MIN_TOKENS}
+      )
+      SELECT a.doc_id AS doc_a, b.doc_id AS doc_b,
+             bit_count(xor(a.simhash, b.simhash)) AS hamming
+      FROM s a JOIN s b ON a.doc_id < b.doc_id
+      WHERE bit_count(xor(a.simhash, b.simhash)) <= {_HAMMING_MAX}
+    """,
+)
+def dedup_simhash_hamming(spark: SparkSession, sf_dir: str) -> DataFrame:
+    d = wide_table(spark, sf_dir, "documents")
+    # the repartition barrier below is LOAD-BEARING even though sigs
+    # now has a single consumer (the band explode): without it,
+    # projection collapse inlines the token/vote fold into each of the
+    # 8 band-bucket expressions in the explode projection — 8x the
+    # signature cost per row (part of the measured 21 s)
+    sigs = (
+        d.select(
+            "doc_id",
+            F.array_distinct(lower_tokens(F.col("text"))).alias("tk"),
+        )
+        .where(F.size("tk") >= _MIN_TOKENS)
+        .select(
+            "doc_id",
+            _simhash_from_tokens(F.col("tk")).alias("simhash"),
+        )
+        .repartition(
+            # barrier count scales with the cluster, not the bench box
+            # (ADVICE r04): parallelism is whatever the session offers,
+            # floored at 8 so the bench's single row group still fans out
+            max(spark.sparkContext.defaultParallelism, 8),
+            "doc_id",
+        )
+    )
+    band_width = _SIMHASH_BITS // _BANDS
+    banded = sigs.select(
+        "doc_id",
+        "simhash",
+        F.explode(
+            F.array(
+                *[
+                    F.struct(
+                        F.lit(b).alias("band_idx"),
+                        F.shiftright(F.col("simhash"), b * band_width)
+                        .bitwiseAND(F.lit((1 << band_width) - 1))
+                        .alias("bucket"),
+                    )
+                    for b in range(_BANDS)
+                ]
+            )
+        ).alias("band"),
+    ).select("doc_id", "simhash", "band.band_idx", "band.bucket")
+    # the hamming verify is a bucket-local EQUI-JOIN carrying the
+    # signature on both sides, so bit_count runs inside codegen and
+    # only verified pairs reach dropDuplicates. Two earlier shapes
+    # both lost: (r04-) shuffling every candidate through
+    # dropDuplicates + two signature joins (21 s); (r05) grouped-list
+    # HOF pair expansion, which collapses each bucket into ONE
+    # interpreted O(n²) task — fine at the then-measured ~17x
+    # candidate ratio, but the regenerated corpus concentrates
+    # signatures into ~4k-doc buckets (38M candidates at sf0.1) and a
+    # dense bucket becomes a single-task straggler: 17.7 s, vs 4.6 s
+    # for this join (the CLAUDE.md HOF-vs-join crossover at scale;
+    # the residual is the inherent 38M bit_count verifications).
+    # At 100 TB the banding parameters bound bucket density; the join
+    # parallelizes whatever density remains.
+    banded = banded.localCheckpoint()  # two join sides, one signature eval
+    a = banded.select(
+        F.col("doc_id").alias("doc_a"),
+        F.col("simhash").alias("sa"),
+        "band_idx",
+        "bucket",
+    )
+    b = banded.select(
+        F.col("doc_id").alias("doc_b"),
+        F.col("simhash").alias("sb"),
+        "band_idx",
+        "bucket",
+    )
+    ham = F.bit_count(F.col("sa").bitwiseXOR(F.col("sb")))
+    return (
+        a.join(b, ["band_idx", "bucket"])
+        .where((F.col("doc_a") < F.col("doc_b")) & (ham <= _HAMMING_MAX))
+        .select("doc_a", "doc_b", ham.alias("hamming"))
+        .dropDuplicates(["doc_a", "doc_b"])
+    )
+
+
+def _minhash_md5_signature(text: Column) -> Column:
+    """k=16 minhash over distinct 3-token shingles with md5 shingle
+    hashes and (a_k·h + b_k) mod 2^31-1 universal hashing — every step
+    reproducible in DuckDB SQL. One fold pass; md5 once per shingle."""
+    toks = lower_tokens(text)
+    shingles = F.when(
+        F.size(toks) >= 3,
+        F.transform(
+            F.sequence(F.lit(1), F.size(toks) - 2),
+            lambda i: F.concat_ws(" ", F.slice(toks, i, 3)),
+        ),
+    ).otherwise(F.array(F.concat_ws(" ", toks)))
+    th = F.transform(F.array_distinct(shingles), md5_32)
+
+    def _hash_vector(h: Column) -> Column:
+        return F.array(
+            *[
+                (h * (2 * k + 3) + (k * 1000003 + 7)) % _MINHASH_P
+                for k in range(_MINHASH_K)
+            ]
+        )
+
+    return F.aggregate(
+        th,
+        F.array(*[F.lit(_MINHASH_P).cast("long")] * _MINHASH_K),
+        lambda acc, h: F.zip_with(acc, _hash_vector(h), lambda a, b: F.least(a, b)),
+    )
+
+
+@register(
+    "dedup_minhash_md5_signatures",
+    "MinHash signature kernel with CROSS-ENGINE hashing (md5 shingle "
+    "hashes + universal hashing mod 2^31-1): the oracle reproduces the "
+    "full shingle→hash→min pipeline in DuckDB SQL and the value hash "
+    "pins every signature element. Companion to dedup_minhash_lsh "
+    "(whose crc32/SipHash kernels are faster but engine-specific, hence "
+    "rows-only). Top-100 docs by id keep the check O(100·shingles). "
+    "The signature is serialized as a comma-joined string — the "
+    "driver's canonicalizer cannot hash list cells.",
+    oracle=f"""
+      SELECT doc_id,
+             array_to_string(
+               list_transform(range(0, {_MINHASH_K}), k ->
+                 coalesce(list_min(list_transform(th, h ->
+                   (h * (2*k + 3) + (k * 1000003 + 7)) % {_MINHASH_P})),
+                   {_MINHASH_P})), ',') AS minhash_sig
+      FROM (
+        SELECT doc_id,
+               list_transform(
+                 list_distinct(
+                   CASE WHEN len(toks) >= 3
+                        THEN list_transform(range(1, len(toks) - 1), i ->
+                               concat_ws(' ', toks[i], toks[i+1], toks[i+2]))
+                        ELSE [array_to_string(toks, ' ')] END),
+                 s -> ('0x' || substr(md5(s), 1, 8))::BIGINT) AS th
+        FROM (
+          SELECT doc_id,
+                 regexp_extract_all(lower(text), '[a-z0-9]+') AS toks
+          FROM documents
+          ORDER BY doc_id LIMIT 100) t
+      ) x
+      ORDER BY doc_id
+    """,
+)
+def dedup_minhash_md5(spark: SparkSession, sf_dir: str) -> DataFrame:
+    d = wide_table(spark, sf_dir, "documents")
+    return (
+        d.orderBy("doc_id")
+        .limit(100)
+        .select(
+            "doc_id",
+            F.array_join(
+                F.transform(
+                    _minhash_md5_signature(F.col("text")),
+                    lambda x: x.cast("string"),
+                ),
+                ",",
+            ).alias("minhash_sig"),
+        )
+        .orderBy("doc_id")
+    )
+
+
+# ---------------------------------------------- incremental probe twin
+
+
+_PROBE_BANDS = 4
+_PROBE_ROWS_PER_BAND = _MINHASH_K // _PROBE_BANDS
+_PROBE_CORPUS_N = 150
+_PROBE_MIN_AGREE = 8  # est jaccard >= 0.5
+
+
+def _probe_sig_sql(src: str) -> str:
+    """DuckDB twin of _minhash_md5_signature over ``src`` (id, text)."""
+    return f"""
+        SELECT id,
+               list_transform(range(0, {_MINHASH_K}), k ->
+                 coalesce(list_min(list_transform(th, h ->
+                   (h * (2*k + 3) + (k * 1000003 + 7)) % {_MINHASH_P})),
+                   {_MINHASH_P})) AS sig
+        FROM (
+          SELECT id,
+                 list_transform(
+                   list_distinct(
+                     CASE WHEN len(toks) >= 3
+                          THEN list_transform(range(1, len(toks) - 1), i ->
+                                 concat_ws(' ', toks[i], toks[i+1], toks[i+2]))
+                          ELSE [array_to_string(toks, ' ')] END),
+                   s -> ('0x' || substr(md5(s), 1, 8))::BIGINT) AS th
+          FROM (
+            SELECT id, regexp_extract_all(lower(text), '[a-z0-9]+') AS toks
+            FROM ({src}) _t0) _t1
+        ) _t2
+    """
+
+
+def _probe_band_sql(sig_cte: str) -> str:
+    w = _PROBE_ROWS_PER_BAND
+    return f"""
+        SELECT id, b.b AS band,
+               array_to_string(
+                 list_slice(sig, b.b * {w} + 1, b.b * {w} + {w}), ',') AS bucket
+        FROM {sig_cte}, (SELECT unnest(range(0, {_PROBE_BANDS})) AS b) b
+    """
+
+
+@register(
+    "dedup_minhash_md5_incremental_probe",
+    "Incremental near-dup probe with a CROSS-ENGINE kernel: the md5 "
+    "minhash signatures (dedup_minhash_md5_signatures' kernel) are "
+    "banded into 4x4 LSH buckets whose ids are the band's literal "
+    "signature slice (engine-exact strings, per VERDICT r04 item 8); "
+    "a deterministic synthetic batch (first-token-dropped near-copies "
+    "that must hit + salted novel docs that must miss) probes the "
+    "corpus index via a band-bucket equi-join with the batch side "
+    "broadcast, and candidates verify with the INTEGER agreement "
+    "count (n positions equal of 16) — corpus text is read only to "
+    "build the index, exactly the steady-state shape of "
+    "operators/dedup.py::minhash_probe. The oracle reproduces "
+    "signatures, banding, probe join, and verification in DuckDB SQL, "
+    "so the hash match pins the full incremental path. 100 TB: probe "
+    "cost is O(batch x bands) bucket lookups against a sorted index; "
+    "the corpus-side frame never re-shuffles.",
+    oracle=f"""
+      WITH corpus_src AS (
+        SELECT doc_id AS id, text FROM documents
+        ORDER BY doc_id LIMIT {_PROBE_CORPUS_N}
+      ),
+      batch_src AS (
+        SELECT id + 1000000 AS id,
+               regexp_replace(text, '^\\S+\\s+', '') AS text
+        FROM corpus_src WHERE id % 20 = 0
+        UNION ALL
+        SELECT id + 2000000 AS id,
+               concat('novel', id, ' isolated vocabulary payload') AS text
+        FROM corpus_src WHERE id % 20 = 7
+      ),
+      csig AS ({_probe_sig_sql("SELECT * FROM corpus_src")}),
+      bsig AS ({_probe_sig_sql("SELECT * FROM batch_src")}),
+      cband AS ({_probe_band_sql("csig")}),
+      bband AS ({_probe_band_sql("bsig")}),
+      cand AS (
+        SELECT DISTINCT bb.id AS batch_id, cb.id AS corpus_id
+        FROM bband bb JOIN cband cb
+          ON bb.band = cb.band AND bb.bucket = cb.bucket
+      )
+      SELECT c.batch_id::BIGINT AS batch_id,
+             c.corpus_id::BIGINT AS corpus_id,
+             len(list_filter(range(1, {_MINHASH_K} + 1),
+                             i -> bs.sig[i] = cs.sig[i]))::BIGINT AS n_agree
+      FROM cand c
+      JOIN bsig bs ON bs.id = c.batch_id
+      JOIN csig cs ON cs.id = c.corpus_id
+      WHERE len(list_filter(range(1, {_MINHASH_K} + 1),
+                            i -> bs.sig[i] = cs.sig[i])) >= {_PROBE_MIN_AGREE}
+      ORDER BY batch_id, corpus_id
+    """,
+)
+def dedup_minhash_md5_incremental_probe(
+    spark: SparkSession, sf_dir: str
+) -> DataFrame:
+    d = wide_table(spark, sf_dir, "documents")
+    corpus = (
+        d.orderBy("doc_id")
+        .limit(_PROBE_CORPUS_N)
+        .select(F.col("doc_id").alias("id"), "text")
+    )
+    near = corpus.where(F.col("id") % 20 == 0).select(
+        (F.col("id") + 1_000_000).alias("id"),
+        F.regexp_replace("text", r"^\S+\s+", "").alias("text"),
+    )
+    novel = corpus.where(F.col("id") % 20 == 7).select(
+        (F.col("id") + 2_000_000).alias("id"),
+        F.concat(
+            F.lit("novel"),
+            F.col("id").cast("string"),
+            F.lit(" isolated vocabulary payload"),
+        ).alias("text"),
+    )
+    batch = near.unionByName(novel)
+    # signatures materialize ONCE (localCheckpoint): each frame feeds
+    # both the band explode and the verification join, and the band
+    # struct array references `sig` 4x — CollapseProject would inline
+    # the signature fold per reference otherwise
+    csig = corpus.select(
+        "id", _minhash_md5_signature(F.col("text")).alias("sig")
+    ).localCheckpoint()
+    bsig = batch.select(
+        "id", _minhash_md5_signature(F.col("text")).alias("sig")
+    ).localCheckpoint()
+
+    w = _PROBE_ROWS_PER_BAND
+
+    def _bands(s: DataFrame) -> DataFrame:
+        return s.select(
+            "id",
+            F.explode(
+                F.array(
+                    *[
+                        F.struct(
+                            F.lit(b).alias("band"),
+                            F.array_join(
+                                F.slice("sig", b * w + 1, w), ","
+                            ).alias("bucket"),
+                        )
+                        for b in range(_PROBE_BANDS)
+                    ]
+                )
+            ).alias("x"),
+        ).select("id", "x.band", "x.bucket")
+
+    cband = _bands(csig)
+    bband = _bands(bsig)
+    cand = (
+        # bband is BATCH-sized (the incoming increment, bounded by the
+        # probe design — corpus side stays un-broadcast), so the hint
+        # holds at any corpus scale.
+        cband.join(F.broadcast(bband), ["band", "bucket"])
+        .select(
+            bband["id"].alias("batch_id"), cband["id"].alias("corpus_id")
+        )
+        .distinct()
+    )
+    agree = F.aggregate(
+        F.zip_with(
+            F.col("bs"), F.col("cs"), lambda a, b: (a == b).cast("int")
+        ),
+        F.lit(0),
+        lambda a, x: a + x,
+    )
+    return (
+        cand.join(
+            F.broadcast(bsig.select(F.col("id").alias("batch_id"), F.col("sig").alias("bs"))),
+            "batch_id",
+        )
+        .join(
+            csig.select(F.col("id").alias("corpus_id"), F.col("sig").alias("cs")),
+            "corpus_id",
+        )
+        .select(
+            F.col("batch_id").cast("bigint").alias("batch_id"),
+            F.col("corpus_id").cast("bigint").alias("corpus_id"),
+            agree.cast("bigint").alias("n_agree"),
+        )
+        .where(F.col("n_agree") >= _PROBE_MIN_AGREE)
+        .orderBy("batch_id", "corpus_id")
+    )
+
+
+# Training-data prep operators named in the build brief that were not
+# yet first-class inventory rows: BPE-ish token counting, rolling-hash
+# document fingerprinting (winnowing), and the multimodal decode pipeline
+# surfaced as a driver-checkable entry.
+#
+# Token/fingerprint queries are fully oracle-expressible: ASCII regex
+# classes behave identically in Java and DuckDB RE2, and gram hashes use
+# the md5-prefix trick of common.md5_32.
+
+_GRAM_K = 8  # char-gram width for winnowing
+_WIN_W = 4  # winnowing window (fingerprint = min gram hash per window)
+_FP_DOCS = 50  # cap the fingerprint check (arrays grow with text length)
+
+
+def _winnow_fingerprints(text: Column) -> Column:
+    """Winnowing (Schleimer et al., SIGMOD'03): hash all ``_GRAM_K``-char
+    grams of the canonicalized text, keep the min hash of each
+    ``_WIN_W``-gram window, distinct+sort. Guarantees any shared
+    substring of length ≥ _GRAM_K+_WIN_W-1 yields a shared fingerprint —
+    the standard plagiarism/dup-detection structure, here as pure
+    Column expressions reproduced verbatim in the DuckDB oracle."""
+    t = F.array_join(
+        lower_tokens(text), " "
+    )
+    n = F.length(t)
+    grams = F.when(
+        n >= _GRAM_K,
+        F.transform(
+            F.sequence(F.lit(1), n - _GRAM_K + 1),
+            lambda i: md5_32(t.substr(i, F.lit(_GRAM_K))),
+        ),
+    ).otherwise(F.array(md5_32(t)))
+    ng = F.size(grams)
+    mins = F.when(
+        ng >= _WIN_W,
+        F.transform(
+            F.sequence(F.lit(1), ng - _WIN_W + 1),
+            lambda j: F.array_min(F.slice(grams, j, _WIN_W)),
+        ),
+    ).otherwise(F.array(F.array_min(grams)))
+    return F.array_sort(F.array_distinct(mins))
+
+
+@register(
+    "text_fingerprint_winnowing",
+    "Rolling-hash document fingerprinting (build brief row): winnowing "
+    "— min md5-gram-hash per sliding window over canonicalized text, "
+    "distinct fingerprint set per doc. The oracle reproduces gram "
+    "hashing and window minima element-for-element in DuckDB SQL, so "
+    "the value hash pins the whole kernel. First 50 docs by id (array "
+    "payload grows with text length). Fingerprint set serialized as a "
+    "comma-joined string — the driver's canonicalizer cannot hash "
+    "list cells.",
+    oracle=f"""
+      SELECT doc_id,
+             array_to_string(list_sort(list_distinct(
+               CASE WHEN len(grams) >= {_WIN_W}
+                    THEN list_transform(range(1, len(grams) - {_WIN_W} + 2), j ->
+                           list_min(list_transform(range(0, {_WIN_W}), x ->
+                             grams[j + x])))
+                    ELSE [list_min(grams)] END)), ',') AS fingerprints,
+             len(grams) AS n_grams
+      FROM (
+        SELECT doc_id,
+               CASE WHEN length(t) >= {_GRAM_K}
+                    THEN list_transform(range(1, length(t) - {_GRAM_K} + 2), i ->
+                           ('0x' || substr(md5(substr(t, i, {_GRAM_K})), 1, 8))::BIGINT)
+                    ELSE [('0x' || substr(md5(t), 1, 8))::BIGINT] END AS grams
+        FROM (
+          SELECT doc_id,
+                 array_to_string(regexp_extract_all(lower(text), '[a-z0-9]+'),
+                                 ' ') AS t
+          FROM documents ORDER BY doc_id LIMIT {_FP_DOCS}) x
+      ) g
+      ORDER BY doc_id
+    """,
+)
+def fingerprint_winnowing(spark: SparkSession, sf_dir: str) -> DataFrame:
+    # Relational winnowing: explode gram positions and take window
+    # minima with a ROWS frame instead of nesting the per-window
+    # array_min lambda over the gram-array expression. The nested
+    # formulation (_winnow_fingerprints — the ground truth of
+    # tests/test_operators.py::test_winnowing_relational_matches_
+    # nested_hof) hits projection-collapse expression duplication: `grams`
+    # (an O(n) md5 map over a regex-derived string) is inlined into
+    # EVERY window slice, going O(n^2) md5+regex per document —
+    # measured 89 s at sf0.1 vs 0.4 s for this plan. The repartition
+    # materializes the canonicalized string once per doc before the
+    # per-gram explode references it.
+    from pyspark.sql.window import Window
+
+    d = wide_table(spark, sf_dir, "documents").orderBy("doc_id").limit(_FP_DOCS)
+    t = F.array_join(
+        lower_tokens(F.col("text")), " "
+    )
+    base = d.select("doc_id", t.alias("t")).repartition(
+        # cluster-derived barrier width, floored at 8 for the bench's
+        # single-row-group scan (ADVICE r04)
+        max(spark.sparkContext.defaultParallelism, 8),
+        "doc_id",
+    )
+    g = base.select(
+        "doc_id",
+        "t",
+        F.explode(
+            F.expr(
+                f"sequence(1, greatest(length(t) - {_GRAM_K} + 1, 1))"
+            )
+        ).alias("i"),
+    ).select(
+        "doc_id",
+        "i",
+        md5_32(F.expr(f"substr(t, i, {_GRAM_K})")).alias("gh"),
+    )
+    wdoc = Window.partitionBy("doc_id")
+    wmin = (
+        Window.partitionBy("doc_id")
+        .orderBy("i")
+        .rowsBetween(0, _WIN_W - 1)
+    )
+    fp = g.select(
+        "doc_id",
+        "i",
+        F.count(F.lit(1)).over(wdoc).alias("ng"),
+        F.min("gh").over(wmin).alias("fpv"),
+    ).where(
+        (F.col("i") <= F.col("ng") - _WIN_W + 1) | (F.col("i") == 1)
+    )
+    return (
+        fp.groupBy("doc_id")
+        .agg(
+            F.array_join(
+                F.transform(
+                    F.array_sort(F.collect_set("fpv")),
+                    lambda x: x.cast("string"),
+                ),
+                ",",
+            ).alias("fingerprints"),
+            F.min("ng").alias("n_grams"),
+        )
+        .orderBy("doc_id")
+    )
+
+
+@register(
+    "dedup_groups_connected_components",
+    "Transitive dedup groups with a HARD oracle: the driver-green "
+    "blocked-Jaccard near-dup pairs closed under connectivity — Spark "
+    "side via iterative min-label propagation (operators/dedup.py::"
+    "connected_components, the scalable 100 TB formulation), oracle side "
+    "via a DuckDB recursive-CTE transitive closure over the identical "
+    "pair set. Output (id, component, keeper, is_duplicate) with "
+    "component = min reachable id, so both formulations provably agree.",
+    oracle=f"""
+      WITH RECURSIVE {CC_REACH_CTES}
+      SELECT id, min(r) AS component, min(r) AS keeper,
+             id <> min(r) AS is_duplicate
+      FROM reach GROUP BY id
+    """,
+)
+def dedup_groups_cc(spark: SparkSession, sf_dir: str) -> DataFrame:
+    return cc_components(spark, sf_dir)
+
+
+@register(
+    "dedup_minhash_incremental_probe",
+    "Incremental near-dup lookup: a prebuilt MinHash-LSH band index "
+    "(operators/dedup.py::minhash_index_build — built once per corpus "
+    "version, cached per sf_dir) probed with a deterministic synthetic "
+    "batch (every 20th doc with its first token dropped — a near-copy "
+    "that must hit, plus doc_id-salted novel text that must miss). "
+    "Probe touches index parquet + batch only; corpus text is never "
+    "re-read. Rows-only by design (banding/signature kernels are not "
+    "SQL-expressible); ground truth pinned by "
+    "tests/test_operators.py::test_minhash_index_probe_incremental.",
+)
+def dedup_minhash_incremental_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
+    import hashlib
+    import os
+    import tempfile
+
+    from scout_spark.operators.dedup import minhash_index_build, minhash_probe
+
+    d = wide_table(spark, sf_dir, "documents")
+    key = hashlib.sha1(sf_dir.encode()).hexdigest()[:12]
+    idx = os.path.join(tempfile.gettempdir(), f"scout_mh_index_{key}")
+    if not os.path.exists(os.path.join(idx, "bands")):
+        minhash_index_build(d, idx, id_col="doc_id", text_col="text")
+    near = d.where(F.col("doc_id") % 20 == 0).select(
+        (F.col("doc_id") + 1_000_000).alias("doc_id"),
+        # drop the first token: a high-Jaccard near-copy
+        F.regexp_replace("text", r"^\S+\s+", "").alias("text"),
+    )
+    novel = d.where(F.col("doc_id") % 20 == 7).select(
+        (F.col("doc_id") + 2_000_000).alias("doc_id"),
+        F.concat(
+            F.lit("novel"), F.col("doc_id").cast("string"),
+            F.lit(" isolated vocabulary payload"),
+        ).alias("text"),
+    )
+    hits = minhash_probe(
+        spark, idx, near.unionByName(novel), id_col="doc_id", text_col="text"
+    )
+    return hits.orderBy("batch_id", "corpus_id")
+
+
+_SPAN = 10  # tokens per dedup span (C4 dedupes three-sentence spans)
+
+
+@register(
+    "dedup_span_exact_c4",
+    "C4-style span-level exact dedup (Raffel et al. 2020 §2.2, adapted "
+    f"to {_SPAN}-token spans since the corpus has no sentence "
+    "boundaries): each doc splits into consecutive token spans, every "
+    "span's corpus-wide first occurrence wins (min of doc_id*100000+idx "
+    "— deterministic, engine-independent), and surviving spans are "
+    "reassembled in document order. One shuffle keyed on span text with "
+    "map-side combine for the winner min; at 100 TB the groupBy key "
+    "would be xxhash64(span) with span text kept only on the probe "
+    "side. Docs whose every span is a repeat survive with empty text — "
+    "the row set is all non-empty docs on both engines.",
+    oracle=f"""
+      WITH t AS (
+        SELECT doc_id, regexp_extract_all(lower(text), '{TOK}') AS toks
+        FROM documents
+      ),
+      ts AS (
+        SELECT doc_id, toks, ((len(toks) - 1) // {_SPAN}) + 1 AS n_spans
+        FROM t WHERE len(toks) > 0
+      ),
+      x AS (SELECT doc_id, toks, n_spans, unnest(range(0, n_spans)) AS idx FROM ts),
+      c AS (
+        SELECT doc_id, idx,
+               array_to_string(toks[(idx*{_SPAN}+1):(idx*{_SPAN}+{_SPAN})], ' ')
+                 AS span,
+               doc_id * 100000 + idx AS key
+        FROM x
+      ),
+      w AS (SELECT span, min(key) AS wkey FROM c GROUP BY span),
+      k AS (SELECT c.* FROM c JOIN w USING (span) WHERE key = wkey),
+      a AS (
+        SELECT doc_id, count(*) AS n_kept,
+               string_agg(span, ' ' ORDER BY idx) AS kept_text
+        FROM k GROUP BY doc_id
+      )
+      SELECT ts.doc_id, n_spans, coalesce(n_kept, 0) AS n_kept,
+             coalesce(kept_text, '') AS kept_text
+      FROM ts LEFT JOIN a USING (doc_id)
+    """,
+)
+def dedup_span_exact_c4(spark: SparkSession, sf_dir: str) -> DataFrame:
+    d = wide_table(spark, sf_dir, "documents")
+    t = d.select(
+        "doc_id",
+        lower_tokens(F.col("text")).alias(
+            "toks"
+        ),
+    ).where(F.size("toks") > 0)
+    ts = t.select(
+        "doc_id",
+        "toks",
+        (((F.size("toks") - 1).cast("long") / _SPAN).cast("long") + 1).alias(
+            "n_spans"
+        ),
+    )
+    spans = F.expr(
+        f"transform(sequence(0, cast(n_spans as int) - 1), "
+        f"i -> concat_ws(' ', slice(toks, i*{_SPAN}+1, {_SPAN})))"
+    )
+    c = (
+        ts.select(
+            "doc_id", "n_spans", F.posexplode(spans).alias("idx", "span")
+        )
+        .withColumn("key", F.col("doc_id") * 100000 + F.col("idx"))
+        # winner selection groups on the 8-byte span hash, not the span
+        # string — the shuffle moves (hash, key) instead of ~60-char
+        # text (0.97s -> 0.25s at sf0.1; a 64-bit collision merging two
+        # spans has probability ~n²/2^65, same accepted risk class as
+        # jaccard_pairs' token hashing)
+        .withColumn("sh", F.xxhash64("span"))
+    )
+    winners = c.groupBy("sh").agg(F.min("key").alias("wkey"))
+    kept = c.join(winners, "sh").where(F.col("key") == F.col("wkey"))
+    agg = kept.groupBy("doc_id").agg(
+        F.count(F.lit(1)).alias("n_kept"),
+        F.array_join(
+            F.transform(
+                F.array_sort(F.collect_list(F.struct("idx", "span"))),
+                lambda s: s.span,
+            ),
+            " ",
+        ).alias("kept_text"),
+    )
+    return ts.select("doc_id", "n_spans").join(agg, "doc_id", "left").select(
+        "doc_id",
+        "n_spans",
+        F.coalesce("n_kept", F.lit(0)).alias("n_kept"),
+        F.coalesce("kept_text", F.lit("")).alias("kept_text"),
+    )
+
+
+@register(
+    "dedup_component_size_histogram",
+    "Dedup-group size distribution — the reporting stage every "
+    "production dedup pass ships (how much of the corpus sits in "
+    "2-doc groups vs giant near-dup families): the driver-green "
+    "blocked-Jaccard pairs closed under connectivity "
+    "(operators/dedup.py::connected_components), then two tiny "
+    "aggregations (per-component size, then size histogram). Oracle "
+    "recomputes via the recursive-CTE transitive closure.",
+    oracle=f"""
+      WITH RECURSIVE d AS (
+        SELECT doc_id, lang, n_chars // 50 AS bkt,
+               list_distinct({tokens_sql("text")}) AS toks
+        FROM documents
+      ),
+      pairs AS (
+        SELECT a.doc_id AS doc_a, b.doc_id AS doc_b
+        FROM d a JOIN d b
+          ON a.lang = b.lang AND a.bkt = b.bkt AND a.doc_id < b.doc_id
+        WHERE len(list_intersect(a.toks, b.toks))::DOUBLE
+              / (len(a.toks) + len(b.toks) - len(list_intersect(a.toks, b.toks)))
+              >= 0.8
+      ),
+      edges AS (
+        SELECT doc_a AS src, doc_b AS dst FROM pairs
+        UNION
+        SELECT doc_b, doc_a FROM pairs
+      ),
+      reach(id, r) AS (
+        SELECT src, src FROM edges
+        UNION
+        SELECT re.id, e.dst FROM reach re JOIN edges e ON e.src = re.r
+      ),
+      comp AS (
+        SELECT id, min(r) AS component FROM reach GROUP BY id
+      ),
+      sizes AS (
+        SELECT component, count(*) AS group_size FROM comp GROUP BY component
+      )
+      SELECT group_size,
+             count(*) AS n_groups,
+             sum(group_size)::BIGINT AS n_docs,
+             (sum(group_size) - count(*))::BIGINT AS n_duplicates
+      FROM sizes GROUP BY group_size ORDER BY group_size
+    """,
+)
+def dedup_component_size_histogram(
+    spark: SparkSession, sf_dir: str
+) -> DataFrame:
+    from scout_spark.operators.dedup import connected_components, jaccard_pairs
+
+    d = wide_table(spark, sf_dir, "documents")
+    pairs = jaccard_pairs(
+        d,
+        "doc_id",
+        tokens_col(F.col("text")),
+        {"lang": F.col("lang"), "bkt": (F.col("n_chars") / 50).cast("long")},
+        0.8,
+    )
+    comp = connected_components(pairs)
+    sizes = comp.groupBy("component").agg(F.count(F.lit(1)).alias("group_size"))
+    return (
+        sizes.groupBy("group_size")
+        .agg(
+            F.count(F.lit(1)).alias("n_groups"),
+            F.sum("group_size").alias("n_docs"),
+            (F.sum("group_size") - F.count(F.lit(1))).alias("n_duplicates"),
+        )
+        .orderBy("group_size")
+    )
+
+
+@register(
+    "semdedup_embedding_prune",
+    "SemDeDup semantic deduplication (Abbas et al., arXiv:2303.09540; "
+    "operators/semdedup.py): k-means clusters the embedding corpus, "
+    "cosine>=0.95 pairs are generated ONLY within clusters (blocked "
+    "quadratic — the paper's tractability trick, an equi-join bucket "
+    "at scale), transitive closure keeps one min-id representative "
+    "per duplicate ball. Per-cluster keep/drop report. Rows-only: "
+    "k-means assignment is engine-defined; planted-duplicate ground "
+    "truth is pinned in tests/test_operators.py.",
+    tags=("rows-only",),
+)
+def semdedup_embedding_prune(spark: SparkSession, sf_dir: str) -> DataFrame:
+    from scout_spark.operators.semdedup import semdedup
+
+    e = table(spark, sf_dir, "embeddings")
+    marked = semdedup(e, k=8, threshold=0.95)
+    return (
+        marked.groupBy("cluster")
+        .agg(
+            F.count(F.lit(1)).alias("n_vecs"),
+            F.sum(F.when(F.col("is_duplicate"), 1).otherwise(0)).alias(
+                "n_dropped"
+            ),
+            F.countDistinct(
+                F.when(F.col("is_duplicate"), F.col("keeper"))
+            ).alias("n_dup_groups"),
+        )
+        .orderBy("cluster")
+    )
+
+
+# PPJoin entry bound: the oracle recomputes the EXACT unblocked result
+# with the naive quadratic join, which is only feasible on a bounded
+# slice — the operator itself has no such bound (prefix filtering IS
+# its scale mechanism; tests/test_graph.py pins it against brute force
+# and the oracle pins it against DuckDB here).
+_PP_BOUND = 800
+_PP_T = 0.8
+
+
+@register(
+    "dedup_ppjoin_prefix",
+    "EXACT set-similarity self-join via prefix filtering (SSJoin/"
+    "PPJoin; operators/setjoin.py): tokens ordered by global rarity, "
+    "only the (1-t)·|s|+1 rarest per record enter the candidate "
+    "equi-join — complete by the pigeonhole prefix principle, so "
+    "unlike MinHash-LSH there are NO false negatives, and the "
+    "frequent tokens that would explode the join sit outside every "
+    f"prefix. Jaccard ≥ {_PP_T} over doc_id < {_PP_BOUND} (the bound "
+    "exists for the oracle's naive quadratic recount, not the "
+    "operator).",
+    oracle=f"""
+      WITH d AS (
+        SELECT doc_id, list_distinct({tokens_sql("text")}) AS toks
+        FROM documents WHERE doc_id < {_PP_BOUND}
+      )
+      SELECT a.doc_id AS id_a, b.doc_id AS id_b,
+             round(len(list_intersect(a.toks, b.toks))::DOUBLE
+                   / (len(a.toks) + len(b.toks)
+                      - len(list_intersect(a.toks, b.toks))), 6) AS jaccard
+      FROM d a JOIN d b ON a.doc_id < b.doc_id
+      WHERE len(list_intersect(a.toks, b.toks))::DOUBLE
+            / (len(a.toks) + len(b.toks) - len(list_intersect(a.toks, b.toks)))
+            >= {_PP_T}
+    """,
+)
+def dedup_ppjoin_prefix(spark: SparkSession, sf_dir: str) -> DataFrame:
+    from scout_spark.operators.setjoin import prefix_filter_join
+
+    d = (
+        table(spark, sf_dir, "documents")
+        .where(F.col("doc_id") < _PP_BOUND)
+        .select("doc_id", tokens_col(F.col("text")).alias("toks"))
+    )
+    return prefix_filter_join(d, "doc_id", "toks", _PP_T).select(
+        F.col("id_a"), F.col("id_b"), "jaccard"
+    )
+
+
+# Deterministic "dirty" second source for the linkage demo: every 3rd
+# key's name gains a trailing char (edit distance 1), every 7th gains
+# two (distance 2, stacking), every 5th's balance drifts +0.01
+# (additive only — repo fixture rule), every 11th vanishes.
+_ER_NAME1_MOD = 3
+_ER_NAME2_MOD = 7
+_ER_BAL_MOD = 5
+_ER_DROP_MOD = 11
+
+
+@register(
+    "er_record_linkage",
+    "Blocked record linkage (Fellegi-Sunter shape): match a clean "
+    "customer source against a deterministically dirtied second "
+    "source (typo'd names, drifted balances, dropped rows) — "
+    "candidates generated ONLY within (nation, segment) blocks (the "
+    "equi-join that replaces the quadratic cross product at scale), "
+    "field agreements scored (levenshtein ≤ 2 on names, |Δbalance| ≤ "
+    "0.02), pairs above threshold declared matches. Because the true "
+    "identity (custkey) is known, the report includes per-nation "
+    "precision — TPC-H-style names differ by a digit, so near-miss "
+    "false positives are real, which is the point of the demo.",
+    oracle=f"""
+      WITH v2 AS (
+        SELECT c_custkey AS k2, c_nationkey, c_mktsegment,
+               c_name
+                 || CASE WHEN c_custkey % {_ER_NAME1_MOD} = 0 THEN 'x' ELSE '' END
+                 || CASE WHEN c_custkey % {_ER_NAME2_MOD} = 0 THEN 'zz' ELSE '' END
+                 AS name2,
+               c_acctbal + CASE WHEN c_custkey % {_ER_BAL_MOD} = 0
+                                THEN 0.01 ELSE 0.0 END AS bal2
+        FROM customer WHERE c_custkey % {_ER_DROP_MOD} <> 0
+      ),
+      cand AS (
+        SELECT c.c_nationkey AS nation, c.c_custkey AS k1, v2.k2,
+               CASE WHEN levenshtein(lower(c.c_name), lower(v2.name2)) <= 2
+                    THEN 2 ELSE 0 END
+               + CASE WHEN abs(c.c_acctbal - v2.bal2) <= 0.02
+                      THEN 1 ELSE 0 END AS score
+        FROM customer c
+        JOIN v2 ON c.c_nationkey = v2.c_nationkey
+               AND c.c_mktsegment = v2.c_mktsegment
+      )
+      SELECT nation,
+             count(*) AS n_candidates,
+             sum(CASE WHEN score >= 2 THEN 1 ELSE 0 END)::BIGINT AS n_matched,
+             sum(CASE WHEN score >= 2 AND k1 = k2 THEN 1 ELSE 0 END)::BIGINT
+               AS n_true,
+             round(sum(CASE WHEN score >= 2 AND k1 = k2 THEN 1 ELSE 0 END)::DOUBLE
+                   / nullif(sum(CASE WHEN score >= 2 THEN 1 ELSE 0 END), 0), 6)
+               AS precision
+      FROM cand GROUP BY nation ORDER BY nation
+    """,
+)
+def er_record_linkage(spark: SparkSession, sf_dir: str) -> DataFrame:
+    # probe side widened (wide_table): the banded-levenshtein loop over the
+    # ~1.65M block pairs runs inside the probe scan's codegen stage, and
+    # bench parquet arrives as ONE row group — without the widen the
+    # whole pair loop lands on a single core (measured 3.0 s -> 0.7 s
+    # at sf0.1). The broadcast build side stays narrow.
+    c = wide_table(spark, sf_dir, "customer")
+    v2 = table(spark, sf_dir, "customer").where(
+        F.col("c_custkey") % _ER_DROP_MOD != 0
+    ).select(
+        F.col("c_custkey").alias("k2"),
+        F.col("c_nationkey").alias("nk2"),
+        F.col("c_mktsegment").alias("seg2"),
+        F.concat(
+            F.col("c_name"),
+            F.when(F.col("c_custkey") % _ER_NAME1_MOD == 0, "x").otherwise(""),
+            F.when(F.col("c_custkey") % _ER_NAME2_MOD == 0, "zz").otherwise(""),
+        ).alias("name2"),
+        (
+            F.col("c_acctbal")
+            + F.when(F.col("c_custkey") % _ER_BAL_MOD == 0, 0.01).otherwise(
+                0.0
+            )
+        ).alias("bal2"),
+    )
+    # 3-arg levenshtein abandons the DP once the distance exceeds the
+    # threshold (returns -1) — a banded O(threshold·n) computation per
+    # pair instead of O(n²); only the ≤ 2 predicate matters here, so
+    # "within threshold" ≡ "result != -1". Measured 4.7 s → ~2 s on
+    # the 1.8M-pair candidate set at sf0.1. Edit distance is invariant
+    # under a shared prefix (ed(xu, xv) = ed(u, v)), so when BOTH names
+    # carry the corpus-constant 'customer#' prefix the DP runs on the
+    # 9-12 char tails instead of the full 18-21 — half the band cells;
+    # the guard keeps the predicate exact for arbitrary names. (An
+    # ED-Join q-gram prefix filter was measured here and cut the block
+    # pairs only 1.1-2.1x: every record's rare-gram prefix gets padded
+    # with corpus-universal grams on these fixed-shape names — see
+    # PLANS.md round-4 notes.)
+    _pfx = "customer#"
+    nm1, nm2 = F.lower(F.col("c_name")), F.lower(F.col("name2"))
+    both_pfx = nm1.startswith(_pfx) & nm2.startswith(_pfx)
+    _cut = len(_pfx) + 1
+    name_agree = (
+        F.when(
+            both_pfx,
+            F.levenshtein(
+                F.substring(nm1, _cut, 64), F.substring(nm2, _cut, 64), 2
+            ),
+        ).otherwise(F.levenshtein(nm1, nm2, 2))
+        != -1
+    )
+    bal_agree = F.abs(F.col("c_acctbal") - F.col("bal2")) <= 0.02
+    cand = c.join(
+        v2,
+        (F.col("c_nationkey") == F.col("nk2"))
+        & (F.col("c_mktsegment") == F.col("seg2")),
+    ).select(
+        F.col("c_nationkey").alias("nation"),
+        F.col("c_custkey").alias("k1"),
+        "k2",
+        (
+            F.when(name_agree, 2).otherwise(0)
+            + F.when(bal_agree, 1).otherwise(0)
+        ).alias("score"),
+    )
+    matched = F.when(F.col("score") >= 2, 1).otherwise(0)
+    true_m = F.when(
+        (F.col("score") >= 2) & (F.col("k1") == F.col("k2")), 1
+    ).otherwise(0)
+    return (
+        cand.groupBy("nation")
+        .agg(
+            F.count(F.lit(1)).alias("n_candidates"),
+            F.sum(matched).alias("n_matched"),
+            F.sum(true_m).alias("n_true"),
+            F.round(
+                F.sum(true_m).cast("double")
+                / F.nullif(F.sum(matched), F.lit(0)),
+                6,
+            ).alias("precision"),
+        )
+        .orderBy("nation")
+    )
+
+
+_JW_PROBE = "Customer#000000500"
+
+
+@register(
+    "scalar_jaro_winkler_rank",
+    "Jaro-Winkler fuzzy ranking (functions/jaro.py — Spark has no "
+    "built-in JW): top-20 customer names by similarity to a probe "
+    "string. The Python implementation is verified CHARACTER-EXACT "
+    "against DuckDB's jaro_winkler_similarity (same match window, "
+    "half-transposition, and prefix-bonus semantics), so this scalar "
+    "is oracle-checked, not rows-only; it runs as an Arrow pandas UDF "
+    "over a joinless scan into TakeOrderedAndProject. Rank key "
+    "rounded to 6dp with custkey tie-break (ULP-stable LIMIT).",
+    oracle=f"""
+      SELECT c_custkey, c_name,
+             round(jaro_winkler_similarity(c_name, '{_JW_PROBE}'), 6) AS jw
+      FROM customer
+      ORDER BY jw DESC, c_custkey
+      LIMIT 20
+    """,
+)
+def scalar_jaro_winkler_rank(spark: SparkSession, sf_dir: str) -> DataFrame:
+    from scout_spark.functions.jaro import jaro_winkler_to
+
+    c = table(spark, sf_dir, "customer")
+    jw = jaro_winkler_to(_JW_PROBE)
+    return (
+        c.select(
+            "c_custkey",
+            "c_name",
+            F.round(jw(F.col("c_name")), 6).alias("jw"),
+        )
+        .orderBy(F.desc("jw"), "c_custkey")
+        .limit(20)
+    )
+
+
+# ------------------------------------------------- containment dedup
+
+
+@register(
+    "dedup_containment_shingle",
+    "Asymmetric containment detection (C4-style quote/subset check): "
+    "for document pairs, |shingles(src) ∩ shingles(dst)| / "
+    "|shingles(src)| over distinct 5-word shingles — the measure that "
+    "catches 'src is mostly contained in dst' where symmetric Jaccard "
+    "(dedup_ngram_jaccard_pairs) stays low. Spark builds an inverted "
+    "index of hashed shingles and expands shared-doc pairs per shingle "
+    "from grouped doc lists (no quadratic pair scan, no index "
+    "self-join); the oracle recounts every pair quadratically with "
+    "list_intersect — independent formulations. Shingling itself is a "
+    "pure Column HOF (no Python). 100 TB: one (hash, doc) shuffle; "
+    "per-shingle lists are bounded by duplication density, and the "
+    "candidate stream feeds the same banded-LSH escalation path as "
+    "the MinHash family when the corpus outgrows the exact index.",
+    oracle=f"""
+      WITH tk AS (
+        SELECT doc_id, regexp_extract_all(lower(text), '{TOK}') AS t
+        FROM documents
+      ),
+      sh AS (
+        SELECT doc_id,
+               list_distinct(list_transform(
+                 range(1, greatest(len(t) - 4, 0) + 1),
+                 i -> t[i] || ' ' || t[i+1] || ' ' || t[i+2] || ' '
+                      || t[i+3] || ' ' || t[i+4])) AS sh
+        FROM tk
+      ),
+      p AS (
+        SELECT a.doc_id AS src, b.doc_id AS dst,
+               len(list_intersect(a.sh, b.sh)) AS shared,
+               len(a.sh) AS src_size
+        FROM sh a JOIN sh b ON a.doc_id <> b.doc_id
+      )
+      SELECT src, dst, shared,
+             round(shared::DOUBLE / src_size, 6) AS containment
+      FROM p WHERE shared >= 2
+      ORDER BY containment DESC, src, dst
+      LIMIT 20
+    """,
+)
+def dedup_containment_shingle(spark: SparkSession, sf_dir: str) -> DataFrame:
+    d = wide_table(spark, sf_dir, "documents").select(
+        "doc_id",
+        lower_tokens(F.col("text")).alias("t"),
+    )
+    # shingles via arrays_zip of shifted slices, NOT element_at(t, i+k)
+    # lookups on the captured outer array inside the lambda — the
+    # projection-collapse duplication measured 13 s vs 0.5 s for this
+    # formulation at sf0.1 (CLAUDE.md rule). wide_table widens the single-
+    # row-group bench scan before the per-row-heavy shingle kernel.
+    shingle_expr = (
+        "transform(arrays_zip("
+        "slice(t, 1, greatest(size(t) - 4, 0)), "
+        "slice(t, 2, greatest(size(t) - 4, 0)), "
+        "slice(t, 3, greatest(size(t) - 4, 0)), "
+        "slice(t, 4, greatest(size(t) - 4, 0)), "
+        "slice(t, 5, greatest(size(t) - 4, 0))), "
+        "s -> concat_ws(' ', s['0'], s['1'], s['2'], s['3'], s['4']))"
+    )
+    sh = d.select(
+        "doc_id", F.array_distinct(F.expr(shingle_expr)).alias("sh")
+    )
+    # SINGLE evaluation of the corpus shingle pipeline: hash the
+    # exploded shingles (8-byte index keys — same accepted 64-bit
+    # collision class as span dedup's winner key), attach each doc's
+    # shingle count with a post-explode window (size(sh) next to the
+    # explode would be re-evaluated per output row by projection
+    # collapse), and let the totals RIDE the per-shingle doc lists —
+    # so the pair expansion (graph-edges pattern, no index self-join,
+    # no second corpus scan for sizes) emits src_size directly.
+    # Per-shingle lists are bounded by duplication density, never the
+    # corpus.
+    ex = (
+        sh.select("doc_id", F.explode("sh").alias("gs"))
+        .select("doc_id", F.xxhash64("gs").alias("g"))
+        .withColumn(
+            "total", F.count(F.lit(1)).over(Window.partitionBy("doc_id"))
+        )
+    )
+    lists = ex.groupBy("g").agg(
+        F.array_sort(F.collect_list(F.struct("doc_id", "total"))).alias(
+            "ds"
+        )
+    )
+    pairs = (
+        lists.where(F.size("ds") > 1)
+        .select(
+            F.explode(
+                F.expr(
+                    "flatten(transform(ds, (x, i) -> "
+                    "transform(ds, y -> struct(x.doc_id AS src, "
+                    "x.total AS src_size, y.doc_id AS dst))))"
+                )
+            ).alias("p")
+        )
+        .select("p.src", "p.src_size", "p.dst")
+        .where(F.col("src") != F.col("dst"))
+    )
+    shared = pairs.groupBy("src", "dst", "src_size").agg(
+        F.count(F.lit(1)).alias("shared")
+    )
+    return (
+        shared.where(F.col("shared") >= 2)
+        .select(
+            "src",
+            "dst",
+            "shared",
+            F.round(
+                F.col("shared").cast("double") / F.col("src_size"), 6
+            ).alias("containment"),
+        )
+        .orderBy(F.col("containment").desc(), "src", "dst")
+        .limit(20)
+    )
+
+
+# --------------------------------- golden-record survivorship merge
+
+
+@register(
+    "er_golden_record",
+    "Survivorship / golden-record merge — the MDM step AFTER entity "
+    "resolution (er_record_linkage finds the duplicates; this entry "
+    "merges each group into one canonical record): per "
+    "(nation, segment) group, RECORD-LEVEL survivorship picks the "
+    "whole winning record by (balance cents, custkey) — a single "
+    "max(struct(...)) whose tie-break is built into the comparator, "
+    "so no arg-max nondeterminism on either engine — while "
+    "FIELD-LEVEL survivorship keeps the longest address and the max "
+    "balance independently of the winner. Balance quantized to exact "
+    "integer cents before comparison. 100 TB: one map-side-combinable "
+    "groupBy; max-of-struct partials merge associatively, so the "
+    "shuffle carries one candidate record per partition per group.",
+    oracle="""
+      SELECT c_nationkey AS nationkey,
+             c_mktsegment AS segment,
+             count(*) AS n_records,
+             (max(struct_pack(b := round(c_acctbal * 100)::BIGINT,
+                              k := c_custkey,
+                              p := c_name))).k AS golden_custkey,
+             (max(struct_pack(b := round(c_acctbal * 100)::BIGINT,
+                              k := c_custkey,
+                              p := c_name))).p AS golden_name,
+             (max(struct_pack(l := length(c_name),
+                              a := c_name))).a AS longest_name,
+             round(max(c_acctbal), 2) AS max_balance
+      FROM customer
+      GROUP BY c_nationkey, c_mktsegment
+      ORDER BY nationkey, segment
+    """,
+)
+def er_golden_record(spark: SparkSession, sf_dir: str) -> DataFrame:
+    c = table(spark, sf_dir, "customer")
+    rec = F.max(
+        F.struct(
+            F.round(F.col("c_acctbal") * 100).cast("long").alias("b"),
+            F.col("c_custkey").alias("k"),
+            F.col("c_name").alias("p"),
+        )
+    )
+    addr = F.max(
+        F.struct(F.length("c_name").alias("l"), F.col("c_name").alias("a"))
+    )
+    return (
+        c.groupBy(
+            F.col("c_nationkey").alias("nationkey"),
+            F.col("c_mktsegment").alias("segment"),
+        )
+        .agg(
+            F.count(F.lit(1)).alias("n_records"),
+            rec.getField("k").alias("golden_custkey"),
+            rec.getField("p").alias("golden_name"),
+            addr.getField("a").alias("longest_name"),
+            F.round(F.max("c_acctbal"), 2).alias("max_balance"),
+        )
+        .orderBy("nationkey", "segment")
+    )
+
+
+# --------------------------------------------- SemDeDup integer twin
+
+_SD_K = 8  # md5-seeded centroids (dimension-bounded, never data-sized)
+_SD_SCALE = 1000  # q_i = floor(1000 * x_i): exact on IEEE doubles
+# threshold t = 2/5 (0.4): chosen so the synthetic corpus actually has
+# duplicate pairs (max pairwise cosine ≈ 0.51); the squared test below
+# is exact for any rational t = num/den
+_SD_NUM, _SD_DEN = 2, 5
+
+
+def _sd_oracle() -> str:
+    return f"""
+      WITH RECURSIVE q AS MATERIALIZED (
+        SELECT vec_id,
+               list_transform(embedding,
+                              x -> floor(x::DOUBLE * {_SD_SCALE})::BIGINT)
+                 AS qv
+        FROM embeddings
+      ),
+      qn AS MATERIALIZED (
+        SELECT vec_id, qv,
+               list_sum(list_transform(qv, v -> v * v))::BIGINT AS n2
+        FROM q
+      ),
+      seeds AS MATERIALIZED (
+        SELECT row_number() OVER (ORDER BY md5(vec_id::VARCHAR), vec_id)
+                 AS cid,
+               qv AS cv, n2 AS cn2
+        FROM qn
+        ORDER BY md5(vec_id::VARCHAR), vec_id
+        LIMIT {_SD_K}
+      ),
+      assigned AS MATERIALIZED (
+        SELECT vec_id, qv, n2,
+               -- (dist2, cid) lex argmin packed into one int64 key:
+               -- cid in 1..{_SD_K} < 16, so dist2*16+cid preserves the
+               -- tie-break exactly (matches Spark's min(struct))
+               arg_min(cid, dist2 * 16 + cid) AS cluster
+        FROM (
+          SELECT qn.vec_id, qn.qv, qn.n2, s.cid,
+                 qn.n2
+                 - 2 * list_sum(list_transform(range(1, len(qn.qv) + 1),
+                                               i -> qn.qv[i] * s.cv[i]))::BIGINT
+                 + s.cn2 AS dist2
+          FROM qn CROSS JOIN seeds s
+        )
+        GROUP BY vec_id, qv, n2
+      ),
+      dup_edges AS MATERIALIZED (
+        SELECT a.vec_id AS ea, b.vec_id AS eb
+        FROM assigned a JOIN assigned b
+          ON a.cluster = b.cluster AND a.vec_id < b.vec_id
+        WHERE list_sum(list_transform(range(1, len(a.qv) + 1),
+                                      i -> a.qv[i] * b.qv[i]))::BIGINT > 0
+          AND {_SD_DEN} * {_SD_DEN}
+              * list_sum(list_transform(range(1, len(a.qv) + 1),
+                                        i -> a.qv[i] * b.qv[i]))::BIGINT
+              * list_sum(list_transform(range(1, len(a.qv) + 1),
+                                        i -> a.qv[i] * b.qv[i]))::BIGINT
+              >= {_SD_NUM} * {_SD_NUM} * a.n2 * b.n2
+      ),
+      und AS (
+        SELECT ea AS s, eb AS d FROM dup_edges
+        UNION ALL SELECT eb, ea FROM dup_edges
+      ),
+      nodes AS (SELECT DISTINCT s AS id FROM und),
+      reach AS (
+        SELECT id, id AS lab FROM nodes
+        UNION
+        SELECT u.d AS id, r.lab FROM reach r JOIN und u ON u.s = r.id
+      ),
+      comp AS (SELECT id, min(lab) AS keeper FROM reach GROUP BY id)
+      SELECT a.cluster::BIGINT AS cluster,
+             count(*)::BIGINT AS n_vecs,
+             coalesce(sum(CASE WHEN c.keeper IS NOT NULL
+                                AND c.keeper <> a.vec_id
+                               THEN 1 END), 0)::BIGINT AS n_dropped,
+             count(DISTINCT CASE WHEN c.keeper IS NOT NULL
+                                  AND c.keeper <> a.vec_id
+                                 THEN c.keeper END)::BIGINT
+               AS n_dup_groups
+      FROM assigned a LEFT JOIN comp c ON c.id = a.vec_id
+      GROUP BY a.cluster
+      ORDER BY cluster
+    """
+
+
+@register(
+    "semdedup_md5_integer_twin",
+    "Oracle-exact SemDeDup twin (VERDICT r05 item 5b; Abbas et al. "
+    "arXiv:2303.09540): md5-seeded centroids (the k vectors with "
+    "smallest md5(vec_id), one integer-exact Lloyd assignment by "
+    "squared L2 over floor(1000x) codes, tie-break on centroid id), "
+    "then the SemDeDup machinery unchanged in shape — within-cluster "
+    "pair generation ONLY (blocked quadratic), an all-integer squared "
+    "cosine threshold (t=2/5: 25·dot² >= 4·|a|²·|b|² with dot>0), "
+    "transitive closure to a min-id keeper per duplicate ball "
+    "(per-cluster numpy int64 matmul + union-find inside ONE "
+    "applyInPandas pass vs the oracle's recursive min-label CTE — "
+    "independent formulations; dup edges never span clusters, so "
+    "global closure == per-cluster closure), per-cluster keep/drop "
+    "report. The float k-means production path stays in "
+    "semdedup_embedding_prune (rows-only); this twin pins the blocking "
+    "+ closure + keeper semantics cross-engine. 100 TB: centroid table "
+    "is k rows (broadcast is dimension-bounded); the cluster is "
+    "SemDeDup's unit of work by construction (k grows with the corpus, "
+    "cluster size stays Arrow-batch-bounded), so the quadratic scan + "
+    "closure run vectorized inside each cluster with one shuffle.",
+    oracle=_sd_oracle(),
+)
+def semdedup_md5_integer_twin(
+    spark: SparkSession, sf_dir: str
+) -> DataFrame:
+    e = table(spark, sf_dir, "embeddings")
+    qv = F.transform(
+        "embedding",
+        lambda x: F.floor(x.cast("double") * _SD_SCALE).cast("bigint"),
+    )
+    qn = e.select(
+        "vec_id",
+        qv.alias("qv"),
+    ).withColumn(
+        "n2",
+        F.aggregate(
+            F.zip_with("qv", "qv", lambda a, b: a * b),
+            F.lit(0).cast("bigint"),
+            lambda acc, x: acc + x,
+        ),
+    )
+    seeds = (
+        qn.orderBy(F.md5(F.col("vec_id").cast("string")), "vec_id")
+        .limit(_SD_K)
+        .select(
+            F.row_number()
+            .over(
+                # k-row frame only (LIMIT-bounded): never data-sized
+                Window.orderBy(
+                    F.md5(F.col("vec_id").cast("string")), "vec_id"
+                )
+            )
+            .alias("cid"),
+            F.col("qv").alias("cv"),
+            F.col("n2").alias("cn2"),
+        )
+    )
+    dot_qc = F.aggregate(
+        F.zip_with("qv", "cv", lambda a, b: a * b),
+        F.lit(0).cast("bigint"),
+        lambda acc, x: acc + x,
+    )
+    # centroid broadcast is k=8 rows — dimension-bounded, safe at any sf
+    assigned = (
+        qn.crossJoin(F.broadcast(seeds))
+        .withColumn(
+            "dist2", F.col("n2") - 2 * dot_qc + F.col("cn2")
+        )
+        .groupBy("vec_id")
+        .agg(
+            F.first("qv").alias("qv"),
+            F.first("n2").alias("n2"),
+            F.min(F.struct("dist2", "cid")).alias("_m"),
+        )
+        .select("vec_id", "qv", "n2", F.col("_m.cid").alias("cluster"))
+    )
+
+    def _close(pdf):
+        # one cluster per Arrow batch: quadratic scan as an exact
+        # int64 matmul (bounds proven in the module docstring — no
+        # wraparound), then union-find to the min-id keeper. numpy
+        # int64 == Spark/DuckDB BIGINT arithmetic, bit-for-bit.
+        import numpy as np
+        import pandas as pd
+
+        ids = pdf["vec_id"].to_numpy()
+        order = np.argsort(ids)
+        ids = ids[order]
+        q = np.asarray(pdf["qv"].to_numpy()[order].tolist(), dtype=np.int64)
+        n2 = pdf["n2"].to_numpy()[order].astype(np.int64)
+        # numpy int64 wraps SILENTLY on overflow (unlike Spark ANSI /
+        # DuckDB BIGINT, which raise) — enforce the docstring's
+        # no-overflow bound here: 25·(dim·B²)² < 2⁶³ needs B ≤ 3079
+        # at dim 64. Regenerated testdata with wider components must
+        # fail loudly, not produce wrong keeper sets.
+        if q.size and int(np.abs(q).max()) > 3079:
+            raise ValueError(
+                "semdedup twin: |q| max "
+                f"{int(np.abs(q).max())} exceeds the int64 "
+                "no-overflow bound 3079 (component |x| > 3.079)"
+            )
+        g = q @ q.T
+        iu = np.triu_indices(len(ids), 1)
+        d = g[iu]
+        hit = (d > 0) & (
+            (_SD_DEN * _SD_DEN) * d * d
+            >= (_SD_NUM * _SD_NUM) * n2[iu[0]] * n2[iu[1]]
+        )
+        parent = np.arange(len(ids))
+
+        def find(x):
+            while parent[x] != x:
+                parent[x] = parent[parent[x]]
+                x = parent[x]
+            return x
+
+        for a_i, b_i in zip(iu[0][hit], iu[1][hit]):
+            ra, rb = find(a_i), find(b_i)
+            if ra != rb:
+                parent[max(ra, rb)] = min(ra, rb)
+        roots = np.array([find(i) for i in range(len(ids))])
+        in_edge = np.zeros(len(ids), dtype=bool)
+        in_edge[iu[0][hit]] = True
+        in_edge[iu[1][hit]] = True
+        # ids ascend with index, so the root index is the min vec_id
+        keeper = pd.array(ids[roots], dtype="Int64")
+        keeper[~in_edge] = pd.NA
+        return pd.DataFrame(
+            {
+                "cluster": pdf["cluster"].to_numpy()[order],
+                "vec_id": ids,
+                "keeper": keeper,
+            }
+        )
+
+    comp = assigned.groupBy("cluster").applyInPandas(
+        _close, "cluster int, vec_id bigint, keeper bigint"
+    )
+    dropped = F.col("keeper").isNotNull() & (
+        F.col("keeper") != F.col("vec_id")
+    )
+    return (
+        comp.groupBy(F.col("cluster").cast("bigint").alias("cluster"))
+        .agg(
+            F.count(F.lit(1)).alias("n_vecs"),
+            F.coalesce(
+                F.sum(F.when(dropped, 1)), F.lit(0)
+            ).cast("bigint").alias("n_dropped"),
+            F.countDistinct(F.when(dropped, F.col("keeper")))
+            .cast("bigint")
+            .alias("n_dup_groups"),
+        )
+        .orderBy("cluster")
+    )
+
+
+# Round-8 wave: exact substring-level dedup beyond spans (sorted
+# k-gram anchoring → diagonal runs), duplicated-content coverage, the
+# source-mix curation report, a tokenizer/packing throughput audit, and a
+# Kneser-Ney-smoothed bigram LM (VERDICT r07 "What's missing" item 3 +
+# "Next round" item 1).  All oracle-backed.
+#
+# Empirical shape check before committing to the anchor design (CLAUDE.md
+# prototype-first rule): word 8-grams on this corpus are nearly unique
+# (max corpus frequency 4 at sf0.1; pair-join bound 44,631 rows from
+# 235k gram occurrences), so the anchor self-join is bounded by genuine
+# duplication density, never corpus², at any scale.
+
+@register(
+    "dedup_longest_duplicated_substring",
+    "EXACT longest duplicated token run (>= 8 tokens) per document "
+    "pair — substring-level dedup beyond span/shingle granularity "
+    "(RefinedWeb/Lee et al. 2022 exact-substring dedup, re-expressed "
+    "relationally): anchor on word 8-grams (nearly unique on this "
+    "corpus — prototype-measured before building), self-join anchors "
+    "across docs, and recover maximal runs as consecutive-position "
+    "islands per (pair, diagonal = p1-p2). A duplicated run of L "
+    "tokens yields exactly L-7 anchors on one diagonal, so "
+    "max(island)+7 is the exact run length. Spark joins on xxhash64 "
+    "of the gram (8-byte shuffle keys, same accepted 64-bit collision "
+    "class as span dedup); the oracle joins the gram text — "
+    "independent formulations. 100 TB: anchor join volume is bounded "
+    "by duplication density (8-gram collisions), never corpus²; the "
+    "island window partitions on (d1,d2,diag) — run-bounded frames. "
+    "Deterministic LIMIT tie-break (run desc, d1, d2).",
+    oracle=f"""
+      WITH {GRAM_SQL},
+      pr AS (
+        SELECT a.doc_id AS d1, b.doc_id AS d2, a.p AS p1,
+               a.p - b.p AS diag
+        FROM g a JOIN g b ON a.g = b.g AND a.doc_id < b.doc_id
+      ),
+      isl AS (
+        SELECT d1, d2, diag, p1 - row_number() OVER (
+                 PARTITION BY d1, d2, diag ORDER BY p1) AS grp
+        FROM pr
+      ),
+      runs AS (
+        SELECT d1, d2, count(*) AS c
+        FROM isl GROUP BY d1, d2, diag, grp
+      )
+      SELECT d1, d2, (max(c) + 7)::BIGINT AS run_tokens,
+             sum(c)::BIGINT AS n_gram_matches
+      FROM runs GROUP BY d1, d2
+      ORDER BY run_tokens DESC, d1, d2
+      LIMIT 20
+    """,
+)
+def dedup_longest_duplicated_substring(
+    spark: SparkSession, sf_dir: str
+) -> DataFrame:
+    ex = gram_frame(spark, sf_dir).select(
+        "doc_id", "p", F.xxhash64("g").alias("h")
+    )
+    a, b = ex.alias("a"), ex.alias("b")
+    # self-join on the hashed anchor: both branches share an identical
+    # subtree up to the join-key exchange, so ReuseExchange evaluates
+    # the gram pipeline once
+    pr = a.join(
+        b,
+        (F.col("a.h") == F.col("b.h"))
+        & (F.col("a.doc_id") < F.col("b.doc_id")),
+    ).select(
+        F.col("a.doc_id").alias("d1"),
+        F.col("b.doc_id").alias("d2"),
+        F.col("a.p").alias("p1"),
+        (F.col("a.p") - F.col("b.p")).alias("diag"),
+    )
+    # islands of consecutive p1 per (pair, diagonal): window frames are
+    # bounded by the longest duplicated run, never the corpus
+    w = Window.partitionBy("d1", "d2", "diag").orderBy("p1")
+    isl = pr.select(
+        "d1",
+        "d2",
+        "diag",
+        (F.col("p1") - F.row_number().over(w)).alias("grp"),
+    )
+    runs = isl.groupBy("d1", "d2", "diag", "grp").agg(
+        F.count(F.lit(1)).alias("c")
+    )
+    return (
+        runs.groupBy("d1", "d2")
+        .agg(
+            (F.max("c") + 7).cast("long").alias("run_tokens"),
+            F.sum("c").cast("long").alias("n_gram_matches"),
+        )
+        .orderBy(F.desc("run_tokens"), "d1", "d2")
+        .limit(20)
+    )
+
+
+@register(
+    "dedup_duplicated_ngram_coverage",
+    "Per-document duplicated-content coverage: the fraction of a "
+    "doc's token positions covered by word 8-grams that occur >= 2 "
+    "times corpus-wide (the RefinedWeb-style 'how much of this doc is "
+    "duplicated text' curation signal; within-doc repetition counts — "
+    "it is duplicated training text either way). Coverage = |union of "
+    "[p, p+7] intervals over duplicated anchors| / n_tokens, computed "
+    "exactly by exploding covered positions and counting distinct. "
+    "100 TB: explode volume = duplicated occurrences x 8 — bounded by "
+    "duplication density; the per-gram frequency attach is a hash-"
+    "partitioned window (|grams| groups, no global sort). "
+    "Deterministic LIMIT tie-break (coverage desc, doc_id).",
+    oracle=f"""
+      WITH {GRAM_SQL},
+      dup AS (SELECT g FROM g GROUP BY g HAVING count(*) >= 2),
+      cov AS (
+        SELECT DISTINCT g.doc_id, ue2.cp
+        FROM g JOIN dup USING (g),
+             LATERAL unnest(range(g.p, g.p + 8)) ue2(cp)
+      ),
+      n AS (
+        SELECT doc_id,
+               len(regexp_extract_all(lower(text), '{TOK}'))::BIGINT
+                 AS n_tok
+        FROM documents
+      )
+      SELECT n.doc_id, n.n_tok,
+             count(cov.cp)::BIGINT AS covered_tokens,
+             round(count(cov.cp)::DOUBLE / n.n_tok, 6) AS dup_coverage
+      FROM n JOIN cov ON n.doc_id = cov.doc_id
+      GROUP BY n.doc_id, n.n_tok
+      ORDER BY dup_coverage DESC, n.doc_id
+      LIMIT 20
+    """,
+)
+def dedup_duplicated_ngram_coverage(
+    spark: SparkSession, sf_dir: str
+) -> DataFrame:
+    ex = gram_frame(spark, sf_dir).select(
+        "doc_id", "p", F.xxhash64("g").alias("h")
+    )
+    # corpus frequency rides the occurrence stream via a hash-
+    # partitioned window keyed on the 8-byte gram hash (slim shuffle;
+    # same accepted 64-bit collision class) — no gram-list self-join
+    freq = ex.withColumn(
+        "cnt", F.count(F.lit(1)).over(Window.partitionBy("h"))
+    )
+    cov = (
+        freq.where(F.col("cnt") >= 2)
+        .select(
+            "doc_id",
+            F.explode(
+                F.sequence(F.col("p"), F.col("p") + 7)
+            ).alias("cp"),
+        )
+        .distinct()
+    )
+    n = table(spark, sf_dir, "documents").select(
+        "doc_id",
+        F.size(
+            lower_tokens(F.col("text"))
+        )
+        .cast("long")
+        .alias("n_tok"),
+    )
+    return (
+        n.join(cov, "doc_id")
+        .groupBy("doc_id", "n_tok")
+        .agg(F.count(F.lit(1)).cast("long").alias("covered_tokens"))
+        .select(
+            "doc_id",
+            "n_tok",
+            "covered_tokens",
+            F.round(
+                F.col("covered_tokens").cast("double") / F.col("n_tok"),
+                6,
+            ).alias("dup_coverage"),
+        )
+        .orderBy(F.desc("dup_coverage"), "doc_id")
+        .limit(20)
+    )
+
+
+# Round-8 wave 2: dedup-pipeline EVALUATION and curation analytics —
+# a precision/recall audit of the minhash-LSH candidate generator against
+# exact Jaccard ground truth, Rocchio pseudo-relevance-feedback query
+# expansion on top of the BM25 stack, and a cross-source n-gram overlap
+# matrix (the "which sources leak into each other" curation signal next
+# to curation_source_mix_report).  All oracle-backed.
+#
+# Prototype checks before building (CLAUDE.md rule): cross-source 8-gram
+# overlap is non-vacuous on this corpus (22 source pairs share grams at
+# sf0.01, max 137 shared, sum 1,125) and the probe-style eval
+# construction yields exactly 8 true near-dup pairs out of 3,600 — both
+# signals have real answers, not empty frames.
+
+# --------------------------------------------------- LSH quality eval
+
+
+def _shingle_set(text: Column) -> Column:
+    """Distinct 3-token shingles — the EXACT set the minhash signature
+    approximates (same construction as _minhash_md5_signature)."""
+    toks = lower_tokens(text)
+    sh = F.when(
+        F.size(toks) >= 3,
+        F.transform(
+            F.sequence(F.lit(1), F.size(toks) - 2),
+            lambda i: F.concat_ws(" ", F.slice(toks, i, 3)),
+        ),
+    ).otherwise(F.array(F.concat_ws(" ", toks)))
+    return F.array_distinct(sh)
+
+
+def _shingle_sql(src: str) -> str:
+    """DuckDB twin of _shingle_set over ``src`` (id, text)."""
+    return f"""
+        SELECT id,
+               list_distinct(
+                 CASE WHEN len(toks) >= 3
+                      THEN list_transform(range(1, len(toks) - 1), i ->
+                             concat_ws(' ', toks[i], toks[i+1], toks[i+2]))
+                      ELSE [array_to_string(toks, ' ')] END) AS s
+        FROM (
+          SELECT id, regexp_extract_all(lower(text), '[a-z0-9]+') AS toks
+          FROM ({src}) _t0) _t1
+    """
+
+
+def _probe_frames(
+    spark: SparkSession, sf_dir: str
+) -> tuple[DataFrame, DataFrame]:
+    """The deterministic (corpus, batch) eval-set construction shared
+    with dedup_minhash_md5_incremental_probe: first-token-dropped
+    near-copies that SHOULD be found + salted novel docs that should
+    not."""
+    d = table(spark, sf_dir, "documents")
+    corpus = (
+        d.orderBy("doc_id")
+        .limit(_PROBE_CORPUS_N)
+        .select(F.col("doc_id").alias("id"), "text")
+    )
+    near = corpus.where(F.col("id") % 20 == 0).select(
+        (F.col("id") + 1_000_000).alias("id"),
+        F.regexp_replace("text", r"^\S+\s+", "").alias("text"),
+    )
+    novel = corpus.where(F.col("id") % 20 == 7).select(
+        (F.col("id") + 2_000_000).alias("id"),
+        F.concat(
+            F.lit("novel"),
+            F.col("id").cast("string"),
+            F.lit(" isolated vocabulary payload"),
+        ).alias("text"),
+    )
+    return corpus, near.unionByName(novel)
+
+
+def _band_frame(sig: DataFrame, idname: str) -> DataFrame:
+    """Explode a (id, sig) frame into (idname, band, bucket) LSH rows —
+    bucket ids are the band's literal signature slice (engine-exact)."""
+    w = _PROBE_ROWS_PER_BAND
+    return sig.select(
+        F.col("id").alias(idname),
+        F.explode(
+            F.array(
+                *[
+                    F.struct(
+                        F.lit(b).alias("band"),
+                        F.array_join(
+                            F.slice("sig", b * w + 1, w), ","
+                        ).alias("bucket"),
+                    )
+                    for b in range(_PROBE_BANDS)
+                ]
+            )
+        ).alias("x"),
+    ).select(idname, "x.band", "x.bucket")
+
+
+_CORPUS_BATCH_SQL = f"""
+      corpus_src AS (
+        SELECT doc_id AS id, text FROM documents
+        ORDER BY doc_id LIMIT {_PROBE_CORPUS_N}
+      ),
+      batch_src AS (
+        -- base_id carries the pre-offset id under an unambiguous name
+        -- (ADVICE r08): the old form aliased 'id + 1000000 AS id'
+        -- while also referencing bare 'id' in the same SELECT, relying
+        -- on DuckDB's base-column-over-lateral-alias precedence
+        SELECT base_id + 1000000 AS id,
+               regexp_replace(text, '^\\S+\\s+', '') AS text
+        FROM (SELECT id AS base_id, text FROM corpus_src)
+        WHERE base_id % 20 = 0
+        UNION ALL
+        SELECT base_id + 2000000 AS id,
+               concat('novel', base_id,
+                      ' isolated vocabulary payload') AS text
+        FROM (SELECT id AS base_id, text FROM corpus_src)
+        WHERE base_id % 20 = 7
+      )
+"""
+
+
+@register(
+    "eval_minhash_lsh_precision_recall",
+    "Precision/recall audit of the minhash-LSH candidate generator "
+    "against EXACT Jaccard ground truth — the eval a training-data "
+    "team runs before trusting banded dedup at corpus scale. Candidates "
+    "come from the production path (md5 minhash k=16, 4×4-slice "
+    "buckets, band equi-join — dedup_minhash_md5_incremental_probe's "
+    "kernel); ground truth is exact 3-shingle Jaccard >= 0.5 over the "
+    "full batch×corpus grid of the deterministic probe eval set "
+    "(near-copies that must hit + novels that must miss). The >= 0.5 "
+    "test is the INTEGER comparison 2·|A∩B| >= |A∪B| — no float "
+    "threshold to disagree on. All-pairs is the EVAL harness on the "
+    "pinned probe slice (batch×corpus grid, stated bound), not the "
+    "production path; at 100 TB this runs on a sampled eval slice "
+    "exactly like this while production uses the banded join. "
+    "Signatures and shingle sets materialize once (localCheckpoint — "
+    "CollapseProject fence).",
+    oracle=f"""
+      WITH {_CORPUS_BATCH_SQL},
+      csig AS ({_probe_sig_sql("SELECT * FROM corpus_src")}),
+      bsig AS ({_probe_sig_sql("SELECT * FROM batch_src")}),
+      cband AS ({_probe_band_sql("csig")}),
+      bband AS ({_probe_band_sql("bsig")}),
+      cand AS (
+        SELECT DISTINCT bb.id AS batch_id, cb.id AS corpus_id
+        FROM bband bb JOIN cband cb
+          ON bb.band = cb.band AND bb.bucket = cb.bucket
+      ),
+      csh AS ({_shingle_sql("SELECT * FROM corpus_src")}),
+      bsh AS ({_shingle_sql("SELECT * FROM batch_src")}),
+      pairs AS (
+        SELECT b.id AS batch_id, c.id AS corpus_id,
+               len(list_intersect(b.s, c.s)) AS inter,
+               len(b.s) AS lb, len(c.s) AS lc
+        FROM bsh b CROSS JOIN csh c
+      ),
+      flags AS (
+        SELECT
+          CASE WHEN 2 * p.inter >= p.lb + p.lc - p.inter
+               THEN 1 ELSE 0 END AS is_true,
+          CASE WHEN cd.batch_id IS NOT NULL THEN 1 ELSE 0 END AS is_cand
+        FROM pairs p LEFT JOIN cand cd
+          ON p.batch_id = cd.batch_id AND p.corpus_id = cd.corpus_id
+      )
+      SELECT count(*)::BIGINT AS n_pairs,
+             sum(is_true)::BIGINT AS n_true,
+             sum(is_cand)::BIGINT AS n_candidates,
+             sum(is_true * is_cand)::BIGINT AS tp,
+             round(CASE WHEN sum(is_cand) > 0
+               THEN sum(is_true * is_cand)::DOUBLE / sum(is_cand) END, 6)
+               AS lsh_precision,
+             round(CASE WHEN sum(is_true) > 0
+               THEN sum(is_true * is_cand)::DOUBLE / sum(is_true) END, 6)
+               AS lsh_recall
+      FROM flags
+    """,
+)
+def eval_minhash_lsh_precision_recall(
+    spark: SparkSession, sf_dir: str
+) -> DataFrame:
+    corpus, batch = _probe_frames(spark, sf_dir)
+    # signatures/shingle sets feed banding AND the truth grid — fence
+    # once so the fold kernels never inline per downstream reference
+    csig = corpus.select(
+        "id", _minhash_md5_signature(F.col("text")).alias("sig")
+    ).localCheckpoint()
+    bsig = batch.select(
+        "id", _minhash_md5_signature(F.col("text")).alias("sig")
+    ).localCheckpoint()
+    cand = (
+        _band_frame(csig, "corpus_id")
+        .join(F.broadcast(_band_frame(bsig, "batch_id")), ["band", "bucket"])
+        .select("batch_id", "corpus_id")
+        .distinct()
+    )
+    csh = corpus.select(
+        F.col("id").alias("corpus_id"), _shingle_set(F.col("text")).alias("cs")
+    ).localCheckpoint()
+    bsh = batch.select(
+        F.col("id").alias("batch_id"), _shingle_set(F.col("text")).alias("bs")
+    ).localCheckpoint()
+    # batch×corpus truth grid: bounded by the probe eval-set design
+    # (|batch| ≈ |corpus|/10 rows), so the nested-loop join is an
+    # accepted bounded pool, never corpus²
+    pairs = bsh.crossJoin(F.broadcast(csh)).select(
+        "batch_id",
+        "corpus_id",
+        F.size(F.array_intersect("bs", "cs")).alias("inter"),
+        F.size("bs").alias("lb"),
+        F.size("cs").alias("lc"),
+    )
+    flags = pairs.join(
+        cand.withColumn("c1", F.lit(1)), ["batch_id", "corpus_id"], "left"
+    ).select(
+        (2 * F.col("inter") >= F.col("lb") + F.col("lc") - F.col("inter"))
+        .cast("long")
+        .alias("is_true"),
+        F.coalesce("c1", F.lit(0)).cast("long").alias("is_cand"),
+    )
+    agg = flags.agg(
+        F.count(F.lit(1)).cast("long").alias("n_pairs"),
+        F.sum("is_true").cast("long").alias("n_true"),
+        F.sum("is_cand").cast("long").alias("n_candidates"),
+        F.sum(F.col("is_true") * F.col("is_cand")).cast("long").alias("tp"),
+    )
+    return agg.select(
+        "n_pairs",
+        "n_true",
+        "n_candidates",
+        "tp",
+        F.round(
+            F.when(
+                F.col("n_candidates") > 0,
+                F.col("tp").cast("double") / F.col("n_candidates"),
+            ),
+            6,
+        ).alias("lsh_precision"),
+        F.round(
+            F.when(
+                F.col("n_true") > 0,
+                F.col("tp").cast("double") / F.col("n_true"),
+            ),
+            6,
+        ).alias("lsh_recall"),
+    )
+
+
+# ----------------------------------------- intra-doc repeated runs
+
+
+_IK = 4  # intra-doc anchor gram width (tokens): 8-grams never repeat
+# within a doc on this corpus (prototype: 0 anchors), 4-grams do
+
+
+@register(
+    "dedup_intra_doc_repeats",
+    "EXACT longest repeated token run (>= 4 tokens) WITHIN a document "
+    "— the self-repetition signal at substring granularity (the "
+    "intra-doc half of Lee et al. 2022 exact-substring dedup; the "
+    "cross-doc half is dedup_longest_duplicated_substring, same "
+    "diagonal-island machinery): anchor on word 4-grams, self-join "
+    "anchor positions within the doc (p1 < p2), and recover maximal "
+    "repeats as consecutive-position islands per (doc, diagonal = "
+    "p2 - p1). A repeated run of L tokens at a fixed offset yields "
+    "exactly L-3 anchors on one diagonal, so max(island)+3 is the "
+    "exact repeat length. Spark joins on xxhash64 of the gram (8-byte "
+    "keys, accepted 64-bit collision class); the oracle joins gram "
+    "text. 100 TB: the self-join is bounded by in-doc gram collisions "
+    "(prototype: 9 anchor pairs across the whole sf0.1 corpus) and "
+    "partitions on doc_id. Deterministic (run desc, doc_id) LIMIT 20.",
+    oracle=f"""
+      WITH t AS (
+        SELECT doc_id,
+               regexp_extract_all(lower(text), '{TOK}') AS toks
+        FROM documents
+      ),
+      g AS (
+        SELECT doc_id, ue.i AS p,
+               array_to_string(toks[ue.i:ue.i+{_IK - 1}], ' ') AS g
+        FROM t, LATERAL unnest(
+          range(1, greatest(len(toks) - {_IK - 2}, 1)::BIGINT)) ue(i)
+      ),
+      pr AS (
+        SELECT a.doc_id, a.p AS p1, b.p - a.p AS diag
+        FROM g a JOIN g b
+          ON a.doc_id = b.doc_id AND a.g = b.g AND a.p < b.p
+      ),
+      isl AS (
+        SELECT doc_id, diag, p1 - row_number() OVER (
+                 PARTITION BY doc_id, diag ORDER BY p1) AS grp
+        FROM pr
+      ),
+      runs AS (
+        SELECT doc_id, count(*) AS c
+        FROM isl GROUP BY doc_id, diag, grp
+      )
+      SELECT doc_id, (max(c) + {_IK - 1})::BIGINT AS repeat_tokens,
+             sum(c)::BIGINT AS n_anchor_matches
+      FROM runs GROUP BY doc_id
+      ORDER BY repeat_tokens DESC, doc_id
+      LIMIT 20
+    """,
+)
+def dedup_intra_doc_repeats(
+    spark: SparkSession, sf_dir: str
+) -> DataFrame:
+    d = (
+        wide_table(spark, sf_dir, "documents")
+        .select(
+            "doc_id",
+            lower_tokens(F.col("text")).alias("t"),
+        )
+        # barrier: tokenize once per row, not once per slice reference
+        # in the gram zip (CollapseProject rule)
+        .repartition(max(spark.sparkContext.defaultParallelism, 8))
+    )
+    m = f"greatest(size(t) - {_IK - 1}, 0)"
+    zipk = (
+        "arrays_zip("
+        + ", ".join(f"slice(t, {i}, {m})" for i in range(1, _IK + 1))
+        + ")"
+    )
+    cw = ", ".join(f"s['{i}']" for i in range(_IK))
+    g = d.select(
+        "doc_id", F.posexplode(F.expr(zipk)).alias("pos0", "s")
+    ).select(
+        "doc_id",
+        (F.col("pos0") + 1).cast("long").alias("p"),
+        F.xxhash64(F.expr(f"concat_ws(' ', {cw})")).alias("gh"),
+    )
+    a = g.select("doc_id", F.col("p").alias("p1"), "gh")
+    b = g.select("doc_id", F.col("p").alias("p2"), "gh")
+    pr = (
+        a.join(b, ["doc_id", "gh"])
+        .where(F.col("p1") < F.col("p2"))
+        .select(
+            "doc_id", "p1", (F.col("p2") - F.col("p1")).alias("diag")
+        )
+    )
+    isl = pr.select(
+        "doc_id",
+        "diag",
+        (
+            F.col("p1")
+            - F.row_number().over(
+                Window.partitionBy("doc_id", "diag").orderBy("p1")
+            )
+        ).alias("grp"),
+    )
+    runs = isl.groupBy("doc_id", "diag", "grp").agg(
+        F.count(F.lit(1)).alias("c")
+    )
+    return (
+        runs.groupBy("doc_id")
+        .agg(
+            (F.max("c") + (_IK - 1)).cast("long").alias("repeat_tokens"),
+            F.sum("c").cast("long").alias("n_anchor_matches"),
+        )
+        .orderBy(F.col("repeat_tokens").desc(), "doc_id")
+        .limit(20)
+    )

@@ -1,16 +1,5 @@
-"""Driver-visible checks for the native OSM PBF ingest path (S1).
-
-``ingest_osm_pbf_roundtrip`` closes the loop the judge can verify: a
-deterministic .osm.pbf is synthesized from the ``customer`` table
-(integer-arithmetic lat/lon so values are exact on the PBF's
-100-nanodegree grid), read back through the distributed blob reader
-(scout_spark/sources/osmpbf.py), and the DuckDB oracle recomputes the
-expected coordinates/tags directly from the parquet — any defect in
-varint/zigzag/delta/granularity coding, the string table, or the
-mapInPandas plumbing breaks the value hash.
-
-The fixture is cached under the system temp dir keyed by sf_dir (atomic
-rename), so repeated driver invocations reuse one file.
+"""Source connectors: OSM PBF, CSV and JSONL roundtrips and schema
+evolution, each checked against the original parquet.
 """
 
 from __future__ import annotations
@@ -20,6 +9,34 @@ import os
 import shutil
 import tempfile
 
+from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import functions as F
+
+from scout_spark.inventory import register
+from scout_spark.inventory.common import (
+    LAT_MOD,
+    LAT_MUL,
+    LAT_SHIFT,
+    LON_MOD,
+    LON_MUL,
+    LON_SHIFT,
+    table,
+)
+
+
+# Driver-visible checks for the native OSM PBF ingest path (S1).
+#
+# ``ingest_osm_pbf_roundtrip`` closes the loop the judge can verify: a
+# deterministic .osm.pbf is synthesized from the ``customer`` table
+# (integer-arithmetic lat/lon so values are exact on the PBF's
+# 100-nanodegree grid), read back through the distributed blob reader
+# (scout_spark/sources/osmpbf.py), and the DuckDB oracle recomputes the
+# expected coordinates/tags directly from the parquet — any defect in
+# varint/zigzag/delta/granularity coding, the string table, or the
+# mapInPandas plumbing breaks the value hash.
+#
+# The fixture is cached under the system temp dir keyed by sf_dir (atomic
+# rename), so repeated driver invocations reuse one file.
 
 def _publish(tmp: str, path: str) -> None:
     """Atomically publish a built fixture. Concurrency-safe: if another
@@ -40,18 +57,6 @@ def _publish(tmp: str, path: str) -> None:
             except OSError:
                 pass
 
-from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
-
-from scout_spark.inventory import register
-from scout_spark.inventory.core import _t
-
-# lat/lon from pure integer arithmetic on c_custkey: multiples of 1e-5
-# degrees, exactly representable on the PBF 100-nanodegree grid, so the
-# write→read round trip is lossless and both engines agree at 6dp.
-_LAT_MUL, _LAT_MOD, _LAT_SHIFT = 7919, 17_000_000, 85
-_LON_MUL, _LON_MOD, _LON_SHIFT = 104_729, 35_000_000, 175
-
 
 def _fixture_path(sf_dir: str) -> str:
     key = hashlib.sha1(sf_dir.encode()).hexdigest()[:12]
@@ -67,7 +72,7 @@ def _build_fixture(spark: SparkSession, sf_dir: str) -> str:
     if os.path.exists(path):
         return path
     rows = (
-        _t(spark, sf_dir, "customer")
+        table(spark, sf_dir, "customer")
         .select("c_custkey", "c_name", "c_mktsegment")
         .orderBy("c_custkey")
         .collect()
@@ -75,8 +80,8 @@ def _build_fixture(spark: SparkSession, sf_dir: str) -> str:
     nodes = [
         (
             r["c_custkey"],
-            ((r["c_custkey"] * _LAT_MUL) % _LAT_MOD) / 100_000.0 - _LAT_SHIFT,
-            ((r["c_custkey"] * _LON_MUL) % _LON_MOD) / 100_000.0 - _LON_SHIFT,
+            ((r["c_custkey"] * LAT_MUL) % LAT_MOD) / 100_000.0 - LAT_SHIFT,
+            ((r["c_custkey"] * LON_MUL) % LON_MOD) / 100_000.0 - LON_SHIFT,
             {"name": r["c_name"], "segment": r["c_mktsegment"]},
         )
         for r in rows
@@ -99,10 +104,10 @@ def _build_fixture(spark: SparkSession, sf_dir: str) -> str:
     "build_gazetteer.py:159-180 (QuackOSM shell-out).",
     oracle=f"""
       SELECT c_custkey AS osm_id, c_name AS name, c_mktsegment AS segment,
-             round(((c_custkey * {_LAT_MUL}) % {_LAT_MOD}) / 100000.0
-                   - {_LAT_SHIFT}, 6) AS lat,
-             round(((c_custkey * {_LON_MUL}) % {_LON_MOD}) / 100000.0
-                   - {_LON_SHIFT}, 6) AS lon
+             round(((c_custkey * {LAT_MUL}) % {LAT_MOD}) / 100000.0
+                   - {LAT_SHIFT}, 6) AS lat,
+             round(((c_custkey * {LON_MUL}) % {LON_MOD}) / 100000.0
+                   - {LON_SHIFT}, 6) AS lon
       FROM customer
     """,
 )
@@ -117,133 +122,6 @@ def ingest_osm_pbf_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.round("lat", 6).alias("lat"),
         F.round("lon", 6).alias("lon"),
     )
-
-
-# diamond / rectangle test polygons for the containment entry. Radii and
-# rectangle bounds sit slightly OFF the 1e-5 lat/lon grid (…03, …07) so
-# no synthesized point ever lands exactly on an edge — strict and
-# non-strict containment agree, and both engines decide identically.
-_DIAMONDS = (
-    # poly_id, cx, cy, r  (|x-cx| + |y-cy| < r)
-    (1, 0.0, 0.0, 60.000003),
-    (2, 100.0, 30.0, 45.000007),
-)
-_RECTS = (
-    # poly_id, minx, miny, maxx, maxy
-    (3, -160.000007, -80.000003, -60.000001, 0.000009),
-)
-
-
-@register(
-    "spatial_point_in_polygon_join",
-    "Spatial containment join, hash-checked: customer-derived points "
-    "(same integer-grid lat/lon as ingest_osm_pbf_roundtrip) against "
-    "broadcast polygons — bbox Column prefilter, exact ray-cast verify "
-    "in a vectorized numpy UDF (operators/spatial.py). The diamonds "
-    "have non-axis-aligned edges, so the ray-cast arithmetic is "
-    "genuinely exercised, while the oracle can state containment "
-    "independently as an L1-ball / BETWEEN predicate — two different "
-    "formulations that must agree point-for-point.",
-    oracle=f"""
-      WITH pts AS (
-        SELECT c_custkey AS point_id,
-               ((c_custkey * {_LON_MUL}) % {_LON_MOD}) / 100000.0
-                 - {_LON_SHIFT} AS x,
-               ((c_custkey * {_LAT_MUL}) % {_LAT_MOD}) / 100000.0
-                 - {_LAT_SHIFT} AS y
-        FROM customer
-      )
-      SELECT point_id, poly_id FROM (
-        {" UNION ALL ".join(
-            f"SELECT point_id, {pid} AS poly_id FROM pts "
-            f"WHERE abs(x - ({cx})) + abs(y - ({cy})) < {r}"
-            for pid, cx, cy, r in _DIAMONDS
-        )}
-        UNION ALL
-        {" UNION ALL ".join(
-            f"SELECT point_id, {pid} AS poly_id FROM pts "
-            f"WHERE x BETWEEN {minx} AND {maxx} AND y BETWEEN {miny} AND {maxy}"
-            for pid, minx, miny, maxx, maxy in _RECTS
-        )}
-      ) ORDER BY point_id, poly_id
-    """,
-)
-def spatial_point_in_polygon_join(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from scout_spark.operators.spatial import RING_SCHEMA, point_in_polygon_join
-
-    c = _t(spark, sf_dir, "customer")
-    pts = c.select(
-        F.col("c_custkey").alias("point_id"),
-        (((F.col("c_custkey") * _LON_MUL) % _LON_MOD) / 100_000.0
-         - _LON_SHIFT).alias("lon"),
-        (((F.col("c_custkey") * _LAT_MUL) % _LAT_MOD) / 100_000.0
-         - _LAT_SHIFT).alias("lat"),
-    )
-    rows = []
-    for pid, cx, cy, r in _DIAMONDS:
-        rows.append(
-            (pid, [{"xs": [cx + r, cx, cx - r, cx],
-                    "ys": [cy, cy + r, cy, cy - r]}])
-        )
-    for pid, minx, miny, maxx, maxy in _RECTS:
-        rows.append(
-            (pid, [{"xs": [minx, maxx, maxx, minx],
-                    "ys": [miny, miny, maxy, maxy]}])
-        )
-    polys = spark.createDataFrame(rows, f"poly_id long, rings {RING_SCHEMA}")
-    return point_in_polygon_join(pts, polys).orderBy("point_id", "poly_id")
-
-
-@register(
-    "layout_zorder_key",
-    "Z-order (Morton) clustering key for geo layout (S6: reference "
-    "secondary indexes -> lakehouse data layout): quantize lon/lat to "
-    "16-bit cells, interleave bits — pure Column (32 shift/mask terms, "
-    "JVM codegen). Sorting/range-partitioning on this key makes bbox "
-    "scans prune parquet row groups via min/max stats (functions/"
-    "layout.py::write_zordered). Oracle recomputes the identical "
-    "bit arithmetic in DuckDB.",
-    oracle=None,  # filled below — needs the generated SQL expression
-)
-def layout_zorder_key(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from scout_spark.functions.layout import zorder_key
-
-    c = _t(spark, sf_dir, "customer")
-    pts = c.select(
-        F.col("c_custkey").alias("point_id"),
-        (((F.col("c_custkey") * _LON_MUL) % _LON_MOD) / 100_000.0
-         - _LON_SHIFT).alias("lon"),
-        (((F.col("c_custkey") * _LAT_MUL) % _LAT_MOD) / 100_000.0
-         - _LAT_SHIFT).alias("lat"),
-    )
-    return pts.select(
-        "point_id",
-        zorder_key(F.col("lon"), F.col("lat")).alias("zkey"),
-    )
-
-
-def _zorder_oracle() -> str:
-    from scout_spark.functions.layout import zorder_sql
-
-    lon = (
-        f"(((c_custkey * {_LON_MUL}) % {_LON_MOD}) / 100000.0 - {_LON_SHIFT})"
-    )
-    lat = (
-        f"(((c_custkey * {_LAT_MUL}) % {_LAT_MOD}) / 100000.0 - {_LAT_SHIFT})"
-    )
-    return (
-        f"SELECT c_custkey AS point_id, {zorder_sql(lon, lat)} AS zkey "
-        "FROM customer"
-    )
-
-
-# the oracle needs the generated expression; patch it into the Item
-from scout_spark.inventory import REGISTRY as _REG
-from dataclasses import replace as _replace
-
-_REG["layout_zorder_key"] = _replace(
-    _REG["layout_zorder_key"], oracle=_zorder_oracle()
-)
 
 
 # ------------------------------------------------------- CSV roundtrip
@@ -264,7 +142,7 @@ def _csv_fixture_dir(spark: SparkSession, sf_dir: str) -> str:
     path = os.path.join(tempfile.gettempdir(), f"scout_csv_orders_{key}")
     if os.path.isdir(path):
         return path
-    o = _t(spark, sf_dir, "orders").select(
+    o = table(spark, sf_dir, "orders").select(
         "o_orderkey",
         "o_custkey",
         "o_orderstatus",
@@ -352,7 +230,7 @@ def _jsonl_fixture_dir(spark: SparkSession, sf_dir: str) -> str:
     from scout_spark.sources.writers import write_jsonl
 
     tmp = path + f".tmp{os.getpid()}"
-    write_jsonl(_t(spark, sf_dir, "documents"), tmp)
+    write_jsonl(table(spark, sf_dir, "documents"), tmp)
     _publish(tmp, path)
     return path
 
@@ -423,7 +301,7 @@ def _evo_fixture_dir(spark: SparkSession, sf_dir: str) -> str:
     path = os.path.join(tempfile.gettempdir(), f"scout_evo_orders_{key}")
     if os.path.isdir(path):
         return path
-    o = _t(spark, sf_dir, "orders")
+    o = table(spark, sf_dir, "orders")
     tmp = path + f".tmp{os.getpid()}"
     o.where(F.col("o_orderkey") % 2 == 0).select(
         "o_orderkey", "o_custkey", "o_totalprice"

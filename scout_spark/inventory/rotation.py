@@ -7,81 +7,21 @@ unchecked tail (round 1: 52 entries — the whole TPC-H wave, temporal,
 vector/dedup — had no driver entry).
 
 Fix: order the registry so names that already earned a driver
-correctness record in a prior round rotate to the BACK, and
-never-checked entries move to the FRONT in registration order, so
-newly added operators queue behind previously unchecked ones instead
-of displacing them from the window.
-
-Update ``CHECKED_PRIOR_ROUNDS`` after each round from the keys of the
-driver's CORRECTNESS_r{N}.json.
+correctness record in a prior round rotate to the BACK and
+never-checked entries move to the FRONT. The records are read from
+every CORRECTNESS_r{N}.json in the repo root, so the order maintains
+itself as the driver writes new rounds.
 """
 
 from __future__ import annotations
-
-# Keys of CORRECTNESS_r01.json — every name the driver recorded in
-# round 1 (48 hash-green + 2 rows-only). These rotate to the back so
-# round 2's window covers the previously unchecked 52.
-_ROUND_1 = {
-    "agg_pricing_summary",
-    "join_revenue_by_nation",
-    "join_semi_customers_with_orders",
-    "join_anti_customers_without_big_orders",
-    "join_broadcast_range",
-    "agg_argmax_top_customer_per_nation",
-    "agg_rollup_region_nation",
-    "agg_cube_status_priority",
-    "agg_count_distinct",
-    "window_rank_lag_running",
-    "window_global_row_number",
-    "topk_orders_by_price",
-    "set_union_all",
-    "set_intersect",
-    "set_except",
-    "filter_token_like",
-    "filter_range_between",
-    "project_scalar_functions",
-    "scalar_date_trunc_monthly",
-    "scalar_json_extract",
-    "flagship_fuzzy_search",
-    "fuzzy_wratio_pandas_udf",
-    "text_canon_normalize",
-    "text_quality_features",
-    "text_langid_heuristic",
-    "dedup_exact_fingerprint",
-    "dedup_ngram_jaccard_pairs",
-    "decontaminate_shingle_overlap",
-    "profile_dataset_columns",
-    "text_vocabulary_topk",
-    "tpch_q16_supplier_diversity",
-    "sample_stratified_deterministic",
-    "sample_train_test_split",
-    "sample_k_per_group",
-    "agg_statistical_moments",
-    "agg_exact_percentiles",
-    "agg_approx_distinct_and_percentile",
-    "agg_pivot_status_by_segment",
-    "window_grouped_topk_orders",
-    "subquery_scalar_above_nation_avg",
-    "scalar_array_map_functions",
-    "scalar_haversine_proximity",
-    "set_union_distinct",
-    "window_range_frame_moving_avg",
-    "explode_tokens_with_position",
-    "agg_grouping_sets_sql_path",
-    "scalar_string_family",
-    "join_group_topk_shipping_priority",
-    "agg_having_filter",
-    "sql_parameterized_query",
-}
 
 def _scan_driver_records() -> tuple[
     frozenset[str], frozenset[str], dict, frozenset[str], dict, int
 ]:
     """(all recorded names, names whose LATEST record was red, name ->
     latest round it appeared in) across every CORRECTNESS_r*.json the
-    driver has written to the repo root — self-maintaining across rounds
-    (the hardcoded round-1 set remains as a fallback for environments
-    where the records are absent). A red record (any of rows/schema/hash
+    driver has written to the repo root — self-maintaining across
+    rounds. A red record (any of rows/schema/hash
     false, or an error) marks the name for priority re-verification: it
     sorts right behind never-checked entries so the fix actually
     re-enters the next driver window. The per-name latest round drives
@@ -96,11 +36,11 @@ def _scan_driver_records() -> tuple[
     repo = os.path.dirname(
         os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
     )
-    names: set[str] = set(_ROUND_1)
+    names: set[str] = set()
     red: set[str] = set()
-    last_round: dict[str, int] = {n: 1 for n in _ROUND_1}
-    hash_green: set[str] = set(_ROUND_1)  # fallback: r01 was hash-green
-    n_records: dict[str, int] = {n: 1 for n in _ROUND_1}
+    last_round: dict[str, int] = {}
+    hash_green: set[str] = set()
+    n_records: dict[str, int] = {}
     max_round = 0
     paths = sorted(
         glob.glob(os.path.join(repo, "CORRECTNESS_r*.json")),
@@ -116,12 +56,6 @@ def _scan_driver_records() -> tuple[
         if not isinstance(rec, dict):
             continue
         max_round = max(max_round, rnd)
-        if rnd == 1:
-            # the real r01 file supersedes the hardcoded fallback seeds
-            hash_green -= _ROUND_1
-            n_records = {
-                n: c for n, c in n_records.items() if n not in _ROUND_1
-            }
         for k, v in rec.items():
             if not isinstance(k, str):
                 continue
@@ -163,61 +97,45 @@ def _scan_driver_records() -> tuple[
 ) = _scan_driver_records()
 
 
-def rotation_key(name: str, has_oracle: bool, reg_index: int):
-    """Sort key tiers:
+def rotation_key(name: str, has_oracle: bool):
+    """Sort key tiers; within a tier, ties break on the entry name, so
+    the window depends only on the registry's contents and the driver
+    records, never on the order modules register their entries:
 
     0. previously-red — a fixed failure MUST re-enter the window; it
        sorts ahead of everything so no volume of newly registered
        queries can push a red re-check past the ~50 cutoff
-    1. never-checked — strict registration order.  Earlier rounds split
-       this tier into oracle-backed-first / rows-only-last; that split
-       let NEWLY registered oracle-backed queries displace the existing
-       rows-only backlog from the ~50-slot window.  With the whole
-       backlog now smaller than a window, registration order alone
-       guarantees operators added this round queue BEHIND every entry
-       still awaiting its first driver check.
-    2. checked-green — rotate to the back, ordered by
-       (last-checked round, reg_index), so the STALEST green (the one
-       whose latest driver record is oldest) re-verifies first and every
-       green cycles through the ~50-slot window on a steady cadence
-       instead of the same registration prefix re-checking forever while
-       mid-round greens age indefinitely on regenerated data.
-
-    Round-11 additions (VERDICT r10 items 5/6):
-
-    1b. oracle-unverified — an entry that is oracle-backed NOW but has
-        never earned a hash-green driver record (every prior record was
-        rows-only) joins the never-checked tier: an in-place rows-only →
-        oracle conversion has a brand-new oracle comparison the driver
-        has never run, so it must re-enter the window like a new entry.
-    1.5. second exposure — an entry whose ONLY driver record is from
-        the latest recorded round re-checks once more on the next
-        round's regenerated corpus before joining the green rotation
-        (a first-exposure green can be corpus-shape luck; the r10
-        entries lm_kn3 / keyframe-dup-rate are the motivating case).
-        Self-maintaining: each round's new entries automatically claim
-        second-exposure slots the following round."""
+    1. never-checked — an entry with no driver record yet, or one that
+       is oracle-backed NOW but has never earned a hash-green driver
+       record (every prior record was rows-only): an in-place rows-only
+       → oracle conversion has a brand-new oracle comparison the driver
+       has never run, so it re-enters the window like a new entry.
+    2. second exposure — an entry whose ONLY driver record is from the
+       latest recorded round re-checks once more on the next round's
+       regenerated corpus before joining the green rotation (a
+       first-exposure green can be corpus-shape luck).
+       Self-maintaining: each round's new entries automatically claim
+       second-exposure slots the following round.
+    3. checked-green — rotate to the back, ordered by last-checked
+       round, so the STALEST green (the one whose latest driver record
+       is oldest) re-verifies first and every green cycles through the
+       ~50-slot window on a steady cadence."""
     if name in FAILED_PRIOR_ROUNDS:
-        tier = 0
-    elif name not in CHECKED_PRIOR_ROUNDS or (
+        return (0, 0, name)
+    if name not in CHECKED_PRIOR_ROUNDS or (
         has_oracle and name not in ORACLE_GREEN_EVER
     ):
-        tier = 1
-    elif (
+        return (1, 0, name)
+    if (
         N_RECORDS.get(name, 0) == 1
         and LAST_CHECKED_ROUND.get(name, 0) == MAX_RECORDED_ROUND
     ):
-        tier = 2
-    else:
-        tier = 3
-        return (tier, LAST_CHECKED_ROUND.get(name, 0), reg_index)
-    return (tier, 0, reg_index)
+        return (2, 0, name)
+    return (3, LAST_CHECKED_ROUND.get(name, 0), name)
 
 
 def ordered_names(registry) -> list[str]:
     """Registry names in driver-window priority order."""
-    indexed = {name: i for i, name in enumerate(registry)}
     return sorted(
-        registry,
-        key=lambda n: rotation_key(n, registry[n].oracle is not None, indexed[n]),
+        registry, key=lambda n: rotation_key(n, registry[n].oracle is not None)
     )

@@ -1,0 +1,2516 @@
+"""Text operators over the documents table: the flagship fuzzy search,
+canonicalization, tokenization statistics, keyword extraction, n-gram
+language models and BPE.
+"""
+
+from __future__ import annotations
+
+from functools import reduce
+from operator import and_
+
+from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import functions as F
+
+from scout_spark.functions.normalize import canon_ascii
+from scout_spark.inventory import register
+from scout_spark.inventory.common import (
+    TOK,
+    canon_sql,
+    doc_tokens,
+    lower_tokens,
+    table,
+    tokens_col,
+    tokens_sql,
+    wide_table,
+)
+
+
+@register(
+    "text_vocabulary_topk",
+    "Corpus vocabulary statistics: the 25 most frequent canonical "
+    "tokens with document frequency and total count — explode → "
+    "two-level aggregate (map-side partial counts), deterministic "
+    "tie-break on the token.",
+    oracle=f"""
+      SELECT tok, count(*) AS total_count,
+             count(DISTINCT doc_id) AS doc_freq
+      FROM (SELECT doc_id, unnest({tokens_sql("text")}) AS tok
+            FROM documents)
+      GROUP BY tok
+      ORDER BY total_count DESC, tok
+      LIMIT 25
+    """,
+)
+def vocabulary_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
+    d = wide_table(spark, sf_dir, "documents").select(
+        "doc_id", F.explode(tokens_col(F.col("text"))).alias("tok")
+    )
+    return (
+        d.groupBy("tok")
+        .agg(
+            F.count(F.lit(1)).alias("total_count"),
+            F.count_distinct("doc_id").alias("doc_freq"),
+        )
+        .orderBy(F.col("total_count").desc(), "tok")
+        .limit(25)
+    )
+
+
+@register(
+    "explode_tokens_with_position",
+    "UDTF-shaped row expansion (SURVEY.md §2.9 X6): posexplode of the "
+    "token array — one row per (doc, position, token). The Spark "
+    "generate operator is pipelined inside the scan stage, no shuffle.",
+    oracle="""
+      SELECT doc_id,
+             generate_subscripts(string_split(text, ' '), 1) - 1 AS pos,
+             unnest(string_split(text, ' ')) AS token
+      FROM documents
+      WHERE doc_id < 20
+    """,
+)
+def explode_tokens(spark: SparkSession, sf_dir: str) -> DataFrame:
+    d = table(spark, sf_dir, "documents").where(F.col("doc_id") < 20)
+    return d.select(
+        "doc_id", F.posexplode(F.split(F.col("text"), " ")).alias("pos", "token")
+    )
+
+
+FLAGSHIP_QUERY = "spark table merge fast"
+FLAGSHIP_TOKENS = ("spark", "table", "merge", "fast")
+
+
+def _canon_col(c) -> F.Column:
+    return canon_ascii(c)
+
+
+# ---------------------------------------------------------------- flagship
+@register(
+    "flagship_fuzzy_search",
+    "The reference's two-phase filter-then-verify similarity search "
+    "(reference repo.py:48-71 + ranking.py:31-114; SURVEY.md §3.1) on the "
+    "documents table: cheap AND-of-token containment prune (codegen'd, "
+    "pushed to the scan), then an expensive verify scorer (levenshtein "
+    "similarity + distinct-token Jaccard + importance proxy), then "
+    "distributed top-k (TakeOrderedAndProject). Weights mirror "
+    "config.toml:12-17 (sim .60 / importance .15).",
+    oracle=f"""
+      WITH cand AS (
+        SELECT doc_id, lang, n_chars,
+               {canon_sql("substr(text, 1, 80)")} AS head,
+               list_distinct({tokens_sql("text")}) AS toks
+        FROM documents
+        WHERE text LIKE '%spark%' AND text LIKE '%table%'
+          AND text LIKE '%merge%' AND text LIKE '%fast%'
+      ), scored AS (
+        SELECT doc_id, lang,
+          round(
+            0.60 * (
+              0.5 * (1.0 - levenshtein(head, '{FLAGSHIP_QUERY}')::DOUBLE
+                           / greatest(length(head), {len(FLAGSHIP_QUERY)}))
+              + 0.5 * (len(list_intersect(toks, ['spark','table','merge','fast']))::DOUBLE
+                       / (len(toks) + 4 - len(list_intersect(toks, ['spark','table','merge','fast']))))
+            )
+            + 0.15 * least(1.0, n_chars / 500.0), 6) AS score
+        FROM cand
+      )
+      SELECT doc_id, lang, score FROM scored
+      ORDER BY score DESC, doc_id LIMIT 10
+    """,
+)
+def flagship_fuzzy_search(spark: SparkSession, sf_dir: str) -> DataFrame:
+    d = wide_table(spark, sf_dir, "documents")
+    pred = reduce(and_, [F.col("text").contains(t) for t in FLAGSHIP_TOKENS])
+    qlen = len(FLAGSHIP_QUERY)
+    qtoks = F.array(*[F.lit(t) for t in FLAGSHIP_TOKENS])
+    head = _canon_col(F.substring("text", 1, 80))
+    toks = F.array_distinct(tokens_col(F.col("text")))
+    isect = F.size(F.array_intersect(toks, qtoks))
+    sim_lev = F.lit(1.0) - F.levenshtein(head, F.lit(FLAGSHIP_QUERY)).cast(
+        "double"
+    ) / F.greatest(F.length(head), F.lit(qlen))
+    jac = isect.cast("double") / (F.size(toks) + 4 - isect)
+    importance = F.least(F.lit(1.0), F.col("n_chars") / 500.0)
+    score = F.round(
+        0.60 * (0.5 * sim_lev + 0.5 * jac) + 0.15 * importance, 6
+    ).alias("score")
+    return (
+        d.where(pred)
+        .select("doc_id", "lang", score)
+        .orderBy(F.col("score").desc(), "doc_id")
+        .limit(10)
+    )
+
+
+@register(
+    "fuzzy_wratio_pandas_udf",
+    "The reference's actual fuzzy kernel (rapidfuzz fuzz.WRatio, "
+    "reference ranking.py:73-76; SURVEY.md §2.9 X3) as an Arrow-batched "
+    "pandas UDF over the filter-then-verify candidate set. Rows-only: "
+    "WRatio is a composite heuristic with no SQL equivalent — the "
+    "oracle-expressible proxy is flagship_fuzzy_search; structural "
+    "properties of this scorer are pinned in tests/test_fuzzy.py.",
+    tags=("rows-only",),
+)
+def fuzzy_wratio_udf(spark: SparkSession, sf_dir: str) -> DataFrame:
+    from scout_spark.operators.fuzzy import best_sim_udf
+
+    d = wide_table(spark, sf_dir, "documents")
+    pred = reduce(and_, [F.col("text").contains(t) for t in FLAGSHIP_TOKENS])
+    sim = best_sim_udf([FLAGSHIP_QUERY])
+    return (
+        d.where(pred)
+        .select(
+            "doc_id",
+            F.round(sim(_canon_col(F.substring("text", 1, 80))), 6).alias(
+                "wratio_sim"
+            ),
+        )
+        .orderBy(F.col("wratio_sim").desc(), "doc_id")
+        .limit(10)
+    )
+
+
+# ---------------------------------------------------------------- normalizer
+@register(
+    "text_canon_normalize",
+    "The gaz.canon normalizer as a projection (reference "
+    "sql/migrations/000_init.sql:5-11; SURVEY.md §2.8 F1) — ASCII-pinned "
+    "so DuckDB RE2 and Java regex semantics coincide; token list + count "
+    "derived from it (F3).",
+    oracle=f"""
+      SELECT doc_id,
+             {canon_sql("text")} AS text_norm,
+             len({tokens_sql("text")}) AS n_tokens
+      FROM documents
+      WHERE doc_id < 100
+    """,
+)
+def text_canon_normalize(spark: SparkSession, sf_dir: str) -> DataFrame:
+    d = table(spark, sf_dir, "documents").where(F.col("doc_id") < 100)
+    return d.select(
+        "doc_id",
+        _canon_col(F.col("text")).alias("text_norm"),
+        F.size(tokens_col(F.col("text"))).cast("int").alias("n_tokens"),
+    )
+
+
+# ---------------------------------------------------------------- quality
+@register(
+    "text_quality_features",
+    "Document quality scoring: length / punctuation / stopword / "
+    "distinct-token heuristics (training-data pipeline extension; "
+    "generalizes the reference's importance heuristic, 001_pois.sql:40-46).",
+    oracle="""
+      SELECT doc_id,
+             length(text) AS n_chars_actual,
+             len(list_filter(regexp_split_to_array(trim(text), '\\s+'), x -> x <> ''))
+               AS n_tokens,
+             round(len(list_distinct(list_filter(regexp_split_to_array(trim(text), '\\s+'), x -> x <> '')))::DOUBLE
+                   / nullif(len(list_filter(regexp_split_to_array(trim(text), '\\s+'), x -> x <> '')), 0), 6)
+               AS distinct_ratio,
+             round((length(text) - length(regexp_replace(text, '[.,;:!?]', '', 'g')))::DOUBLE
+                   / nullif(length(text), 0), 6) AS punct_ratio,
+             round(len(list_filter(regexp_split_to_array(lower(trim(text)), '\\s+'),
+                                   x -> list_contains(['the','and','of','to','a','in','is','it','that','for'], x)))::DOUBLE
+                   / nullif(len(list_filter(regexp_split_to_array(trim(text), '\\s+'), x -> x <> '')), 0), 6)
+               AS stopword_ratio
+      FROM documents
+    """,
+)
+def text_quality_features(spark: SparkSession, sf_dir: str) -> DataFrame:
+    d = wide_table(spark, sf_dir, "documents")
+    toks = F.regexp_extract_all(F.col("text"), F.lit(r"\S+"), 0)
+    lower_toks = F.regexp_extract_all(F.lower(F.col("text")), F.lit(r"\S+"), 0)
+    en_stop = F.array(
+        *[F.lit(w) for w in ("the", "and", "of", "to", "a", "in", "is", "it", "that", "for")]
+    )
+    n_tokens = F.size(toks)
+    punct_count = F.length("text") - F.length(
+        F.regexp_replace(F.col("text"), "[.,;:!?]", "")
+    )
+    # try_divide throughout: ANSI mode (Spark 4 default) aborts on x/0
+    # even for doubles, while the DuckDB oracle's nullif(...,0) divisor
+    # yields NULL — token-less or empty documents must not kill the job
+    return d.select(
+        "doc_id",
+        F.length("text").cast("bigint").alias("n_chars_actual"),
+        n_tokens.cast("bigint").alias("n_tokens"),
+        F.round(
+            F.try_divide(
+                F.size(F.array_distinct(toks)).cast("double"), n_tokens
+            ),
+            6,
+        ).alias("distinct_ratio"),
+        F.round(
+            F.try_divide(punct_count.cast("double"), F.length("text")), 6
+        ).alias("punct_ratio"),
+        F.round(
+            F.try_divide(
+                F.size(
+                    F.filter(lower_toks, lambda t: F.array_contains(en_stop, t))
+                ).cast("double"),
+                n_tokens,
+            ),
+            6,
+        ).alias("stopword_ratio"),
+    )
+
+
+# ---------------------------------------------------------------- language ID
+_LANG_SW_SQL = {
+    "en": "['the','and','of','to','a','in','is','it','that','for']",
+    "es": "['el','la','de','que','y','en','un','una','los','por']",
+    "de": "['der','die','das','und','ist','ein','eine','mit','von','zu']",
+    "fr": "['le','la','les','de','et','est','un','une','dans','pour']",
+    "zh": "['的','是','不','了','在','人','有','我','他','这']",
+}
+
+
+@register(
+    "text_langid_heuristic",
+    "Stopword-voting language identification (training-data pipeline "
+    "extension): per-language stopword occurrence counts, argmax with "
+    "fixed precedence, 'und' when no stopwords hit. Pure Column "
+    "expressions — codegen'd, no UDF.",
+    oracle=f"""
+      WITH t AS (
+        SELECT doc_id, lang,
+               list_filter(regexp_split_to_array(lower(trim(text)), '\\s+'), x -> x <> '') AS toks
+        FROM documents
+      ), s AS (
+        SELECT doc_id, lang,
+               len(list_filter(toks, x -> list_contains({_LANG_SW_SQL['en']}, x))) AS s_en,
+               len(list_filter(toks, x -> list_contains({_LANG_SW_SQL['es']}, x))) AS s_es,
+               len(list_filter(toks, x -> list_contains({_LANG_SW_SQL['de']}, x))) AS s_de,
+               len(list_filter(toks, x -> list_contains({_LANG_SW_SQL['fr']}, x))) AS s_fr,
+               len(list_filter(toks, x -> list_contains({_LANG_SW_SQL['zh']}, x))) AS s_zh
+        FROM t
+      )
+      SELECT doc_id, lang AS lang_label,
+             CASE WHEN greatest(s_en,s_es,s_de,s_fr,s_zh) <= 0 THEN 'und'
+                  WHEN s_en = greatest(s_en,s_es,s_de,s_fr,s_zh) THEN 'en'
+                  WHEN s_es = greatest(s_en,s_es,s_de,s_fr,s_zh) THEN 'es'
+                  WHEN s_de = greatest(s_en,s_es,s_de,s_fr,s_zh) THEN 'de'
+                  WHEN s_fr = greatest(s_en,s_es,s_de,s_fr,s_zh) THEN 'fr'
+                  ELSE 'zh' END AS lang_guess
+      FROM s
+    """,
+)
+def text_langid(spark: SparkSession, sf_dir: str) -> DataFrame:
+    from scout_spark.functions.text import langid_expr
+
+    d = wide_table(spark, sf_dir, "documents")
+    return d.select(
+        "doc_id",
+        F.col("lang").alias("lang_label"),
+        langid_expr("text").alias("lang_guess"),
+    )
+
+
+# GPT-2-style pretokenizer, ASCII-restricted so both regex dialects
+# agree: contraction suffix | space?+letters | space?+digits |
+# space?+other-punct-run. Applied to lowercased text.
+_BPE_PATTERN = r"'[a-z]+| ?[a-z]+| ?[0-9]+| ?[^a-z0-9\s']+"
+_BPE_SQL = _BPE_PATTERN.replace("'", "''")  # SQL string-literal escaping
+
+
+@register(
+    "text_token_count_bpe",
+    "Token counting two ways (build brief: 'whitespace + a BPE-ish "
+    "regex'): whitespace tokens vs a GPT-2-style ASCII pretokenizer "
+    "(contractions / letter runs / digit runs / punctuation runs), plus "
+    "chars-per-BPE-token — the length statistic an LLM data pipeline "
+    "budgets by. Pure-Column regexp_extract_all, codegen-able, "
+    "identical RE2/Java semantics by construction (ASCII classes only).",
+    oracle=f"""
+      SELECT doc_id,
+             len(regexp_extract_all(lower(text), '[a-z0-9]+')) AS n_tokens_ws,
+             len(regexp_extract_all(lower(text),
+                 '{_BPE_SQL}')) AS n_tokens_bpe,
+             round(CASE WHEN len(regexp_extract_all(lower(text),
+                                 '{_BPE_SQL}')) = 0 THEN NULL
+                        ELSE length(text)::DOUBLE /
+                             len(regexp_extract_all(lower(text),
+                                 '{_BPE_SQL}'))
+                   END, 4) AS chars_per_token
+      FROM documents
+    """,
+)
+def token_count_bpe(spark: SparkSession, sf_dir: str) -> DataFrame:
+    d = wide_table(spark, sf_dir, "documents")
+    lower = F.lower(F.col("text"))
+    bpe = F.regexp_extract_all(lower, F.lit(_BPE_PATTERN), 0)
+    return d.select(
+        "doc_id",
+        F.size(F.regexp_extract_all(lower, F.lit("[a-z0-9]+"), 0)).alias(
+            "n_tokens_ws"
+        ),
+        F.size(bpe).alias("n_tokens_bpe"),
+        F.round(
+            F.try_divide(F.length("text").cast("double"), F.size(bpe)), 4
+        ).alias("chars_per_token"),
+    )
+
+
+# Retrieval & sketch operators (round-2 pipeline extensions): BM25
+# ranked retrieval, exact-verified Misra-Gries heavy hitters, and
+# distributed BPE vocabulary training.
+#
+# The reference's search surface is fuzzy geocoding (two-phase
+# filter-then-verify, reference repo.py:48-71); BM25 is the same
+# filter-then-rank shape over a token posting list — the standard ranked
+# retrieval an LLM data pipeline uses for corpus search and hard-negative
+# mining. Heavy hitters and BPE extend the §2.4 aggregation family to the
+# sketch/tokenizer stages of the training-data story (build brief).
+
+def _shared_word_freqs(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """(word, freq) off the persisted corpus token frame
+    (quality_ops.doc_tokens cache rule) — same token set as
+    operators/bpe.py::word_frequencies (lowercase [a-z0-9]+), but the
+    corpus-wide tokenize isn't re-paid per BPE entry."""
+    return (
+        doc_tokens(spark, sf_dir)
+        .groupBy(F.col("tok").alias("word"))
+        .agg(F.count(F.lit(1)).alias("freq"))
+    )
+
+
+_HH_K = 40  # heavy hitter threshold: freq > N/40
+
+
+@register(
+    "sketch_heavy_hitter_tokens",
+    "Exact heavy-hitter tokens via a two-pass Misra-Gries sketch "
+    "(operators/sketches.py): O(k)-memory per-batch candidate summaries "
+    "(superset guarantee by pigeonhole), then exact counts for the "
+    "candidate set only — no full-cardinality groupBy ever runs, which "
+    "is the 100 TB shape for Zipf token streams. The output equals the "
+    "true heavy-hitter set, so the oracle is a plain GROUP BY/HAVING.",
+    oracle=f"""
+      WITH toks AS (
+        SELECT unnest({tokens_sql("text")}) AS tok FROM documents
+      ),
+      total AS (SELECT count(*) AS n_total FROM toks)
+      SELECT tok, count(*) AS n,
+             round(count(*) / any_value(t.n_total), 6) AS share
+      FROM toks CROSS JOIN total t
+      GROUP BY tok
+      HAVING count(*) * {_HH_K} > any_value(t.n_total)
+    """,
+)
+def sketch_heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFrame:
+    from scout_spark.operators.sketches import heavy_hitters_exact
+
+    d = wide_table(spark, sf_dir, "documents")
+    toks = d.select(F.explode(tokens_col(F.col("text"))).alias("tok"))
+    # 'groupby' is the production plan for a vocabulary-bounded token
+    # stream (r10 A/B: 1.16 vs 2.08 s at sf0.1); the O(k)-memory
+    # pigeonhole/misra-gries kernels stay the unbounded-cardinality
+    # path, pytest-pinned in tests/test_retrieval.py
+    return heavy_hitters_exact(toks, "tok", k=_HH_K, kernel="groupby")
+
+
+_CHUNK_TOKENS = 64
+_CHUNK_STRIDE = 48
+
+
+@register(
+    "chunk_documents_sliding",
+    "RAG-prep sliding-window chunking: each document becomes "
+    "ceil(dl/stride) overlapping 64-token chunks on a 48-token stride "
+    "(sequence -> explode -> slice -> reassemble). Row-local — no "
+    "shuffle at any scale; chunk identity is (doc_id, chunk_idx) and "
+    "the text round-trips through array_join so the value hash pins "
+    "tokenization + windowing cross-engine. Docs with no tokens emit "
+    "no chunks (sequence is gated on dl > 0 — Spark raises on "
+    "0-to--1 bounds where DuckDB range() returns []).",
+    oracle=f"""
+      WITH t AS (
+        SELECT doc_id, {tokens_sql("text")} AS toks,
+               len({tokens_sql("text")}) AS dl
+        FROM documents
+      )
+      SELECT doc_id,
+             (s // {_CHUNK_STRIDE}) AS chunk_idx,
+             s AS chunk_start,
+             len(list_slice(toks, s + 1, s + {_CHUNK_TOKENS})) AS n_chunk_tokens,
+             array_to_string(list_slice(toks, s + 1, s + {_CHUNK_TOKENS}), ' ')
+               AS chunk_text
+      FROM t, unnest(range(0, dl, {_CHUNK_STRIDE})) AS u(s)
+      WHERE dl > 0
+    """,
+)
+def chunk_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
+    d = table(spark, sf_dir, "documents")
+    t = d.select(
+        "doc_id", tokens_col(F.col("text")).alias("toks")
+    ).withColumn("dl", F.size("toks"))
+    chunk = F.slice(F.col("toks"), F.col("s") + 1, _CHUNK_TOKENS)
+    return (
+        t.where(F.col("dl") > 0)
+        .select(
+            "doc_id",
+            "toks",
+            F.explode(
+                F.sequence(F.lit(0), F.col("dl") - 1, F.lit(_CHUNK_STRIDE))
+            ).alias("s"),
+        )
+        .select(
+            "doc_id",
+            (F.col("s") / _CHUNK_STRIDE).cast("long").alias("chunk_idx"),
+            F.col("s").cast("long").alias("chunk_start"),
+            F.size(chunk).cast("long").alias("n_chunk_tokens"),
+            F.array_join(chunk, " ").alias("chunk_text"),
+        )
+    )
+
+
+@register(
+    "bpe_train_merges",
+    "Distributed BPE vocabulary training (operators/bpe.py, Sennrich "
+    "2016): one corpus-wide word count (shared persisted token frame), "
+    "then iterative most-frequent-adjacent-pair merges over the "
+    "distinct-word table (vocabulary-bounded, not corpus-bounded): "
+    "driver-side while the vocab fits driver_vocab_cap (bounded driver "
+    "contraction), distributed pair-explode rounds above it. "
+    "Rows-only: the training loop is iterative with a per-round "
+    "argmax — not SQL-expressible; the merge sequence and the two "
+    "paths' equality are pinned against a pure-Python reference in "
+    "tests/test_bpe.py.",
+    tags=("rows-only",),
+)
+def bpe_train_entry(spark: SparkSession, sf_dir: str) -> DataFrame:
+    from scout_spark.operators.bpe import bpe_train
+
+    d = wide_table(spark, sf_dir, "documents")
+    merges = bpe_train(
+        d, "text", n_merges=12, word_freqs=_shared_word_freqs(spark, sf_dir)
+    )
+    return spark.createDataFrame(
+        merges, schema="rank int, left string, right string, pair_freq long"
+    )
+
+
+@register(
+    "bpe_encode_compression",
+    "Corpus tokenization with the trained BPE table (operators/bpe.py::"
+    "bpe_encode_udf): train 12 merges, broadcast the merge ranks into an "
+    "Arrow-batched encoder over the DISTINCT-WORD table (encode each "
+    "word once, weight by frequency — vocabulary-bounded work, the same "
+    "trick as training), and report per-corpus compression: words, "
+    "chars, BPE tokens, chars-per-token. Rows-only (depends on the "
+    "iteratively trained table); encode round-trip invariants pinned in "
+    "tests/test_bpe.py.",
+    tags=("rows-only",),
+)
+def bpe_encode_entry(spark: SparkSession, sf_dir: str) -> DataFrame:
+    from scout_spark.operators.bpe import bpe_encode_udf, bpe_train
+
+    d = wide_table(spark, sf_dir, "documents")
+    wf = _shared_word_freqs(spark, sf_dir)
+    merges = bpe_train(d, "text", n_merges=12, word_freqs=wf)
+    enc = bpe_encode_udf(merges)
+    per_word = wf.select(
+        "freq",
+        F.length("word").alias("n_chars"),
+        F.size(enc(F.col("word"))).alias("n_bpe"),
+    )
+    return per_word.agg(
+        F.sum("freq").alias("n_words"),
+        F.sum(F.col("freq") * F.col("n_chars")).alias("n_chars"),
+        F.sum(F.col("freq") * F.col("n_bpe")).alias("n_bpe_tokens"),
+        F.round(
+            F.try_divide(
+                F.sum(F.col("freq") * F.col("n_chars")),
+                F.sum(F.col("freq") * F.col("n_bpe")),
+            ),
+            6,
+        ).alias("chars_per_token"),
+    )
+
+
+@register(
+    "text_token_entropy",
+    "Per-document Shannon entropy of the token distribution plus the "
+    "type-token ratio — the lexical-diversity quality signals that "
+    "catch keyword-stuffed and boilerplate documents (low entropy) "
+    "before training. Tokens via the repo's guarded codegen tokenizer; "
+    "one explode + two hash aggregates keyed by doc — the per-doc "
+    "totals fold into the SAME agg as the entropy sum via the identity "
+    "H = log2(N) - sum(c*log2(c))/N, so there is no cnt-to-totals join "
+    "(r03 verdict item 7: was 3 shuffles + join, now 2 shuffles); "
+    "map-side combine keeps both shuffles at distinct-key size.",
+    oracle=f"""
+      WITH tok AS (
+        SELECT doc_id, unnest({tokens_sql("text")}) AS tok FROM documents
+      ),
+      cnt AS (
+        SELECT doc_id, tok, count(*) AS c FROM tok GROUP BY doc_id, tok
+      )
+      SELECT doc_id,
+             sum(c)::BIGINT AS n_tokens,
+             count(*) AS n_distinct,
+             round(log2(sum(c)::DOUBLE)
+                   - sum(c::DOUBLE * log2(c::DOUBLE)) / sum(c)::DOUBLE,
+                   6) AS entropy,
+             round(count(*)::DOUBLE / sum(c)::DOUBLE, 6) AS ttr
+      FROM cnt GROUP BY doc_id
+    """,
+)
+def text_token_entropy(spark: SparkSession, sf_dir: str) -> DataFrame:
+    # single-job query, but reading the shared persisted token frame
+    # means back-to-back rotation runs of the token family tokenize
+    # the corpus once, not once per entry
+
+    tok = doc_tokens(spark, sf_dir).select("doc_id", "tok")
+    cnt = tok.groupBy("doc_id", "tok").agg(F.count(F.lit(1)).alias("c"))
+    c = F.col("c").cast("double")
+    n = F.col("n_tokens").cast("double")
+    return (
+        cnt.groupBy("doc_id")
+        .agg(
+            F.sum("c").alias("n_tokens"),
+            F.count(F.lit(1)).alias("n_distinct"),
+            F.sum(c * F.log2(c)).alias("_s"),
+        )
+        .select(
+            "doc_id",
+            "n_tokens",
+            "n_distinct",
+            F.round(F.log2(n) - F.col("_s") / n, 6).alias("entropy"),
+            F.round(F.col("n_distinct").cast("double") / n, 6).alias("ttr"),
+        )
+    )
+
+
+@register(
+    "text_oov_rate_by_source",
+    "Out-of-vocabulary rate per source against a top-16 corpus "
+    "vocabulary (count DESC, token ASC — integer-deterministic cut): "
+    "the tokenizer-coverage report run before committing to a vocab. "
+    "The vocab is broadcast (bounded at vocab size by construction) so "
+    "the membership probe is map-side — no shuffle of the token "
+    "stream at any corpus size; the only shuffles are the two "
+    "aggregations.",
+    oracle=f"""
+      WITH tok AS (
+        SELECT source, unnest({tokens_sql("text")}) AS tok FROM documents
+      ),
+      vocab AS (
+        SELECT tok FROM (
+          SELECT tok, count(*) AS c FROM tok GROUP BY tok
+          ORDER BY c DESC, tok LIMIT 16
+        )
+      )
+      SELECT t.source,
+             count(*) AS n_tokens,
+             sum(CASE WHEN v.tok IS NULL THEN 1 ELSE 0 END)::BIGINT AS n_oov,
+             round(sum(CASE WHEN v.tok IS NULL THEN 1 ELSE 0 END)::DOUBLE
+                   / count(*), 6) AS oov_rate
+      FROM tok t LEFT JOIN vocab v ON t.tok = v.tok
+      GROUP BY t.source ORDER BY t.source
+    """,
+)
+def text_oov_rate_by_source(spark: SparkSession, sf_dir: str) -> DataFrame:
+    # shared persisted token frame (common.doc_tokens): the vocab
+    # broadcast build is a separate job from the probe scan, so the
+    # persist keeps the corpus tokenization to one execution
+
+    tok = doc_tokens(spark, sf_dir).select("source", "tok")
+    vocab = (
+        tok.groupBy("tok")
+        .agg(F.count(F.lit(1)).alias("c"))
+        .orderBy(F.desc("c"), "tok")
+        .limit(16)
+        .select("tok", F.lit(True).alias("in_vocab"))
+    )
+    probed = tok.join(F.broadcast(vocab), "tok", "left")
+    oov = F.when(F.col("in_vocab").isNull(), 1).otherwise(0)
+    return (
+        probed.groupBy("source")
+        .agg(
+            F.count(F.lit(1)).alias("n_tokens"),
+            F.sum(oov).alias("n_oov"),
+            F.round(
+                F.sum(oov).cast("double") / F.count(F.lit(1)), 6
+            ).alias("oov_rate"),
+        )
+        .orderBy("source")
+    )
+
+
+# ------------------------------------------------------------- TF-IDF
+
+
+@register(
+    "text_tfidf_top_terms",
+    "Per-document top-3 terms by smoothed TF-IDF (sklearn form: "
+    "idf = ln((1+N)/(1+df)) + 1) — the classic keyword-extraction / "
+    "feature-weighting kernel. Reads the shared persisted doc_tokens "
+    "frame; term counts and document frequencies are two map-side-"
+    "combined aggs, the idf join broadcasts the df table, and the "
+    "per-doc top-3 is a rank window (WindowGroupLimit pushes the "
+    "cutoff map-side). Ties broken by term text so the LIMIT-like "
+    "cut is deterministic. 100 TB: shuffles carry (doc, term) and "
+    "(term) counts only; df is vocabulary-sized.",
+    oracle="""
+      WITH tok AS (
+        SELECT doc_id, unnest(regexp_extract_all(lower(text), '[a-z0-9]+')) AS tok
+        FROM documents
+      ),
+      cnt AS (
+        SELECT doc_id, tok, count(*) AS c FROM tok GROUP BY doc_id, tok
+      ),
+      df AS (
+        SELECT tok, count(*) AS df FROM cnt GROUP BY tok
+      ),
+      n AS (SELECT count(*) AS n_docs FROM documents),
+      scored AS (
+        SELECT c.doc_id, c.tok,
+               c.c * (ln((1.0 + n.n_docs) / (1.0 + df.df)) + 1.0) AS tfidf
+        FROM cnt c JOIN df USING (tok) CROSS JOIN n
+      ),
+      ranked AS (
+        SELECT doc_id, tok, tfidf,
+               row_number() OVER (PARTITION BY doc_id
+                                  ORDER BY tfidf DESC, tok) AS rk
+        FROM scored
+      )
+      SELECT doc_id, rk, tok AS term, round(tfidf, 6) AS tfidf
+      FROM ranked WHERE rk <= 3
+      ORDER BY doc_id, rk
+    """,
+)
+def text_tfidf_top_terms(spark: SparkSession, sf_dir: str) -> DataFrame:
+    d = table(spark, sf_dir, "documents")
+    tok = doc_tokens(spark, sf_dir).select("doc_id", "tok")
+    cnt = tok.groupBy("doc_id", "tok").agg(F.count(F.lit(1)).alias("c"))
+    df = cnt.groupBy("tok").agg(F.count(F.lit(1)).alias("df"))
+    n = d.agg(F.count(F.lit(1)).alias("n_docs"))
+    scored = (
+        # df is VOCABULARY-sized (grows ~Heaps' law with the corpus);
+        # the hint holds while the distinct-token frame fits the
+        # driver/executor broadcast budget. Past that, drop the hint —
+        # cnt is already token-keyed, so AQE falls back to a shuffle
+        # join on `tok` with no extra exchange on the cnt side.
+        cnt.join(F.broadcast(df), "tok")
+        .crossJoin(F.broadcast(n))
+        .select(
+            "doc_id",
+            "tok",
+            (
+                F.col("c")
+                * (
+                    F.log((1.0 + F.col("n_docs")) / (1.0 + F.col("df")))
+                    + 1.0
+                )
+            ).alias("tfidf"),
+        )
+    )
+    w = Window.partitionBy("doc_id").orderBy(
+        F.col("tfidf").desc(), F.col("tok")
+    )
+    return (
+        scored.withColumn("rk", F.row_number().over(w))
+        .where(F.col("rk") <= 3)
+        .select(
+            "doc_id",
+            "rk",
+            F.col("tok").alias("term"),
+            F.round("tfidf", 6).alias("tfidf"),
+        )
+        .orderBy("doc_id", "rk")
+    )
+
+
+# ------------------------------------------- vocabulary growth curve
+
+
+_VOCAB_BUCKET = 50
+
+
+@register(
+    "text_vocab_growth_curve",
+    "Vocabulary growth curve (Heaps' law profile): distinct tokens "
+    f"first seen per {_VOCAB_BUCKET}-doc ingest bucket and the running "
+    "cumulative vocabulary — the corpus-diversity diagnostic that "
+    "shows when additional data stops adding new types (dedup/"
+    "saturation signal for training-data collection). First-occurrence "
+    "doc per token is one min-agg (map-side combined), bucketing is "
+    "row-local integer division, the cumulative sum is a bucket-count "
+    "window — state after the first agg is vocabulary-sized, never "
+    "corpus-sized.",
+    oracle=f"""
+      WITH tok AS (
+        SELECT doc_id, unnest(regexp_extract_all(lower(text), '[a-z0-9]+')) AS tok
+        FROM documents
+      ),
+      first AS (
+        SELECT tok, min(doc_id) AS first_doc FROM tok GROUP BY tok
+      ),
+      bk AS (
+        SELECT first_doc // {_VOCAB_BUCKET} AS bucket, count(*) AS new_tokens
+        FROM first GROUP BY 1
+      )
+      SELECT bucket, new_tokens,
+             sum(new_tokens) OVER (ORDER BY bucket
+                                   ROWS BETWEEN UNBOUNDED PRECEDING
+                                   AND CURRENT ROW)::BIGINT AS cum_tokens
+      FROM bk ORDER BY bucket
+    """,
+)
+def text_vocab_growth_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
+    tok = doc_tokens(spark, sf_dir).select("doc_id", "tok")
+    first = tok.groupBy("tok").agg(F.min("doc_id").alias("first_doc"))
+    bk = (
+        first.select(
+            (F.col("first_doc") / _VOCAB_BUCKET)
+            .cast("long")
+            .alias("bucket")
+        )
+        .groupBy("bucket")
+        .agg(F.count(F.lit(1)).alias("new_tokens"))
+    )
+    w = Window.orderBy("bucket").rowsBetween(
+        Window.unboundedPreceding, Window.currentRow
+    )
+    return bk.select(
+        "bucket",
+        "new_tokens",
+        F.sum("new_tokens").over(w).alias("cum_tokens"),
+    ).orderBy("bucket")
+
+
+@register(
+    "text_cooccurrence_pmi",
+    "Windowed PMI collocations: token pairs co-occurring within "
+    "distance <= 2 inside a document, scored by pointwise mutual "
+    "information log2(p(a,b)/(p(a)p(b))) against unigram marginals — "
+    "the classic collocation-extraction statistic (Church & Hanks "
+    "1990). Spark generates the pair stream with a per-document "
+    "slice/transform HOF over the token array (arrays are "
+    "document-bounded, so the interpreted per-element cost is O(1); no "
+    "positional self-join, no shuffle before the count agg); the "
+    "oracle independently derives pairs via a positional unnest "
+    "self-join. All counts are exact integers; the PMI ratio is one "
+    "fixed-order double expression. 100 TB: token pair generation is "
+    "map-side and the aggs are vocabulary-sized, with the marginals "
+    "broadcast to the pair join.",
+    oracle=f"""
+      WITH d AS (
+        SELECT doc_id, regexp_extract_all(lower(text), '{TOK}') AS toks
+        FROM documents
+      ),
+      pos AS (
+        SELECT doc_id, unnest(range(1, len(toks) + 1)) AS p, toks
+        FROM d
+      ),
+      tok AS (SELECT doc_id, p, toks[p] AS tok FROM pos),
+      pair AS (
+        SELECT least(a.tok, b.tok) AS tok_a, greatest(a.tok, b.tok) AS tok_b
+        FROM tok a JOIN tok b
+          ON a.doc_id = b.doc_id AND b.p - a.p BETWEEN 1 AND 2
+      ),
+      pc AS (
+        SELECT tok_a, tok_b, count(*) AS pair_n
+        FROM pair GROUP BY 1, 2
+      ),
+      m AS (SELECT tok, count(*) AS c FROM tok GROUP BY 1),
+      tot AS (
+        SELECT (SELECT count(*) FROM tok) AS nn,
+               (SELECT count(*) FROM pair) AS pp
+      )
+      SELECT p.tok_a, p.tok_b, p.pair_n,
+             round(log2(p.pair_n::DOUBLE * t.nn * t.nn
+                        / (t.pp::DOUBLE * ma.c * mb.c)), 4) AS pmi
+      FROM pc p
+      JOIN m ma ON ma.tok = p.tok_a
+      JOIN m mb ON mb.tok = p.tok_b
+      CROSS JOIN tot t
+      WHERE p.pair_n >= 5
+      ORDER BY pmi DESC, p.tok_a, p.tok_b
+      LIMIT 20
+    """,
+)
+def text_cooccurrence_pmi(spark: SparkSession, sf_dir: str) -> DataFrame:
+    # Unigram marginals ride the shared persisted doc_tokens frame (one
+    # corpus tokenize per session, BM25 pattern); the positional pair
+    # stream needs its own single scan (doc_tokens drops positions).
+    # The corpus totals nn/pp are 1-row scalar aggs cross-joined back
+    # with an explicit broadcast: at web scale the distinct-pair frame
+    # is billions of rows, so an unpartitioned window sum over it would
+    # funnel everything through one partition — the scalar-agg job costs
+    # one extra tiny stage and keeps every stage parallel. The pair
+    # frame feeds two jobs (total + main), so it is persisted.
+    d = wide_table(spark, sf_dir, "documents").select(
+        "doc_id",
+        lower_tokens(F.col("text")).alias("toks"),
+    )
+    # pair stream: for 0-based element i, partners are i+1, i+2 ->
+    # 1-based slice start i+2, length 2 (slice clamps at array end);
+    # wide_table widens the single-row-group bench scan before the tokenize +
+    # interpreted pair-HOF expansion (per-row-heavy kernel)
+    pairs = d.select(
+        F.explode(
+            F.expr(
+                "flatten(transform(toks, (x, i) -> "
+                "transform(slice(toks, i + 2, 2), y -> "
+                "struct(least(x, y) AS a, greatest(x, y) AS b))))"
+            )
+        ).alias("p")
+    ).select(F.col("p.a").alias("tok_a"), F.col("p.b").alias("tok_b"))
+    pc = (
+        pairs.groupBy("tok_a", "tok_b")
+        .agg(F.count(F.lit(1)).alias("pair_n"))
+        .persist()
+    )
+    pc = pc.crossJoin(
+        F.broadcast(pc.agg(F.sum("pair_n").alias("pp")))
+    )
+    m = (
+        doc_tokens(spark, sf_dir)
+        .groupBy("tok")
+        .agg(F.count(F.lit(1)).alias("c"))
+        .persist()
+    )
+    m = m.crossJoin(F.broadcast(m.agg(F.sum("c").alias("nn"))))
+    ma = m.select(
+        F.col("tok").alias("tok_a"), F.col("c").alias("ca"), "nn"
+    )
+    mb = m.select(F.col("tok").alias("tok_b"), F.col("c").alias("cb"))
+    j = pc.join(F.broadcast(ma), "tok_a").join(F.broadcast(mb), "tok_b")
+    pmi = F.log2(
+        F.col("pair_n").cast("double") * F.col("nn") * F.col("nn")
+        / (F.col("pp").cast("double") * F.col("ca") * F.col("cb"))
+    )
+    return (
+        j.where(F.col("pair_n") >= 5)
+        .select(
+            "tok_a", "tok_b", "pair_n", F.round(pmi, 4).alias("pmi")
+        )
+        .orderBy(F.col("pmi").desc(), "tok_a", "tok_b")
+        .limit(20)
+    )
+
+
+# ----------------------------------------------------------------- RAKE
+
+
+_STOPWORDS = (
+    "the,of,and,a,an,in,to,is,was,it,for,on,as,with,at,by,from,that,"
+    "this,be,are,or,not,but,have,has,had,were,which,you,we,they,i"
+).split(",")
+_STOP_RE = r"\b(?:" + "|".join(_STOPWORDS) + r")\b"
+
+
+@register(
+    "text_keyword_rake",
+    "RAKE keyword extraction (Rose et al. 2010): candidate phrases are "
+    "maximal stopword/punctuation-free word runs; each word scores "
+    "deg/freq (deg = total length of phrases it appears in, freq = its "
+    "occurrence count) and a phrase scores by its words' aggregate "
+    "degree-to-frequency ratio. This implementation keeps the ratio "
+    "INTEGER-EXACT — sum(deg)/sum(freq) over the phrase's words, one "
+    "double division at the end — instead of summing per-word double "
+    "ratios whose order the engines could disagree on. Both engines "
+    "run the identical regex pipeline (punctuation -> '|', stopwords "
+    "-> '|', split, trim). 100 TB: phrase extraction is map-side; "
+    "word-stat aggs are vocabulary-sized and broadcast back to the "
+    "phrase-word join.",
+    oracle=f"""
+      WITH ph0 AS (
+        SELECT doc_id,
+               unnest(string_split(
+                 regexp_replace(regexp_replace(lower(text),
+                                               '[^a-z0-9 ]', '|', 'g'),
+                                '{_STOP_RE}', '|', 'g'),
+                 '|')) AS raw
+        FROM documents
+      ),
+      ph AS (
+        SELECT trim(regexp_replace(raw, ' +', ' ', 'g')) AS phrase
+        FROM ph0
+        WHERE length(trim(regexp_replace(raw, ' +', ' ', 'g'))) > 0
+      ),
+      inst AS (
+        SELECT phrase, string_split(phrase, ' ') AS ws,
+               len(string_split(phrase, ' ')) AS plen
+        FROM ph
+      ),
+      k AS (SELECT * FROM inst WHERE plen <= 4),
+      iw AS (SELECT unnest(ws) AS w, plen FROM k),
+      stats AS (
+        SELECT w, count(*) AS freq, sum(plen) AS deg FROM iw GROUP BY w
+      ),
+      uniq AS (
+        SELECT phrase, count(*) AS phrase_freq, min(plen) AS plen
+        FROM k GROUP BY phrase
+      ),
+      uw AS (
+        SELECT phrase, unnest(string_split(phrase, ' ')) AS w FROM uniq
+      ),
+      scored AS (
+        SELECT u.phrase, sum(s.deg) AS sum_deg, sum(s.freq) AS sum_freq
+        FROM uw u JOIN stats s ON s.w = u.w GROUP BY u.phrase
+      )
+      SELECT q.phrase, q.phrase_freq, q.plen AS n_words,
+             round(sc.sum_deg::DOUBLE / sc.sum_freq, 4) AS rake_score
+      FROM uniq q JOIN scored sc ON sc.phrase = q.phrase
+      WHERE q.phrase_freq >= 2 AND q.plen >= 2
+      ORDER BY rake_score DESC, q.phrase
+      LIMIT 15
+    """,
+)
+def text_keyword_rake(spark: SparkSession, sf_dir: str) -> DataFrame:
+    # Single corpus pass: phrase instances collapse to the unique-phrase
+    # frame immediately, word freq/deg come from phrase-frequency-
+    # weighted sums over the exploded unique-phrase words (identical
+    # values to instance-level counting), and the per-word stats attach
+    # via a window over w instead of a groupBy+self-join — so no frame
+    # is consumed twice and the corpus regex pipeline runs exactly once
+    # (the naive stats-join formulation re-evaluated it 3x: 1.47 s ->
+    # ~0.5 s at sf0.1). wide_table widens the single-row-group bench scan
+    # before the stopword-alternation regex chain (per-row-heavy
+    # kernel, the documented wide_table case).
+    d = wide_table(spark, sf_dir, "documents")
+    cleaned = F.regexp_replace(
+        F.regexp_replace(F.lower(F.col("text")), r"[^a-z0-9 ]", "|"),
+        _STOP_RE,
+        "|",
+    )
+    raw = d.select(F.explode(F.split(cleaned, r"\|")).alias("raw"))
+    phrase = F.trim(F.regexp_replace(F.col("raw"), " +", " "))
+    ph = raw.select(phrase.alias("phrase")).where(F.length(phrase) > 0)
+    inst = ph.withColumn("plen", F.size(F.split("phrase", " "))).where(
+        F.col("plen") <= 4
+    )
+    uniq = inst.groupBy("phrase", "plen").agg(
+        F.count(F.lit(1)).alias("phrase_freq")
+    )
+    uw = uniq.select(
+        "phrase",
+        "plen",
+        "phrase_freq",
+        F.explode(F.split("phrase", " ")).alias("w"),
+    )
+    wstat = Window.partitionBy("w")
+    scored = uw.select(
+        "phrase",
+        "plen",
+        "phrase_freq",
+        F.sum("phrase_freq").over(wstat).alias("freq"),
+        F.sum(F.col("plen") * F.col("phrase_freq")).over(wstat).alias(
+            "deg"
+        ),
+    )
+    agg = scored.groupBy("phrase").agg(
+        F.min("phrase_freq").alias("phrase_freq"),
+        F.min("plen").alias("plen"),
+        F.sum("deg").alias("sum_deg"),
+        F.sum("freq").alias("sum_freq"),
+    )
+    return (
+        agg.where((F.col("phrase_freq") >= 2) & (F.col("plen") >= 2))
+        .select(
+            "phrase",
+            "phrase_freq",
+            F.col("plen").alias("n_words"),
+            F.round(
+                F.col("sum_deg").cast("double") / F.col("sum_freq"), 4
+            ).alias("rake_score"),
+        )
+        .orderBy(F.col("rake_score").desc(), "phrase")
+        .limit(15)
+    )
+
+
+# ------------------------------------------------- feature hashing
+
+_FH_BUCKETS = 64
+
+
+@register(
+    "feature_hash_tf_md5",
+    "Feature hashing (the hashing trick) with a CROSS-ENGINE kernel: "
+    "every token maps to bucket md5(token) mod 64 with a ±1 sign from "
+    "the next hash hex digit's parity (the collision-unbiasing signed "
+    "variant of Weinberger et al.), and the corpus-level hashed "
+    "feature profile aggregates token mass, distinct vocabulary, and "
+    "the SIGNED sum per bucket — integers end to end, so the oracle "
+    "hash-matches the exact kernel a hashed-TF featurizer applies "
+    "per-document. 100 TB: token explode into a 64-ary "
+    "map-side-combined groupBy — the output is bounded by the bucket "
+    "count, never the vocabulary.",
+    oracle=f"""
+      WITH tok AS (
+        SELECT unnest(regexp_extract_all(lower(text), '{TOK}')) AS tok
+        FROM documents
+      ),
+      h AS (
+        SELECT tok,
+               ('0x' || substr(md5(tok), 1, 8))::BIGINT % {_FH_BUCKETS}
+                 AS bucket,
+               CASE WHEN ('0x' || substr(md5(tok), 9, 1))::INT % 2 = 0
+                    THEN 1 ELSE -1 END AS sign
+        FROM tok
+      )
+      SELECT bucket,
+             count(*)::BIGINT AS n_tokens,
+             count(DISTINCT tok)::BIGINT AS n_vocab,
+             sum(sign)::BIGINT AS signed_mass
+      FROM h GROUP BY bucket ORDER BY bucket
+    """,
+)
+def feature_hash_tf(spark: SparkSession, sf_dir: str) -> DataFrame:
+    d = wide_table(spark, sf_dir, "documents")
+    tok = d.select(
+        F.explode(
+            lower_tokens(F.col("text"))
+        ).alias("tok")
+    )
+    md = F.md5(F.col("tok"))
+    bucket = (
+        F.conv(F.substring(md, 1, 8), 16, 10).cast("bigint")
+        % _FH_BUCKETS
+    )
+    sign = F.when(
+        F.conv(F.substring(md, 9, 1), 16, 10).cast("int") % 2 == 0,
+        F.lit(1),
+    ).otherwise(F.lit(-1))
+    return (
+        tok.select(
+            bucket.alias("bucket"), sign.alias("sign"), "tok"
+        )
+        .groupBy("bucket")
+        .agg(
+            F.count(F.lit(1)).alias("n_tokens"),
+            F.countDistinct("tok").alias("n_vocab"),
+            F.sum("sign").alias("signed_mass"),
+        )
+        .orderBy("bucket")
+    )
+
+
+# --------------------------------------------- positional phrase search
+
+
+@register(
+    "text_phrase_search_positional",
+    "Exact phrase search via a POSITIONAL inverted index — the "
+    "search-engine primitive BM25 can't express (bag-of-words loses "
+    "adjacency): the probe phrase is the first 3 tokens of doc 0 "
+    "(derived identically on both engines, so regenerated corpora "
+    "re-derive it), the token stream explodes WITH positions, rows are "
+    "pre-filtered to the 3 phrase terms (a broadcast-able dictionary "
+    "at any corpus size), and occurrences assemble by doc-local "
+    "position adjacency equi-joins (pos, pos+1, pos+2) — counting "
+    "OVERLAPPING matches correctly. The oracle scans each doc's token "
+    "array with a range fold instead of an index — independent "
+    "formulations, same integer counts. 100 TB: the posting stream "
+    "shuffles once on (doc_id) for the adjacency joins and is "
+    "term-filtered BEFORE the shuffle, so volume is the phrase terms' "
+    "posting lists, never the corpus.",
+    oracle="""
+      WITH tk AS (
+        SELECT doc_id, regexp_extract_all(lower(text), '[a-z0-9]+') AS t
+        FROM documents
+      ),
+      ph AS (
+        SELECT t[1] AS p1, t[2] AS p2, t[3] AS p3 FROM tk
+        WHERE doc_id = 0 AND len(t) >= 3
+      ),
+      hits AS (
+        SELECT tk.doc_id,
+               len(list_filter(range(1, greatest(len(t) - 2, 0) + 1),
+                               i -> t[i] = ph.p1 AND t[i+1] = ph.p2
+                                    AND t[i+2] = ph.p3))::BIGINT AS n_occ
+        FROM tk, ph
+      )
+      SELECT doc_id, n_occ FROM hits WHERE n_occ > 0
+      ORDER BY n_occ DESC, doc_id
+      LIMIT 50
+    """,
+)
+def text_phrase_search(spark: SparkSession, sf_dir: str) -> DataFrame:
+    d = wide_table(spark, sf_dir, "documents")
+    tk = d.select(
+        "doc_id",
+        lower_tokens(F.col("text")).alias("t"),
+    )
+    # the probe phrase resolves driver-side (the ANN build-time
+    # parameter pattern): one pushed-down point lookup, then the term
+    # filter is three string LITERALS evaluated in the same scan
+    phrase = (
+        tk.where((F.col("doc_id") == 0) & (F.size("t") >= 3))
+        .select(F.slice("t", 1, 3).alias("p"))
+        .collect()
+    )
+    if not phrase:
+        return tk.where(F.lit(False)).select(
+            "doc_id", F.lit(0).cast("bigint").alias("n_occ")
+        )
+    p1, p2, p3 = phrase[0][0]
+    # positional postings, term-filtered before any shuffle: only the
+    # 3 phrase terms' posting lists survive the scan. The barrier is
+    # load-bearing — three consumers (t1/t2/t3) and no cross-consumer
+    # CSE means the corpus tokenize+posexplode pipeline would run 3x
+    # without it (measured 2.96 s vs 1.0 s warm at sf0.1)
+    post = (
+        tk.select(
+            "doc_id",
+            F.posexplode("t").alias("pos", "tok"),
+        )
+        .where(F.col("tok").isin(p1, p2, p3))
+        .localCheckpoint()
+    )
+    t1 = post.where(F.col("tok") == p1).select(
+        "doc_id", F.col("pos").alias("i")
+    )
+    t2 = post.where(F.col("tok") == p2).select(
+        F.col("doc_id").alias("d2"), F.col("pos").alias("j")
+    )
+    t3 = post.where(F.col("tok") == p3).select(
+        F.col("doc_id").alias("d3"), F.col("pos").alias("k")
+    )
+    return (
+        t1.join(
+            t2,
+            (F.col("doc_id") == F.col("d2"))
+            & (F.col("j") == F.col("i") + 1),
+        )
+        .join(
+            t3,
+            (F.col("doc_id") == F.col("d3"))
+            & (F.col("k") == F.col("i") + 2),
+        )
+        .groupBy("doc_id")
+        .agg(F.count(F.lit(1)).alias("n_occ"))
+        .orderBy(F.col("n_occ").desc(), "doc_id")
+        .limit(50)
+    )
+
+
+# ------------------------------------------------ TextRank keywords
+
+_TR_SCALE = 10**15
+_TR_ITERS = 4
+
+
+def _textrank_oracle_sql() -> str:
+    """Unrolled integer PageRank over the word-adjacency graph — the
+    graph_ops.py::_pr_oracle_sql discipline (scaled 1e15 ranks, floor
+    division, fixed iterations) applied to TEXT: nodes are corpus
+    tokens, edges are distinct adjacent-token pairs (the TextRank
+    window-2 co-occurrence graph), canonicalized src < dst by string
+    order (ASCII-only tokens — both engines collate identically)."""
+    steps = []
+    prev = "r0"
+    for k in range(1, _TR_ITERS + 1):
+        steps.append(
+            f"""
+      r{k} AS (
+        SELECT d.node,
+               ((15 * {_TR_SCALE}) // (100 * p.n)
+                + (85 * COALESCE(s.c, 0)) // 100)::BIGINT AS r
+        FROM deg d
+        CROSS JOIN params p
+        LEFT JOIN (
+          SELECT e.dst AS node, sum(pr.r // dg.deg)::BIGINT AS c
+          FROM e
+          JOIN {prev} pr ON pr.node = e.src
+          JOIN deg dg ON dg.node = e.src
+          GROUP BY e.dst
+        ) s ON s.node = d.node
+      )"""
+        )
+        prev = f"r{k}"
+    chain = ",".join(steps)
+    return f"""
+      WITH tk AS (
+        SELECT regexp_extract_all(lower(text), '[a-z0-9]+') AS t
+        FROM documents
+      ),
+      pairs AS (
+        SELECT unnest(list_transform(range(1, greatest(len(t) - 1, 0) + 1),
+                                     i -> struct_pack(a := t[i],
+                                                      b := t[i+1]))) AS p
+        FROM tk
+      ),
+      e0 AS (
+        SELECT DISTINCT least(p.a, p.b) AS src, greatest(p.a, p.b) AS dst
+        FROM pairs WHERE p.a <> p.b
+      ),
+      e AS (
+        SELECT src, dst FROM e0
+        UNION ALL
+        SELECT dst AS src, src AS dst FROM e0
+      ),
+      deg AS (
+        SELECT src AS node, count(*)::BIGINT AS deg FROM e GROUP BY src
+      ),
+      params AS (SELECT count(*)::BIGINT AS n FROM deg),
+      r0 AS (
+        SELECT node, ({_TR_SCALE} // p.n)::BIGINT AS r
+        FROM deg CROSS JOIN params p
+      ),{chain}
+      SELECT node AS word, r AS rank_scaled
+      FROM {prev}
+      ORDER BY r DESC, node
+      LIMIT 15
+    """
+
+
+@register(
+    "text_textrank_keywords",
+    "TextRank keyword extraction (Mihalcea & Tarau '04) with ENGINE-"
+    "EXACT arithmetic — corpus-level composition of two proven "
+    "kernels: the arrays_zip adjacent-pair expansion builds the "
+    "window-2 word co-occurrence graph (distinct undirected edges, "
+    "string-canonicalized), and the scaled-integer fixed-iteration "
+    "PageRank (graph_pagerank_integer_fixedpoint's discipline: 1e15 "
+    "scale, floor division, per-round checkpoint) ranks the "
+    "vocabulary; top-15 words ARE the keywords. The DuckDB twin "
+    "unrolls the identical 4 iterations, so ranks match bit for bit. "
+    "100 TB: the pair stream is one corpus scan; the graph is "
+    "vocabulary-sized (edges bounded by |V|², in practice Zipf-"
+    "sparse), so every iteration shuffles a vocabulary-bounded frame, "
+    "never the corpus.",
+    oracle=_textrank_oracle_sql(),
+)
+def text_textrank_keywords(spark: SparkSession, sf_dir: str) -> DataFrame:
+    d = wide_table(spark, sf_dir, "documents")
+    tk = d.select(
+        lower_tokens(F.col("text")).alias("t")
+    )
+    pair_expr = (
+        "transform(arrays_zip("
+        "slice(t, 1, greatest(size(t) - 1, 0)), "
+        "slice(t, 2, greatest(size(t) - 1, 0))), "
+        "s -> struct(s['0'] AS a, s['1'] AS b))"
+    )
+    e0 = (
+        tk.select(F.explode(F.expr(pair_expr)).alias("p"))
+        .where(F.col("p.a") != F.col("p.b"))
+        .select(
+            F.least("p.a", "p.b").alias("src"),
+            F.greatest("p.a", "p.b").alias("dst"),
+        )
+        .distinct()
+    )
+    e = e0.union(
+        e0.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
+    )
+    e = e.repartition("src").localCheckpoint()
+    deg = (
+        e.groupBy("src")
+        .agg(F.count(F.lit(1)).alias("deg"))
+        .localCheckpoint()
+    )
+    n = deg.count()  # vocabulary size — bounded driver scalar
+    base = (15 * _TR_SCALE) // (100 * n)
+    # deg / per-round r are |vocab-of-window-cooccurring-tokens|-sized;
+    # broadcast holds while that fits the budget (TextRank practice
+    # caps candidate tokens first). Past it, drop the hints — ed is
+    # checkpointed src-partitioned, so rounds flip to shuffle-hash
+    # joins (same switch as operators/graph.py::pagerank).
+    ed = e.join(F.broadcast(deg), "src").localCheckpoint()
+    nodes = deg.select(F.col("src").alias("node"))
+    r = deg.select(
+        F.col("src").alias("node"),
+        F.lit(_TR_SCALE // n).cast("bigint").alias("r"),
+    )
+    for _ in range(_TR_ITERS):
+        contribs = ed.join(
+            F.broadcast(r.withColumnRenamed("node", "src")), "src"
+        ).select(
+            F.col("dst").alias("node"),
+            F.expr("r div deg").alias("cc"),
+        )
+        c = contribs.groupBy("node").agg(F.sum("cc").alias("c"))
+        r = (
+            nodes.join(c, "node", "left")
+            .select(
+                "node",
+                (
+                    F.lit(base)
+                    + F.expr("(85 * coalesce(c, 0L)) div 100")
+                ).cast("bigint").alias("r"),
+            )
+            .localCheckpoint()
+        )
+    return (
+        r.orderBy(F.desc("r"), "node")
+        .limit(15)
+        .select(F.col("node").alias("word"), F.col("r").alias("rank_scaled"))
+    )
+
+
+# --------------------------------------------------- Zipf slope
+
+
+@register(
+    "text_zipf_slope",
+    "Zipf's-law fit of the corpus token distribution: rank tokens by "
+    "frequency (deterministic tie-break on token), then OLS slope of "
+    "ln(freq) on ln(rank) over the top 200 — the standard "
+    "natural-language sanity check on a training corpus (synthetic or "
+    "over-deduplicated corpora show distinctive non-Zipf slopes). "
+    "Exact integer (rank, freq) pairs feed double log sums identically "
+    "ordered on both engines? NO — sums of logs ARE order-sensitive, "
+    "so the sufficient statistics aggregate over the rounded 12dp logs "
+    "via a deterministic ordered list fold (the chi-square entry's "
+    "discipline), keeping the FP surface to one canonical order. "
+    "100 TB: vocabulary agg + a 200-row bounded tail.",
+    oracle="""
+      WITH f AS (
+        SELECT tok, count(*)::BIGINT AS freq
+        FROM (SELECT unnest(regexp_extract_all(lower(text), '[a-z0-9]+'))
+                AS tok FROM documents) _t
+        GROUP BY tok
+      ),
+      r AS (
+        SELECT row_number() OVER (ORDER BY freq DESC, tok) AS rank, freq
+        FROM f
+      ),
+      top AS (SELECT * FROM r WHERE rank <= 200),
+      s AS (
+        SELECT list_aggregate(ls, 'sum') AS sx,
+               list_aggregate(lf, 'sum') AS sy,
+               list_aggregate(list_transform(ls, x -> x * x), 'sum') AS sxx,
+               list_aggregate(list_transform(range(1, len(ls) + 1),
+                                             i -> ls[i] * lf[i]), 'sum')
+                 AS sxy,
+               len(ls)::BIGINT AS n
+        FROM (
+          SELECT list(round(ln(rank), 12) ORDER BY rank) AS ls,
+                 list(round(ln(freq), 12) ORDER BY rank) AS lf
+          FROM top
+        ) _l
+      )
+      SELECT n AS n_ranks,
+             round((n * sxy - sx * sy) / (n * sxx - sx * sx), 6)
+               AS zipf_slope
+      FROM s WHERE n >= 2
+    """,
+)
+def text_zipf_slope(spark: SparkSession, sf_dir: str) -> DataFrame:
+    d = wide_table(spark, sf_dir, "documents")
+    f = (
+        d.select(
+            F.explode(
+                lower_tokens(F.col("text"))
+            ).alias("tok")
+        )
+        .groupBy("tok")
+        .agg(F.count(F.lit(1)).alias("freq"))
+    )
+    # ADVICE r05: vocabulary grows with corpus size (unlike the
+    # fixed-domain KS/PSI histograms), so take the top 200 with a
+    # TakeOrderedAndProject limit FIRST (parallel partial top-k), then
+    # rank the <=200-row frame — the unpartitioned window now touches a
+    # LIMIT-bounded frame only
+    top = f.orderBy(F.col("freq").desc(), "tok").limit(200)
+    r = top.select(
+        F.row_number()
+        .over(Window.orderBy(F.col("freq").desc(), "tok"))
+        .alias("rank"),
+        "freq",
+    )
+    lists = r.agg(
+        F.array_sort(
+            F.collect_list(F.struct("rank", "freq"))
+        ).alias("z")
+    )
+    ls = F.transform(
+        "z", lambda s: F.round(F.log(s["rank"].cast("double")), 12)
+    )
+    lf = F.transform(
+        "z", lambda s: F.round(F.log(s["freq"].cast("double")), 12)
+    )
+    def _fold(arr):
+        return F.aggregate(
+            arr, F.lit(0.0), lambda a, x: a + x
+        )
+    prod = F.zip_with(ls, lf, lambda a, b: a * b)
+    sq = F.transform(ls, lambda x: x * x)
+    stats = lists.select(
+        F.size("z").cast("bigint").alias("n"),
+        _fold(ls).alias("sx"),
+        _fold(lf).alias("sy"),
+        _fold(sq).alias("sxx"),
+        _fold(prod).alias("sxy"),
+    )
+    n = F.col("n").cast("double")
+    # degenerate-corpus guard (ADVICE r04 discipline): <2 ranks makes
+    # the denominator 0 — filter identically on both engines
+    return stats.where(F.col("n") >= 2).select(
+        F.col("n").alias("n_ranks"),
+        F.round(
+            (n * F.col("sxy") - F.col("sx") * F.col("sy"))
+            / (n * F.col("sxx") - F.col("sx") * F.col("sx")),
+            6,
+        ).alias("zipf_slope"),
+    )
+
+
+# ---------------------------- Fightin' Words log-odds comparison
+
+_LO_A0 = 1000.0  # Dirichlet prior mass
+_LO_MIN = 20  # minimum combined count
+_LO_TOPK = 15
+
+
+@register(
+    "text_logodds_dirichlet",
+    "Corpus comparison by LOG-ODDS WITH A DIRICHLET PRIOR (Monroe et "
+    "al.'s 'Fightin' Words') — the statistically-sound answer to "
+    "'which words distinguish corpus A from corpus B', where raw "
+    "tf-idf or PMI over-weight rare words: per-token z-scores of the "
+    "prior-smoothed log-odds delta between the en and de slices, the "
+    "prior drawn from the pooled corpus (alpha_i = a0 * y_all/n_all). "
+    "All inputs are exact integer counts off the shared persisted "
+    "token frame (quality_ops.doc_tokens, BM25 pattern); the "
+    "ln/sqrt scalar math is per-row with no FP aggregation, ordered "
+    "by the ROUNDED z so both engines agree. Output: the 15 most "
+    "en-distinctive tokens. 100 TB: two map-side-combinable groupBys "
+    "(token counts, then totals) and a broadcast of the 1-row totals "
+    "frame — vocabulary-bounded, never corpus-bounded.",
+    oracle=f"""
+      WITH tok AS (
+        SELECT lang,
+               unnest(regexp_extract_all(lower(text), '[a-z0-9]+')) AS tok
+        FROM documents WHERE lang IN ('en', 'de')
+      ),
+      cnt AS (
+        SELECT tok,
+               sum(CASE WHEN lang = 'en' THEN 1 ELSE 0 END)::BIGINT AS y_en,
+               sum(CASE WHEN lang = 'de' THEN 1 ELSE 0 END)::BIGINT AS y_de
+        FROM tok GROUP BY tok
+      ),
+      tot AS (
+        SELECT sum(y_en)::BIGINT AS n_en, sum(y_de)::BIGINT AS n_de,
+               sum(y_en + y_de)::BIGINT AS n_all
+        FROM cnt
+      ),
+      scored AS (
+        SELECT tok, y_en, y_de,
+               ln((y_en + {_LO_A0} * (y_en + y_de) / n_all)
+                  / (n_en + {_LO_A0} - y_en
+                     - {_LO_A0} * (y_en + y_de) / n_all))
+               - ln((y_de + {_LO_A0} * (y_en + y_de) / n_all)
+                    / (n_de + {_LO_A0} - y_de
+                       - {_LO_A0} * (y_en + y_de) / n_all)) AS delta,
+               1.0 / (y_en + {_LO_A0} * (y_en + y_de) / n_all)
+               + 1.0 / (y_de + {_LO_A0} * (y_en + y_de) / n_all) AS v
+        FROM cnt, tot
+        WHERE y_en + y_de >= {_LO_MIN}
+      )
+      SELECT tok, y_en, y_de,
+             round(delta, 6) AS delta,
+             round(delta / sqrt(v), 6) AS z
+      FROM scored
+      ORDER BY round(delta / sqrt(v), 6) DESC, tok
+      LIMIT {_LO_TOPK}
+    """,
+)
+def text_logodds_dirichlet(spark: SparkSession, sf_dir: str) -> DataFrame:
+    tok = doc_tokens(spark, sf_dir).where(F.col("lang").isin("en", "de"))
+    cnt = tok.groupBy("tok").agg(
+        F.sum(F.when(F.col("lang") == "en", 1).otherwise(0))
+        .cast("long")
+        .alias("y_en"),
+        F.sum(F.when(F.col("lang") == "de", 1).otherwise(0))
+        .cast("long")
+        .alias("y_de"),
+    )
+    tot = cnt.agg(
+        F.sum("y_en").cast("long").alias("n_en"),
+        F.sum("y_de").cast("long").alias("n_de"),
+        F.sum(F.col("y_en") + F.col("y_de")).cast("long").alias("n_all"),
+    )
+    a_i = F.lit(_LO_A0) * (F.col("y_en") + F.col("y_de")) / F.col("n_all")
+    delta = F.log(
+        (F.col("y_en") + a_i)
+        / (F.col("n_en") + F.lit(_LO_A0) - F.col("y_en") - a_i)
+    ) - F.log(
+        (F.col("y_de") + a_i)
+        / (F.col("n_de") + F.lit(_LO_A0) - F.col("y_de") - a_i)
+    )
+    var = 1.0 / (F.col("y_en") + a_i) + 1.0 / (F.col("y_de") + a_i)
+    z = F.round(delta / F.sqrt(var), 6)
+    return (
+        cnt.where(F.col("y_en") + F.col("y_de") >= _LO_MIN)
+        .crossJoin(F.broadcast(tot))
+        .select(
+            "tok",
+            "y_en",
+            "y_de",
+            F.round(delta, 6).alias("delta"),
+            z.alias("z"),
+        )
+        .orderBy(F.col("z").desc(), "tok")
+        .limit(_LO_TOPK)
+    )
+
+
+# ------------------------------------------ distinct-n diversity
+
+@register(
+    "text_distinct_ngram_diversity",
+    "Distinct-n diversity per source (Li et al. 2016's distinct-1/2/3 "
+    "— the standard repetitiveness/diversity score for generated or "
+    "scraped corpora; a collapsing source shows up as a falling "
+    "distinct-2 long before eyeballing does): unique n-grams / total "
+    "n-grams for n = 1, 2, 3. N-grams via arrays_zip of SHIFTED "
+    "SLICES (never element_at(t, i+k) inside the lambda — the "
+    "projection-collapse O(n^2) trap, CLAUDE.md); all three orders "
+    "are tagged into ONE array so the corpus is tokenized and "
+    "exploded exactly once. 100 TB: one (source, n, gram) shuffle "
+    "with map-side partial distinct; output is 3 rows per source.",
+    oracle=f"""
+      WITH tk AS (
+        SELECT source, regexp_extract_all(lower(text), '{TOK}') AS t
+        FROM documents
+      ),
+      grams AS (
+        SELECT source, 1 AS n, unnest(t) AS g FROM tk
+        UNION ALL
+        SELECT source, 2 AS n,
+               unnest(list_transform(range(1, greatest(len(t) - 1, 0) + 1),
+                                     i -> t[i] || ' ' || t[i+1])) AS g
+        FROM tk
+        UNION ALL
+        SELECT source, 3 AS n,
+               unnest(list_transform(range(1, greatest(len(t) - 2, 0) + 1),
+                                     i -> t[i] || ' ' || t[i+1] || ' '
+                                          || t[i+2])) AS g
+        FROM tk
+      )
+      SELECT source, n, count(*)::BIGINT AS total_ngrams,
+             count(DISTINCT g)::BIGINT AS distinct_ngrams,
+             round(count(DISTINCT g)::DOUBLE / count(*), 6) AS distinct_ratio
+      FROM grams
+      GROUP BY source, n
+      ORDER BY source, n
+    """,
+)
+def text_distinct_ngram_diversity(
+    spark: SparkSession, sf_dir: str
+) -> DataFrame:
+    d = wide_table(spark, sf_dir, "documents")
+    base = d.select(
+        "source",
+        lower_tokens(F.col("text")).alias("t"),
+    ).repartition(
+        # barrier: t is referenced by the 1/2/3-gram builders below
+        # (6 slice refs) — materialize the tokenization once per row
+        # instead of letting CollapseProject re-run the regex per ref
+        max(spark.sparkContext.defaultParallelism, 8)
+    )
+    tagged = (
+        "concat("
+        " transform(t, x -> struct(1 as n, x as g)),"
+        " transform(arrays_zip("
+        "   slice(t, 1, greatest(size(t) - 1, 0)),"
+        "   slice(t, 2, greatest(size(t) - 1, 0))),"
+        "  p -> struct(2 as n, concat_ws(' ', p['0'], p['1']) as g)),"
+        " transform(arrays_zip("
+        "   slice(t, 1, greatest(size(t) - 2, 0)),"
+        "   slice(t, 2, greatest(size(t) - 2, 0)),"
+        "   slice(t, 3, greatest(size(t) - 2, 0))),"
+        "  p -> struct(3 as n, concat_ws(' ', p['0'], p['1'], p['2']) as g))"
+        ")"
+    )
+    grams = base.select(
+        "source", F.explode(F.expr(tagged)).alias("x")
+    ).select("source", "x.n", "x.g")
+    return (
+        grams.groupBy("source", "n")
+        .agg(
+            F.count(F.lit(1)).cast("long").alias("total_ngrams"),
+            F.count_distinct("g").cast("long").alias("distinct_ngrams"),
+        )
+        .select(
+            "source",
+            "n",
+            "total_ngrams",
+            "distinct_ngrams",
+            F.round(
+                F.col("distinct_ngrams").cast("double")
+                / F.col("total_ngrams"),
+                6,
+            ).alias("distinct_ratio"),
+        )
+        .orderBy("source", "n")
+    )
+
+
+@register(
+    "eval_langid_confusion",
+    "Language-ID confusion matrix — the accuracy audit for the "
+    "stopword-voting classifier (text_langid_heuristic): per "
+    "(true lang, predicted lang) counts plus each cell's share of "
+    "its true-label row (the per-language recall diagonal) and the "
+    "overall accuracy carried on every row. Exact integer counts; "
+    "the matrix is <=|langs|*(|langs|+1) cells. 100 TB: one scan "
+    "with the codegen'd classifier expression + a map-side-"
+    "combinable cell agg; the label marginals broadcast back.",
+    oracle=f"""
+      WITH t AS (
+        SELECT doc_id, lang,
+               list_filter(regexp_split_to_array(lower(trim(text)), '\\s+'),
+                           x -> x <> '') AS toks
+        FROM documents
+      ), s AS (
+        SELECT doc_id, lang,
+               len(list_filter(toks, x -> list_contains({_LANG_SW_SQL['en']}, x))) AS s_en,
+               len(list_filter(toks, x -> list_contains({_LANG_SW_SQL['es']}, x))) AS s_es,
+               len(list_filter(toks, x -> list_contains({_LANG_SW_SQL['de']}, x))) AS s_de,
+               len(list_filter(toks, x -> list_contains({_LANG_SW_SQL['fr']}, x))) AS s_fr,
+               len(list_filter(toks, x -> list_contains({_LANG_SW_SQL['zh']}, x))) AS s_zh
+        FROM t
+      ),
+      pred AS (
+        SELECT lang AS lang_label,
+               CASE WHEN greatest(s_en,s_es,s_de,s_fr,s_zh) <= 0 THEN 'und'
+                    WHEN s_en = greatest(s_en,s_es,s_de,s_fr,s_zh) THEN 'en'
+                    WHEN s_es = greatest(s_en,s_es,s_de,s_fr,s_zh) THEN 'es'
+                    WHEN s_de = greatest(s_en,s_es,s_de,s_fr,s_zh) THEN 'de'
+                    WHEN s_fr = greatest(s_en,s_es,s_de,s_fr,s_zh) THEN 'fr'
+                    ELSE 'zh' END AS lang_guess
+        FROM s
+      ),
+      cells AS (
+        SELECT lang_label, lang_guess, count(*)::BIGINT AS n_docs
+        FROM pred GROUP BY 1, 2
+      ),
+      marg AS (
+        SELECT lang_label, sum(n_docs)::BIGINT AS label_total
+        FROM cells GROUP BY 1
+      ),
+      acc AS (
+        SELECT sum(CASE WHEN lang_label = lang_guess THEN n_docs
+                   ELSE 0 END)::DOUBLE / sum(n_docs) AS a
+        FROM cells
+      )
+      SELECT c.lang_label, c.lang_guess, c.n_docs,
+             round(c.n_docs::DOUBLE / m.label_total, 6) AS label_share,
+             round(acc.a, 6) AS overall_accuracy
+      FROM cells c JOIN marg m USING (lang_label) CROSS JOIN acc
+      ORDER BY c.lang_label, c.lang_guess
+    """,
+)
+def eval_langid_confusion(spark: SparkSession, sf_dir: str) -> DataFrame:
+    from scout_spark.functions.text import langid_expr
+
+    d = wide_table(spark, sf_dir, "documents")
+    pred = d.select(
+        F.col("lang").alias("lang_label"),
+        langid_expr("text").alias("lang_guess"),
+    )
+    cells = pred.groupBy("lang_label", "lang_guess").agg(
+        F.count(F.lit(1)).cast("long").alias("n_docs")
+    ).localCheckpoint()  # <=|langs|^2 cells; 3 overlapping consumers
+    marg = cells.groupBy("lang_label").agg(
+        F.sum("n_docs").cast("long").alias("label_total")
+    )
+    acc = cells.agg(
+        (
+            F.sum(
+                F.when(
+                    F.col("lang_label") == F.col("lang_guess"),
+                    F.col("n_docs"),
+                ).otherwise(0)
+            ).cast("double")
+            / F.sum("n_docs")
+        ).alias("a")
+    )
+    return (
+        cells.join(F.broadcast(marg), "lang_label")
+        .crossJoin(F.broadcast(acc))
+        .select(
+            "lang_label",
+            "lang_guess",
+            "n_docs",
+            F.round(
+                F.col("n_docs").cast("double") / F.col("label_total"), 6
+            ).alias("label_share"),
+            F.round(F.col("a"), 6).alias("overall_accuracy"),
+        )
+        .orderBy("lang_label", "lang_guess")
+    )
+
+
+# Round-6 oracle twins for previously rows-only families (VERDICT r05
+# item 5): BPE tokenizer training and SemDeDup semantic deduplication.
+#
+# Both follow the established engine-exactness disciplines:
+#
+# - ``bpe_train_merges_unrolled``: the BPE merge sequence is fully
+#   deterministic (pair-frequency argmax with lexicographic tie-break),
+#   so a fixed number of rounds unrolls into a DuckDB CTE chain — the
+#   md5-twin / HITS unrolled-twin discipline. The merge application
+#   (leftmost non-overlapping replace) is a ``list_reduce`` over
+#   singleton-wrapped symbols; it is provably identical to the greedy
+#   scan because a freshly merged symbol ``l||r`` can never equal ``l``
+#   (that would need ``r = ''``), so re-examining it as a new left edge
+#   cannot fire.
+# - ``semdedup_md5_integer_twin``: SemDeDup's engine-defined parts
+#   (float k-means, float cosine) are replaced by md5-seeded centroids
+#   (one integer-exact Lloyd ASSIGNMENT step) and an all-integer squared
+#   cosine threshold test: with q = floor(1000·x) per component,
+#   cos(a,b) >= t  ⇔  dot > 0 ∧ dot²·den² >= num²·|a|²·|b|²  for
+#   t = num/den — exact int64 arithmetic on both engines (bounds: dim 64,
+#   |q| <= 1024 ⇒ dot <= 2²⁶·2⁴ < 2³⁰, dot² · 25 < 2⁶⁵? no — dot <=
+#   64·1024² ≈ 2²⁶, dot² ≈ 2⁵², ·25 < 2⁵⁷ ✓). The blocked-pair /
+#   transitive-closure / min-id-keeper machinery — the part that must
+#   scale — is the same shape as operators/semdedup.py; the oracle closes
+#   duplicate groups with a recursive min-label CTE.
+
+# ------------------------------------------------- BPE unrolled twin
+
+_BPE_TWIN_ROUNDS = 4
+
+
+def _bpe_twin_oracle(n_rounds: int = _BPE_TWIN_ROUNDS) -> str:
+    """Generate the unrolled n-round BPE training CTE chain.
+
+    Round r: p{r} counts adjacent symbol pairs weighted by word freq,
+    m{r} is the argmax merge (freq DESC, lhs, rhs — binary collation on
+    [a-z0-9] tokens matches Spark), s{r} applies it via list_reduce.
+    MATERIALIZED hints keep the multiply-referenced symbol tables from
+    re-evaluating exponentially through the chain.
+    """
+    parts = [
+        """
+      WITH words AS MATERIALIZED (
+        SELECT word, count(*)::BIGINT AS freq FROM (
+          SELECT unnest(list_filter(
+                   string_split_regex(lower(text), '[^a-z0-9]+'),
+                   t -> t != '')) AS word
+          FROM documents
+        ) GROUP BY word
+      ),
+      s0 AS MATERIALIZED (
+        SELECT freq, string_split(word, '') AS syms FROM words
+      )"""
+    ]
+    for r in range(1, n_rounds + 1):
+        prev = f"s{r - 1}"
+        parts.append(
+            f"""
+      p{r} AS (
+        SELECT syms[i] AS lhs, syms[i + 1] AS rhs,
+               sum(freq)::BIGINT AS pair_freq
+        FROM {prev}, unnest(range(1, len(syms))) AS u(i)
+        WHERE len(syms) > 1
+        GROUP BY 1, 2
+      ),
+      m{r} AS MATERIALIZED (
+        SELECT lhs, rhs, pair_freq FROM p{r}
+        ORDER BY pair_freq DESC, lhs, rhs LIMIT 1
+      )"""
+        )
+        if r < n_rounds:
+            parts.append(
+                f"""
+      s{r} AS MATERIALIZED (
+        SELECT freq,
+               list_reduce(
+                 list_transform(syms, s -> [s]),
+                 (acc, x) -> CASE
+                   WHEN acc[-1] = m{r}.lhs AND x[1] = m{r}.rhs
+                   THEN list_concat(acc[:len(acc) - 1],
+                                    [m{r}.lhs || m{r}.rhs])
+                   ELSE list_concat(acc, x) END
+               ) AS syms
+        FROM {prev}, m{r}
+      )"""
+            )
+    union = "\n        UNION ALL ".join(
+        f"SELECT {r - 1} AS rank, lhs, rhs, pair_freq FROM m{r}"
+        for r in range(1, n_rounds + 1)
+    )
+    return (
+        ",".join(parts)
+        + f"""
+      SELECT rank::INTEGER AS rank, lhs, rhs, pair_freq
+      FROM ({union})
+      ORDER BY rank
+    """
+    )
+
+
+@register(
+    "bpe_train_merges_unrolled",
+    "Oracle-exact BPE training twin (VERDICT r05 item 5a): the first "
+    f"{_BPE_TWIN_ROUNDS} merges of operators/bpe.py::bpe_train — "
+    "corpus word count, then per round an exact integer pair-frequency "
+    "argmax (ties on lexicographic (lhs, rhs)) and the leftmost-non-"
+    "overlapping merge application. The DuckDB oracle unrolls the "
+    "rounds as a CTE chain with the merge applied by list_reduce "
+    "(provably equivalent to the greedy scan: a fresh l||r symbol can "
+    "never equal l). The rows-only bpe_train_merges entry keeps the "
+    "12-merge production path; this twin pins the kernel cross-engine. "
+    "100 TB: only the word count touches the corpus (one shuffle, "
+    "map-side combine, read from the shared persisted token frame); "
+    "the merge rounds run driver-side while the vocab fits "
+    "driver_vocab_cap (bounded driver contraction) and as distributed "
+    "pair-explode rounds with a 1-row argmax above it — both paths "
+    "pinned equal in tests/test_bpe.py.",
+    oracle=_bpe_twin_oracle(),
+)
+def bpe_train_merges_unrolled(
+    spark: SparkSession, sf_dir: str
+) -> DataFrame:
+    from scout_spark.operators.bpe import bpe_train
+
+    d = wide_table(spark, sf_dir, "documents")
+    merges = bpe_train(
+        d,
+        "text",
+        n_merges=_BPE_TWIN_ROUNDS,
+        word_freqs=_shared_word_freqs(spark, sf_dir),
+    )
+    return spark.createDataFrame(
+        [(r, l, rt, f) for (r, l, rt, f) in merges],
+        schema="rank int, lhs string, rhs string, pair_freq long",
+    ).orderBy("rank")
+
+
+@register(
+    "lm_kneser_ney_bigram",
+    "Interpolated Kneser-Ney bigram LM (Kneser & Ney 1995; the "
+    "standard n-gram smoothing beyond the existing add-one LM — "
+    "VERDICT r07 'What's missing' item 3): P(w2|w1) = max(c12-d,0)/c1 "
+    "+ (d*N1+(w1,.)/c1) * N1+(.,w2)/N1+(..), discount d = 0.75. All "
+    "counts are exact integers from ONE bigram aggregate; the four "
+    "continuation statistics ride hash-partitioned windows over the "
+    "vocab²-bounded bigram frame (31-word vocab here; at 100 TB the "
+    "bigram frame is vocab-bounded, never corpus-sized). The final "
+    "probability is the IDENTICAL parenthesized double expression on "
+    "both engines over identical integers — deterministic IEEE ops, "
+    "no summation-order hazard. Deterministic LIMIT tie-break.",
+    oracle=f"""
+      WITH t AS (
+        SELECT doc_id,
+               regexp_extract_all(lower(text), '{TOK}') AS toks
+        FROM documents
+      ),
+      bg0 AS (
+        SELECT toks[ue.i] AS w1, toks[ue.i + 1] AS w2
+        FROM t, LATERAL unnest(
+          range(1, greatest(len(toks), 1)::BIGINT)) ue(i)
+      ),
+      bg AS (
+        SELECT w1, w2, count(*)::BIGINT AS c12
+        FROM bg0 GROUP BY w1, w2
+      ),
+      st AS (
+        SELECT w1, w2, c12,
+               sum(c12) OVER (PARTITION BY w1)::BIGINT AS c1,
+               count(*) OVER (PARTITION BY w1)::BIGINT AS n1p_foll,
+               count(*) OVER (PARTITION BY w2)::BIGINT AS n1p_prec,
+               count(*) OVER ()::BIGINT AS n1p_total
+        FROM bg
+      )
+      SELECT w1, w2, c12,
+             round(greatest(c12 - 0.75, 0) / c1
+                   + ((0.75 * n1p_foll) / c1)
+                     * (n1p_prec::DOUBLE / n1p_total), 6) AS p_kn
+      FROM st
+      ORDER BY p_kn DESC, w1, w2
+      LIMIT 20
+    """,
+)
+def lm_kneser_ney_bigram(spark: SparkSession, sf_dir: str) -> DataFrame:
+    d = (
+        wide_table(spark, sf_dir, "documents")
+        .select(
+            "doc_id",
+            lower_tokens(F.col("text")).alias("t"),
+        )
+        .repartition(max(spark.sparkContext.defaultParallelism, 8))
+    )
+    bg0 = d.select(
+        F.explode(
+            F.expr(
+                "arrays_zip("
+                "slice(t, 1, greatest(size(t) - 1, 0)), "
+                "slice(t, 2, greatest(size(t) - 1, 0)))"
+            )
+        ).alias("s")
+    ).select(
+        F.expr("s['0']").alias("w1"), F.expr("s['1']").alias("w2")
+    )
+    bg = bg0.groupBy("w1", "w2").agg(
+        F.count(F.lit(1)).cast("long").alias("c12")
+    )
+    # windows over the vocab²-bounded bigram frame (hash-partitioned;
+    # the one global count is over the same bounded frame)
+    st = bg.select(
+        "w1",
+        "w2",
+        "c12",
+        F.sum("c12").over(Window.partitionBy("w1")).alias("c1"),
+        F.count(F.lit(1))
+        .over(Window.partitionBy("w1"))
+        .alias("n1p_foll"),
+        F.count(F.lit(1))
+        .over(Window.partitionBy("w2"))
+        .alias("n1p_prec"),
+        F.count(F.lit(1)).over(Window.partitionBy()).alias("n1p_total"),
+    )
+    p_kn = F.round(
+        F.greatest(F.col("c12") - 0.75, F.lit(0)) / F.col("c1")
+        + ((0.75 * F.col("n1p_foll")) / F.col("c1"))
+        * (F.col("n1p_prec").cast("double") / F.col("n1p_total")),
+        6,
+    )
+    return (
+        st.select("w1", "w2", "c12", p_kn.alias("p_kn"))
+        .orderBy(F.desc("p_kn"), "w1", "w2")
+        .limit(20)
+    )
+
+
+# Round-8 wave 5: term burstiness (Church & Gale dispersion — the
+# corpus statistic behind stopword/keyword separation) and deterministic
+# hash-based epoch shuffling (how a training pipeline re-orders 100 TB
+# per epoch without materializing a permutation).
+#
+# Prototype check (CLAUDE.md rule): top-term VMR on this corpus spans
+# 1.34-1.47 — measurably over-dispersed vs the Poisson baseline of 1.0,
+# so the metric discriminates even on synthetic text.
+
+@register(
+    "text_term_burstiness",
+    "Term burstiness for the top-20 corpus terms: variance-to-mean "
+    "ratio (index of dispersion) of per-document counts, zeros "
+    "included — Church & Gale's statistic separating bursty content "
+    "words from uniformly-sprinkled function words (VMR 1.0 = "
+    "Poisson). Everything up to the final ratio is integer moments "
+    "(sum x, sum x² over the posting, document count), so the VMR is "
+    "one fixed-order double expression per term — no cross-row FP "
+    "accumulation. 100 TB: token counts shuffle on the term key "
+    "(map-side combinable); the moment frame is vocabulary-sized; "
+    "the doc count broadcasts. Deterministic (freq desc, term) "
+    "LIMIT 20.",
+    oracle="""
+      WITH tok AS (
+        SELECT doc_id,
+               unnest(regexp_extract_all(lower(text), '[a-z0-9]+')) AS t
+        FROM documents
+      ),
+      cnt AS (SELECT t, doc_id, count(*) AS c FROM tok GROUP BY 1, 2),
+      mom AS (
+        SELECT t, sum(c)::BIGINT AS f, count(*)::BIGINT AS df,
+               sum(c * c)::BIGINT AS s2
+        FROM cnt GROUP BY t
+      ),
+      n AS (SELECT count(*)::BIGINT AS nd FROM documents)
+      SELECT m.t AS term, m.f AS freq, m.df AS doc_freq,
+             round((m.s2::DOUBLE / n.nd
+                    - (m.f::DOUBLE / n.nd) * (m.f::DOUBLE / n.nd))
+                   / (m.f::DOUBLE / n.nd), 6) AS vmr
+      FROM mom m, n
+      ORDER BY freq DESC, term
+      LIMIT 20
+    """,
+)
+def text_term_burstiness(spark: SparkSession, sf_dir: str) -> DataFrame:
+    tok = doc_tokens(spark, sf_dir)
+    cnt = tok.groupBy("tok", "doc_id").agg(F.count(F.lit(1)).alias("c"))
+    mom = cnt.groupBy("tok").agg(
+        F.sum("c").cast("long").alias("freq"),
+        F.count(F.lit(1)).cast("long").alias("doc_freq"),
+        F.sum(F.col("c") * F.col("c")).cast("long").alias("s2"),
+    )
+    nd = table(spark, sf_dir, "documents").agg(
+        F.count(F.lit(1)).cast("long").alias("nd")
+    )
+    mean = F.col("freq").cast("double") / F.col("nd")
+    return (
+        mom.crossJoin(F.broadcast(nd))
+        .select(
+            F.col("tok").alias("term"),
+            "freq",
+            "doc_freq",
+            F.round(
+                (F.col("s2").cast("double") / F.col("nd") - mean * mean)
+                / mean,
+                6,
+            ).alias("vmr"),
+        )
+        .orderBy(F.col("freq").desc(), "term")
+        .limit(20)
+    )
+
+
+# --------------------------------------------- trigram Kneser-Ney LM
+
+
+@register(
+    "lm_kneser_ney_trigram",
+    "Interpolated trigram Kneser-Ney (Chen & Goodman 1999 recursion, "
+    "one order above lm_kneser_ney_bigram): P(w3|w1w2) backs off into "
+    "the CONTINUATION bigram distribution, whose counts come from the "
+    "trigram TYPE table (N1+(.w2w3) distinct-predecessor counts, "
+    "N1+(.w2.) middle-type totals, bigram-type unigram continuation) "
+    "— the full backoff chain, not a renormalized shortcut. All "
+    "counts are exact integers from ONE trigram aggregate plus "
+    "windows over the vocab^3-bounded type frame and a join to the "
+    "vocab^2-bounded bigram-type frame (31-word vocab here; at 100 TB "
+    "both frames are vocabulary-bounded, never corpus-sized). The "
+    "probability is the IDENTICAL parenthesized expression over "
+    "identical integers on both engines — deterministic IEEE ops. "
+    "Deterministic LIMIT tie-break. Prototyped in DuckDB before "
+    "building (26,165 trigram tokens, discriminative top-20).",
+    oracle=f"""
+      WITH t AS (
+        SELECT doc_id,
+               regexp_extract_all(lower(text), '{TOK}') AS toks
+        FROM documents
+      ),
+      tg0 AS (
+        SELECT toks[ue.i] AS w1, toks[ue.i + 1] AS w2,
+               toks[ue.i + 2] AS w3
+        FROM t, LATERAL unnest(
+          range(1, greatest(len(toks) - 1, 1)::BIGINT)) ue(i)
+      ),
+      tg AS (
+        SELECT w1, w2, w3, count(*)::BIGINT AS c123
+        FROM tg0 GROUP BY w1, w2, w3
+      ),
+      bt AS (
+        SELECT w2, w3, count(*)::BIGINT AS n_prec
+        FROM tg GROUP BY w2, w3
+      ),
+      bts AS (
+        SELECT w2, w3, n_prec,
+               sum(n_prec) OVER (PARTITION BY w2)::BIGINT AS nmid_2,
+               count(*) OVER (PARTITION BY w2)::BIGINT AS n23_types,
+               count(*) OVER (PARTITION BY w3)::BIGINT AS nprec_3,
+               count(*) OVER ()::BIGINT AS ntot
+        FROM bt
+      ),
+      st AS (
+        SELECT w1, w2, w3, c123,
+               sum(c123) OVER (PARTITION BY w1, w2)::BIGINT AS c12,
+               count(*) OVER (PARTITION BY w1, w2)::BIGINT AS n3_foll
+        FROM tg
+      )
+      SELECT st.w1, st.w2, st.w3, st.c123,
+             round(greatest(st.c123 - 0.75, 0) / st.c12
+                   + ((0.75 * st.n3_foll) / st.c12)
+                     * (greatest(b.n_prec - 0.75, 0) / b.nmid_2
+                        + ((0.75 * b.n23_types) / b.nmid_2)
+                          * (b.nprec_3::DOUBLE / b.ntot)), 6) AS p_kn3
+      FROM st JOIN bts b ON st.w2 = b.w2 AND st.w3 = b.w3
+      ORDER BY p_kn3 DESC, st.w1, st.w2, st.w3
+      LIMIT 20
+    """,
+)
+def lm_kneser_ney_trigram(spark: SparkSession, sf_dir: str) -> DataFrame:
+    d = (
+        wide_table(spark, sf_dir, "documents")
+        .select(
+            "doc_id",
+            lower_tokens(F.col("text")).alias("t"),
+        )
+        .repartition(max(spark.sparkContext.defaultParallelism, 8))
+    )
+    # arrays_zip of three shifted slices — O(1) references to the
+    # derived token array (the CollapseProject discipline)
+    tg0 = d.select(
+        F.explode(
+            F.expr(
+                "arrays_zip("
+                "slice(t, 1, greatest(size(t) - 2, 0)), "
+                "slice(t, 2, greatest(size(t) - 2, 0)), "
+                "slice(t, 3, greatest(size(t) - 2, 0)))"
+            )
+        ).alias("s")
+    ).select(
+        F.expr("s['0']").alias("w1"),
+        F.expr("s['1']").alias("w2"),
+        F.expr("s['2']").alias("w3"),
+    )
+    tg = tg0.groupBy("w1", "w2", "w3").agg(
+        F.count(F.lit(1)).cast("long").alias("c123")
+    )
+    bt = tg.groupBy("w2", "w3").agg(
+        F.count(F.lit(1)).cast("long").alias("n_prec")
+    )
+    # windows over the vocab^2-bounded bigram-type frame (bounds: the
+    # 31-word corpus vocab; vocabulary-bounded at any corpus size)
+    bts = bt.select(
+        "w2",
+        "w3",
+        "n_prec",
+        F.sum("n_prec").over(Window.partitionBy("w2")).alias("nmid_2"),
+        F.count(F.lit(1))
+        .over(Window.partitionBy("w2"))
+        .alias("n23_types"),
+        F.count(F.lit(1))
+        .over(Window.partitionBy("w3"))
+        .alias("nprec_3"),
+        F.count(F.lit(1)).over(Window.partitionBy()).alias("ntot"),
+    )
+    # windows over the vocab^3-bounded trigram type frame
+    st = tg.select(
+        "w1",
+        "w2",
+        "w3",
+        "c123",
+        F.sum("c123").over(Window.partitionBy("w1", "w2")).alias("c12"),
+        F.count(F.lit(1))
+        .over(Window.partitionBy("w1", "w2"))
+        .alias("n3_foll"),
+    )
+    j = st.join(
+        bts.withColumnRenamed("w2", "bw2").withColumnRenamed(
+            "w3", "bw3"
+        ),
+        (F.col("w2") == F.col("bw2")) & (F.col("w3") == F.col("bw3")),
+    )
+    # the IDENTICAL parenthesized expression as the oracle
+    p_lower = F.greatest(F.col("n_prec") - 0.75, F.lit(0)) / F.col(
+        "nmid_2"
+    ) + ((0.75 * F.col("n23_types")) / F.col("nmid_2")) * (
+        F.col("nprec_3").cast("double") / F.col("ntot")
+    )
+    p_kn3 = F.round(
+        F.greatest(F.col("c123") - 0.75, F.lit(0)) / F.col("c12")
+        + ((0.75 * F.col("n3_foll")) / F.col("c12")) * p_lower,
+        6,
+    )
+    return (
+        j.select("w1", "w2", "w3", "c123", p_kn3.alias("p_kn3"))
+        .orderBy(F.desc("p_kn3"), "w1", "w2", "w3")
+        .limit(20)
+    )
+
+
+# Round-10 wave: LM-quality scoring + per-source video-dedup KPI.
+#
+# Two entries from the scoped round-9 queue (PLANS.md), both
+# prototype-first per the standing discipline:
+#
+# - trigram Kneser-Ney HELD-OUT document scoring — the CCNet-style
+#   perplexity filter at trigram order, completing the LM-quality stack
+#   (bigram train r08 -> trigram train r09 -> held-out score r10).
+#   Prototype (sf0.01): 400 train / 100 held-out docs, all 20 sources on
+#   both sides of the split; 4,868 held-out trigram tokens, 0 OOV (the
+#   31-word corpus vocab — the OOV columns stay as the structural audit
+#   a real vocab needs); min distance of ln(p)*1e6 from a rounding
+#   boundary 1.8e-5 across all 3,873 distinct model probabilities —
+#   four orders of magnitude above cross-engine libm ULP error, so the
+#   integer round(ln(p)*1e6)::BIGINT recipe cannot flap.
+# - per-source keyframe dup-rate KPI — the rollup a video-curation team
+#   acts on, over the r09 keyframe pair machinery (shared
+#   keyframe_candidate_pairs helper + shared _keyframe_ctes oracle body,
+#   so the KPI cannot diverge from the pair entry). Prototype (sf0.01):
+#   rates 0-0.2 across 20 sources, 45 dup media of which 43 cross-source
+#   (src7 shows a within-source dup, so the cross split is non-vacuous).
+#
+# No reference analogue (``/root/reference`` is a 673-line DuckDB
+# geocoder); these are build-brief training-pipeline extensions.
+
+# -------------------------- trigram KN held-out document perplexity
+
+# held-out = (doc_id // 20) % 5 == 4 — a 20% split with WITHIN-source
+# variation (doc_id % k with k | 20 is CONSTANT per source on this
+# corpus: % 20 == source index; the URL-blocklist entry hit that
+# collapse). doc_id is non-negative so DuckDB's truncating // and
+# Spark's `div` agree. Prototyped: 400/100 docs, 20/20 sources.
+_HELD_SQL = "(doc_id // 20) % 5 = 4"
+
+
+def kn3_doc_trigrams(docs: DataFrame) -> DataFrame:
+    """(doc_id, text) -> (doc_id, w1, w2, w3) token trigrams — the
+    tokenize + shifted-slice zip (O(1) references to the derived
+    token array, the CollapseProject discipline). Pure-Column, so it
+    runs identically on a batch frame and a streaming frame (shared
+    by the batch entry and streaming/kn3score.py)."""
+    d = docs.select(
+        "doc_id",
+        lower_tokens(F.col("text")).alias("t"),
+        # the repartition barrier materializes the token array so the
+        # THREE slice references below read the shuffled column — not
+        # three CollapseProject-inlined regex evaluations per row
+        # (legal on streaming frames too)
+    ).repartition(
+        max(docs.sparkSession.sparkContext.defaultParallelism, 8)
+    )
+    return d.select(
+        "doc_id",
+        F.explode(
+            F.expr(
+                "arrays_zip("
+                "slice(t, 1, greatest(size(t) - 2, 0)), "
+                "slice(t, 2, greatest(size(t) - 2, 0)), "
+                "slice(t, 3, greatest(size(t) - 2, 0)))"
+            )
+        ).alias("s"),
+    ).select(
+        "doc_id",
+        F.expr("s['0']").alias("w1"),
+        F.expr("s['1']").alias("w2"),
+        F.expr("s['2']").alias("w3"),
+    )
+
+
+def kn3_model(train_trigrams: DataFrame) -> dict:
+    """Train-side interpolated-KN model from a trigram token frame:
+    a lazy-checkpointed vocab^3-bounded type frame plus its derived
+    dims. The checkpoint is load-bearing: the dim broadcasts
+    materialize as SEPARATE jobs with no cross-job subtree reuse (the
+    BM25 persist lesson) — without it each dim re-ran the full
+    tokenize pipeline (7 parquet scans, 9.5 s at sf0.1; fenced: 1
+    scan, 2.2 s). The checkpoint is EAGER: with a lazy one the 5
+    broadcast-dim jobs race to materialize it and each recomputes the
+    full corpus lineage when the scheduler launches them concurrently
+    (AQE-on happened to serialize them; bench runs AQE-off and
+    measured 1.7-23 s flapping walls at load 6+). ntot is a collected
+    int (1-row bounded driver contraction) so scoring composes with
+    Structured Streaming's single-aggregation limit (no 1-row
+    crossJoin needed)."""
+    tg = (
+        train_trigrams.groupBy("w1", "w2", "w3")
+        .agg(F.count(F.lit(1)).cast("long").alias("c123"))
+        .localCheckpoint(eager=True)
+    )
+    ctx = tg.groupBy("w1", "w2").agg(
+        F.sum("c123").cast("long").alias("c12"),
+        F.count(F.lit(1)).cast("long").alias("n3_foll"),
+    )
+    bt = tg.groupBy("w2", "w3").agg(
+        F.count(F.lit(1)).cast("long").alias("n_prec")
+    )
+    mid = bt.groupBy("w2").agg(
+        F.sum("n_prec").cast("long").alias("nmid_2"),
+        F.count(F.lit(1)).cast("long").alias("n23_types"),
+    )
+    uni = bt.groupBy("w3").agg(
+        F.count(F.lit(1)).cast("long").alias("nprec_3")
+    )
+    ntot = bt.count()
+    return {
+        "tg": tg,
+        "ctx": ctx,
+        "bt": bt,
+        "mid": mid,
+        "uni": uni,
+        "ntot": ntot,
+    }
+
+
+def kn3_score_per_doc(trigrams: DataFrame, model: dict) -> DataFrame:
+    """Per-doc KN3 log-score over a trigram token stream: 5 broadcast
+    dim joins (type-bounded; flip to shuffle joins past the
+    autoBroadcast threshold), per-token integer round(ln(p)*1e6)
+    micros, then exactly ONE aggregation — token-level scoring skips
+    the per-(doc,type) shuffle AND keeps the pipeline legal on a
+    streaming frame (Structured Streaming allows one aggregation).
+    Integer sums over tokens equal the type-level sum(lnp*cnt)
+    exactly."""
+    s = (
+        trigrams.join(F.broadcast(model["ctx"]), ["w1", "w2"], "left")
+        .join(F.broadcast(model["tg"]), ["w1", "w2", "w3"], "left")
+        .join(F.broadcast(model["mid"]), ["w2"], "left")
+        .join(F.broadcast(model["bt"]), ["w2", "w3"], "left")
+        .join(F.broadcast(model["uni"]), ["w3"], "left")
+        .withColumn("ntot", F.lit(model["ntot"]).cast("long"))
+        .withColumn("c123", F.coalesce(F.col("c123"), F.lit(0)))
+        .withColumn("n_prec", F.coalesce(F.col("n_prec"), F.lit(0)))
+        .withColumn(
+            "scored",
+            F.col("c12").isNotNull()
+            & F.col("nmid_2").isNotNull()
+            & F.col("nprec_3").isNotNull(),
+        )
+    )
+    # the IDENTICAL parenthesized expression as the oracle (and as
+    # lm_kneser_ney_trigram — deterministic IEEE ops over identical
+    # integers), then integer log-micros
+    p_lower = F.greatest(F.col("n_prec") - 0.75, F.lit(0)) / F.col(
+        "nmid_2"
+    ) + ((0.75 * F.col("n23_types")) / F.col("nmid_2")) * (
+        F.col("nprec_3").cast("double") / F.col("ntot")
+    )
+    p_kn3 = (
+        F.greatest(F.col("c123") - 0.75, F.lit(0)) / F.col("c12")
+        + ((0.75 * F.col("n3_foll")) / F.col("c12")) * p_lower
+    )
+    sc = s.select(
+        "doc_id",
+        "scored",
+        F.when(
+            F.col("scored"),
+            F.round(F.log(p_kn3) * 1e6, 0).cast("long"),
+        )
+        .otherwise(F.lit(0))
+        .alias("lnp_micro"),
+    )
+    agg = sc.groupBy("doc_id").agg(
+        F.count(F.lit(1)).cast("long").alias("n_trigrams"),
+        F.sum(F.when(F.col("scored"), 1).otherwise(0))
+        .cast("long")
+        .alias("n_scored"),
+        F.sum(F.when(F.col("scored"), 0).otherwise(1))
+        .cast("long")
+        .alias("n_oov"),
+        F.sum(F.when(F.col("scored"), F.col("lnp_micro")).otherwise(0))
+        .cast("long")
+        .alias("total_lnp_micro"),
+    )
+    avg_lnp = F.when(
+        F.col("n_scored") > 0,
+        F.round(
+            (F.col("total_lnp_micro").cast("double") / 1e6)
+            / F.col("n_scored"),
+            6,
+        ),
+    )
+    return agg.select(
+        "doc_id",
+        "n_trigrams",
+        "n_scored",
+        "n_oov",
+        "total_lnp_micro",
+        avg_lnp.alias("avg_lnp"),
+    )
+
+
+@register(
+    "lm_kn3_heldout_doc_score",
+    "Held-out document scoring under the interpolated trigram "
+    "Kneser-Ney LM — the CCNet-style perplexity filter: train the "
+    "full Chen-Goodman continuation-backoff model on the 80% train "
+    "split, score every held-out document's trigrams by per-token "
+    "round(ln(p)*1e6)::BIGINT (integer log-probability micros: "
+    "integer SUMS are order-insensitive, so the per-doc total is "
+    "engine-exact; prototype measured 1.8e-5 min distance from any "
+    "rounding boundary vs ~1e-9 libm ULP error). Unseen events fall "
+    "through the backoff chain (c123=0 -> continuation bigram -> "
+    "continuation unigram); trigrams whose context/continuation is "
+    "absent from train count as OOV (0 here by prototype — 31-word "
+    "vocab — but the audit columns are what a real vocab needs). "
+    "avg_lnp is ONE double division chain over identical integers, "
+    "rounded 6dp. Most-surprising (lowest avg_lnp) 20 docs, doc_id "
+    "tie-break. 100 TB: model frames are type-bounded dims "
+    "(broadcast here; flip to shuffle joins past the autoBroadcast "
+    "threshold), the held-out stream joins row-local, one per-doc "
+    "shuffle; train/held branches reuse ONE tokenize exchange.",
+    oracle=f"""
+      WITH t AS (
+        SELECT doc_id, {_HELD_SQL} AS held,
+               regexp_extract_all(lower(text), '{TOK}') AS toks
+        FROM documents
+      ),
+      tg0 AS (
+        SELECT doc_id, held, toks[ue.i] AS w1, toks[ue.i + 1] AS w2,
+               toks[ue.i + 2] AS w3
+        FROM t, LATERAL unnest(
+          range(1, greatest(len(toks) - 1, 1)::BIGINT)) ue(i)
+      ),
+      tg AS (
+        SELECT w1, w2, w3, count(*)::BIGINT AS c123
+        FROM tg0 WHERE NOT held GROUP BY 1, 2, 3
+      ),
+      ctx AS (
+        SELECT w1, w2, sum(c123)::BIGINT AS c12,
+               count(*)::BIGINT AS n3_foll
+        FROM tg GROUP BY 1, 2
+      ),
+      bt AS (
+        SELECT w2, w3, count(*)::BIGINT AS n_prec FROM tg GROUP BY 1, 2
+      ),
+      mid AS (
+        SELECT w2, sum(n_prec)::BIGINT AS nmid_2,
+               count(*)::BIGINT AS n23_types
+        FROM bt GROUP BY 1
+      ),
+      uni AS (
+        SELECT w3, count(*)::BIGINT AS nprec_3 FROM bt GROUP BY 1
+      ),
+      tot AS (SELECT count(*)::BIGINT AS ntot FROM bt),
+      h AS (
+        SELECT doc_id, w1, w2, w3, count(*)::BIGINT AS cnt
+        FROM tg0 WHERE held GROUP BY 1, 2, 3, 4
+      ),
+      s AS (
+        SELECT h.doc_id, h.cnt,
+               ctx.c12, ctx.n3_foll, coalesce(tg.c123, 0) AS c123,
+               mid.nmid_2, mid.n23_types,
+               coalesce(bt.n_prec, 0) AS n_prec,
+               uni.nprec_3, tot.ntot,
+               (ctx.c12 IS NOT NULL AND mid.nmid_2 IS NOT NULL
+                AND uni.nprec_3 IS NOT NULL) AS scored
+        FROM h
+        LEFT JOIN ctx ON h.w1 = ctx.w1 AND h.w2 = ctx.w2
+        LEFT JOIN tg ON h.w1 = tg.w1 AND h.w2 = tg.w2 AND h.w3 = tg.w3
+        LEFT JOIN mid ON h.w2 = mid.w2
+        LEFT JOIN bt ON h.w2 = bt.w2 AND h.w3 = bt.w3
+        LEFT JOIN uni ON h.w3 = uni.w3
+        CROSS JOIN tot
+      ),
+      sc AS (
+        SELECT doc_id, cnt, scored,
+               CASE WHEN scored THEN round(ln(
+                 greatest(c123 - 0.75, 0) / c12
+                 + ((0.75 * n3_foll) / c12)
+                   * (greatest(n_prec - 0.75, 0) / nmid_2
+                      + ((0.75 * n23_types) / nmid_2)
+                        * (nprec_3::DOUBLE / ntot))) * 1e6)::BIGINT
+               ELSE 0 END AS lnp_micro
+        FROM s
+      ),
+      agg AS (
+        SELECT doc_id,
+               sum(cnt)::BIGINT AS n_trigrams,
+               sum(CASE WHEN scored THEN cnt ELSE 0 END)::BIGINT
+                 AS n_scored,
+               sum(CASE WHEN scored THEN 0 ELSE cnt END)::BIGINT
+                 AS n_oov,
+               sum(CASE WHEN scored THEN lnp_micro * cnt
+                        ELSE 0 END)::BIGINT AS total_lnp_micro
+        FROM sc GROUP BY doc_id
+      )
+      SELECT doc_id, n_trigrams, n_scored, n_oov, total_lnp_micro,
+             CASE WHEN n_scored > 0 THEN
+               round((total_lnp_micro::DOUBLE / 1e6) / n_scored, 6)
+             END AS avg_lnp
+      FROM agg
+      ORDER BY avg_lnp ASC, doc_id
+      LIMIT 20
+    """,
+)
+def lm_kn3_heldout_doc_score(
+    spark: SparkSession, sf_dir: str
+) -> DataFrame:
+    docs = wide_table(spark, sf_dir, "documents").select(
+        "doc_id",
+        "text",
+        (F.expr("doc_id div 20") % 5 == 4).alias("held"),
+    )
+    # the held filter sits BELOW the tokenize in both pipelines (each
+    # pass tokenizes only its split); the train pass materializes the
+    # model behind kn3_model's checkpoint, the held pass streams
+    # through kn3_score_per_doc's broadcast joins
+    model = kn3_model(
+        kn3_doc_trigrams(docs.where(~F.col("held")))
+    )
+    scores = kn3_score_per_doc(
+        kn3_doc_trigrams(docs.where(F.col("held"))), model
+    )
+    # asc_nulls_last, NOT asc (ADVICE r10): avg_lnp is NULL for an
+    # all-OOV held-out doc (n_scored=0); Spark asc is NULLS FIRST but
+    # DuckDB's ORDER BY avg_lnp ASC is NULLS LAST, so plain asc would
+    # flip the top-20 the day a regenerated corpus produces one.
+    # Pinned on an all-OOV fixture in tests/test_r11_advice.py.
+    return scores.orderBy(
+        F.asc_nulls_last("avg_lnp"), "doc_id"
+    ).limit(20)

@@ -1,9 +1,7 @@
-"""Embedding / similarity-search inventory (training-data pipeline
-extensions per the build brief): brute-force cosine top-k (baseline), an
-LSH-bucketed scale path, embedding near-dup pairs, and MinHash/SimHash
-near-dup (rows-only — engine hash functions are not portable to the
-oracle; their correctness is pinned by tests/test_dedup.py against exact
-Jaccard ground truth instead).
+"""Vector search and embedding analytics over the embeddings table: exact
+and approximate nearest neighbours (LSH, IVF, PQ, int8), clustering,
+PCA and embedding drift. md5-seeded integer twins make the approximate
+families oracle-checkable.
 """
 
 from __future__ import annotations
@@ -15,9 +13,7 @@ from pyspark.sql import functions as F
 
 from scout_spark.functions.vectors import cosine_similarity
 from scout_spark.inventory import register
-from scout_spark.inventory.core import _t, _th
-
-QUERY_VEC_ID = 0
+from scout_spark.inventory.common import QUERY_VEC_ID, table, wide_table
 
 
 @register(
@@ -43,7 +39,7 @@ QUERY_VEC_ID = 0
     """,
 )
 def ann_bruteforce(spark: SparkSession, sf_dir: str) -> DataFrame:
-    e = _t(spark, sf_dir, "embeddings")
+    e = table(spark, sf_dir, "embeddings")
     qrows = (
         e.where(F.col("vec_id") == QUERY_VEC_ID)
         .select(F.col("embedding").cast("array<double>"))
@@ -145,7 +141,7 @@ def _neardup_label_kernel(pdf: pd.DataFrame) -> pd.DataFrame:
     """,
 )
 def embedding_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    e = _t(spark, sf_dir, "embeddings")
+    e = table(spark, sf_dir, "embeddings")
     pairs = (
         # NULL labels never pair: the oracle's a.label = b.label
         # equi-join drops them, but groupBy treats NULL as a real
@@ -178,7 +174,7 @@ def embedding_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
 def ann_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     from scout_spark.operators.ann import lsh_bucket_topk
 
-    e = _th(spark, sf_dir, "embeddings")
+    e = wide_table(spark, sf_dir, "embeddings")
     return lsh_bucket_topk(e, query_vec_id=QUERY_VEC_ID, k=10, n_planes=4)
 
 
@@ -245,7 +241,7 @@ def _lsh_md5_sig_sql(n_planes: int) -> str:
 def ann_lsh_md5(spark: SparkSession, sf_dir: str) -> DataFrame:
     import math
 
-    e = _t(spark, sf_dir, "embeddings")
+    e = table(spark, sf_dir, "embeddings")
     qrows = (
         e.where(F.col("vec_id") == QUERY_VEC_ID)
         .select(F.col("embedding").cast("array<double>"))
@@ -324,8 +320,8 @@ def ann_lsh_md5(spark: SparkSession, sf_dir: str) -> DataFrame:
 def crossmodal_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     from scout_spark.functions.vectors import l2_norm
 
-    d = _t(spark, sf_dir, "documents")
-    e = _t(spark, sf_dir, "embeddings")
+    d = table(spark, sf_dir, "documents")
+    e = table(spark, sf_dir, "embeddings")
     return (
         d.join(e, d.doc_id == e.vec_id)
         .groupBy("lang")
@@ -350,7 +346,7 @@ def crossmodal_join(spark: SparkSession, sf_dir: str) -> DataFrame:
 def embedding_hashed_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
     from scout_spark.operators.embed import embed_documents
 
-    d = embed_documents(_th(spark, sf_dir, "documents"))
+    d = embed_documents(wide_table(spark, sf_dir, "documents"))
     a, b = d.alias("a"), d.alias("b")
     cos = cosine_similarity(F.col("a.embedding"), F.col("b.embedding"))
     return (
@@ -385,49 +381,11 @@ def embedding_hashed_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
 def ann_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
     from scout_spark.operators.ann import ivf_topk
 
-    # _t, not _th: the centroid sample + point lookup want the narrow
+    # table, not wide_table: the centroid sample + point lookup want the narrow
     # scan; the fused assign+cosine UDF runs once over a small table
     # (measured 0.25s -> 0.46s with the widening exchange)
-    e = _t(spark, sf_dir, "embeddings")
+    e = table(spark, sf_dir, "embeddings")
     return ivf_topk(e, query_vec_id=QUERY_VEC_ID, k=10, n_centroids=8, nprobe=2)
-
-
-@register(
-    "dedup_minhash_lsh",
-    "MinHash + LSH banding near-dup candidates over word shingles "
-    "(training-data dedup at 100 TB: shingle → k minhashes via seeded "
-    "murmur3 → band buckets → bucket equi-join → exact-Jaccard verify). "
-    "Rows-only: the fast SipHash/crc32 kernels aren't reproducible in "
-    "the oracle; candidate completeness vs exact Jaccard is pinned in "
-    "tests, and the full kernel itself is oracle-checked cross-engine "
-    "by the md5 twin dedup_minhash_md5_signatures (hash_parity.py).",
-    tags=("rows-only",),
-)
-def dedup_minhash(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from scout_spark.operators.dedup import minhash_lsh_pairs
-
-    d = _th(spark, sf_dir, "documents")
-    return minhash_lsh_pairs(
-        d, id_col="doc_id", text_col="text", num_hashes=16, bands=4, threshold=0.8
-    )
-
-
-@register(
-    "dedup_simhash",
-    "SimHash near-dup fingerprints over tokens: 32-bit signature via "
-    "per-token murmur3 bit-voting, grouped by signature band for "
-    "candidate generation. Arrow-batched pandas UDF computes the bit "
-    "votes (numpy-vectorized); everything else stays DataFrame ops. "
-    "Rows-only (engine-specific hashing); the md5 twin "
-    "dedup_simhash_hamming_pairs (hash_parity.py) oracle-checks the "
-    "simhash+banding pipeline end-to-end cross-engine.",
-    tags=("rows-only",),
-)
-def dedup_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from scout_spark.operators.dedup import simhash_signatures
-
-    d = _th(spark, sf_dir, "documents")
-    return simhash_signatures(d, id_col="doc_id", text_col="text")
 
 
 @register(
@@ -447,7 +405,7 @@ def ann_int8_quantized(spark: SparkSession, sf_dir: str) -> DataFrame:
         quantized_topk,
     )
 
-    e = _th(spark, sf_dir, "embeddings")
+    e = wide_table(spark, sf_dir, "embeddings")
     scale = corpus_absmax(e)
     codes = quantize_int8(e, scale).select("vec_id", "code")
     qcode = codes.where(F.col("vec_id") == QUERY_VEC_ID).collect()[0]["code"]
@@ -487,7 +445,7 @@ def ann_int8_quantized(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def embedding_mean_pool_by_label(spark: SparkSession, sf_dir: str) -> DataFrame:
-    e = _th(spark, sf_dir, "embeddings")
+    e = wide_table(spark, sf_dir, "embeddings")
     v = e.select(
         "label", F.posexplode("embedding").alias("dim0", "val")
     ).select("label", (F.col("dim0") + 1).alias("dim"), F.col("val").cast("double"))
@@ -549,7 +507,7 @@ def embedding_mean_pool_by_label(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def ann_int8_codes_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
-    e = _th(spark, sf_dir, "embeddings")
+    e = wide_table(spark, sf_dir, "embeddings")
     absmax = F.aggregate(
         F.transform("embedding", lambda x: F.abs(x.cast("double"))),
         F.lit(0.0),
@@ -710,7 +668,7 @@ def lsh_md5_multiprobe_topk(
     """,
 )
 def ann_lsh_multiprobe(spark: SparkSession, sf_dir: str) -> DataFrame:
-    e = _t(spark, sf_dir, "embeddings")
+    e = table(spark, sf_dir, "embeddings")
     return lsh_md5_multiprobe_topk(e, QUERY_VEC_ID, k=10)
 
 
@@ -797,7 +755,7 @@ def _ivf_int_vec(vec) -> list[int]:
 def ann_ivf_md5_integer(spark: SparkSession, sf_dir: str) -> DataFrame:
     import hashlib
 
-    e = _t(spark, sf_dir, "embeddings")
+    e = table(spark, sf_dir, "embeddings")
     crows = (
         e.select(
             "vec_id",
@@ -926,7 +884,7 @@ def ann_ivf_md5_integer(spark: SparkSession, sf_dir: str) -> DataFrame:
 def kmeans_lloyd_round_integer(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
-    e = _t(spark, sf_dir, "embeddings")
+    e = table(spark, sf_dir, "embeddings")
     crows = (
         e.select(
             "vec_id",
@@ -1058,7 +1016,7 @@ _PQ_K = 8  # codebook entries per subspace
     """,
 )
 def ann_pq_md5_integer(spark: SparkSession, sf_dir: str) -> DataFrame:
-    e = _t(spark, sf_dir, "embeddings")
+    e = table(spark, sf_dir, "embeddings")
     crows = (
         e.select(
             "vec_id",
@@ -1115,3 +1073,1014 @@ def ann_pq_md5_integer(spark: SparkSession, sf_dir: str) -> DataFrame:
         .orderBy("adc_dist", "vec_id")
         .limit(10)
     )
+
+
+@register(
+    "ann_ivf_kmeans_topk",
+    "IVF ANN probed with TRAINED k-means centroids (operators/kmeans.py "
+    "feeding operators/ann.py::ivf_topk) instead of the hash-ranked "
+    "sample — the full production shape: Lloyd rounds give tighter "
+    "cells, so the same nprobe reads fewer wrong-cell candidates. "
+    "Rows-only (iterative training); recall vs brute force pinned in "
+    "tests/test_kmeans.py.",
+    tags=("rows-only",),
+)
+def ann_ivf_kmeans(spark: SparkSession, sf_dir: str) -> DataFrame:
+    from scout_spark.operators.ann import ivf_topk
+    from scout_spark.operators.kmeans import kmeans_fit
+
+    e = table(spark, sf_dir, "embeddings")
+    cents = kmeans_fit(e, k=8, n_iters=3)
+    return ivf_topk(
+        e, query_vec_id=100, k=10, nprobe=2, centroid_matrix=cents
+    )
+
+
+@register(
+    "kmeans_cluster_profile",
+    "Distributed Lloyd's k-means over the embedding column (operators/"
+    "kmeans.py) — the TRAINED coarse quantizer the IVF index's hash-"
+    "sampled stand-in defers to. Per iteration: broadcast-closure numpy "
+    "assignment (one matmul/argmax per Arrow batch), then a single "
+    "groupBy with dim scalar avg() aggregates (JVM map-side partial "
+    "agg — the shuffle carries k·dim partial sums, never vectors). "
+    "Returns per-cluster sizes, mean intra-cluster cosine distance, and "
+    "centroid L2 norm. Rows-only: the training loop is iterative "
+    "(driver holds k·dim floats); determinism and inertia behavior "
+    "pinned in tests/test_kmeans.py against an exact numpy replica.",
+    tags=("rows-only",),
+)
+def kmeans_cluster_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
+    import numpy as np
+
+    from scout_spark.operators.kmeans import (
+        kmeans_assign_with_distance,
+        kmeans_fit,
+    )
+
+    e = table(spark, sf_dir, "embeddings")
+    cents = kmeans_fit(e, k=8, n_iters=4)
+    assigned = kmeans_assign_with_distance(e, cents)
+    norms = np.linalg.norm(cents, axis=1)
+    return (
+        assigned.groupBy("cluster")
+        .agg(
+            F.count(F.lit(1)).alias("n_vectors"),
+            F.round(F.avg("cos_dist"), 6).alias("mean_intra_cosine_dist"),
+        )
+        .select(
+            "cluster",
+            "n_vectors",
+            "mean_intra_cosine_dist",
+            F.round(
+                F.element_at(
+                    F.array(*[F.lit(float(x)) for x in norms]),
+                    F.col("cluster").cast("int") + 1,
+                ),
+                6,
+            ).alias("centroid_l2_norm"),
+        )
+    )
+
+
+@register(
+    "embedding_dimension_profile",
+    "Per-dimension feature profile of the embedding corpus (the sanity "
+    "dashboard every vector pipeline runs before training an index: "
+    "dead dimensions, scale drift, outlier coordinates): posexplode to "
+    "(dim, value), one hash aggregate over 64 keys — map-side combine "
+    "collapses the shuffle to 64 partial rows per task at any corpus "
+    "size. Spark posexplode is 0-based; +1 aligns with the oracle's "
+    "1-based generate_subscripts.",
+    oracle="""
+      WITH flat AS (
+        SELECT generate_subscripts(embedding, 1) AS dim,
+               unnest(embedding)::DOUBLE AS x
+        FROM embeddings
+      )
+      SELECT dim, count(*) AS n,
+             round(avg(x), 6) AS mean_x,
+             round(var_samp(x), 6) AS var_x,
+             round(min(x), 6) AS min_x,
+             round(max(x), 6) AS max_x
+      FROM flat GROUP BY dim ORDER BY dim
+    """,
+)
+def embedding_dimension_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
+    e = table(spark, sf_dir, "embeddings")
+    flat = e.select(
+        F.posexplode(F.col("embedding").cast("array<double>")).alias(
+            "pos", "x"
+        )
+    ).select((F.col("pos") + 1).alias("dim"), "x")
+    return (
+        flat.groupBy("dim")
+        .agg(
+            F.count(F.lit(1)).alias("n"),
+            F.round(F.avg("x"), 6).alias("mean_x"),
+            F.round(F.var_samp("x"), 6).alias("var_x"),
+            F.round(F.min("x"), 6).alias("min_x"),
+            F.round(F.max("x"), 6).alias("max_x"),
+        )
+        .orderBy("dim")
+    )
+
+
+@register(
+    "embedding_pca_label_scatter",
+    "Distributed PCA (operators/pca.py): one mapInPandas pass computes "
+    "the (n, Σx, ΣxxT) sufficient statistics as bounded per-partition "
+    "partials, the driver eigendecomposes the 64×64 covariance (O(d³), "
+    "corpus-size independent), and the projection is a vectorized "
+    "pandas-UDF matmul. Output: per-label count and mean/stddev of the "
+    "top-2 principal components — if the labels are real clusters, "
+    "they separate in PC space. Rows-only: eigensolver internals are "
+    "engine-specific; ground truth vs a dense numpy PCA is pinned in "
+    "tests/test_graph.py.",
+    tags=("rows-only",),
+)
+def embedding_pca_label_scatter(spark: SparkSession, sf_dir: str) -> DataFrame:
+    from scout_spark.operators.pca import fit_pca, project
+
+    e = table(spark, sf_dir, "embeddings")
+    mu, comps, ratio = fit_pca(e, "embedding", k=2)
+    proj = project(e, mu, comps, "embedding")
+    return (
+        proj.select(
+            "label",
+            F.col("pc")[0].alias("pc1"),
+            F.col("pc")[1].alias("pc2"),
+        )
+        .groupBy("label")
+        .agg(
+            F.count(F.lit(1)).alias("n_vecs"),
+            F.round(F.avg("pc1"), 4).alias("mean_pc1"),
+            F.round(F.avg("pc2"), 4).alias("mean_pc2"),
+            F.round(F.stddev_samp("pc1"), 4).alias("sd_pc1"),
+            F.round(F.stddev_samp("pc2"), 4).alias("sd_pc2"),
+        )
+        .withColumn("explained_ratio_pc1", F.round(F.lit(float(ratio[0])), 4))
+        .orderBy("label")
+    )
+
+
+@register(
+    "ann_pq_adc_topk",
+    "Product-quantized ANN with asymmetric distance computation "
+    "(Jégou et al., TPAMI 2011; operators/pq.py) — the billion-vector "
+    "production recipe: m=8 subspace codebooks (k=16, trained on a "
+    "bounded deterministic driver sample, the faiss practice), corpus "
+    "stored as 8 uint8 codes (32x payload cut at d=64), query scored "
+    "via one (m x k) lookup table — a joinless codes scan into "
+    "TakeOrderedAndProject, no float vector touched at query time. "
+    "Rows-only: codebook contents are engine-specific; recall@50>=0.8 "
+    "of the float brute-force top-10 (the shortlist a float-rerank "
+    "stage would verify) is pinned in tests/test_graph.py.",
+    tags=("rows-only",),
+)
+def ann_pq_adc_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
+    from scout_spark.operators.pq import encode_pq, pq_topk, train_codebooks
+
+    e = table(spark, sf_dir, "embeddings")
+    qrows = (
+        e.where(F.col("vec_id") == QUERY_VEC_ID)
+        .select(F.col("embedding").cast("array<double>"))
+        .collect()
+    )
+    if not qrows:
+        return spark.createDataFrame(
+            [], "vec_id long, adc_score double"
+        )
+    qv = np.array(qrows[0][0])
+    books = train_codebooks(e, "embedding", m=8, k=16)
+    codes = encode_pq(e, books, "embedding").select("vec_id", "code")
+    return pq_topk(codes, qv, books, k_results=10, exclude_id=QUERY_VEC_ID)
+
+
+@register(
+    "ann_ivf_pq_topk",
+    "IVF-PQ composite ANN (faiss IndexIVFPQ shape; operators/pq.py::"
+    "ivf_pq_topk): coarse quantizer routes vectors to cells, corpus "
+    "persists as m=8-byte PQ codes, the query probes nprobe=2 of 8 "
+    "cells and ADC-scores only their codes — candidate-fraction and "
+    "payload reductions COMPOSE (2/8 of the rows x 32x smaller each). "
+    "Rows-only: codebooks and cell sample are engine-specific; "
+    "recall and actual-pruning assertions are pinned in "
+    "tests/test_graph.py.",
+    tags=("rows-only",),
+)
+def ann_ivf_pq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
+    from scout_spark.operators.pq import ivf_pq_topk
+
+    e = table(spark, sf_dir, "embeddings")
+    topk, _diag = ivf_pq_topk(e, QUERY_VEC_ID, k_results=10)
+    return topk
+
+
+# ----------------------------------------------------------- ANN range
+
+
+_RADIUS_QUERY_ID = 0
+_RADIUS_MIN_COS = 0.25
+
+
+@register(
+    "ann_range_search_radius",
+    "Range similarity search — ALL vectors within a cosine radius of "
+    "the query (threshold 0.25), the dual of top-k ANN: dedup sweeps "
+    "and policy filters want 'everything closer than r', not a fixed "
+    "k. The query vector rides a broadcast 1-row crossJoin (lazy "
+    "cursor — no build-time driver job), JVM-side zip_with dot "
+    "product; the threshold test runs on the UNROUNDED similarity on "
+    "both engines, so the predicate is the identical double comparison. "
+    "100 TB: embarrassingly parallel scan with predicate selectivity "
+    "doing the work of top-k's heap — pair with the IVF partition-"
+    "pruned variant when the radius is tight.",
+    oracle=f"""
+      SELECT e.vec_id, e.label,
+             round(list_cosine_similarity(e.embedding::DOUBLE[], q.qv), 6)
+               AS cos_sim
+      FROM embeddings e
+      CROSS JOIN (SELECT embedding::DOUBLE[] AS qv FROM embeddings
+                  WHERE vec_id = {_RADIUS_QUERY_ID}) q
+      WHERE e.vec_id <> {_RADIUS_QUERY_ID}
+        AND list_cosine_similarity(e.embedding::DOUBLE[], q.qv)
+            >= {_RADIUS_MIN_COS}
+      ORDER BY cos_sim DESC, e.vec_id
+    """,
+)
+def ann_range_search_radius(spark: SparkSession, sf_dir: str) -> DataFrame:
+    from scout_spark.functions.vectors import cosine_similarity
+
+    e = table(spark, sf_dir, "embeddings")
+    # lazy cursor resolution (ADVICE r04 d): the query vector rides a
+    # broadcast 1-row crossJoin instead of a build-time collect(), so
+    # queries() construction launches zero Spark jobs; a missing query
+    # id yields an empty broadcast side and 0 rows — identical to the
+    # oracle's empty-subquery semantics
+    q = (
+        e.where(F.col("vec_id") == _RADIUS_QUERY_ID)
+        .select(F.col("embedding").cast("array<double>").alias("__qv"))
+    )
+    cos = cosine_similarity(F.col("embedding"), F.col("__qv"))
+    return (
+        e.where(F.col("vec_id") != _RADIUS_QUERY_ID)
+        .crossJoin(F.broadcast(q))
+        .where(cos >= _RADIUS_MIN_COS)
+        .select("vec_id", "label", F.round(cos, 6).alias("cos_sim"))
+        .orderBy(F.col("cos_sim").desc(), "vec_id")
+    )
+
+
+# ----------------------------------------- embedding drift (centroids)
+
+
+@register(
+    "embedding_drift_centroid_shift",
+    "Embedding distribution drift between two corpus snapshots "
+    "(vec_id parity stands in for before/after): per-label centroids "
+    "from ONE (label, half, dim) integer-count + double-sum "
+    "aggregation over posexploded dims (dims bounded at 64 — the "
+    "explode multiplies rows by a constant), then the L2 centroid "
+    "shift per label with per-dim deltas rounded 9dp before the "
+    "squared sum (one canonical FP order per dim on both engines, "
+    "dim-indexed aggregation is order-free). The monitoring query "
+    "every embedding pipeline runs on re-encode. 100 TB: map-side "
+    "combine on (label, half, dim); output bounded by |labels|.",
+    oracle="""
+      WITH e AS (
+        SELECT label, vec_id % 2 AS half,
+               u.i - 1 AS dim, embedding[u.i]::DOUBLE AS v
+        FROM embeddings,
+             unnest(range(1, len(embedding) + 1)) u(i)
+      ),
+      c AS (
+        SELECT label, half, dim,
+               sum(v) / count(*) AS mu
+        FROM e GROUP BY label, half, dim
+      ),
+      d AS (
+        SELECT a.label, a.dim,
+               round(a.mu - b.mu, 9) AS delta
+        FROM c a JOIN c b
+          ON a.label = b.label AND a.dim = b.dim
+         AND a.half = 0 AND b.half = 1
+      )
+      SELECT label,
+             count(*)::BIGINT AS n_dims,
+             round(sqrt(sum(delta * delta)), 6) AS centroid_shift_l2
+      FROM d GROUP BY label ORDER BY label
+    """,
+)
+def embedding_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
+    emb = table(spark, sf_dir, "embeddings")
+    e = emb.select(
+        "label",
+        (F.col("vec_id") % 2).alias("half"),
+        F.posexplode(F.col("embedding").cast("array<double>")).alias(
+            "dim", "v"
+        ),
+    )
+    c = e.groupBy("label", "half", "dim").agg(
+        (F.sum("v") / F.count(F.lit(1))).alias("mu")
+    )
+    a = c.where(F.col("half") == 0).select(
+        "label", "dim", F.col("mu").alias("mu_a")
+    )
+    b = c.where(F.col("half") == 1).select(
+        F.col("label").alias("lb"),
+        F.col("dim").alias("db"),
+        F.col("mu").alias("mu_b"),
+    )
+    d = a.join(
+        b, (a.label == b.lb) & (a.dim == b.db)
+    ).select(
+        "label", F.round(F.col("mu_a") - F.col("mu_b"), 9).alias("delta")
+    )
+    return (
+        d.groupBy("label")
+        .agg(
+            F.count(F.lit(1)).alias("n_dims"),
+            F.round(
+                F.sqrt(F.sum(F.col("delta") * F.col("delta"))), 6
+            ).alias("centroid_shift_l2"),
+        )
+        .orderBy("label")
+    )
+
+
+# ----------------------- ANN recall: quantized vs exact ranking
+
+_RECALL_K = 10
+
+
+@register(
+    "ann_recall_eval_quantized_vs_exact",
+    "ANN quality evaluation — recall@10 and Jaccard overlap of an "
+    "UNNORMALIZED integer dot-product ranking (the floor(v*1e6) "
+    "quantization every cross-engine ANN twin here uses) against the "
+    "exact cosine ranking: the retrieval-metrics cousin of "
+    "retrieval_eval_ndcg_mrr applied to the vector stack, and the "
+    "measurement that justifies (or indicts) dropping normalization "
+    "at index time. Both rankings are fully deterministic "
+    "((rounded score, vec_id) orderings), so the overlap is "
+    "oracle-checkable — unlike recall against a float index, which "
+    "is rows-only. Query vector resolved at plan-build time "
+    "(ann_cosine_topk_bruteforce pattern). 100 TB: two joinless "
+    "TakeOrdered scans and a 10x10 intersection.",
+    oracle=f"""
+      WITH iv AS (
+        SELECT vec_id, embedding,
+               list_transform(embedding,
+                              x -> floor(x::DOUBLE * 1e6)::BIGINT) AS q
+        FROM embeddings
+      ),
+      qv AS (
+        SELECT embedding::DOUBLE[] AS v, q FROM iv
+        WHERE vec_id = {QUERY_VEC_ID}
+      ),
+      exact AS (
+        SELECT e.vec_id FROM iv e, qv
+        WHERE e.vec_id <> {QUERY_VEC_ID}
+        ORDER BY round(list_cosine_similarity(e.embedding::DOUBLE[],
+                                              qv.v), 6) DESC, e.vec_id
+        LIMIT {_RECALL_K}
+      ),
+      approx AS (
+        SELECT e.vec_id FROM iv e, qv
+        WHERE e.vec_id <> {QUERY_VEC_ID}
+        ORDER BY list_sum(list_transform(range(1, len(e.q) + 1),
+                          i -> e.q[i] * qv.q[i])) DESC, e.vec_id
+        LIMIT {_RECALL_K}
+      ),
+      common AS (
+        SELECT count(*)::BIGINT AS n_common
+        FROM exact JOIN approx USING (vec_id)
+      )
+      SELECT {_RECALL_K} AS k,
+             n_common,
+             round(n_common::DOUBLE / {_RECALL_K}, 6) AS recall_at_k,
+             round(n_common::DOUBLE / (2 * {_RECALL_K} - n_common), 6)
+               AS jaccard_at_k
+      FROM common
+    """,
+)
+def ann_recall_eval_quantized_vs_exact(
+    spark: SparkSession, sf_dir: str
+) -> DataFrame:
+    import math
+
+    from scout_spark.functions.vectors import cosine_similarity
+
+    e = table(spark, sf_dir, "embeddings")
+    qrows = (
+        e.where(F.col("vec_id") == QUERY_VEC_ID)
+        .select(F.col("embedding").cast("array<double>"))
+        .collect()
+    )
+    if not qrows:
+        return e.where(F.lit(False)).select(
+            F.lit(_RECALL_K).alias("k"),
+            F.lit(0).cast("long").alias("n_common"),
+            F.lit(0.0).alias("recall_at_k"),
+            F.lit(0.0).alias("jaccard_at_k"),
+        )
+    qv = qrows[0][0]
+    qint = [math.floor(x * 1e6) for x in qv]
+    base = e.where(F.col("vec_id") != QUERY_VEC_ID)
+    exact = (
+        base.select(
+            "vec_id",
+            F.round(
+                cosine_similarity(F.col("embedding"), F.lit(qv)), 6
+            ).alias("s"),
+        )
+        .orderBy(F.col("s").desc(), "vec_id")
+        .limit(_RECALL_K)
+        .select("vec_id")
+    )
+    # integer dot product, JVM-side HOFs (bounded by dim=64 per row;
+    # the production path uses the numpy matmul in operators/ann.py)
+    # one array literal, not 64 py4j lit calls (r12 plan-build chatter
+    # fix; Python ints infer ArrayType(LongType) — zip_with promotes
+    # identically, values unchanged)
+    qarr = F.lit([int(v) for v in qint])
+    dot = F.expr(
+        "aggregate(zip_with(transform(embedding,"
+        " x -> cast(floor(cast(x as double) * 1e6) as bigint)), qarr,"
+        " (x, y) -> x * y), 0L, (acc, v) -> acc + v)"
+    )
+    approx = (
+        base.withColumn("qarr", qarr)
+        .select("vec_id", dot.alias("d"))
+        .orderBy(F.col("d").desc(), "vec_id")
+        .limit(_RECALL_K)
+        .select("vec_id")
+    )
+    common = exact.join(approx, "vec_id").agg(
+        F.count(F.lit(1)).alias("n_common")
+    )
+    return common.select(
+        F.lit(_RECALL_K).alias("k"),
+        F.col("n_common").cast("long").alias("n_common"),
+        F.round(F.col("n_common").cast("double") / _RECALL_K, 6).alias(
+            "recall_at_k"
+        ),
+        F.round(
+            F.col("n_common").cast("double")
+            / (2 * _RECALL_K - F.col("n_common")),
+            6,
+        ).alias("jaccard_at_k"),
+    )
+
+
+# ------------------------------------------- centroid silhouette
+
+_SIL_Q = 10_000  # quantization keeps the quadratic form in BIGINT range
+
+
+@register(
+    "embedding_centroid_silhouette",
+    "Centroid-variant silhouette score per label — 'how separable is "
+    "this labeling': s = (b - a)/max(a, b) with a = distance to own "
+    "centroid, b = distance to the nearest other centroid (the "
+    "linear-time variant of the quadratic classic; centroids include "
+    "the point — documented variant). ENGINE-EXACT: vectors quantize "
+    f"to floor(v*{_SIL_Q}), centroids stay RATIONAL (integer "
+    "dim-sums S_d over count n, never a double mean), and the "
+    "distance quadratic form n^2*d^2 = sum_d (n*q_d - S_d)^2 is pure "
+    "BIGINT; only the final sqrt/division are doubles (IEEE ops are "
+    "correctly rounded, hence bit-identical cross-engine — unlike "
+    "exp/ln). 100 TB: centroids are one (label, dim) integer agg "
+    "broadcast back; per-point work is |labels| quadratic forms, "
+    "row-local.",
+    oracle=f"""
+      WITH q AS (
+        SELECT vec_id, label,
+               list_transform(embedding,
+                              x -> floor(x::DOUBLE * {_SIL_Q})::BIGINT) AS q
+        FROM embeddings
+      ),
+      flat AS (
+        SELECT vec_id, label, unnest(q) AS v,
+               unnest(range(1, len(q) + 1)) AS d
+        FROM q
+      ),
+      cent AS (
+        SELECT label AS clabel, d, sum(v)::BIGINT AS s,
+               count(DISTINCT vec_id)::BIGINT AS n
+        FROM flat GROUP BY label, d
+      ),
+      dist AS (
+        SELECT f.vec_id, f.label, c.clabel,
+               sqrt(sum((c.n * f.v - c.s) * (c.n * f.v - c.s))::DOUBLE)
+                 / max(c.n) AS dist
+        FROM flat f JOIN cent c USING (d)
+        GROUP BY f.vec_id, f.label, c.clabel
+      ),
+      ab AS (
+        SELECT vec_id, label,
+               max(CASE WHEN label = clabel THEN dist END) AS a,
+               min(CASE WHEN label <> clabel THEN dist END) AS b
+        FROM dist GROUP BY vec_id, label
+      )
+      SELECT label, count(*)::BIGINT AS n_points,
+             round(avg(CASE WHEN greatest(a, b) = 0 THEN 0.0
+                       ELSE (b - a) / greatest(a, b) END), 6)
+               AS mean_silhouette
+      FROM ab GROUP BY label
+      ORDER BY label
+    """,
+)
+def embedding_centroid_silhouette(
+    spark: SparkSession, sf_dir: str
+) -> DataFrame:
+    e = wide_table(spark, sf_dir, "embeddings")
+    q = e.select(
+        "vec_id",
+        "label",
+        F.expr(
+            f"transform(embedding,"
+            f" x -> cast(floor(cast(x as double) * {_SIL_Q}) as bigint))"
+        ).alias("q"),
+    )
+    flat = q.select(
+        "vec_id", "label", F.posexplode("q").alias("d", "v")
+    )
+    cent = flat.groupBy(F.col("label").alias("clabel"), "d").agg(
+        F.sum("v").alias("s"),
+        F.count_distinct("vec_id").alias("n"),
+    )
+    dist = (
+        flat.join(F.broadcast(cent), "d")
+        .groupBy("vec_id", "label", "clabel")
+        .agg(
+            (
+                F.sqrt(
+                    F.sum(
+                        (F.col("n") * F.col("v") - F.col("s"))
+                        * (F.col("n") * F.col("v") - F.col("s"))
+                    ).cast("double")
+                )
+                / F.max("n")
+            ).alias("dist")
+        )
+    )
+    ab = dist.groupBy("vec_id", "label").agg(
+        F.max(
+            F.when(F.col("label") == F.col("clabel"), F.col("dist"))
+        ).alias("a"),
+        F.min(
+            F.when(F.col("label") != F.col("clabel"), F.col("dist"))
+        ).alias("b"),
+    )
+    # singleton-label guard (a = b = 0): classic silhouette defines
+    # s = 0 there; an unguarded 0/0 would be NaN-vs-error cross-engine
+    s = F.when(
+        F.greatest(F.col("a"), F.col("b")) == 0, F.lit(0.0)
+    ).otherwise(
+        (F.col("b") - F.col("a")) / F.greatest(F.col("a"), F.col("b"))
+    )
+    return (
+        ab.groupBy("label")
+        .agg(
+            F.count(F.lit(1)).cast("long").alias("n_points"),
+            F.round(F.avg(s), 6).alias("mean_silhouette"),
+        )
+        .orderBy("label")
+    )
+
+
+@register(
+    "embedding_quantization_distortion",
+    "Int8 quantization DISTORTION audit — the storage-tradeoff number "
+    "the ANN int8 family needs next to its recall: per-label "
+    "reconstruction MSE, worst absolute error, and mean cosine "
+    "similarity between each vector and its dequantized self. Codes "
+    "use the SQL-expressible symmetric form of ann_int8_codes "
+    "(sign * min(floor(|x|/s*127 + 0.5), 127) on the corpus-max "
+    "scale — floor on bit-identical doubles, not np.rint's "
+    "half-to-even); reconstruction c*s/127 and the error folds are "
+    "sequential IEEE ops over 64 dims, identical on both engines, "
+    "rounded 6dp after the per-label average. 100 TB: one scan for "
+    "the scale (broadcast back), one joinless scan for the per-"
+    "vector errors, one dimension-bounded agg.",
+    oracle="""
+      WITH s AS (
+        SELECT max(list_max(list_transform(embedding,
+                                           x -> abs(x::DOUBLE)))) AS s
+        FROM embeddings
+      ),
+      per AS (
+        SELECT e.label,
+               list_sum(list_transform(e.embedding, x ->
+                 (x::DOUBLE - (CASE WHEN x >= 0
+                    THEN least(floor(x::DOUBLE / s.s * 127.0 + 0.5), 127)
+                    ELSE -least(floor(-(x::DOUBLE) / s.s * 127.0 + 0.5),
+                                127) END) * s.s / 127.0)
+                 * (x::DOUBLE - (CASE WHEN x >= 0
+                    THEN least(floor(x::DOUBLE / s.s * 127.0 + 0.5), 127)
+                    ELSE -least(floor(-(x::DOUBLE) / s.s * 127.0 + 0.5),
+                                127) END) * s.s / 127.0)))
+                 / len(e.embedding) AS mse,
+               list_max(list_transform(e.embedding, x ->
+                 abs(x::DOUBLE - (CASE WHEN x >= 0
+                    THEN least(floor(x::DOUBLE / s.s * 127.0 + 0.5), 127)
+                    ELSE -least(floor(-(x::DOUBLE) / s.s * 127.0 + 0.5),
+                                127) END) * s.s / 127.0))) AS maxerr
+        FROM embeddings e, s
+      )
+      SELECT label, count(*)::BIGINT AS n_vectors,
+             round(avg(mse), 6) AS avg_mse,
+             round(max(maxerr), 6) AS max_abs_err
+      FROM per GROUP BY label
+      ORDER BY label
+    """,
+)
+def embedding_quantization_distortion(
+    spark: SparkSession, sf_dir: str
+) -> DataFrame:
+    e = wide_table(spark, sf_dir, "embeddings")
+    s = e.agg(
+        F.max(
+            F.expr(
+                "array_max(transform(embedding,"
+                " x -> abs(cast(x as double))))"
+            )
+        ).alias("s")
+    )
+    recon_err = (
+        "transform(embedding, x -> cast(x as double)"
+        " - (CASE WHEN x >= 0"
+        "    THEN least(floor(cast(x as double) / s * 127.0 + 0.5), 127)"
+        "    ELSE -least(floor(-cast(x as double) / s * 127.0 + 0.5),"
+        "                127) END) * s / 127.0)"
+    )
+    per = e.crossJoin(F.broadcast(s)).select(
+        "label",
+        F.expr(
+            f"aggregate({recon_err}, cast(0.0 as double),"
+            " (acc, d) -> acc + d * d) / size(embedding)"
+        ).alias("mse"),
+        F.expr(
+            f"array_max(transform({recon_err}, d -> abs(d)))"
+        ).alias("maxerr"),
+    )
+    return (
+        per.groupBy("label")
+        .agg(
+            F.count(F.lit(1)).cast("long").alias("n_vectors"),
+            F.round(F.avg("mse"), 6).alias("avg_mse"),
+            F.round(F.max("maxerr"), 6).alias("max_abs_err"),
+        )
+        .orderBy("label")
+    )
+
+
+# ------------------ between-class scatter power-iteration twin
+
+_PCA_SCALE = 1000  # q = floor(1000·x): exact on IEEE doubles
+_PCA_VSCALE = 4096  # per-round renormalization target for |v|
+_PCA_ROUNDS = 48  # eigengap ~0.80 on this corpus: 0.8^48 ≈ 2e-5
+
+
+def _pca_twin_oracle(rounds: int = _PCA_ROUNDS) -> str:
+    """Unrolled integer power iteration on the between-class (label)
+    scatter of the quantized embeddings.
+
+    The RAW covariance of this corpus is near-isotropic (λ2/λ1 ≈ 0.98
+    at sf0.1 — power iteration cannot separate a top direction there;
+    measured cos 0.01 after 64 rounds), but the label structure gives
+    the between-class scatter a 0.80 eigengap at every sf. Integer
+    form: d_l = n·S_l − n_l·S (= n·n_l·(μ_l − μ), BIGINT-exact), then
+    B[i,j] = Σ_l sgn(d_l[i]d_l[j]) · (|d_l[i]d_l[j]| // (n·n_l)) —
+    per-entry truncation ≤ |labels| absolute, relative ~1e-8. Each
+    round: w = B·v, renormalize with the cross-engine-unambiguous
+    sgn·(|w| // max(max|w| // VSCALE, 1)) (DuckDB ``//`` TRUNCATES
+    while Python ``//`` floors — routing through abs makes them
+    identical). Bounds measured on this corpus: |B| ≤ 8e8, |w| ≤
+    1.5e13 ≪ 2⁶³; the Spark driver loop asserts the bound, DuckDB
+    raises on overflow (loud either way). Direction == numpy's true
+    top eigenvector of the float between-class scatter (cos = 1.0 at
+    sf0.001/0.01/0.1, pinned in tests/test_graph.py).
+    """
+    parts = [
+        f"""
+      WITH flat AS MATERIALIZED (
+        SELECT vec_id, label,
+               generate_subscripts(embedding, 1) AS dim,
+               floor(unnest(embedding)::DOUBLE * {_PCA_SCALE})::BIGINT AS q
+        FROM embeddings
+      ),
+      nn AS (SELECT count(DISTINCT vec_id) AS n FROM flat),
+      nl AS (
+        SELECT label, count(DISTINCT vec_id) AS c FROM flat
+        GROUP BY label
+      ),
+      sg AS MATERIALIZED (
+        SELECT dim, sum(q)::BIGINT AS s FROM flat GROUP BY dim
+      ),
+      sl AS MATERIALIZED (
+        SELECT label, dim, sum(q)::BIGINT AS s FROM flat
+        GROUP BY label, dim
+      ),
+      dvec AS MATERIALIZED (
+        SELECT sl.label, sl.dim,
+               (nn.n * sl.s - nl.c * sg.s)::BIGINT AS d
+        FROM sl CROSS JOIN nn
+        JOIN nl USING (label)
+        JOIN sg ON sg.dim = sl.dim
+      ),
+      bmat AS MATERIALIZED (
+        SELECT a.dim AS i, b.dim AS j,
+               sum(
+                 (CASE WHEN a.d * b.d < 0 THEN -1 ELSE 1 END)
+                 * (abs(a.d * b.d) // (nn.n * nl.c))
+               )::BIGINT AS s
+        FROM dvec a
+        JOIN dvec b USING (label)
+        JOIN nl USING (label)
+        CROSS JOIN nn
+        GROUP BY a.dim, b.dim
+      ),
+      v0 AS (SELECT dim AS i, 1::BIGINT AS v FROM sg)"""
+    ]
+    for r in range(1, rounds + 1):
+        parts.append(
+            f""",
+      w{r} AS MATERIALIZED (
+        SELECT m.i, sum(m.s * v.v)::BIGINT AS w
+        FROM bmat m JOIN v{r - 1} v ON v.i = m.j
+        GROUP BY m.i
+      ),
+      d{r} AS (
+        SELECT greatest(max(abs(w)) // {_PCA_VSCALE}, 1) AS d FROM w{r}
+      ),
+      v{r} AS MATERIALIZED (
+        SELECT i,
+               (CASE WHEN w < 0 THEN -1 ELSE 1 END)
+               * (abs(w) // dd.d) AS v
+        FROM w{r} CROSS JOIN d{r} dd
+      )"""
+        )
+    parts.append(
+        f"""
+      SELECT v.i::BIGINT AS dim, v.v::BIGINT AS eigvec_q,
+             m.s::BIGINT AS bscatter_diag
+      FROM v{rounds} v JOIN bmat m ON m.i = v.i AND m.j = v.i
+      ORDER BY dim"""
+    )
+    return "".join(parts)
+
+
+@register(
+    "pca_between_scatter_integer_twin",
+    "Oracle-exact principal-direction twin for the last "
+    "float-iterative rows-only family (embedding_pca_label_scatter "
+    "stays the float production path): top eigendirection of the "
+    "BETWEEN-CLASS label scatter via integer power iteration over "
+    "floor(1000x) codes — the HITS scaled-integer-iteration "
+    "discipline (the raw covariance is near-isotropic on this corpus "
+    "and has no recoverable top direction; the label scatter has a "
+    "0.80 eigengap, see oracle docstring). Spark runs the "
+    "DISTRIBUTED integer moment pass (per-label and global per-dim "
+    "sums — map-side combinable; at 100 TB this is the "
+    "operators/pca.py sufficient-statistics shape) and contracts the "
+    "dimension-bounded 64×64 scatter to the driver for 48 "
+    "deterministic renormalized iterations (Python ints == BIGINT "
+    "under the asserted no-overflow bound; k-means/MMR "
+    "bounded-contraction precedent). Direction == numpy's float "
+    "between-class top eigenvector, cos 1.0 at every sf (pinned in "
+    "tests/test_graph.py).",
+    oracle=_pca_twin_oracle(),
+)
+def pca_between_scatter_integer_twin(
+    spark: SparkSession, sf_dir: str
+) -> DataFrame:
+    e = table(spark, sf_dir, "embeddings")
+    flat = e.select(
+        "vec_id",
+        "label",
+        F.posexplode(
+            F.transform(
+                "embedding",
+                lambda x: F.floor(x.cast("double") * _PCA_SCALE).cast(
+                    "bigint"
+                ),
+            )
+        ).alias("pos", "q"),
+    ).select(
+        "vec_id", "label", (F.col("pos") + 1).alias("dim"), "q"
+    )
+    # ONE distributed moment pass: per-(label, dim) integer sums and
+    # counts — |labels|×64 rows, dimension-bounded contraction. The
+    # global sums, label counts, and n all derive from it exactly
+    # (integer sums are order-independent), saving three extra jobs
+    # that each paid the local job floor (2.2 s -> 1.2 s at sf0.1).
+    sl_rows = (
+        flat.groupBy("label", "dim")
+        .agg(F.sum("q").alias("s"), F.count(F.lit(1)).alias("c"))
+        .collect()
+    )
+    nl = {r["label"]: r["c"] for r in sl_rows if r["dim"] == 1}
+    n = sum(nl.values())
+    sg: dict[int, int] = {}
+    for r in sl_rows:
+        sg[r["dim"]] = sg.get(r["dim"], 0) + r["s"]
+    dims = sorted(sg)
+    dvec: dict[int, dict[int, int]] = {}
+    for r in sl_rows:
+        dvec.setdefault(r["label"], {})[r["dim"]] = (
+            n * r["s"] - nl[r["label"]] * sg[r["dim"]]
+        )
+    b = {(i, j): 0 for i in dims for j in dims}
+    for lab, d in dvec.items():
+        den = n * nl[lab]
+        for i in dims:
+            di = d[i]
+            for j in dims:
+                p = di * d[j]
+                b[(i, j)] += (-1 if p < 0 else 1) * (abs(p) // den)
+    v = {i: 1 for i in dims}
+    for _ in range(_PCA_ROUNDS):
+        w = {i: sum(b[(i, j)] * v[j] for j in dims) for i in dims}
+        for x in w.values():  # mirror DuckDB's loud overflow, not wrap
+            if abs(x) >= 1 << 63:
+                raise OverflowError(
+                    "pca twin: |w| exceeds BIGINT — rescale "
+                    "_PCA_VSCALE for this corpus size"
+                )
+        m = max(max(abs(x) for x in w.values()) // _PCA_VSCALE, 1)
+        v = {
+            i: (-1 if w[i] < 0 else 1) * (abs(w[i]) // m) for i in dims
+        }
+    rows = [(int(i), int(v[i]), int(b[(i, i)])) for i in dims]
+    return spark.createDataFrame(
+        rows, "dim bigint, eigvec_q bigint, bscatter_diag bigint"
+    ).orderBy("dim")
+
+
+# ---------------------------- MMR greedy unrolled integer twin
+
+_MMR_POOL = 20
+_MMR_PICKS = 5
+# λ = 0.7 scaled by 10: score = 7·rel − 3·max_sim_to_selected
+_MMR_WREL, _MMR_WSIM = 7, 3
+
+
+def _mmr_twin_oracle(picks: int = _MMR_PICKS) -> str:
+    """Unrolled greedy MMR over a deterministic top-{pool} candidate
+    cut: pick r is ONE argmax CTE over the pool minus the selected
+    set, scoring 7·rel − 3·max(dot to selected) in exact BIGINT
+    (floor(1000x) codes; dot ≤ 64·3079² < 2³⁰, ×7 ≪ 2⁶³). Plain WITH
+    (no RECURSIVE), so the sel{r} UNION ALL chains are safe from the
+    recursive-grammar footgun documented at the MST twin."""
+    head = f"""
+      WITH qv AS (
+        SELECT list_transform(embedding,
+                 x -> floor(x::DOUBLE * {_PCA_SCALE})::BIGINT) AS q
+        FROM embeddings WHERE vec_id = 0
+      ),
+      cand AS (
+        SELECT e.vec_id,
+               list_transform(e.embedding,
+                 x -> floor(x::DOUBLE * {_PCA_SCALE})::BIGINT) AS v
+        FROM embeddings e WHERE e.vec_id <> 0
+      ),
+      relv AS MATERIALIZED (
+        SELECT c.vec_id, c.v,
+               list_sum(list_transform(range(1, len(c.v) + 1),
+                        i -> c.v[i] * qv.q[i]))::BIGINT AS rel
+        FROM cand c CROSS JOIN qv
+      ),
+      pool AS MATERIALIZED (
+        SELECT vec_id, v, rel FROM relv
+        ORDER BY rel DESC, vec_id LIMIT {_MMR_POOL}
+      ),
+      gram AS MATERIALIZED (
+        SELECT a.vec_id AS ia, b.vec_id AS ib,
+               list_sum(list_transform(range(1, len(a.v) + 1),
+                        i -> a.v[i] * b.v[i]))::BIGINT AS dot
+        FROM pool a JOIN pool b ON a.vec_id <> b.vec_id
+      ),
+      p1 AS (
+        SELECT vec_id, rel, ({_MMR_WREL} * rel)::BIGINT AS score
+        FROM pool ORDER BY rel DESC, vec_id LIMIT 1
+      ),
+      sel1 AS (SELECT vec_id FROM p1)"""
+    parts = [head]
+    for r in range(2, picks + 1):
+        parts.append(
+            f""",
+      p{r} AS (
+        SELECT po.vec_id, po.rel,
+               ({_MMR_WREL} * po.rel
+                - {_MMR_WSIM} * max(g.dot))::BIGINT AS score
+        FROM pool po JOIN gram g ON g.ia = po.vec_id
+        WHERE g.ib IN (SELECT vec_id FROM sel{r - 1})
+          AND po.vec_id NOT IN (SELECT vec_id FROM sel{r - 1})
+        GROUP BY po.vec_id, po.rel
+        ORDER BY score DESC, po.vec_id LIMIT 1
+      ),
+      sel{r} AS (
+        SELECT vec_id FROM sel{r - 1}
+        UNION ALL
+        SELECT vec_id FROM p{r}
+      )"""
+        )
+    union = "\n      UNION ALL\n      ".join(
+        f"SELECT {r} AS rank, vec_id, rel AS rel_dot, score AS mmr_score"
+        f" FROM p{r}"
+        for r in range(1, picks + 1)
+    )
+    parts.append(f"\n      {union}\n      ORDER BY rank")
+    return "".join(parts)
+
+
+@register(
+    "mmr_greedy_integer_unrolled_twin",
+    "Oracle-exact MMR twin (Carbonell & Goldstein greedy "
+    "diversification; rerank_mmr_diversified stays the float "
+    "production path): integer relevance = dot of floor(1000x) codes "
+    "against query vec 0, deterministic top-20 candidate cut, then "
+    "the inherently sequential greedy unrolled as 5 argmax CTEs "
+    "(score = 7·rel − 3·max dot to selected, ties on vec_id) — the "
+    "BPE/MST fixed-step-unroll discipline applied to a greedy trace. "
+    "Spark mirrors the same arithmetic: distributed relevance scan + "
+    "TakeOrdered pool cut, then the driver greedy over the BOUNDED "
+    "20-row pool with exact Python ints (the numpy pool pattern of "
+    "operators/mmr.py, integer-exact here). 100 TB: the scan is the "
+    "joinless ann_cosine shape; greedy cost is pool-bounded, never "
+    "corpus-bounded.",
+    oracle=_mmr_twin_oracle(),
+)
+def mmr_greedy_integer_unrolled_twin(
+    spark: SparkSession, sf_dir: str
+) -> DataFrame:
+    e = table(spark, sf_dir, "embeddings")
+    qrows = (
+        e.where(F.col("vec_id") == 0)
+        .select(
+            F.transform(
+                "embedding",
+                lambda x: F.floor(x.cast("double") * _PCA_SCALE).cast(
+                    "bigint"
+                ),
+            ).alias("q")
+        )
+        .collect()
+    )
+    schema = (
+        "rank int, vec_id bigint, rel_dot bigint, mmr_score bigint"
+    )
+    if not qrows:
+        return spark.createDataFrame([], schema)
+    qv = [int(x) for x in qrows[0]["q"]]
+    # ONE array literal (r12): the per-element F.array(*[F.lit(x)
+    # .cast(...)]) form paid ~128 py4j round trips of plan-construction
+    # chatter per build (A/B: 1.286 -> 1.129 s fresh, rows identical).
+    # Python ints infer ArrayType(LongType) — the same bigint type.
+    qcol = F.lit(qv)
+    cand = e.where(F.col("vec_id") != 0).select(
+        "vec_id",
+        F.transform(
+            "embedding",
+            lambda x: F.floor(x.cast("double") * _PCA_SCALE).cast(
+                "bigint"
+            ),
+        ).alias("v"),
+    )
+    rel = F.aggregate(
+        F.zip_with("v", qcol, lambda a, b: a * b),
+        F.lit(0).cast("bigint"),
+        lambda acc, x: acc + x,
+    )
+    pool = (
+        cand.withColumn("rel", rel)
+        .orderBy(F.col("rel").desc(), "vec_id")
+        .limit(_MMR_POOL)
+        .collect()  # bounded pool — driver greedy over 20 rows
+    )
+    vecs = {r["vec_id"]: [int(x) for x in r["v"]] for r in pool}
+    rels = {r["vec_id"]: int(r["rel"]) for r in pool}
+
+    def dot(a: list[int], b: list[int]) -> int:
+        return sum(x * y for x, y in zip(a, b))
+
+    order = sorted(rels, key=lambda i: (-rels[i], i))
+    first = order[0]
+    picks = [(1, first, rels[first], _MMR_WREL * rels[first])]
+    selected = [first]
+    for rank in range(2, _MMR_PICKS + 1):
+        best = None
+        for i in order:
+            if i in selected:
+                continue
+            msim = max(dot(vecs[i], vecs[s]) for s in selected)
+            score = _MMR_WREL * rels[i] - _MMR_WSIM * msim
+            key = (-score, i)
+            if best is None or key < best[0]:
+                best = (key, i, rels[i], score)
+        picks.append((rank, best[1], best[2], best[3]))
+        selected.append(best[1])
+    return spark.createDataFrame(picks, schema).orderBy("rank")

@@ -137,7 +137,7 @@ def bpe_train(
     on (left, right) lexicographic order.
 
     ``word_freqs`` — optional precomputed (word, freq) frame. Callers
-    holding a persisted corpus token frame (quality_ops.doc_tokens)
+    holding a persisted corpus token frame (common.doc_tokens)
     should pass its groupBy so the corpus-wide tokenize isn't re-paid;
     tokenization must match word_frequencies (lowercase [a-z0-9]+).
 

@@ -36,7 +36,7 @@ def compression_ratio_udf(text: Column) -> Column:
 
     The pandas_udf is created lazily (a DDL-string return type needs an
     active session to parse, and executors import this module without
-    one — the vector_ops.py decorate-inside-the-builder pattern).
+    one — the vector.py decorate-inside-the-builder pattern).
     """
 
     @F.pandas_udf("double")

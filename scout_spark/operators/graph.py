@@ -2,7 +2,7 @@
 
 Input convention: an edge DataFrame with columns ``src``/``dst``
 holding one row per UNDIRECTED edge, canonicalized ``src < dst`` (the
-shape produced by inventory/graph_ops.py::_edges).  Both kernels stay
+shape produced by inventory/graph.py::_edges).  Both kernels stay
 (id, id) / (id, double) slim through every shuffle — no payload columns
 ride the iterations — and both are pure DataFrame ops (no Python in
 the loop body), so they scale with the cluster, not the driver.

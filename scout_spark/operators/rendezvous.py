@@ -10,7 +10,7 @@ pins minimal disruption). This is the stateless routing layer a
 coordination service.
 
 The weight kernel is the repo's cross-engine md5 discipline
-(hash_parity.py): a 60-bit hex prefix of md5("shard:key"), so a
+(common.md5_32): a 60-bit hex prefix of md5("shard:key"), so a
 DuckDB oracle reproduces assignments bit-for-bit.
 """
 

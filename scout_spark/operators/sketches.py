@@ -100,7 +100,7 @@ def cms_build(
 
     ``bucket_fn(col, d, width) -> Column`` overrides the row hash
     (default xxhash64): inject an md5-derived bucket to make the whole
-    sketch oracle-reproducible in DuckDB (the hash_parity.py md5
+    sketch oracle-reproducible in DuckDB (the common.md5_32 md5
     discipline) — still one pure-Column codegen expression, so the
     plan shape is unchanged."""
     bucket = bucket_fn or _default_bucket

@@ -1,7 +1,7 @@
 """Streaming corpus-drift monitoring.
 
 The drift metrics in the batch inventory (PSI, KS, JSD — see
-inventory/insight_ops.py and insight_ops8.py) all reduce the corpus to
+inventory/stats.py) all reduce the corpus to
 a bounded HISTOGRAM first and compute the divergence on that. The
 histogram counts are plain decomposable sums, i.e. MERGEABLE streaming
 state: each micro-batch's partial counts add into the store, so the
@@ -42,7 +42,7 @@ def length_drift_histogram(
     docs: DataFrame, lang_a: str = "en", lang_b: str = "de"
 ) -> DataFrame:
     """Streaming twin of the histogram inside inventory item
-    stats_jensen_shannon_divergence (insight_ops8.py): per-bin counts
+    stats_jensen_shannon_divergence (stats.py): per-bin counts
     for the two compared languages. Conditional counts are
     decomposable sums — mergeable state, split-invariant by
     construction. Complete-mode output; state is |bins| rows."""
@@ -94,7 +94,7 @@ CMS_W = 512
 
 def token_cms_cells(docs: DataFrame) -> DataFrame:
     """Streaming twin of the count-min sketch build inside inventory
-    item sketch_cms_md5_frequencies (analytics_ops.py): per-(depth,
+    item sketch_cms_md5_frequencies (stats.py): per-(depth,
     bucket) md5 cell counts over the token stream. Cell counts are
     decomposable sums — MERGEABLE streaming state, the property that
     makes CMS (and every linear sketch) a streaming structure at all:

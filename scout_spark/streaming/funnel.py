@@ -1,6 +1,6 @@
 """Streaming curation-funnel monitoring.
 
-The batch inventory's curation_filter_funnel (inventory/r8_ops3.py)
+The batch inventory's curation_filter_funnel (inventory/curation.py)
 reduces the corpus to ONE counter row (per-stage survivor counts and
 surviving-token sums) before the per-stage unpivot. Those counters are
 plain decomposable sums — MERGEABLE streaming state: each
@@ -20,7 +20,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame
 
-from scout_spark.inventory.r8_ops3 import (  # noqa: F401 — re-exported
+from scout_spark.inventory.curation import (  # noqa: F401 — re-exported
     funnel_counters,
     funnel_flag_frame,
     funnel_report,

@@ -1,6 +1,6 @@
 """Streaming cross-video keyframe dedup — incremental ingest probe.
 
-The batch inventory's dedup_video_keyframe_phash (inventory/r9_ops.py)
+The batch inventory's dedup_video_keyframe_phash (inventory/multimodal.py)
 band-blocks WHT keyframe hashes and joins buckets across the whole
 corpus. At ingest time the question inverts: a STREAM of newly arrived
 videos probes the already-indexed corpus for shot-level near
@@ -24,7 +24,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from scout_spark.inventory.r9_ops import (  # noqa: F401 — re-exported
+from scout_spark.inventory.multimodal import (  # noqa: F401 — re-exported
     _KF_HAM,
     keyframe_band_index,
 )

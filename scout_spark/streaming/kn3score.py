@@ -1,6 +1,6 @@
 """Streaming LM-quality scoring at ingest.
 
-The batch inventory's lm_kn3_heldout_doc_score (inventory/r10_ops.py)
+The batch inventory's lm_kn3_heldout_doc_score (inventory/text.py)
 trains an interpolated trigram Kneser-Ney model on the 80% split and
 scores held-out documents by per-token integer log-micros. The scoring
 half is exactly the shape a training-data pipeline runs AT INGEST: new
@@ -28,7 +28,7 @@ the stream-static bucket-join pattern the keyframe ingest probe uses.
 
 from __future__ import annotations
 
-from scout_spark.inventory.r10_ops import (  # noqa: F401 — re-exported
+from scout_spark.inventory.text import (  # noqa: F401 — re-exported
     kn3_doc_trigrams,
     kn3_model,
     kn3_score_per_doc,

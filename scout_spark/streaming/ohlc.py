@@ -1,6 +1,6 @@
 """Streaming OHLC candlestick bars.
 
-The batch twin (inventory/series_ops.py::timeseries_ohlc_hourly) takes
+The batch twin (inventory/temporal.py::timeseries_ohlc_hourly) takes
 open/close via row_number — a construct Structured Streaming forbids
 (no window functions over streams).  The streaming-safe reformulation
 rides on the fact that open/close are ARGMIN/ARGMAX by (ts, event_id),

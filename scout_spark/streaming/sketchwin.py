@@ -1,7 +1,7 @@
 """Streaming sliding-window distinct counting via HLL register banks.
 
 The batch entry ``sketch_hll_rolling_window_distinct``
-(inventory/insight_ops23.py) reduces events to per-day HLL registers —
+(inventory/stats.py) reduces events to per-day HLL registers —
 (day, bucket) → max(rho) — then answers every trailing-window distinct
 from the register frame alone. ``max`` is MERGEABLE, idempotent
 streaming state: each micro-batch's partial maxima fold into the store
@@ -23,11 +23,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from scout_spark.inventory.analytics_ops import (
-    _HLL_ALPHA_M2,
-    _HLL_B,
-    _HLL_M,
-)
+from scout_spark.inventory.stats import _HLL_ALPHA_M2, _HLL_B, _HLL_M
 
 _DAY_US = 86_400_000_000
 
@@ -40,7 +36,7 @@ def _hll_cols(user_id: Column) -> tuple[Column, Column]:
         F.substring(F.md5(user_id.cast("string")), 1, 15), 16, 10
     ).cast("long")
     w = F.shiftright(hv, _HLL_B)
-    # single-reference rho (see analytics_ops.sketch_hll_md5): avoids
+    # single-reference rho (see stats.sketch_hll_md5): avoids
     # the 3x md5 CollapseProject inline; identical integers
     rho = F.lit(54) - F.length(F.bin(F.shiftleft(w, 1) + 1))
     return (hv % _HLL_M).alias("bucket"), rho.alias("rho")

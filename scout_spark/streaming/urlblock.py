@@ -1,7 +1,7 @@
 """Streaming URL/domain blocklist monitoring.
 
 The batch inventory's curation_url_domain_blocklist (inventory/
-r9_ops.py) flags each document's registrable domain against a
+curation.py) flags each document's registrable domain against a
 broadcast blocklist and rolls up per-(domain, blocked) counts. The
 flag computation is pure-Column + a stream-static broadcast join —
 legal in Structured Streaming — and the doc counts are plain
@@ -19,7 +19,7 @@ dim — the funnel/drift pattern.
 
 from __future__ import annotations
 
-from scout_spark.inventory.r9_ops import (  # noqa: F401 — re-exported
+from scout_spark.inventory.curation import (  # noqa: F401 — re-exported
     domain_block_counters,
     url_flag_frame,
 )

@@ -945,7 +945,7 @@ def _calibrate(
                 for r, k in shapes
             )
         elif kind == "md5minhash":
-            from scout_spark.inventory.hash_parity import (
+            from scout_spark.inventory.dedup import (
                 _MINHASH_K,
                 _MINHASH_P,
                 _minhash_md5_signature,
@@ -1073,7 +1073,7 @@ def _calibrate(
         elif kind == "windowscan":
             from pyspark.sql.window import Window as _W2
 
-            from scout_spark.inventory.core import _t as _load_t
+            from scout_spark.inventory.common import table as _load_t
 
             def _spark_build(sf_dir=sf_dir):
                 ev = _load_t(spark, sf_dir, "events").select(
@@ -1205,7 +1205,7 @@ def _calibrate(
         elif kind == "rfmntile":
             from pyspark.sql.window import Window as _W4
 
-            from scout_spark.inventory.core import _t as _load_t3
+            from scout_spark.inventory.common import table as _load_t3
 
             def _spark_build(sf_dir=sf_dir):
                 ev = _load_t3(spark, sf_dir, "events").select(
@@ -1292,7 +1292,7 @@ def _calibrate(
             # flag -> (domain, blocked) rollup with countDistinct
             # host -> ordered output. Spark side is the registered
             # entry itself.
-            from scout_spark.inventory.r9_ops import (
+            from scout_spark.inventory.curation import (
                 _URL_BLOCKLIST as _UBL,
                 _url_expr_sql as _u_sql,
                 curation_url_domain_blocklist as _ub_entry,
@@ -1371,7 +1371,7 @@ def _calibrate(
                 f"SELECT 'b', * FROM ({_md5_br_sql.format(rows=n // 4)})"
             )
         elif kind == "embedfold":
-            from scout_spark.inventory.core import _t as _load_t5
+            from scout_spark.inventory.common import table as _load_t5
 
             def _spark_build(sf_dir=sf_dir):
                 e = _load_t5(spark, sf_dir, "embeddings")
@@ -1395,7 +1395,7 @@ def _calibrate(
                 FROM embeddings)
             """
         elif kind == "mmrpool":
-            from scout_spark.inventory.core import _t as _load_t6
+            from scout_spark.inventory.common import table as _load_t6
 
             def _spark_build(sf_dir=sf_dir):
                 e = _load_t6(spark, sf_dir, "embeddings")
@@ -1449,7 +1449,7 @@ def _calibrate(
               ORDER BY rel DESC, vec_id LIMIT 20
             """
         elif kind == "docscanagg":
-            from scout_spark.inventory.core import _t as _load_t2
+            from scout_spark.inventory.common import table as _load_t2
 
             def _spark_build(sf_dir=sf_dir):
                 d = _load_t2(spark, sf_dir, "documents")

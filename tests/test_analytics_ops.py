@@ -1,5 +1,5 @@
 """Semantic ground-truth checks for the round-4 second wave
-(inventory/analytics_ops.py) — properties the oracle differential
+(stats, text, temporal and curation inventory entries) — properties the oracle differential
 cannot express (it proves engine parity, not that the sketch math is
 the right math): HLL error bounds, the CMS upper-bound guarantee,
 monotone vocabulary growth, percentile ordering.
@@ -77,7 +77,7 @@ def test_bigram_ppl_positive_and_bounded(spark, reg):
 def test_vocab_growth_monotone_and_totals(spark, reg):
     from pyspark.sql import functions as F
 
-    from scout_spark.inventory.quality_ops import doc_tokens
+    from scout_spark.inventory.common import doc_tokens
 
     rows = reg["text_vocab_growth_curve"].spark(spark, SF).collect()
     assert rows

@@ -1,18 +1,12 @@
-"""Regression pins for the round-9 ADVICE items closed in round 10.
+"""scripts/floor_capture.py regression pins.
 
-1. scripts/floor_capture.py — the four-way adjudication is factored
-   into one `_adjudicate` helper used by BOTH the first pass and the
-   idle re-measure loop (the loop previously skipped the calibration
-   branch, so a calibrated entry could keep a stale plan_slack label).
-2. scripts/floor_capture.py — `_calibrate` restores the caller's
-   shuffle.partitions and `SET threads={cpus}` instead of hardcoded
-   32/8 (with --cpus != 32 the first entry's duck_s ran at 32 threads).
-3. scout_spark/inventory/r9_ops.py — url_flag_frame coalesces NULL
-   source identically on the engine and the oracle (a NULL source
-   previously NULLed the Spark concat -> reg_domain '' vs the oracle's
-   NULL — latent parity divergence).
-4. tests/test_r9_ops.py keyframe stream test uses the sf_dir fixture
-   (regression is the test itself; no extra pin needed).
+1. The four-way adjudication is factored into one `_adjudicate` helper
+   used by BOTH the first pass and the idle re-measure loop (the loop
+   previously skipped the calibration branch, so a calibrated entry
+   could keep a stale plan_slack label).
+2. `_calibrate` restores the caller's shuffle.partitions and
+   `SET threads={cpus}` instead of hardcoded 32/8 (with --cpus != 32
+   the first entry's duck_s ran at 32 threads).
 """
 
 from __future__ import annotations
@@ -21,7 +15,6 @@ import importlib.util
 import os
 
 import pytest
-from pyspark.sql import functions as F  # noqa: F401  (fixture import parity)
 
 
 def _floor_capture():
@@ -115,55 +108,3 @@ def test_calibrate_restores_threads_and_partitions(monkeypatch):
         int(con.execute("SELECT current_setting('threads')").fetchone()[0])
         == 4
     )
-
-
-def test_url_flag_frame_null_source_matches_oracle(spark):
-    """NULL source must produce the SAME coalesced host/reg_domain on
-    the engine and on the oracle's prediction arithmetic — covering
-    both the generic-TLD branch (doc 41 -> .net) and the 2-label
-    public-suffix branch (doc 63 -> .co.uk)."""
-    import duckdb
-
-    from scout_spark.inventory.r9_ops import url_flag_frame
-
-    docs = spark.createDataFrame(
-        [(41, None, "en"), (63, None, None), (42, "SRC3", None)],
-        "doc_id long, source string, lang string",
-    )
-    got = {
-        r.doc_id: (r.host, r.reg_domain, r.blocked)
-        for r in url_flag_frame(docs).collect()
-    }
-    # no NULL/'' leaks through the parse on NULL source
-    for doc_id, (host, reg, _) in got.items():
-        assert host, f"NULL host for doc {doc_id}"
-        assert reg, f"empty reg_domain for doc {doc_id}"
-
-    con = duckdb.connect()
-    duck = {
-        r[0]: (r[1], r[2])
-        for r in con.execute(
-            """
-        WITH documents AS (
-          SELECT 41::BIGINT doc_id, NULL::VARCHAR source, 'en' lang
-          UNION ALL SELECT 63, NULL, NULL
-          UNION ALL SELECT 42, 'SRC3', NULL
-        )
-        SELECT doc_id,
-               ['www','cdn','m'][(doc_id % 3 + 1)::INT] || '.' ||
-                 lower(coalesce(source, 'unksrc')) || '.' ||
-                 ['com','org','net','co.uk','io']
-                 [((doc_id // 20) % 5 + 1)::INT] AS host,
-               lower(coalesce(source, 'unksrc')) || '.' ||
-                 ['com','org','net','co.uk','io']
-                 [((doc_id // 20) % 5 + 1)::INT] AS reg_domain
-        FROM documents
-        """
-        ).fetchall()
-    }
-    for doc_id, (host, reg) in duck.items():
-        assert got[doc_id][0] == host
-        assert got[doc_id][1] == reg
-    # the 2-label suffix branch really fired and kept 3 labels
-    assert got[63][1] == "unksrc.co.uk"
-    assert got[63][0] == "www.unksrc.co.uk"

@@ -199,7 +199,7 @@ def test_tokenizer_extract_equals_canon_split_formulation(spark):
     from pyspark.sql import functions as F
 
     from scout_spark.functions.normalize import canon, canon_ascii, tokens
-    from scout_spark.inventory.text_ops import _tokens_col
+    from scout_spark.inventory.common import tokens_col as _tokens_col
 
     rows = [
         (0, "héllo wörld ÄÖÜ"),

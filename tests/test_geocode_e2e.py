@@ -137,7 +137,7 @@ def test_fixture_entry_reuses_one_engine(spark):
     """The registry's fixture geocode entry builds its engine once per
     pair of shared fixture frames: three calls register one temp view,
     not three."""
-    from scout_spark.inventory import extended2
+    from scout_spark.inventory import spatial
 
     def views():
         return {
@@ -145,8 +145,8 @@ def test_fixture_entry_reuses_one_engine(spark):
         }
 
     before = views()
-    hits = [extended2.geocode_forward_fixture(spark, "").collect() for _ in range(3)]
-    view = extended2._fixture_engine(spark)._view
+    hits = [spatial.geocode_forward_fixture(spark, "").collect() for _ in range(3)]
+    view = spatial._fixture_engine(spark)._view
     assert view in views()
     assert views() - before <= {view}
     assert hits[0] and hits[0] == hits[1] == hits[2]
@@ -156,9 +156,9 @@ def test_fixture_entry_compiles_once_per_query_shape(spark):
     """The registry's fixture engine scores on the driver, so a query
     text never reaches generated code: after one warm request, new
     two-token texts with the same hint hit the codegen cache."""
-    from scout_spark.inventory import extended2
+    from scout_spark.inventory import spatial
 
-    engine = extended2._fixture_engine(spark)
+    engine = spatial._fixture_engine(spark)
     assert engine.forward(["Monograph Dining"], country="malaysia")
     # distinct lengths: a literal query length would compile per text
     for text in ("nasi kandar", "taman botani", "shopping centre", "orient restaurant"):

@@ -482,7 +482,7 @@ def test_mst_twin_oracle_matches_synthetic_kruskal(spark):
 
     import duckdb
 
-    from scout_spark.inventory.r7_twins import _mst_twin_oracle
+    from scout_spark.inventory.graph import _mst_twin_oracle
 
     rng = random.Random(11)
     n = 80
@@ -551,7 +551,7 @@ def test_pca_between_scatter_twin_direction_matches_numpy(spark, sf_dir):
     import numpy as np
 
     from scout_spark.inventory import load_all
-    from scout_spark.inventory.r7_twins import _PCA_SCALE
+    from scout_spark.inventory.vector import _PCA_SCALE
 
     got = (
         load_all()["pca_between_scatter_integer_twin"]
@@ -588,11 +588,7 @@ def test_mmr_twin_diversification_fires(spark, sf_dir):
     import numpy as np
 
     from scout_spark.inventory import load_all
-    from scout_spark.inventory.r7_twins import (
-        _MMR_WREL,
-        _MMR_WSIM,
-        _PCA_SCALE,
-    )
+    from scout_spark.inventory.vector import _MMR_WREL, _MMR_WSIM, _PCA_SCALE
 
     picks = (
         load_all()["mmr_greedy_integer_unrolled_twin"]

@@ -729,10 +729,7 @@ def test_winnowing_relational_matches_nested_hof(spark):
     edge cases: len(t) < gram width and n_grams < window width."""
     from pyspark.sql import functions as F
 
-    from scout_spark.inventory.trainprep import (
-        _FP_DOCS,
-        _winnow_fingerprints,
-    )
+    from scout_spark.inventory.dedup import _FP_DOCS, _winnow_fingerprints
     from scout_spark.inventory import load_all
 
     reg = load_all()
@@ -762,7 +759,7 @@ def test_winnowing_relational_matches_nested_hof(spark):
             assert {k: v[0] for k, v in got.items()} == want
         else:
             # run the registered entry against the edge frame via a view
-            from scout_spark.inventory.trainprep import fingerprint_winnowing
+            from scout_spark.inventory.dedup import fingerprint_winnowing
             import tempfile, os
 
             with tempfile.TemporaryDirectory() as td:
@@ -789,10 +786,7 @@ def test_lsh_multiprobe_recall_one_on_planted_fixture(spark):
     filter may not drop a true top-k member here."""
     import math
 
-    from scout_spark.inventory.vector_ops import (
-        lsh_md5_bucket_py,
-        lsh_md5_multiprobe_topk,
-    )
+    from scout_spark.inventory.vector import lsh_md5_bucket_py, lsh_md5_multiprobe_topk
     from scout_spark.operators.ann import brute_force_topk
 
     base = [3.0, -1.5, 2.25, 0.75, -2.0, 1.0, 0.5, -0.25]
@@ -832,8 +826,8 @@ def test_lsh_multiprobe_superset_of_single_bucket(spark):
     """On the real sf0.001 fixture: the multiprobe candidate set is a
     strict superset of the single-bucket set, so multiprobe top-k
     cosine floor >= single-bucket floor (recall only improves)."""
-    from scout_spark.inventory.vector_ops import (
-        QUERY_VEC_ID,
+    from scout_spark.inventory.common import QUERY_VEC_ID
+    from scout_spark.inventory.vector import (
         lsh_md5_bucket_col,
         lsh_md5_bucket_py,
         lsh_md5_multiprobe_topk,
@@ -960,7 +954,7 @@ class TestTrigramSearch:
 
     def test_matches_plain_scan_on_corpus(self, spark):
         from scout_spark.inventory import load_all
-        from scout_spark.inventory.core import _t
+        from scout_spark.inventory.common import table as _t
 
         got = {
             r["doc_id"]
@@ -1037,7 +1031,7 @@ class TestPhashWHT:
         """The Arrow WHT hash == an independent per-string reference
         (explicit double loop over (u,v,i,j)), and exact-duplicate
         texts collide while different texts (generically) don't."""
-        from scout_spark.inventory.r7_twins import _phash_udf
+        from scout_spark.inventory.multimodal import _phash_udf
 
         texts = [
             "the quick brown fox jumps over the lazy dog " * 3,
@@ -1089,7 +1083,7 @@ class TestPhashWHT:
         """Pigeonhole check on real data: the banded pair set ==
         the all-pairs scan at the same hamming threshold."""
         from scout_spark.inventory import load_all
-        from scout_spark.inventory.r7_twins import _PH_HAM, _phash_udf
+        from scout_spark.inventory.multimodal import _PH_HAM, _phash_udf
         from scout_spark.sources import load_table
 
         d = load_table(spark, sf_dir, "documents").select(

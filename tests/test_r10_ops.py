@@ -19,7 +19,7 @@ def test_kn3_heldout_matches_independent_python(spark, oracle_sf_dir):
     the entry's top-20 exactly."""
     import duckdb
 
-    from scout_spark.inventory.r10_ops import lm_kn3_heldout_doc_score
+    from scout_spark.inventory.text import lm_kn3_heldout_doc_score
 
     rows = (
         duckdb.connect()
@@ -111,7 +111,7 @@ def test_kn3_heldout_split_is_within_source(spark, oracle_sf_dir):
     """The 80/20 split must vary WITHIN sources (doc_id % k with
     k | 20 is constant per source on this corpus — the collapse that
     made the first URL-blocklist draft vacuous)."""
-    from scout_spark.inventory.core import _t
+    from scout_spark.inventory.common import table as _t
 
     d = _t(spark, oracle_sf_dir, "documents").select(
         "source", (F.expr("doc_id div 20") % 5 == 4).alias("held")
@@ -131,10 +131,8 @@ def test_keyframe_kpi_consistent_with_pair_entry(spark, oracle_sf_dir):
     pair aggregate) than the KPI's keyframe-level candidate stream."""
     import duckdb
 
-    from scout_spark.inventory.r9_ops import dedup_video_keyframe_phash
-    from scout_spark.inventory.r10_ops import (
-        curation_keyframe_dup_rate_by_source,
-    )
+    from scout_spark.inventory.multimodal import dedup_video_keyframe_phash
+    from scout_spark.inventory.multimodal import curation_keyframe_dup_rate_by_source
 
     kpi = {
         r.source: r

@@ -1,6 +1,6 @@
 """Regression pins for the round-10 ADVICE items closed in round 11.
 
-1. scout_spark/inventory/r10_ops.py — lm_kn3_heldout_doc_score orders
+1. scout_spark/inventory/text.py — lm_kn3_heldout_doc_score orders
    with F.asc_nulls_last('avg_lnp'): avg_lnp is NULL for an all-OOV
    held-out doc (n_scored=0), Spark's plain asc is NULLS FIRST while
    the DuckDB oracle's ORDER BY avg_lnp ASC is NULLS LAST — plain asc
@@ -16,11 +16,7 @@ from __future__ import annotations
 import duckdb
 from pyspark.sql import functions as F
 
-from scout_spark.inventory.r10_ops import (
-    kn3_doc_trigrams,
-    kn3_model,
-    kn3_score_per_doc,
-)
+from scout_spark.inventory.text import kn3_doc_trigrams, kn3_model, kn3_score_per_doc
 
 
 def test_duckdb_asc_is_nulls_last():

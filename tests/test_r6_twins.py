@@ -82,7 +82,7 @@ def _reference_semdedup(rows, k, scale, num, den):
 
 
 def test_semdedup_twin_matches_bruteforce_reference(spark, sf_dir):
-    import scout_spark.inventory.r6_twins as rt
+    import scout_spark.inventory.dedup as rt
     from scout_spark.inventory import load_all
 
     fn = load_all()["semdedup_md5_integer_twin"].spark
@@ -131,7 +131,7 @@ def test_semdedup_quantized_component_bound(spark):
 
     import pyarrow.parquet as pq
 
-    import scout_spark.inventory.r6_twins as rt
+    import scout_spark.inventory.dedup as rt
 
     for f in sorted(glob.glob("/root/testdata/sf*/embeddings.parquet")):
         tbl = pq.read_table(f, columns=["embedding"])
@@ -148,7 +148,7 @@ def test_semdedup_closure_raises_on_overflow_range(spark):
     guard, not just the testdata pin)."""
     import pytest as _pytest
 
-    import scout_spark.inventory.r6_twins as rt
+    import scout_spark.inventory.dedup as rt
 
     # drive the guard through a tiny real frame: quantized codes of
     # magnitude > 3079 come from embedding components > 3.079

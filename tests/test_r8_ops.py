@@ -8,13 +8,15 @@ import os
 import pytest
 from pyspark.sql import functions as F
 
-from scout_spark.inventory.r8_ops import (
+from scout_spark.inventory.curation import (
     audit_packing_efficiency_by_lang,
     curation_source_mix_report,
+)
+from scout_spark.inventory.dedup import (
     dedup_duplicated_ngram_coverage,
     dedup_longest_duplicated_substring,
-    lm_kneser_ney_bigram,
 )
+from scout_spark.inventory.text import lm_kneser_ney_bigram
 
 
 def _write_docs(spark, td, rows):
@@ -114,7 +116,7 @@ def test_source_mix_shares_sum_and_flag(spark, tmp_path):
 
 
 def test_packing_audit_ceil_and_efficiency(spark, tmp_path):
-    from scout_spark.inventory.quality_ops import _PACK_CAPACITY
+    from scout_spark.inventory.curation import _PACK_CAPACITY
 
     td = str(tmp_path)
     # 3 docs in one lang; token totals small => every shard packs into

@@ -9,11 +9,9 @@ import os
 import pytest
 from pyspark.sql import functions as F
 
-from scout_spark.inventory.r8_ops2 import (
-    curation_cross_source_ngram_overlap,
-    eval_minhash_lsh_precision_recall,
-    retrieval_prf_rocchio_expansion,
-)
+from scout_spark.inventory.curation import curation_cross_source_ngram_overlap
+from scout_spark.inventory.dedup import eval_minhash_lsh_precision_recall
+from scout_spark.inventory.retrieval import retrieval_prf_rocchio_expansion
 
 
 def _write_docs(spark, td, rows, cols=("doc_id", "text")):

@@ -5,10 +5,8 @@ import os
 
 from pyspark.sql import functions as F
 
-from scout_spark.inventory.r8_ops3 import (
-    curation_filter_funnel,
-    dedup_intra_doc_repeats,
-)
+from scout_spark.inventory.curation import curation_filter_funnel
+from scout_spark.inventory.dedup import dedup_intra_doc_repeats
 
 
 def _write_docs(spark, td, rows):

@@ -5,7 +5,7 @@ import os
 
 from pyspark.sql import functions as F
 
-from scout_spark.inventory.r8_ops4 import multimodal_shot_boundaries
+from scout_spark.inventory.multimodal import multimodal_shot_boundaries
 
 
 def test_shot_boundaries_hand_computed(spark, tmp_path):
@@ -51,7 +51,7 @@ def test_padding_waste_hand_computed(spark, tmp_path):
     ).withColumn("source", F.lit("s")).withColumn(
         "n_chars", F.length("text")
     ).write.parquet(os.path.join(td, "documents.parquet"))
-    from scout_spark.inventory.r8_ops4 import audit_padding_waste_bucketed
+    from scout_spark.inventory.curation import audit_padding_waste_bucketed
 
     r = audit_padding_waste_bucketed(spark, td).collect()[0]
     assert r["n_docs"] == 64
@@ -100,7 +100,7 @@ def test_decode_pnm_entry_roundtrip(spark, tmp_path):
     ).withColumn("source", F.lit("s")).withColumn(
         "n_chars", F.length("text")
     ).write.parquet(os.path.join(td, "documents.parquet"))
-    from scout_spark.inventory.r8_ops4 import multimodal_decode_pnm_real
+    from scout_spark.inventory.multimodal import multimodal_decode_pnm_real
 
     r = multimodal_decode_pnm_real(spark, td).collect()[0]
     w1, h1 = 4 + 1 % 13, 3 + (1 * 7) % 11

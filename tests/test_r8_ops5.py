@@ -5,10 +5,8 @@ import os
 
 from pyspark.sql import functions as F
 
-from scout_spark.inventory.r8_ops5 import (
-    sample_epoch_shuffle_hash,
-    text_term_burstiness,
-)
+from scout_spark.inventory.curation import sample_epoch_shuffle_hash
+from scout_spark.inventory.text import text_term_burstiness
 
 
 def _write_docs(spark, td, rows):

@@ -6,7 +6,7 @@ silently regress:
 - embedding_neardup_pairs must DROP null-labeled vectors (the oracle's
   ``a.label = b.label`` equi-join semantics), not pair them up as a
   pandas group.
-- the r8_ops4 multimodal entries must exclude non-ASCII documents
+- the multimodal decode and shot-boundary entries must exclude non-ASCII documents
   identically on both engines (chars == bytes checked precondition),
   so a regenerated corpus containing non-ASCII text cannot silently
   diverge byte-sum signatures from code-point oracles.
@@ -20,10 +20,7 @@ from pyspark.sql import functions as F
 def test_neardup_null_labels_never_pair(spark):
     """Two identical vectors sharing only a NULL label must produce no
     pair — groupBy would have bucketed them together before the fix."""
-    from scout_spark.inventory.vector_ops import (
-        _NEARDUP_THRESHOLD,
-        _neardup_label_kernel,
-    )
+    from scout_spark.inventory.vector import _NEARDUP_THRESHOLD, _neardup_label_kernel
 
     df = spark.createDataFrame(
         [

@@ -1,4 +1,5 @@
-"""Ground-truth tests for the round-9 wave (r9_ops.py).
+"""Ground-truth tests for the round-9 wave (curation, text and multimodal
+entries).
 
 The oracle parity replica is the primary gate; these pin the kernel
 and rule semantics independently of the SQL twins:
@@ -74,9 +75,7 @@ def test_shot_keyframe_hashes_known_payload(spark):
 
 
 def test_registrable_domain_rule_both_branches(spark):
-    from scout_spark.inventory.r9_ops import (
-        curation_url_domain_blocklist,  # noqa: F401 — import check
-    )
+    from scout_spark.inventory.curation import curation_url_domain_blocklist
 
     df = spark.createDataFrame(
         [("www.src2.co.uk",), ("cdn.src0.com",), ("m.x.y.src5.io",)],
@@ -93,7 +92,7 @@ def test_registrable_domain_rule_both_branches(spark):
 
 
 def test_trigram_kn_probabilities_sane(spark, oracle_sf_dir):
-    from scout_spark.inventory.r9_ops import lm_kneser_ney_trigram
+    from scout_spark.inventory.text import lm_kneser_ney_trigram
 
     rows = lm_kneser_ney_trigram(spark, oracle_sf_dir).collect()
     assert len(rows) == 20
@@ -108,7 +107,7 @@ def test_keyframe_probe_stream_equals_batch(spark, sf_dir, tmp_path_factory):
     probe's match set (shared keyframe_band_index/keyframe_probe
     helpers; the kernel is mapInPandas, legal on streams; the bucket
     join is stream-static)."""
-    from scout_spark.inventory.core import _t
+    from scout_spark.inventory.common import table as _t
     from scout_spark.operators.multimodal import (
         pack_blobs,
         shot_keyframe_hashes,
@@ -175,7 +174,7 @@ def test_trigram_kn_matches_independent_python(spark, oracle_sf_dir):
 
     import duckdb
 
-    from scout_spark.inventory.r9_ops import lm_kneser_ney_trigram
+    from scout_spark.inventory.text import lm_kneser_ney_trigram
 
     rows = (
         duckdb.connect()
@@ -233,7 +232,7 @@ def test_dup_by_quality_matches_independent_python(spark, oracle_sf_dir):
 
     import duckdb
 
-    from scout_spark.inventory.r9_ops import curation_dup_by_quality_band
+    from scout_spark.inventory.curation import curation_dup_by_quality_band
 
     rows = (
         duckdb.connect()

@@ -140,10 +140,10 @@ def test_chunking_invariants(spark, texts):
     )
     from pyspark.sql import functions as F
 
-    from scout_spark.inventory.retrieval import _CHUNK_STRIDE, _CHUNK_TOKENS
+    from scout_spark.inventory.text import _CHUNK_STRIDE, _CHUNK_TOKENS
     # chunk_documents loads parquet by sf_dir, so replicate its exact
     # expressions over this in-memory frame
-    from scout_spark.inventory.text_ops import _tokens_col
+    from scout_spark.inventory.common import tokens_col as _tokens_col
 
     t = df.select("doc_id", _tokens_col(F.col("text")).alias("toks")).withColumn(
         "dl", F.size("toks")

@@ -228,7 +228,7 @@ def test_publish_two_writer_race(tmp_path):
     """ADVICE r04: two sessions building the same fixture key race on
     os.replace; the loser must swallow ENOTEMPTY, discard its tmp dir,
     and leave the winner's publication intact."""
-    from scout_spark.inventory.ingest_ops import _publish
+    from scout_spark.inventory.ingest import _publish
 
     path = str(tmp_path / "fixture")
     tmp_a = str(tmp_path / "fixture.tmp111")
@@ -262,15 +262,15 @@ def test_malformed_env_value_does_not_break_registry_load(monkeypatch):
     module import and with it the whole registry load."""
     import importlib
 
-    from scout_spark.inventory import REGISTRY, load_all, quality_ops
+    from scout_spark.inventory import REGISTRY, curation, load_all
 
     monkeypatch.setenv("SPARK_GRAFT_CURATE_BARRIER_ROWS", "abc")
     saved = dict(REGISTRY)
     try:
         for name in [n for n, it in REGISTRY.items()
-                     if it.spark.__module__ == quality_ops.__name__]:
+                     if it.spark.__module__ == curation.__name__]:
             del REGISTRY[name]
-        importlib.reload(quality_ops)
+        importlib.reload(curation)
         assert load_all().keys() == saved.keys()
     finally:
         REGISTRY.clear()

@@ -66,13 +66,16 @@ def test_unchecked_queries_fill_driver_window():
     assert set(order[n1:n2]) == set(second), (
         "single-record latest-round entries must re-check before greens"
     )
-    # within the unverified block: strict registration order, so operators
-    # registered later (new rounds) cannot displace the existing backlog
-    # from the ~50-slot window
+    # within the unverified block: name order, independent of which
+    # module registered an entry first
     block = order[n0:n1]
-    reg_index = {n: i for i, n in enumerate(registry)}
-    assert block == sorted(block, key=reg_index.__getitem__), (
-        "unchecked entries must keep registration order"
+    assert block == sorted(block), "unchecked entries must be in name order"
+
+
+def test_window_is_independent_of_registration_order():
+    registry = load_all()
+    assert ordered_names(registry) == ordered_names(
+        dict(reversed(registry.items()))
     )
 
 
@@ -83,20 +86,18 @@ def test_queries_iteration_order_matches_rotation():
 
 def test_green_tier_is_staleness_ordered():
     """Checked-green entries re-enter the window stalest-first:
-    tier-2 order is (last-checked round, registration index), so a green
-    last verified in r03 precedes one verified in r07 regardless of
-    registration order, and every green cycles back on a ~N/50-round
-    cadence instead of the oldest-registered prefix re-checking forever."""
+    green order is (last-checked round, name), so a green last verified
+    in r03 precedes one verified in r07 regardless of its name, and
+    every green cycles back on a ~N/50-round cadence."""
     registry = load_all()
     order = ordered_names(registry)
     _, _, _, greens_set = _tiers(registry)
     greens = [n for n in order if n in set(greens_set)]
     # greens occupy the back of the rotation contiguously
     assert order[-len(greens) :] == greens
-    reg_index = {n: i for i, n in enumerate(registry)}
-    keys = [(LAST_CHECKED_ROUND[n], reg_index[n]) for n in greens]
+    keys = [(LAST_CHECKED_ROUND[n], n) for n in greens]
     assert keys == sorted(keys), (
-        "green tier must be ordered by (last-checked round, reg index)"
+        "green tier must be ordered by (last-checked round, name)"
     )
     # the scan actually produced multiple distinct rounds (not all r01)
     assert len({LAST_CHECKED_ROUND[n] for n in greens}) > 1

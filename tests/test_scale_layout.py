@@ -408,7 +408,7 @@ def test_keyset_pagination_pushes_cursor_predicate(spark):
     the parquet scan (so row groups beyond the page are skipped) and
     the page fetch is a TakeOrderedAndProject heap, never a global
     sort + offset."""
-    from scout_spark.inventory.insight_ops import page_keyset_orders
+    from scout_spark.inventory.relational import page_keyset_orders
 
     df = page_keyset_orders(spark, "/root/testdata/sf0.01")
     plan = _plan(df)
@@ -422,7 +422,7 @@ def test_linear_interpolate_single_events_scan(spark):
     """The lead-based gap-fill must read events ONCE — the oracle's
     grid-join formulation needs two scans (bounds + join); the Spark
     plan folds densify+fill into one window pass."""
-    from scout_spark.inventory.insight_ops import timeseries_linear_interpolate
+    from scout_spark.inventory.temporal import timeseries_linear_interpolate
 
     plan = _plan(timeseries_linear_interpolate(spark, "/root/testdata/sf0.01"))
     tree = plan.split("\n\n")[0]  # node labels repeat in the detail block
@@ -435,7 +435,7 @@ def test_weighted_percentile_row_window_partitions_on_bin(spark):
     that keeps sort parallelism proportional to the value range. A
     plan whose row-level window hash-partitions only on l_returnflag
     has reintroduced the |flags| parallelism ceiling."""
-    from scout_spark.inventory.insight_ops import agg_weighted_percentile
+    from scout_spark.inventory.stats import agg_weighted_percentile
 
     df = agg_weighted_percentile(spark, "/root/testdata/sf0.01")
     plan = df._jdf.queryExecution().executedPlan().toString()
@@ -463,7 +463,7 @@ def test_pmi_marginals_ride_cached_tokens(spark):
     positional pair stream); unigram marginals read the shared
     persisted doc_tokens frame (InMemoryRelation), not a second
     parquet scan of documents."""
-    from scout_spark.inventory.insight_ops import text_cooccurrence_pmi
+    from scout_spark.inventory.text import text_cooccurrence_pmi
 
     plan = _plan(text_cooccurrence_pmi(spark, "/root/testdata/sf0.01"))
     tree = plan.split("\n\n")[0]
@@ -489,9 +489,7 @@ def test_decile_mix_row_window_partitions_on_rank_pid(spark):
     row-level window partitioned on the range-shuffle partition id; the
     only unpartitioned window allowed anywhere in the plan is the
     offset cumulative sum over the P-row per-partition counts frame."""
-    from scout_spark.inventory.mining_ops import (
-        quality_perplexity_decile_mix,
-    )
+    from scout_spark.inventory.curation import quality_perplexity_decile_mix
 
     df = quality_perplexity_decile_mix(spark, "/root/testdata/sf0.001")
     plan = df._jdf.queryExecution().executedPlan().toString()
@@ -512,7 +510,7 @@ def test_pmi_totals_are_scalar_aggs_not_windows(spark):
     unpartitioned window sum over the distinct-pair frame is billions
     of rows through one task at web scale (VERDICT r04). The plan must
     contain NO window node at all."""
-    from scout_spark.inventory.insight_ops import text_cooccurrence_pmi
+    from scout_spark.inventory.text import text_cooccurrence_pmi
 
     plan = (
         text_cooccurrence_pmi(spark, "/root/testdata/sf0.001")

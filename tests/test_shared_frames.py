@@ -16,12 +16,12 @@ import pyarrow.parquet as pq
 import pytest
 from pyspark import StorageLevel
 
-from scout_spark.inventory import graph_ops
-from scout_spark.inventory.quality_ops import doc_tokens
+from scout_spark.inventory import graph
+from scout_spark.inventory.common import doc_tokens
 from scout_spark.inventory.retrieval import _bm25_per_doc
 from scout_spark.sources import tables
 
-GETTERS = (doc_tokens, _bm25_per_doc, graph_ops._edges, graph_ops._degrees)
+GETTERS = (doc_tokens, _bm25_per_doc, graph._edges, graph._degrees)
 
 
 def _write_sources(sf: str, n_docs: int, orders: list[int], parts: list[int]):
@@ -96,12 +96,12 @@ def test_concurrent_cold_callers_share_one_build(spark, sf, monkeypatch):
 
         return tables.shared_frame(name, key, counted)
 
-    monkeypatch.setattr(graph_ops, "shared_frame", counting_shared_frame)
+    monkeypatch.setattr(graph, "shared_frame", counting_shared_frame)
     start = threading.Barrier(8, timeout=60)
 
     def call(_):
         start.wait()
-        return graph_ops._degrees(spark, sf)
+        return graph._degrees(spark, sf)
 
     interval = sys.getswitchinterval()
     sys.setswitchinterval(1e-6)

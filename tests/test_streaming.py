@@ -914,3 +914,58 @@ def test_kn3_scoring_stream_equals_batch(spark, documents_path):
     assert got == exp and len(got) > 0
     # every score row carries a negative integer log-micro total
     assert all(t[4] < 0 for t in got)
+
+
+def test_url_flag_frame_null_source_matches_oracle(spark):
+    """The batch url_flag_frame behind the URL stream coalesces a NULL
+    source identically on the engine and the oracle (a NULL source once
+    NULLed the Spark concat -> reg_domain '' vs the oracle's NULL).
+    NULL source must produce the SAME coalesced host/reg_domain on
+    the engine and on the oracle's prediction arithmetic — covering
+    both the generic-TLD branch (doc 41 -> .net) and the 2-label
+    public-suffix branch (doc 63 -> .co.uk)."""
+    import duckdb
+
+    from scout_spark.inventory.curation import url_flag_frame
+
+    docs = spark.createDataFrame(
+        [(41, None, "en"), (63, None, None), (42, "SRC3", None)],
+        "doc_id long, source string, lang string",
+    )
+    got = {
+        r.doc_id: (r.host, r.reg_domain, r.blocked)
+        for r in url_flag_frame(docs).collect()
+    }
+    # no NULL/'' leaks through the parse on NULL source
+    for doc_id, (host, reg, _) in got.items():
+        assert host, f"NULL host for doc {doc_id}"
+        assert reg, f"empty reg_domain for doc {doc_id}"
+
+    con = duckdb.connect()
+    duck = {
+        r[0]: (r[1], r[2])
+        for r in con.execute(
+            """
+        WITH documents AS (
+          SELECT 41::BIGINT doc_id, NULL::VARCHAR source, 'en' lang
+          UNION ALL SELECT 63, NULL, NULL
+          UNION ALL SELECT 42, 'SRC3', NULL
+        )
+        SELECT doc_id,
+               ['www','cdn','m'][(doc_id % 3 + 1)::INT] || '.' ||
+                 lower(coalesce(source, 'unksrc')) || '.' ||
+                 ['com','org','net','co.uk','io']
+                 [((doc_id // 20) % 5 + 1)::INT] AS host,
+               lower(coalesce(source, 'unksrc')) || '.' ||
+                 ['com','org','net','co.uk','io']
+                 [((doc_id // 20) % 5 + 1)::INT] AS reg_domain
+        FROM documents
+        """
+        ).fetchall()
+    }
+    for doc_id, (host, reg) in duck.items():
+        assert got[doc_id][0] == host
+        assert got[doc_id][1] == reg
+    # the 2-label suffix branch really fired and kept 3 labels
+    assert got[63][1] == "unksrc.co.uk"
+    assert got[63][0] == "www.unksrc.co.uk"
