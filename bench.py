@@ -8,6 +8,10 @@ line: {"metric": ..., "value": total_sec, "unit": "sec",
 
 Execution is forced with the noop sink (full computation, no driver
 collect) so timings measure the distributed plan, not result transfer.
+Each entry's time is the median of 3 timed passes after one untimed
+warm pass; the sink and the median wall are scout_spark.measure's
+``noop`` and ``median_wall``, shared with scripts/ratio_capture.py and
+scripts/floor_capture.py.
 
 SHARED-FRAME TIMING SEMANTICS (declared; VERDICT r11 item 9): several
 entries read session-shared persisted frames (sources.tables.
@@ -35,6 +39,8 @@ import time
 REPO_DIR = os.path.dirname(os.path.abspath(__file__))
 if REPO_DIR not in sys.path:
     sys.path.insert(0, REPO_DIR)
+
+from scout_spark.measure import median_wall, noop  # noqa: E402
 
 # Headline set: one per operator family, weighted toward the scale-relevant
 # shapes (scans+aggs, multi-way joins, windows, as-of, dedup, ANN, flagship).
@@ -362,7 +368,7 @@ def main() -> None:
     for name in HEADLINE:
         if name in E2E_REBUILD:
             handles[name] = registry[name].spark(spark, sf_dir)
-        handles[name].write.format("noop").mode("overwrite").save()
+        noop(handles[name])
 
     # Headline: per-query steady-state SEQUENTIAL latency — median of 3
     # timed executions of the prepared plan (single-shot local timings
@@ -377,15 +383,14 @@ def main() -> None:
             # re-persisted and materialized in the untimed warm pass.
             spark.catalog.clearCache()
             handles[name] = registry[name].spark(spark, sf_dir)
-            handles[name].write.format("noop").mode("overwrite").save()
-        runs = []
-        for _ in range(3):
-            t0 = time.time()
+            noop(handles[name])
+
+        def run() -> None:
             if name in E2E_REBUILD:
                 handles[name] = registry[name].spark(spark, sf_dir)
-            handles[name].write.format("noop").mode("overwrite").save()
-            runs.append(time.time() - t0)
-        timings[name] = round(sorted(runs)[1], 3)
+            noop(handles[name])
+
+        timings[name] = round(median_wall(run, passes=3, warm=0), 3)
 
     # Secondary: all queries submitted concurrently to the shared
     # session (single-node throughput configuration — SURVEY §4 O10:
@@ -394,12 +399,9 @@ def main() -> None:
     # wall < sum(latencies) by design, exactly as on a real cluster.
     from concurrent.futures import ThreadPoolExecutor
 
-    def _run(name: str) -> None:
-        handles[name].write.format("noop").mode("overwrite").save()
-
     t0 = time.time()
     with ThreadPoolExecutor(max_workers=8) as ex:
-        list(ex.map(_run, HEADLINE))
+        list(ex.map(noop, (handles[name] for name in HEADLINE)))
     wall = round(time.time() - t0, 3)
 
     payload = output_payload(timings, sf, build_sec, wall, load_at_start)

@@ -196,9 +196,9 @@ def main() -> None:
     # 6. curation audit report ------------------------------------------
     # The per-stage filter funnel (the ablation table a dataset writeup
     # publishes) over the CURATED corpus — counters are decomposable
-    # sums, so the same helpers run batch here and streaming in
-    # scout_spark/streaming/funnel.py.
-    from scout_spark.streaming.funnel import funnel_counters, funnel_report
+    # sums, so the same helpers run batch here and on a document
+    # stream in complete mode.
+    from scout_spark.inventory.curation import funnel_counters, funnel_report
 
     print("filter-funnel audit of the curated corpus:")
     for r in funnel_report(funnel_counters(curated)).collect():

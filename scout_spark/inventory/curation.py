@@ -1842,8 +1842,10 @@ def curation_filter_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def funnel_flag_frame(docs: DataFrame) -> DataFrame:
     """Per-doc (nt, f1..f4) cumulative-stage flags — shared by the
-    batch entry and the streaming twin (streaming/funnel.py) so the
-    two can never silently diverge on the filter definitions."""
+    batch entry and its streaming run (the stream==batch test in
+    tests/test_streaming.py) so the two can never silently diverge on
+    the filter definitions. Row-local map work, legal on a streaming
+    frame."""
     toks = lower_tokens(F.col("text"))
     s = docs.select(
         "n_chars",
@@ -1869,8 +1871,9 @@ def funnel_flag_frame(docs: DataFrame) -> DataFrame:
 def funnel_counters(docs: DataFrame) -> DataFrame:
     """One-row funnel counter aggregate (c0..c4 survivor counts,
     t1..t4 surviving-token sums). Plain decomposable sums — MERGEABLE
-    streaming state; the streaming twin runs this same aggregate in
-    complete mode and drains to an identical row."""
+    streaming state (the whole store is ONE row); a stream runs this
+    same aggregate in complete mode and drains to an identical row
+    however the input was split into micro-batches."""
     return funnel_flag_frame(docs).agg(
         F.count(F.lit(1)).cast("long").alias("c0"),
         *[
@@ -1887,7 +1890,9 @@ def funnel_counters(docs: DataFrame) -> DataFrame:
 def funnel_report(a: DataFrame) -> DataFrame:
     """Finishing step: unpivot the counter row to per-stage funnel
     rows. Pure bounded-frame arithmetic — stream-fed and batch-fed
-    counters yield identical reports."""
+    counters yield identical reports; on a stream, run it per trigger
+    in ``foreachBatch`` or over the complete-mode sink (the drift-JSD
+    pattern, streaming/drift.py)."""
     names = [n for n, _ in _FUNNEL_STAGES]
     stage_rows = ", ".join(
         f"{k}L, '{names[k - 1]}', c{k}, t{k}, "
@@ -2194,10 +2199,10 @@ _URL_TLDS = ("com", "org", "net", "co.uk", "io")
 # blocked registrable domains — the curation blocklist (spam/adult/SEO
 # lists in production); chosen to hit several sources and both the
 # 1-label and 2-label public-suffix branches
-_URL_BLOCKLIST = ("src3.com", "src7.org", "src11.net", "src2.co.uk")
+URL_BLOCKLIST = ("src3.com", "src7.org", "src11.net", "src2.co.uk")
 
 
-def _url_expr_sql() -> str:
+def url_expr_sql() -> str:
     # tld index uses doc_id // 20, NOT doc_id % k: on this corpus
     # doc_id % 20 == the source index, so any doc_id % k with k | 20
     # is CONSTANT per source and the synthesis would collapse to one
@@ -2235,7 +2240,7 @@ def url_flag_frame(docs: DataFrame) -> DataFrame:
                 (F.col("doc_id") % 3 + 1).cast("int"),
             ),
             F.lit("."),
-            # coalesce matches the oracle's _url_expr_sql (ADVICE r09
+            # coalesce matches the oracle's url_expr_sql (ADVICE r09
             # NULL-source pin; see the comment there)
             F.lower(F.coalesce(F.col("source"), F.lit("unksrc"))),
             F.lit("."),
@@ -2264,7 +2269,7 @@ def url_flag_frame(docs: DataFrame) -> DataFrame:
     )
     block = F.broadcast(
         docs.sparkSession.createDataFrame(
-            [(b,) for b in _URL_BLOCKLIST], "reg_domain string"
+            [(b,) for b in URL_BLOCKLIST], "reg_domain string"
         ).withColumn("blocked_flag", F.lit(True))
     )
     return parsed.join(block, "reg_domain", "left").select(
@@ -2278,8 +2283,9 @@ def url_flag_frame(docs: DataFrame) -> DataFrame:
 def domain_block_counters(docs: DataFrame) -> DataFrame:
     """Per-(domain, blocked) doc counts — plain decomposable sums,
     MERGEABLE streaming state (complete-mode agg; each micro-batch
-    adds in). The n_hosts distinct stays in the batch entry only —
-    exact distinct is not mergeable counter state."""
+    adds in; the state is |domains| rows). The n_hosts distinct stays
+    in the batch entry only — exact distinct is not mergeable counter
+    state (approx_count_distinct is the streaming substitute)."""
     return url_flag_frame(docs).groupBy("reg_domain", "blocked").agg(
         F.count(F.lit(1)).cast("long").alias("n_docs")
     )
@@ -2303,7 +2309,7 @@ def domain_block_counters(docs: DataFrame) -> DataFrame:
     "rollup.",
     oracle=f"""
       WITH d AS (
-        SELECT doc_id, source, {_url_expr_sql()} AS url
+        SELECT doc_id, source, {url_expr_sql()} AS url
         FROM documents
       ),
       parsed AS (
@@ -2318,7 +2324,7 @@ def domain_block_counters(docs: DataFrame) -> DataFrame:
         FROM d
       )
       SELECT reg_domain,
-             (reg_domain IN {tuple(_URL_BLOCKLIST)}) AS blocked,
+             (reg_domain IN {tuple(URL_BLOCKLIST)}) AS blocked,
              count(*)::BIGINT AS n_docs,
              count(DISTINCT host)::BIGINT AS n_hosts
       FROM parsed

@@ -284,8 +284,8 @@ _SIMHASH_BITS = 32
 _BANDS = 8  # 4-bit bands; exact for hamming <= _BANDS - 2
 _HAMMING_MAX = 2
 _MIN_TOKENS = 8  # tiny token sets make 32-bit simhash collide by chance
-_MINHASH_K = 16
-_MINHASH_P = 2147483647  # 2^31 - 1
+MINHASH_K = 16
+MINHASH_P = 2147483647  # 2^31 - 1
 
 
 def _simhash_from_tokens(tk: Column) -> Column:
@@ -435,7 +435,7 @@ def dedup_simhash_hamming(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _minhash_md5_signature(text: Column) -> Column:
+def minhash_md5_signature(text: Column) -> Column:
     """k=16 minhash over distinct 3-token shingles with md5 shingle
     hashes and (a_k·h + b_k) mod 2^31-1 universal hashing — every step
     reproducible in DuckDB SQL. One fold pass; md5 once per shingle."""
@@ -452,14 +452,14 @@ def _minhash_md5_signature(text: Column) -> Column:
     def _hash_vector(h: Column) -> Column:
         return F.array(
             *[
-                (h * (2 * k + 3) + (k * 1000003 + 7)) % _MINHASH_P
-                for k in range(_MINHASH_K)
+                (h * (2 * k + 3) + (k * 1000003 + 7)) % MINHASH_P
+                for k in range(MINHASH_K)
             ]
         )
 
     return F.aggregate(
         th,
-        F.array(*[F.lit(_MINHASH_P).cast("long")] * _MINHASH_K),
+        F.array(*[F.lit(MINHASH_P).cast("long")] * MINHASH_K),
         lambda acc, h: F.zip_with(acc, _hash_vector(h), lambda a, b: F.least(a, b)),
     )
 
@@ -477,10 +477,10 @@ def _minhash_md5_signature(text: Column) -> Column:
     oracle=f"""
       SELECT doc_id,
              array_to_string(
-               list_transform(range(0, {_MINHASH_K}), k ->
+               list_transform(range(0, {MINHASH_K}), k ->
                  coalesce(list_min(list_transform(th, h ->
-                   (h * (2*k + 3) + (k * 1000003 + 7)) % {_MINHASH_P})),
-                   {_MINHASH_P})), ',') AS minhash_sig
+                   (h * (2*k + 3) + (k * 1000003 + 7)) % {MINHASH_P})),
+                   {MINHASH_P})), ',') AS minhash_sig
       FROM (
         SELECT doc_id,
                list_transform(
@@ -508,7 +508,7 @@ def dedup_minhash_md5(spark: SparkSession, sf_dir: str) -> DataFrame:
             "doc_id",
             F.array_join(
                 F.transform(
-                    _minhash_md5_signature(F.col("text")),
+                    minhash_md5_signature(F.col("text")),
                     lambda x: x.cast("string"),
                 ),
                 ",",
@@ -522,19 +522,19 @@ def dedup_minhash_md5(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 _PROBE_BANDS = 4
-_PROBE_ROWS_PER_BAND = _MINHASH_K // _PROBE_BANDS
+_PROBE_ROWS_PER_BAND = MINHASH_K // _PROBE_BANDS
 _PROBE_CORPUS_N = 150
 _PROBE_MIN_AGREE = 8  # est jaccard >= 0.5
 
 
 def _probe_sig_sql(src: str) -> str:
-    """DuckDB twin of _minhash_md5_signature over ``src`` (id, text)."""
+    """DuckDB twin of minhash_md5_signature over ``src`` (id, text)."""
     return f"""
         SELECT id,
-               list_transform(range(0, {_MINHASH_K}), k ->
+               list_transform(range(0, {MINHASH_K}), k ->
                  coalesce(list_min(list_transform(th, h ->
-                   (h * (2*k + 3) + (k * 1000003 + 7)) % {_MINHASH_P})),
-                   {_MINHASH_P})) AS sig
+                   (h * (2*k + 3) + (k * 1000003 + 7)) % {MINHASH_P})),
+                   {MINHASH_P})) AS sig
         FROM (
           SELECT id,
                  list_transform(
@@ -603,12 +603,12 @@ def _probe_band_sql(sig_cte: str) -> str:
       )
       SELECT c.batch_id::BIGINT AS batch_id,
              c.corpus_id::BIGINT AS corpus_id,
-             len(list_filter(range(1, {_MINHASH_K} + 1),
+             len(list_filter(range(1, {MINHASH_K} + 1),
                              i -> bs.sig[i] = cs.sig[i]))::BIGINT AS n_agree
       FROM cand c
       JOIN bsig bs ON bs.id = c.batch_id
       JOIN csig cs ON cs.id = c.corpus_id
-      WHERE len(list_filter(range(1, {_MINHASH_K} + 1),
+      WHERE len(list_filter(range(1, {MINHASH_K} + 1),
                             i -> bs.sig[i] = cs.sig[i])) >= {_PROBE_MIN_AGREE}
       ORDER BY batch_id, corpus_id
     """,
@@ -640,10 +640,10 @@ def dedup_minhash_md5_incremental_probe(
     # struct array references `sig` 4x — CollapseProject would inline
     # the signature fold per reference otherwise
     csig = corpus.select(
-        "id", _minhash_md5_signature(F.col("text")).alias("sig")
+        "id", minhash_md5_signature(F.col("text")).alias("sig")
     ).localCheckpoint()
     bsig = batch.select(
-        "id", _minhash_md5_signature(F.col("text")).alias("sig")
+        "id", minhash_md5_signature(F.col("text")).alias("sig")
     ).localCheckpoint()
 
     w = _PROBE_ROWS_PER_BAND
@@ -1957,7 +1957,7 @@ def dedup_duplicated_ngram_coverage(
 
 def _shingle_set(text: Column) -> Column:
     """Distinct 3-token shingles — the EXACT set the minhash signature
-    approximates (same construction as _minhash_md5_signature)."""
+    approximates (same construction as minhash_md5_signature)."""
     toks = lower_tokens(text)
     sh = F.when(
         F.size(toks) >= 3,
@@ -2122,10 +2122,10 @@ def eval_minhash_lsh_precision_recall(
     # signatures/shingle sets feed banding AND the truth grid — fence
     # once so the fold kernels never inline per downstream reference
     csig = corpus.select(
-        "id", _minhash_md5_signature(F.col("text")).alias("sig")
+        "id", minhash_md5_signature(F.col("text")).alias("sig")
     ).localCheckpoint()
     bsig = batch.select(
-        "id", _minhash_md5_signature(F.col("text")).alias("sig")
+        "id", minhash_md5_signature(F.col("text")).alias("sig")
     ).localCheckpoint()
     cand = (
         _band_frame(csig, "corpus_id")

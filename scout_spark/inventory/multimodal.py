@@ -753,7 +753,7 @@ def multimodal_decode_pnm_real(
 _KF_FRAME = 64
 _KF_THRESHOLD = 200
 _KF_BANDS = 4
-_KF_HAM = 3
+KF_HAM = 3
 
 
 def _keyframe_ctes() -> str:
@@ -834,7 +834,7 @@ def _keyframe_ctes() -> str:
                bit_count(xor(a.ph, b.ph))::BIGINT AS hamming
         FROM bands a JOIN bands b
           ON a.band = b.band AND a.bv = b.bv AND a.doc_id < b.doc_id
-        WHERE bit_count(xor(a.ph, b.ph)) <= {_KF_HAM}
+        WHERE bit_count(xor(a.ph, b.ph)) <= {KF_HAM}
       )"""
 
 
@@ -877,7 +877,7 @@ def keyframe_band_index(sigs: DataFrame) -> DataFrame:
 
 def keyframe_candidate_pairs(sigs: DataFrame) -> DataFrame:
     """Banded keyframe candidate pairs (da, sa, db, sb, hamming) at
-    hamming <= {_KF_HAM} — the band-bucket equi-join SHARED by the
+    hamming <= {KF_HAM} — the band-bucket equi-join SHARED by the
     pair-level dedup entry and the r10 per-source dup-rate KPI (and
     matching the `cand` CTE in _keyframe_ctes), so engine and oracle
     pair semantics live in exactly one place each."""
@@ -894,7 +894,7 @@ def keyframe_candidate_pairs(sigs: DataFrame) -> DataFrame:
             & (F.col("a.bv") == F.col("b.bv"))
             & (F.col("a.media_id") < F.col("b.media_id")),
         )
-        .where(ham <= _KF_HAM)
+        .where(ham <= KF_HAM)
         .select(
             F.col("a.media_id").alias("da"),
             F.col("a.shot_id").alias("sa"),
@@ -914,7 +914,7 @@ def keyframe_candidate_pairs(sigs: DataFrame) -> DataFrame:
     "FIRST frame of each shot as its keyframe, a 63-bit WHT "
     "perceptual hash per keyframe (ONE batched numpy matmul per "
     f"Arrow batch), then the proven {_KF_BANDS}x16-bit band blocking "
-    f"(pigeonhole-lossless for hamming <= {_KF_HAM}) and a bucket "
+    f"(pigeonhole-lossless for hamming <= {KF_HAM}) and a bucket "
     "equi-join; media pairs aggregate shared-keyframe counts. All "
     "intermediates int64 => bit-for-bit oracle-reproducible from "
     "code points; checked ASCII precondition on both engines. "

@@ -434,11 +434,11 @@ def audit_snapshot_diff(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # ---------------------------------------------------------------- HLL
 
-_HLL_B = 8  # 2^8 = 256 registers
-_HLL_M = 1 << _HLL_B
+HLL_B = 8  # 2^8 = 256 registers
+HLL_M = 1 << HLL_B
 # Flajolet et al. 2007 bias constant for m >= 128; the literal is
 # inlined identically into both engines so the doubles agree bit-wise.
-_HLL_ALPHA_M2 = repr(0.7213 / (1.0 + 1.079 / _HLL_M) * _HLL_M * _HLL_M)
+HLL_ALPHA_M2 = repr(0.7213 / (1.0 + 1.079 / HLL_M) * HLL_M * HLL_M)
 
 # 15 hex chars = 60 bits keeps the hash positive in a signed BIGINT on
 # both engines; low 8 bits pick the register, the remaining 52 feed the
@@ -456,9 +456,9 @@ _HLL_SQL = f"""
         FROM tok
       ),
       rr AS (
-        SELECT source, hv % {_HLL_M} AS bucket,
-               CASE WHEN (hv >> {_HLL_B}) > 0
-                    THEN 53 - length(bin(hv >> {_HLL_B}))
+        SELECT source, hv % {HLL_M} AS bucket,
+               CASE WHEN (hv >> {HLL_B}) > 0
+                    THEN 53 - length(bin(hv >> {HLL_B}))
                     ELSE 53 END AS rho
         FROM h
       ),
@@ -477,17 +477,17 @@ _HLL_SQL = f"""
       )
       SELECT e.source,
              x.exact_distinct,
-             round(CASE WHEN {_HLL_ALPHA_M2} / (e.s_present + ({_HLL_M} - e.n_regs))
-                             <= 2.5 * {_HLL_M}
-                         AND e.n_regs < {_HLL_M}
-                        THEN {_HLL_M} * ln({_HLL_M}::DOUBLE / ({_HLL_M} - e.n_regs))
-                        ELSE {_HLL_ALPHA_M2} / (e.s_present + ({_HLL_M} - e.n_regs))
+             round(CASE WHEN {HLL_ALPHA_M2} / (e.s_present + ({HLL_M} - e.n_regs))
+                             <= 2.5 * {HLL_M}
+                         AND e.n_regs < {HLL_M}
+                        THEN {HLL_M} * ln({HLL_M}::DOUBLE / ({HLL_M} - e.n_regs))
+                        ELSE {HLL_ALPHA_M2} / (e.s_present + ({HLL_M} - e.n_regs))
                    END, 2) AS hll_estimate,
-             round(abs(CASE WHEN {_HLL_ALPHA_M2} / (e.s_present + ({_HLL_M} - e.n_regs))
-                                 <= 2.5 * {_HLL_M}
-                             AND e.n_regs < {_HLL_M}
-                            THEN {_HLL_M} * ln({_HLL_M}::DOUBLE / ({_HLL_M} - e.n_regs))
-                            ELSE {_HLL_ALPHA_M2} / (e.s_present + ({_HLL_M} - e.n_regs))
+             round(abs(CASE WHEN {HLL_ALPHA_M2} / (e.s_present + ({HLL_M} - e.n_regs))
+                                 <= 2.5 * {HLL_M}
+                             AND e.n_regs < {HLL_M}
+                            THEN {HLL_M} * ln({HLL_M}::DOUBLE / ({HLL_M} - e.n_regs))
+                            ELSE {HLL_ALPHA_M2} / (e.s_present + ({HLL_M} - e.n_regs))
                        END - x.exact_distinct) / x.exact_distinct, 4) AS rel_error
       FROM est e JOIN ex x ON e.source = x.source
       ORDER BY e.source
@@ -512,7 +512,7 @@ _HLL_SQL = f"""
 def sketch_hll_md5(spark: SparkSession, sf_dir: str) -> DataFrame:
     tok = doc_tokens(spark, sf_dir).select("source", "tok")
     hv = F.conv(F.substring(F.md5("tok"), 1, 15), 16, 10).cast("long")
-    w = F.shiftright(hv, _HLL_B)
+    w = F.shiftright(hv, HLL_B)
     # single-reference rho: 54 - bitlength(2w+1) == (w>0 ? 53 -
     # bitlength(w) : 53) for all w >= 0 — the conditional form
     # referenced w TWICE, so CollapseProject inlined the md5 chain 3x
@@ -522,7 +522,7 @@ def sketch_hll_md5(spark: SparkSession, sf_dir: str) -> DataFrame:
     rho = F.lit(54) - F.length(F.bin(F.shiftleft(w, 1) + 1))
     regs = (
         tok.select(
-            "source", "tok", (hv % _HLL_M).alias("bucket"), rho.alias("rho")
+            "source", "tok", (hv % HLL_M).alias("bucket"), rho.alias("rho")
         )
         .groupBy("source", "bucket")
         .agg(F.max("rho").alias("r"))
@@ -536,11 +536,11 @@ def sketch_hll_md5(spark: SparkSession, sf_dir: str) -> DataFrame:
     ex = tok.groupBy("source").agg(
         F.count_distinct("tok").alias("exact_distinct")
     )
-    alpha_m2 = F.lit(float(_HLL_ALPHA_M2))
-    raw = alpha_m2 / (F.col("s_present") + (_HLL_M - F.col("n_regs")))
-    small = (raw <= 2.5 * _HLL_M) & (F.col("n_regs") < _HLL_M)
-    linear = _HLL_M * F.log(
-        F.lit(float(_HLL_M)) / (_HLL_M - F.col("n_regs"))
+    alpha_m2 = F.lit(float(HLL_ALPHA_M2))
+    raw = alpha_m2 / (F.col("s_present") + (HLL_M - F.col("n_regs")))
+    small = (raw <= 2.5 * HLL_M) & (F.col("n_regs") < HLL_M)
+    linear = HLL_M * F.log(
+        F.lit(float(HLL_M)) / (HLL_M - F.col("n_regs"))
     )
     hll = F.when(small, linear).otherwise(raw)
     return (
@@ -4159,9 +4159,9 @@ def stats_mutual_information(spark: SparkSession, sf_dir: str) -> DataFrame:
         FROM tok
       ),
       rr AS (
-        SELECT source, hv % {_HLL_M} AS bucket,
-               CASE WHEN (hv >> {_HLL_B}) > 0
-                    THEN 53 - length(bin(hv >> {_HLL_B}))
+        SELECT source, hv % {HLL_M} AS bucket,
+               CASE WHEN (hv >> {HLL_B}) > 0
+                    THEN 53 - length(bin(hv >> {HLL_B}))
                     ELSE 53 END AS rho
         FROM h
       ),
@@ -4183,14 +4183,14 @@ def stats_mutual_information(spark: SparkSession, sf_dir: str) -> DataFrame:
       )
       SELECT ex.exact_union,
              persrc.sum_source_exact,
-             round(CASE WHEN {_HLL_ALPHA_M2}
-                             / (e.s_present + ({_HLL_M} - e.n_regs))
-                             <= 2.5 * {_HLL_M}
-                         AND e.n_regs < {_HLL_M}
-                        THEN {_HLL_M}
-                             * ln({_HLL_M}::DOUBLE / ({_HLL_M} - e.n_regs))
-                        ELSE {_HLL_ALPHA_M2}
-                             / (e.s_present + ({_HLL_M} - e.n_regs))
+             round(CASE WHEN {HLL_ALPHA_M2}
+                             / (e.s_present + ({HLL_M} - e.n_regs))
+                             <= 2.5 * {HLL_M}
+                         AND e.n_regs < {HLL_M}
+                        THEN {HLL_M}
+                             * ln({HLL_M}::DOUBLE / ({HLL_M} - e.n_regs))
+                        ELSE {HLL_ALPHA_M2}
+                             / (e.s_present + ({HLL_M} - e.n_regs))
                    END, 2) AS merged_hll_estimate
       FROM est e, ex, persrc
     """,
@@ -4200,12 +4200,12 @@ def sketch_hll_md5_union_merge(
 ) -> DataFrame:
     tok = doc_tokens(spark, sf_dir).select("source", "tok")
     hv = F.conv(F.substring(F.md5("tok"), 1, 15), 16, 10).cast("long")
-    w = F.shiftright(hv, _HLL_B)
+    w = F.shiftright(hv, HLL_B)
     # single-reference rho (see stats.sketch_hll_md5): avoids
     # the 3x md5 CollapseProject inline; identical integers
     rho = F.lit(54) - F.length(F.bin(F.shiftleft(w, 1) + 1))
     srcregs = (
-        tok.select("source", (hv % _HLL_M).alias("bucket"), rho.alias("rho"))
+        tok.select("source", (hv % HLL_M).alias("bucket"), rho.alias("rho"))
         .groupBy("source", "bucket")
         .agg(F.max("rho").alias("r"))
     )
@@ -4216,12 +4216,12 @@ def sketch_hll_md5_union_merge(
             "s_present"
         ),
     )
-    raw = F.lit(float(_HLL_ALPHA_M2)) / (
-        F.col("s_present") + (_HLL_M - F.col("n_regs"))
+    raw = F.lit(float(HLL_ALPHA_M2)) / (
+        F.col("s_present") + (HLL_M - F.col("n_regs"))
     )
-    small = (raw <= 2.5 * _HLL_M) & (F.col("n_regs") < _HLL_M)
-    linear = _HLL_M * F.log(
-        F.lit(float(_HLL_M)) / (_HLL_M - F.col("n_regs"))
+    small = (raw <= 2.5 * HLL_M) & (F.col("n_regs") < HLL_M)
+    linear = HLL_M * F.log(
+        F.lit(float(HLL_M)) / (HLL_M - F.col("n_regs"))
     )
     ex = tok.agg(F.count_distinct("tok").cast("long").alias("exact_union"))
     persrc = (
@@ -5180,9 +5180,9 @@ _RW_DAYS = 7
         FROM du
       ),
       regs AS (
-        SELECT day, hv % {_HLL_M} AS bucket,
-               max(CASE WHEN (hv >> {_HLL_B}) > 0
-                   THEN 53 - length(bin(hv >> {_HLL_B}))
+        SELECT day, hv % {HLL_M} AS bucket,
+               max(CASE WHEN (hv >> {HLL_B}) > 0
+                   THEN 53 - length(bin(hv >> {HLL_B}))
                    ELSE 53 END) AS r
         FROM h GROUP BY 1, 2
       ),
@@ -5206,14 +5206,14 @@ _RW_DAYS = 7
       )
       SELECT e.day::BIGINT AS day,
              x.exact_distinct,
-             round(CASE WHEN {_HLL_ALPHA_M2}
-                             / (e.s_present + ({_HLL_M} - e.n_regs))
-                             <= 2.5 * {_HLL_M}
-                         AND e.n_regs < {_HLL_M}
-                        THEN {_HLL_M}
-                             * ln({_HLL_M}::DOUBLE / ({_HLL_M} - e.n_regs))
-                        ELSE {_HLL_ALPHA_M2}
-                             / (e.s_present + ({_HLL_M} - e.n_regs))
+             round(CASE WHEN {HLL_ALPHA_M2}
+                             / (e.s_present + ({HLL_M} - e.n_regs))
+                             <= 2.5 * {HLL_M}
+                         AND e.n_regs < {HLL_M}
+                        THEN {HLL_M}
+                             * ln({HLL_M}::DOUBLE / ({HLL_M} - e.n_regs))
+                        ELSE {HLL_ALPHA_M2}
+                             / (e.s_present + ({HLL_M} - e.n_regs))
                    END, 2) AS hll_estimate
       FROM est e JOIN exact x ON e.day = x.day
       ORDER BY day
@@ -5233,12 +5233,12 @@ def sketch_hll_rolling_window_distinct(
     hv = F.conv(
         F.substring(F.md5(F.col("user_id").cast("string")), 1, 15), 16, 10
     ).cast("long")
-    w = F.shiftright(hv, _HLL_B)
+    w = F.shiftright(hv, HLL_B)
     # single-reference rho (see stats.sketch_hll_md5): avoids
     # the 3x md5 CollapseProject inline; identical integers
     rho = F.lit(54) - F.length(F.bin(F.shiftleft(w, 1) + 1))
     regs = (
-        du.select("day", (hv % _HLL_M).alias("bucket"), rho.alias("rho"))
+        du.select("day", (hv % HLL_M).alias("bucket"), rho.alias("rho"))
         .groupBy("day", "bucket")
         .agg(F.max("rho").alias("r"))
         .localCheckpoint()  # days x m rows; feeds spine + range join
@@ -5259,12 +5259,12 @@ def sketch_hll_rolling_window_distinct(
             "s_present"
         ),
     )
-    raw = F.lit(float(_HLL_ALPHA_M2)) / (
-        F.col("s_present") + (_HLL_M - F.col("n_regs"))
+    raw = F.lit(float(HLL_ALPHA_M2)) / (
+        F.col("s_present") + (HLL_M - F.col("n_regs"))
     )
-    small = (raw <= 2.5 * _HLL_M) & (F.col("n_regs") < _HLL_M)
-    linear = _HLL_M * F.log(
-        F.lit(float(_HLL_M)) / (_HLL_M - F.col("n_regs"))
+    small = (raw <= 2.5 * HLL_M) & (F.col("n_regs") < HLL_M)
+    linear = HLL_M * F.log(
+        F.lit(float(HLL_M)) / (HLL_M - F.col("n_regs"))
     )
     exact = (
         spine.join(

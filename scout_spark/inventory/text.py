@@ -2233,7 +2233,7 @@ def kn3_doc_trigrams(docs: DataFrame) -> DataFrame:
     tokenize + shifted-slice zip (O(1) references to the derived
     token array, the CollapseProject discipline). Pure-Column, so it
     runs identically on a batch frame and a streaming frame (shared
-    by the batch entry and streaming/kn3score.py)."""
+    by the batch entry and its ingest-time streaming run)."""
     d = docs.select(
         "doc_id",
         lower_tokens(F.col("text")).alias("t"),
@@ -2276,7 +2276,9 @@ def kn3_model(train_trigrams: DataFrame) -> dict:
     measured 1.7-23 s flapping walls at load 6+). ntot is a collected
     int (1-row bounded driver contraction) so scoring composes with
     Structured Streaming's single-aggregation limit (no 1-row
-    crossJoin needed)."""
+    crossJoin needed). Build it from a BATCH frame: a stream scored
+    against it joins static broadcast dims, which Structured
+    Streaming allows."""
     tg = (
         train_trigrams.groupBy("w1", "w2", "w3")
         .agg(F.count(F.lit(1)).cast("long").alias("c123"))

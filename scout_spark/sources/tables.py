@@ -31,6 +31,13 @@ TABLES = (
 )
 
 
+def _mtime(sf_dir: str, table: str) -> float:
+    try:
+        return os.path.getmtime(os.path.join(sf_dir, f"{table}.parquet"))
+    except OSError:
+        return -1.0
+
+
 def source_key(
     spark: SparkSession, sf_dir: str, table: str
 ) -> tuple[str, str, str, float]:
@@ -39,10 +46,7 @@ def source_key(
     applicationId (not id(spark)) keys the session: a recycled object
     id would serve plans bound to a shut-down SparkContext. The mtime
     invalidates after a rewrite/compaction of the file."""
-    try:
-        mtime = os.path.getmtime(os.path.join(sf_dir, f"{table}.parquet"))
-    except OSError:
-        mtime = -1.0
+    mtime = _mtime(sf_dir, table)
     return (spark.sparkContext.applicationId, sf_dir, table, mtime)
 
 
@@ -130,7 +134,7 @@ def widen_if_narrow(df: DataFrame, target: int | None = None) -> DataFrame:
     return df.repartition(t)
 
 
-_parquet_rows_cache: dict[str, int] = {}
+_parquet_rows_cache: dict[tuple[str, float], int] = {}
 
 
 def parquet_rows(sf_dir: str, name: str) -> int | None:
@@ -140,19 +144,19 @@ def parquet_rows(sf_dir: str, name: str) -> int | None:
     a derived frame keyed by a subset of a table's rows can never
     exceed the table's row count, so the gate can fire without a
     count() action. Returns None for a missing/multi-file path (the
-    gate then takes the distributed branch — always safe)."""
-    import os
-
+    gate then takes the distributed branch — always safe). Cached per
+    (path, mtime), like ``source_key``: a rewritten file is re-read."""
     path = os.path.join(sf_dir, f"{name}.parquet")
-    if path in _parquet_rows_cache:
-        return _parquet_rows_cache[path]
+    key = (path, _mtime(sf_dir, name))
+    if key in _parquet_rows_cache:
+        return _parquet_rows_cache[key]
     try:
         import pyarrow.parquet as pq
 
         n = pq.ParquetFile(path).metadata.num_rows
     except Exception:
         return None
-    _parquet_rows_cache[path] = n
+    _parquet_rows_cache[key] = n
     return n
 
 

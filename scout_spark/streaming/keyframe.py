@@ -25,13 +25,13 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from scout_spark.inventory.multimodal import (  # noqa: F401 — re-exported
-    _KF_HAM,
+    KF_HAM,
     keyframe_band_index,
 )
 
 
 def keyframe_probe(
-    incoming_sigs: DataFrame, index: DataFrame, max_hamming: int = _KF_HAM
+    incoming_sigs: DataFrame, index: DataFrame, max_hamming: int = KF_HAM
 ) -> DataFrame:
     """Probe incoming keyframe signatures (batch OR streaming frame)
     against a static banded index: bucket equi-join, bit_count verify,

@@ -23,7 +23,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from scout_spark.inventory.stats import _HLL_ALPHA_M2, _HLL_B, _HLL_M
+from scout_spark.inventory.stats import HLL_ALPHA_M2, HLL_B, HLL_M
 
 _DAY_US = 86_400_000_000
 
@@ -35,11 +35,11 @@ def _hll_cols(user_id: Column) -> tuple[Column, Column]:
     hv = F.conv(
         F.substring(F.md5(user_id.cast("string")), 1, 15), 16, 10
     ).cast("long")
-    w = F.shiftright(hv, _HLL_B)
+    w = F.shiftright(hv, HLL_B)
     # single-reference rho (see stats.sketch_hll_md5): avoids
     # the 3x md5 CollapseProject inline; identical integers
     rho = F.lit(54) - F.length(F.bin(F.shiftleft(w, 1) + 1))
-    return (hv % _HLL_M).alias("bucket"), rho.alias("rho")
+    return (hv % HLL_M).alias("bucket"), rho.alias("rho")
 
 
 def hll_day_registers(events: DataFrame) -> DataFrame:
@@ -86,19 +86,19 @@ def rolling_hll_estimate(
             "s_present"
         ),
     )
-    # _HLL_ALPHA_M2 is repr(float) (a string, for SQL interpolation) —
+    # HLL_ALPHA_M2 is repr(float) (a string, for SQL interpolation) —
     # coerce explicitly rather than relying on implicit string→double
-    raw = F.lit(float(_HLL_ALPHA_M2)) / (
-        F.col("s_present") + (_HLL_M - F.col("n_regs"))
+    raw = F.lit(float(HLL_ALPHA_M2)) / (
+        F.col("s_present") + (HLL_M - F.col("n_regs"))
     )
-    lc = _HLL_M * F.log(
-        F.lit(float(_HLL_M)) / (_HLL_M - F.col("n_regs"))
+    lc = HLL_M * F.log(
+        F.lit(float(HLL_M)) / (HLL_M - F.col("n_regs"))
     )
     return est.select(
         F.col("d").cast("long").alias("day"),
         F.round(
             F.when(
-                (raw <= 2.5 * _HLL_M) & (F.col("n_regs") < _HLL_M), lc
+                (raw <= 2.5 * HLL_M) & (F.col("n_regs") < HLL_M), lc
             ).otherwise(raw),
             2,
         ).alias("hll_estimate"),

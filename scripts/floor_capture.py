@@ -22,6 +22,12 @@ Adjudication rule (recorded in PLANS.md): if (ii) still exceeds
 engine's parallel-execution overhead at toy scale, and the weak label
 retires with evidence.
 
+Every wall is scout_spark.measure's warm-then-median wall (shared with
+bench.py and scripts/ratio_capture.py); DuckDB runs under its interrupt
+watchdog with a DUCK_TIMEOUT_S budget per execution, and an oracle
+that times out is recorded as ``duck_timeout`` with no ratio and no
+adjudication.
+
 Usage:
     python3 scripts/floor_capture.py --round 8
     python3 scripts/floor_capture.py --only graph_triangle_count
@@ -30,14 +36,22 @@ Usage:
 from __future__ import annotations
 
 import argparse
-import importlib.util
 import json
 import os
-import statistics
 import sys
-import time
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+if REPO not in sys.path:
+    sys.path.insert(0, REPO)
+
+from scout_spark.measure import (  # noqa: E402
+    DUCK_TIMEOUT_S,
+    duck_wall,
+    load_entry_module,
+    median_wall,
+    noop,
+    wait_for_load,
+)
 
 # The six r07-adjudicated weak entries, plus the round-8 additions
 # whose sf0.1 walls exceeded 1.3 s at >2x on first measurement.
@@ -52,15 +66,6 @@ DEFAULT_ENTRIES = [
     "dedup_duplicated_ngram_coverage",
     "lm_kneser_ney_bigram",
 ]
-
-
-def _load_entry_module():
-    spec = importlib.util.spec_from_file_location(
-        "entry_mod", os.path.join(REPO, "__spark_entry__.py")
-    )
-    mod = importlib.util.module_from_spec(spec)
-    spec.loader.exec_module(mod)
-    return mod
 
 
 # ---------------------------------------------------------------- r09
@@ -106,7 +111,7 @@ CALIBRATIONS = {
     # each branch pays its own scan+agg subtree.
     "fd_union5_minmax": {"kind": "fdunion", "n": 1_365_025},
     # r11: the md5-minhash twin family's minimal program — the
-    # ACTUAL _minhash_md5_signature Column fold (k=16 over 3-token
+    # ACTUAL minhash_md5_signature Column fold (k=16 over 3-token
     # shingles, md5 per shingle) on per-row-distinct ~55-token texts,
     # with the entries' TWO eager signature materializations (corpus
     # 150 + batch 15 rows) and one consuming action. Per-row-varying
@@ -946,9 +951,9 @@ def _calibrate(
             )
         elif kind == "md5minhash":
             from scout_spark.inventory.dedup import (
-                _MINHASH_K,
-                _MINHASH_P,
-                _minhash_md5_signature,
+                MINHASH_K,
+                MINHASH_P,
+                minhash_md5_signature,
             )
 
             def _sig_frame(nrows: int, idoff: int):
@@ -964,7 +969,7 @@ def _calibrate(
                     )
                     .select(
                         "id",
-                        _minhash_md5_signature(
+                        minhash_md5_signature(
                             F.col("text")
                         ).alias("sig"),
                     )
@@ -1002,10 +1007,10 @@ def _calibrate(
                 FROM toks
               ),
               sig AS (
-                SELECT id, list_transform(range(0, {_MINHASH_K}), k ->
+                SELECT id, list_transform(range(0, {MINHASH_K}), k ->
                   coalesce(list_min(list_transform(th, h ->
                     (h * (2*k + 3) + (k * 1000003 + 7))
-                      % {_MINHASH_P})), {_MINHASH_P})) AS sig
+                      % {MINHASH_P})), {MINHASH_P})) AS sig
                 FROM th
               )
               SELECT count(*), sum(sig[1]) FROM sig
@@ -1293,8 +1298,8 @@ def _calibrate(
             # host -> ordered output. Spark side is the registered
             # entry itself.
             from scout_spark.inventory.curation import (
-                _URL_BLOCKLIST as _UBL,
-                _url_expr_sql as _u_sql,
+                URL_BLOCKLIST,
+                url_expr_sql,
                 curation_url_domain_blocklist as _ub_entry,
             )
 
@@ -1303,7 +1308,7 @@ def _calibrate(
 
             duck_q = f"""
               WITH d AS (
-                SELECT doc_id, {_u_sql()} AS url FROM documents
+                SELECT doc_id, {url_expr_sql()} AS url FROM documents
               ),
               parsed AS (
                 SELECT doc_id,
@@ -1319,7 +1324,7 @@ def _calibrate(
                 FROM parsed
               )
               SELECT reg_domain,
-                     (reg_domain IN {tuple(_UBL)}) AS blocked,
+                     (reg_domain IN {tuple(URL_BLOCKLIST)}) AS blocked,
                      count(*)::BIGINT AS n_docs,
                      count(DISTINCT host)::BIGINT AS n_hosts
               FROM reg GROUP BY reg_domain ORDER BY reg_domain
@@ -1506,28 +1511,15 @@ def _calibrate(
             # bloom2job's collect happens inside _spark_build; the
             # final agg still goes through the noop sink like every
             # other program
-            _noop(out_df)
+            noop(out_df)
 
-        _spark_run()
-        runs = []
-        for _ in range(passes):
-            t0 = time.time()
-            _spark_run()
-            runs.append(time.time() - t0)
-        sp1 = round(statistics.median(runs), 3)
-
+        sp1 = round(median_wall(_spark_run, passes, warm=1), 3)
         duck_fn = (
             _duck_run
             if duck_q is None
             else (lambda q=duck_q: con.execute(q).fetchall())
         )
-        duck_fn()
-        runs = []
-        for _ in range(passes):
-            t0 = time.time()
-            duck_fn()
-            runs.append(time.time() - t0)
-        d1 = round(statistics.median(runs), 3)
+        d1 = round(median_wall(duck_fn, passes, warm=1), 3)
         out[key] = {
             "rows": n,
             "kind": kind,
@@ -1577,21 +1569,6 @@ def _adjudicate(rec: dict, name: str, calibrations: dict) -> None:
         rec["adjudication"] = "plan_slack"
 
 
-def _noop(df) -> None:
-    df.write.format("noop").mode("overwrite").save()
-
-
-def _median_fresh(fn, spark, sf_dir, passes, warm: int = 1) -> float:
-    for _ in range(warm):  # warm (codegen, footers; C2 JIT needs >1
-        _noop(fn(spark, sf_dir))  # on a fresh session — r07 trap)
-    runs = []
-    for _ in range(passes):
-        t0 = time.time()
-        _noop(fn(spark, sf_dir))
-        runs.append(time.time() - t0)
-    return round(statistics.median(runs), 3)
-
-
 def main() -> None:
     ap = argparse.ArgumentParser()
     ap.add_argument("--sf-dir", default="/root/testdata/sf0.1")
@@ -1619,11 +1596,10 @@ def main() -> None:
         if args.round
         else "/tmp/floor.json"
     )
-    sys.path.insert(0, REPO)
     from scout_spark.session import get_spark
     from scout_spark.testing import oracle_connection
 
-    m = _load_entry_module()
+    m = load_entry_module()
     q, o = m.queries(), m.oracle_sql()
     names = [
         n
@@ -1648,6 +1624,35 @@ def main() -> None:
         )
         for k, v in calibrations.items():
             print("calibration", k, v, flush=True)
+    def spark_walls(rec: dict, fn) -> None:
+        # (i) spark_noop_s, the bench-methodology wall: AQE on (session
+        # default, matches bench.py), default shuffle partitioning.
+        # (ii) spark_sp1_s, single-partition + AQE off: exchanges still
+        # exist in the plan but move one partition each and nothing
+        # re-plans — what remains is scheduler floor + the actual
+        # single-stream compute, the closest Spark gets to DuckDB's
+        # in-process execution. CAVEAT recorded in `method`: DuckDB
+        # itself runs multi-threaded, so for genuinely compute-bound
+        # entries sp1 serializes work DuckDB parallelizes — read
+        # ratio_sp1 > 2 as "investigate", and close with a like-for-
+        # like check (duck_threads=1) before calling it plan slack.
+        for key, aqe, partitions in (
+            ("spark_noop_s", "true", "8"),
+            ("spark_sp1_s", "false", "1"),
+        ):
+            spark.conf.set("spark.sql.adaptive.enabled", aqe)
+            spark.conf.set("spark.sql.shuffle.partitions", partitions)
+            rec[key] = round(
+                median_wall(
+                    lambda: noop(fn(spark, args.sf_dir)),
+                    args.passes,
+                    warm=_warm,
+                ),
+                3,
+            )
+        spark.conf.set("spark.sql.adaptive.enabled", "true")
+        spark.conf.set("spark.sql.shuffle.partitions", "8")
+
     entries: dict[str, dict] = {}
     for name in names:
         # between-entries cache hygiene (r11): a long capture session
@@ -1656,63 +1661,41 @@ def main() -> None:
         # frames re-persist on next use, in the untimed warm pass.
         spark.catalog.clearCache()
         rec: dict = {"load_1m": round(os.getloadavg()[0], 2)}
-        fn = q[name]
-        # (i) bench-methodology wall: AQE on (session default, matches
-        # bench.py), default shuffle partitioning
-        spark.conf.set("spark.sql.adaptive.enabled", "true")
-        spark.conf.set("spark.sql.shuffle.partitions", "8")
-        rec["spark_noop_s"] = _median_fresh(
-            fn, spark, args.sf_dir, args.passes, warm=_warm
-        )
-        # (ii) single-partition + AQE off: exchanges still exist in the
-        # plan but move one partition each and nothing re-plans — what
-        # remains is scheduler floor + the actual single-stream
-        # compute, the closest Spark gets to DuckDB's in-process
-        # execution. CAVEAT recorded in `method`: DuckDB itself runs
-        # multi-threaded, so for genuinely compute-bound entries sp1
-        # serializes work DuckDB parallelizes — read ratio_sp1 > 2
-        # as "investigate", and close with a like-for-like check
-        # (e.g. duck_threads=1) before calling it plan slack.
-        spark.conf.set("spark.sql.adaptive.enabled", "false")
-        spark.conf.set("spark.sql.shuffle.partitions", "1")
-        rec["spark_sp1_s"] = _median_fresh(
-            fn, spark, args.sf_dir, args.passes, warm=_warm
-        )
-        spark.conf.set("spark.sql.adaptive.enabled", "true")
-        spark.conf.set("spark.sql.shuffle.partitions", "8")
+        spark_walls(rec, q[name])
         # (iii) oracle wall, default threads AND single-threaded —
-        # duck_1t is the like-for-like partner for spark_sp1
+        # duck_1t is the like-for-like partner for spark_sp1. A timed-
+        # out or failing oracle leaves the row without ratios.
         if name in o:
-
-            def _duck_median() -> float:
-                con.execute(o[name]).fetchall()  # warm
-                runs = []
-                for _ in range(args.passes):
-                    t0 = time.time()
-                    con.execute(o[name]).fetchall()
-                    runs.append(time.time() - t0)
-                return round(statistics.median(runs), 3)
-
-            rec["duck_s"] = _duck_median()
-            con.execute("SET threads=1")
-            rec["duck_1t_s"] = _duck_median()
-            con.execute(f"SET threads={args.cpus}")
-            rec["ratio_noop"] = round(
-                rec["spark_noop_s"] / rec["duck_s"], 2
-            )
-            rec["ratio_sp1"] = round(
-                rec["spark_sp1_s"] / rec["duck_s"], 2
-            )
-            rec["ratio_sp1_vs_1t"] = round(
-                rec["spark_sp1_s"] / rec["duck_1t_s"], 2
-            )
-            # single-stream vs single-stream is the honest test: if
-            # Spark's one-partition pipeline is still >2x a
-            # one-thread DuckDB on identical work, the plan carries
-            # real slack; if it's within 2x, the parallel-path gap
-            # (ratio_noop) is exchange/scheduler floor that a real
-            # cluster amortizes.
-            _adjudicate(rec, name, calibrations)
+            dt = duck_wall(con, o[name], args.passes, 1, DUCK_TIMEOUT_S)
+            if isinstance(dt, float):
+                rec["duck_s"] = round(dt, 3)
+                con.execute("SET threads=1")
+                dt = duck_wall(
+                    con, o[name], args.passes, 1, DUCK_TIMEOUT_S
+                )
+                con.execute(f"SET threads={args.cpus}")
+            if dt is None:
+                rec["duck_timeout"] = DUCK_TIMEOUT_S
+            elif isinstance(dt, str):
+                rec["duck_err"] = dt
+            else:
+                rec["duck_1t_s"] = round(dt, 3)
+                rec["ratio_noop"] = round(
+                    rec["spark_noop_s"] / rec["duck_s"], 2
+                )
+                rec["ratio_sp1"] = round(
+                    rec["spark_sp1_s"] / rec["duck_s"], 2
+                )
+                rec["ratio_sp1_vs_1t"] = round(
+                    rec["spark_sp1_s"] / rec["duck_1t_s"], 2
+                )
+                # single-stream vs single-stream is the honest test: if
+                # Spark's one-partition pipeline is still >2x a
+                # one-thread DuckDB on identical work, the plan carries
+                # real slack; if it's within 2x, the parallel-path gap
+                # (ratio_noop) is exchange/scheduler floor that a real
+                # cluster amortizes.
+                _adjudicate(rec, name, calibrations)
         entries[name] = rec
         print(name, rec, flush=True)
 
@@ -1724,25 +1707,10 @@ def main() -> None:
     for name, rec in entries.items():
         if rec.get("adjudication") != "plan_slack":
             continue
-        waited = 0
-        while os.getloadavg()[0] > 1.5 and waited < 240:
-            time.sleep(10)
-            waited += 10
+        wait_for_load(1.5, 240, 10)
         rec["remeasure_load_1m"] = round(os.getloadavg()[0], 2)
         spark.catalog.clearCache()
-        fn = q[name]
-        spark.conf.set("spark.sql.adaptive.enabled", "true")
-        spark.conf.set("spark.sql.shuffle.partitions", "8")
-        rec["spark_noop_s"] = _median_fresh(
-            fn, spark, args.sf_dir, args.passes, warm=_warm
-        )
-        spark.conf.set("spark.sql.adaptive.enabled", "false")
-        spark.conf.set("spark.sql.shuffle.partitions", "1")
-        rec["spark_sp1_s"] = _median_fresh(
-            fn, spark, args.sf_dir, args.passes, warm=_warm
-        )
-        spark.conf.set("spark.sql.adaptive.enabled", "true")
-        spark.conf.set("spark.sql.shuffle.partitions", "8")
+        spark_walls(rec, q[name])
         rec["ratio_sp1_vs_1t"] = round(
             rec["spark_sp1_s"] / rec["duck_1t_s"], 2
         )

@@ -28,12 +28,15 @@ previous round's committed output to spot regressions.
 from __future__ import annotations
 
 import argparse
-import importlib.util
 import json
 import os
 import sys
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+if REPO not in sys.path:
+    sys.path.insert(0, REPO)
+
+from scout_spark.measure import load_entry_module  # noqa: E402
 
 
 def main() -> None:
@@ -44,12 +47,7 @@ def main() -> None:
     ap.add_argument("--out", default=None)
     args = ap.parse_args()
 
-    sys.path.insert(0, REPO)
-    spec = importlib.util.spec_from_file_location(
-        "entry_mod", os.path.join(REPO, "__spark_entry__.py")
-    )
-    m = importlib.util.module_from_spec(spec)
-    spec.loader.exec_module(m)
+    m = load_entry_module()
     from scout_spark.session import get_spark
 
     spark = get_spark("plan-audit", cpus=args.cpus)

@@ -19,6 +19,9 @@ Methodology (PLANS.md "Round-6: FULL-table ratio capture"):
 - DuckDB guarded by an interrupt watchdog (quadratic oracles like
   dedup_containment_shingle exceed any budget at sf0.1 by design —
   recorded as ``duck_timeout``).
+- the entry loader, the warm-then-timed wall, the DuckDB watchdog and
+  the load waits are scout_spark.measure's, shared with bench.py and
+  scripts/floor_capture.py; the thresholds below are this capture's.
 - load_avg recorded at start and end; a capture taken above ~1.0
   start load is not comparable round-over-round. A long sequential
   capture self-loads the box ~2-3×: re-measure flagged entries ALONE,
@@ -33,59 +36,23 @@ Usage:
 from __future__ import annotations
 
 import argparse
-import importlib.util
 import json
 import os
 import statistics
 import sys
-import threading
 import time
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+if REPO not in sys.path:
+    sys.path.insert(0, REPO)
 
-
-def _load_entry_module():
-    # import by path, exactly as the driver harness does
-    spec = importlib.util.spec_from_file_location(
-        "entry_mod", os.path.join(REPO, "__spark_entry__.py")
-    )
-    mod = importlib.util.module_from_spec(spec)
-    spec.loader.exec_module(mod)
-    return mod
-
-
-def _timed_duck(con, sql: str, timeout_s: float):
-    """Seconds for one fetchall, None on watchdog interrupt, or an
-    ``"err: ..."`` string for a genuine SQL error (previously recorded
-    indistinguishably as a timeout). The timer can fire in the gap
-    between query completion and cancel() — the flag + drain below stop
-    that stale interrupt from corrupting the NEXT entry's measurement."""
-    import duckdb
-
-    fired = threading.Event()
-
-    def _watchdog():
-        fired.set()
-        con.interrupt()
-
-    timer = threading.Timer(timeout_s, _watchdog)
-    timer.start()
-    try:
-        t0 = time.time()
-        con.execute(sql).fetchall()
-        return time.time() - t0
-    except duckdb.InterruptException:
-        return None
-    except Exception as ex:
-        return f"err: {str(ex)[:160]}"
-    finally:
-        timer.cancel()
-        if fired.is_set():
-            # stale interrupt may be pending — drain it on a no-op
-            try:
-                con.execute("SELECT 1").fetchall()
-            except Exception:
-                pass
+from scout_spark.measure import (  # noqa: E402
+    DUCK_TIMEOUT_S,
+    duck_wall,
+    load_entry_module,
+    median_wall,
+    wait_for_load,
+)
 
 
 def main() -> None:
@@ -93,7 +60,7 @@ def main() -> None:
     ap.add_argument("--sf-dir", default="/root/testdata/sf0.1")
     ap.add_argument("--round", type=int, default=None)
     ap.add_argument("--out", default=None)
-    ap.add_argument("--timeout", type=float, default=120.0)
+    ap.add_argument("--timeout", type=float, default=DUCK_TIMEOUT_S)
     ap.add_argument("--cpus", type=int, default=32)
     ap.add_argument("--only", nargs="*", default=None)
     args = ap.parse_args()
@@ -104,11 +71,10 @@ def main() -> None:
         else "/tmp/ratios.json"
     )
 
-    sys.path.insert(0, REPO)
     from scout_spark.session import get_spark
     from scout_spark.testing import oracle_connection
 
-    m = _load_entry_module()
+    m = load_entry_module()
     spark = get_spark("ratio-capture", cpus=args.cpus)
     con = oracle_connection(args.sf_dir)
     q, o = m.queries(), m.oracle_sql()
@@ -121,18 +87,11 @@ def main() -> None:
     # sequential sweep: if self-load pushes past the threshold, pause
     # until it decays before measuring the next entry, so hot rows
     # stay the rare exception (<10%) instead of the norm.
-    waited = 0
-    while os.getloadavg()[0] >= 2.0 and waited < 600:
-        print(
-            f"waiting for idle start (load {os.getloadavg()[0]:.2f})",
-            flush=True,
-        )
-        time.sleep(30)
-        waited += 30
-    if os.getloadavg()[0] >= 2.0:
+    waited = wait_for_load(2.0, 600, 30)
+    if os.getloadavg()[0] > 2.0:
         sys.exit(
             f"abort: box not idle after {waited}s "
-            f"(load {os.getloadavg()[0]:.2f} >= 2.0) — rerun later"
+            f"(load {os.getloadavg()[0]:.2f} > 2.0) — rerun later"
         )
 
     load_start = os.getloadavg()
@@ -153,13 +112,8 @@ def main() -> None:
         # pacing: let self-load decay before the next measurement —
         # bounded per entry AND by a global budget so pacing can never
         # dominate the sweep (past the budget, rows self-label hot)
-        pace = 0
-        while (
-            os.getloadavg()[0] > 6.0 and pace < 90 and pace_budget > 0
-        ):
-            time.sleep(10)
-            pace += 10
-            pace_budget -= 10
+        if pace_budget > 0:
+            pace_budget -= wait_for_load(6.0, min(90, pace_budget), 10)
         # per-entry load sample: rows still captured hot after the
         # pacing wait are self-labeling (VERDICT r07 item 5).
         # Threshold 6.0, recalibrated r09 with evidence: a paced
@@ -174,10 +128,15 @@ def main() -> None:
         if load_1m > 6.0:
             rec["hot_capture"] = True
         try:
-            fn(spark, args.sf_dir).collect()  # warm (fresh build)
-            t0 = time.time()
-            fn(spark, args.sf_dir).collect()  # timed (fresh build)
-            rec["spark_s"] = round(time.time() - t0, 3)
+            # one warm then one timed collect, each a fresh build
+            rec["spark_s"] = round(
+                median_wall(
+                    lambda: fn(spark, args.sf_dir).collect(),
+                    passes=1,
+                    warm=1,
+                ),
+                3,
+            )
         except Exception as ex:  # pragma: no cover - diagnostic path
             rec["err"] = f"spark: {str(ex)[:160]}"
             errors.append(name)
@@ -185,9 +144,8 @@ def main() -> None:
             print(name, rec, flush=True)
             continue
         if name in o:
-            warm = _timed_duck(con, o[name], args.timeout)
-            dt = warm if warm is None or isinstance(warm, str) else (
-                _timed_duck(con, o[name], args.timeout)
+            dt = duck_wall(
+                con, o[name], passes=1, warm=1, timeout_s=args.timeout
             )
             if dt is None:
                 rec["duck_timeout"] = args.timeout

@@ -1,15 +1,14 @@
 """Layout of the operator inventory package, read with ``ast`` only (no
-Spark): modules are named by family, and a helper shared by more than one
-family lives under a public name in ``inventory/common.py`` instead of
-being imported privately from another family's module."""
+Spark): modules are named by family, and a helper used outside its family
+module (by another family, a streaming twin or a measurement script) has a
+public name instead of being imported privately."""
 
 import ast
 import pathlib
 import re
 
-INVENTORY = (
-    pathlib.Path(__file__).resolve().parent.parent / "scout_spark" / "inventory"
-)
+ROOT = pathlib.Path(__file__).resolve().parent.parent
+INVENTORY = ROOT / "scout_spark" / "inventory"
 PACKAGE = "scout_spark.inventory"
 
 
@@ -26,8 +25,13 @@ def test_no_round_or_number_named_modules():
 
 
 def test_no_private_imports_across_inventory_modules():
+    importers = [
+        *_modules(),
+        *sorted((ROOT / "scout_spark" / "streaming").glob("*.py")),
+        *sorted((ROOT / "scripts").glob("*.py")),
+    ]
     bad = []
-    for path in _modules():
+    for path in importers:
         for node in ast.walk(ast.parse(path.read_text())):
             if not isinstance(node, ast.ImportFrom) or not node.module:
                 continue
@@ -38,4 +42,4 @@ def test_no_private_imports_across_inventory_modules():
             for alias in node.names:
                 if alias.name.startswith("_"):
                     bad.append(f"{path.name}:{node.lineno} {alias.name}")
-    assert not bad, f"private names imported across inventory modules: {bad}"
+    assert not bad, f"private inventory names imported: {bad}"

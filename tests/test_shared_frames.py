@@ -1,7 +1,8 @@
 """Session-shared persisted frames (sources.tables.shared_frame): a hit
 re-persists after ``spark.catalog.clearCache()``, a rewritten source
 swaps the old frame for one new frame, and concurrent cold callers share
-one build. Hermetic: each test writes its own tiny source tables."""
+one build; the footer row count re-reads a rewritten file. Hermetic: each
+test writes its own tiny source tables."""
 
 from __future__ import annotations
 
@@ -84,6 +85,17 @@ def test_source_rewrite_swaps_frame(spark, sf):
         assert [new[get].count() for get in GETTERS] == [8, 2, 1, 2]
     # each name swapped its old materialization for exactly one new one
     assert _persisted_rdds(spark) <= materialized
+
+
+def test_parquet_rows_rereads_rewritten_file(tmp_path):
+    path = os.path.join(str(tmp_path), "documents.parquet")
+    pq.write_table(pa.table({"doc_id": list(range(10))}), path)
+    assert tables.parquet_rows(str(tmp_path), "documents") == 10
+    pq.write_table(pa.table({"doc_id": list(range(25))}), path)
+    # mtime moved forward, as in test_source_rewrite_swaps_frame
+    st = os.stat(path)
+    os.utime(path, (st.st_atime, st.st_mtime + 10))
+    assert tables.parquet_rows(str(tmp_path), "documents") == 25
 
 
 def test_concurrent_cold_callers_share_one_build(spark, sf, monkeypatch):

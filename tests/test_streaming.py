@@ -822,9 +822,9 @@ def test_funnel_counters_stream_equals_batch(spark, documents_path):
     state): the drained stream's one counter row must equal the batch
     aggregate exactly, and the per-stage report finishing step must
     match row-for-row — the streaming arm of curation_filter_funnel."""
+    from scout_spark.inventory.curation import funnel_counters, funnel_report
     from scout_spark.streaming.drift import read_documents_stream
     from scout_spark.streaming.events import run_to_memory_sink
-    from scout_spark.streaming.funnel import funnel_counters, funnel_report
 
     batch = spark.read.parquet(documents_path)
     stream = read_documents_stream(
@@ -852,9 +852,9 @@ def test_url_domain_counters_stream_equals_batch(spark, documents_path):
     rollup row-for-row — the streaming arm of
     curation_url_domain_blocklist (shared url_flag_frame helper, so
     batch and stream cannot diverge)."""
+    from scout_spark.inventory.curation import domain_block_counters
     from scout_spark.streaming.drift import read_documents_stream
     from scout_spark.streaming.events import run_to_memory_sink
-    from scout_spark.streaming.urlblock import domain_block_counters
 
     batch = spark.read.parquet(documents_path)
     stream = read_documents_stream(
@@ -882,13 +882,13 @@ def test_kn3_scoring_stream_equals_batch(spark, documents_path):
     per-doc rows exactly — the streaming arm of
     lm_kn3_heldout_doc_score (shared kn3_doc_trigrams / kn3_model /
     kn3_score_per_doc helpers, so batch and stream cannot diverge)."""
-    from scout_spark.streaming.drift import read_documents_stream
-    from scout_spark.streaming.events import run_to_memory_sink
-    from scout_spark.streaming.kn3score import (
+    from scout_spark.inventory.text import (
         kn3_doc_trigrams,
         kn3_model,
         kn3_score_per_doc,
     )
+    from scout_spark.streaming.drift import read_documents_stream
+    from scout_spark.streaming.events import run_to_memory_sink
 
     batch = spark.read.parquet(documents_path)
     train = batch.where((F.expr("doc_id div 20") % 5) != 4)
